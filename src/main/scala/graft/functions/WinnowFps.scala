@@ -46,12 +46,9 @@ object WinnowKernel {
     var bi = 0
     while (ci < n) {
       off(ci) = bi
-      val b = bytes(bi) & 0xFF
-      // mirror UTF8String.numBytesForFirstByte: a continuation byte in
-      // lead position (0x80-0xBF, malformed input) steps 1, matching how
-      // numChars counted it — stepping 2 would let bi overrun the buffer
-      // (ADVICE r18). Valid UTF-8 is unaffected.
-      bi += (if (b < 0xC0) 1 else if (b < 0xE0) 2 else if (b < 0xF0) 3 else 4)
+      // step exactly as numChars counted: malformed lead bytes (0x80-0xC1,
+      // 0xF5-0xFF) step 1, so bi never overruns the buffer
+      bi += UTF8String.numBytesForFirstByte(bytes(bi))
       if (bi > bytes.length) bi = bytes.length // truncated multi-byte tail
       ci += 1
     }

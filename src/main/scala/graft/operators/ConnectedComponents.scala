@@ -62,11 +62,6 @@ object ConnectedComponents {
     * @param edges two columns `src`, `dst` — undirected pairs
     * @return (id, label) where label = min id of the component */
   def run(ids: DataFrame, edges: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val runT0 = System.nanoTime()
-    def dbg(msg: => String): Unit =
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] $msg (t+${(System.nanoTime() - runT0) / 1e9}%.2f s)")
-
     val spark = ids.sparkSession
     val idType = ids.schema("id").dataType
     require(edges.schema("src").dataType == idType &&
@@ -84,12 +79,10 @@ object ConnectedComponents {
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
       ids.rdd.getNumPartitions * 2))
     val part = new HashPartitioner(nPart)
-    dbg(s"partitions=$nPart")
 
     // Edges symmetrized and hash-partitioned by destination ONCE; every
     // round's label lookup then co-locates on this layout and only the
     // (small) per-vertex label/minimum records move.
-    val et0 = System.nanoTime()
     val both: RDD[(Any, Any)] = edges.select("src", "dst").rdd
       .flatMap { r =>
         val s = r.get(0); val d = r.get(1)
@@ -98,7 +91,6 @@ object ConnectedComponents {
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
     both.count() // materialize before the loop reads it repeatedly
-    dbg(f"edge materialize took ${(System.nanoTime() - et0) / 1e9}%.2f s")
 
     var labels: RDD[(Any, Any)] = ids.select("id").rdd
       .map(r => (r.get(0), r.get(0)))
@@ -109,7 +101,6 @@ object ConnectedComponents {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
-      val rt0 = System.nanoTime()
       // min label among each vertex's neighbors: edge side is cached on
       // `part`, labels side is on `part` — the join is narrow; the
       // reduceByKey map-side combines before its bounded shuffle.
@@ -143,14 +134,12 @@ object ConnectedComponents {
         .persist(StorageLevel.MEMORY_AND_DISK)
       next.count()
       changed = acc.value
-      dbg(f"round $rounds%d changed=$changed%d took ${(System.nanoTime() - rt0) / 1e9}%.2f s")
       stepped.unpersist(blocking = false)
       labels.unpersist(blocking = false)
       labels = next
       rounds += 1
     }
     both.unpersist(blocking = false)
-    dbg("loop done")
 
     val out = labels.map { case (id, lbl) => Row(id, lbl) }
     spark.createDataFrame(out,

@@ -667,10 +667,6 @@ object TextOps {
         .groupBy(col("bk.band"), col("bk.bkey"))
         .agg(collect_list(col("doc_id")).as("ids"))
         .filter(size(col("ids")) > 1)
-      if (sys.env.contains("GRAFT_LSH_DEBUG")) {
-        val dropped = buckets.filter(size(col("ids")) > MaxBucket).count()
-        System.err.println(s"[minhash-lsh] mega-buckets dropped (> $MaxBucket members): $dropped")
-      }
       val cand = buckets
         .filter(size(col("ids")) <= MaxBucket)
         .select(explode(flatten(pairs)).as("p"))

@@ -186,22 +186,16 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .map(p => staging.relativize(p)).sortBy(_.toString)
   }
 
-  /** Per-file footer metadata collected in ONE pass over the staged
-    * files: min/max column stats AND row counts (the Delta numRecords
-    * stat) — both ride the same footers, so one open per file. */
-  private case class StagedMeta(
-      stats: Map[String, Map[String, (String, String)]],
-      rows: Map[String, Long],
-      bytes: Map[String, Long] = Map.empty)
-
-  /** Per-file min/max column stats + row counts read from the PARQUET
-    * FOOTERS of the staged files — metadata-only, no data pass (the
-    * executors already wrote row-group statistics during the write,
-    * exactly the stats a real Delta writer records). Row-group stats
-    * merge per file; columns without usable stats are simply absent
-    * (skipping stays conservative). Stored as strings; numeric
-    * comparison happens at read time (readSkipping). */
-  private def fileStats(spark: SparkSession, staging: Path): StagedMeta = {
+  /** Per-file (path, min/max column stats, row count, byte size) read
+    * from the PARQUET FOOTERS of the staged files in ONE pass, one open
+    * per file — metadata-only, no data pass (the executors already wrote
+    * row-group statistics during the write, exactly the stats a real
+    * Delta writer records; the row count is the Delta numRecords stat).
+    * Row-group stats merge per file; columns without usable stats are
+    * simply absent (skipping stays conservative). Stored as strings;
+    * numeric comparison happens at read time (readSkipping). */
+  private def fileStats(spark: SparkSession, staging: Path): Seq[(String,
+      Map[String, (String, String)], Long, Long)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -210,7 +204,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       case b: Binary => b.toStringUsingUTF8
       case x => String.valueOf(x)
     }
-    val perFile = withDirStream(Files.walk(staging))(_
+    withDirStream(Files.walk(staging))(_
       .filter(_.getFileName.toString.endsWith(".parquet")).map { file =>
         val rel = staging.relativize(file).toString.replace("\\", "/")
         val stats = scala.collection.mutable
@@ -239,10 +233,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           c -> (render(st.genericGetMin), render(st.genericGetMax))
         }, rowCount, Files.size(file))
       }.toSeq)
-    StagedMeta(
-      perFile.map { case (rel, st, _, _) => rel -> st }.toMap,
-      perFile.map { case (rel, _, n, _) => rel -> n }.toMap,
-      perFile.map { case (rel, _, _, b) => rel -> b }.toMap)
   }
 
   /** Per-file bloom filters for point-lookup file skipping (the Delta
@@ -300,6 +290,38 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       }.toMap
   }
 
+  /** A write published under `data/<dir>`: its add paths (relative to
+    * `dir`) with the per-file stats, row counts, byte sizes and blooms
+    * its commit entry records. */
+  private case class Published(dir: String, adds: Seq[Path],
+      stats: Map[String, Map[String, (String, String)]],
+      rows: Map[String, Long], bytes: Map[String, Long],
+      blooms: Map[String, Map[String, Array[Long]]])
+
+  private val Unpublished =
+    Published("", Nil, Map.empty, Map.empty, Map.empty, Map.empty)
+
+  /** The write protocol every writer shares: stage `df` ([[stage]];
+    * `check` enforces CHECK constraints), read its footer stats, build
+    * blooms over the PHYSICAL `bloomCols`, then atomically move the
+    * staged dir to `data/<dir>` and re-stamp its mtime ([[touchNow]]) —
+    * in place but invisible until a commit entry claims it. */
+  private def publish(df: DataFrame, dir: String, partitionBy: Seq[String],
+      bloomCols: Seq[String], bloomBits: Int, check: Boolean): Published = {
+    val staging = Paths.get(tableDir, ".staging-" + dir.replace('/', '-'))
+    val adds = stage(df, staging, partitionBy, check)
+    val perFile = fileStats(df.sparkSession, staging)
+    val blooms = fileBlooms(df.sparkSession, staging, bloomCols, bloomBits)
+    val target = dataDir.resolve(dir)
+    Files.createDirectories(target.getParent)
+    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+    touchNow(target)
+    Published(dir, adds,
+      perFile.map { case (rel, st, _, _) => rel -> st }.toMap,
+      perFile.map { case (rel, _, n, _) => rel -> n }.toMap,
+      perFile.map { case (rel, _, _, b) => rel -> b }.toMap, blooms)
+  }
+
   private def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
@@ -313,27 +335,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * commits carry the OPERATION that produced them (MERGE / DELETE /
     * COMPACT / SNAPSHOT) and, for logical-change operations, the dir of
     * their recorded change rows (the Delta CDF `_change_data` analog). */
-  private def entryJson(df: DataFrame, version: Long, dir: String,
-      partitionBy: Seq[String], snapshot: Boolean,
-      adds: Seq[Path],
-      stats: Map[String, Map[String, (String, String)]],
-      op: String = "",
-      changeDir: Option[String] = None,
-      blooms: Map[String, Map[String, Array[Long]]] = Map.empty,
-      constraints: Option[Map[String, String]] = None,
-      streamTxn: Option[(String, Long)] = None,
-      rows: Map[String, Long] = Map.empty,
-      bytes: Map[String, Long] = Map.empty,
-      matFiles: Boolean = false): String =
-    // the recorded TABLE schema never includes the row-tracking
-    // materialization columns — they are physical file payload, like
-    // column-mapping physical names
-    entryJsonS(org.apache.spark.sql.types.StructType(
-        df.schema.fields.filterNot(_.name.startsWith(MatPrefix))).json,
-      version, dir, partitionBy, snapshot, adds,
-      stats, op, changeDir, blooms, constraints, streamTxn, rows = rows,
-      bytes = bytes, matFiles = matFiles)
-
   private def entryJsonS(schemaJson: String, version: Long, dir: String,
       partitionBy: Seq[String], snapshot: Boolean,
       adds: Seq[Path],
@@ -1334,47 +1335,33 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         (adf, Some(logTail.activeGenerated() ++ adv), rel)
       }
     try {
-      Files.createDirectories(dataDir)
-
-      // 1. stage data files (invisible to readers — they go through the
+      // 1. publish data files (invisible to readers — they go through the
       //    log). Staging AND the final dir are ATTEMPT-UNIQUE: two
       //    concurrent replays of one batchId (zombie driver + its
       //    replacement) each write their own dir, the claim picks the
       //    winner, and the loser's dir is an unreferenced orphan vacuum
       //    reclaims — a shared `batch=<id>` target would let the loser's
       //    leftover-cleanup delete the WINNER'S committed files.
+      //    The declared bloom policy (graft.bloom) rides streaming
+      //    batches too — the PRIMARY ingest path; without it, every
+      //    micro-batch after the declaration writes bloom-less files and
+      //    point-probe pruning quietly decays as the table grows.
       val attempt = java.util.UUID.randomUUID().toString.take(8)
-      val dir = s"batch=$batchId-$attempt"
-      val staging = Paths.get(tableDir, s".staging-$batchId-$attempt")
-      val adds = stage(gdf, staging, partitionBy)
-      val meta = fileStats(gdf.sparkSession, staging)
-      // the declared bloom policy (graft.bloom) rides streaming batches
-      // too — the PRIMARY ingest path; without this, every micro-batch
-      // after the declaration writes bloom-less files and point-probe
-      // pruning quietly decays as the table grows
       val (polCols, polBits) = activeBloomPolicy()
-      val blooms =
-        if (polCols.isEmpty) Map.empty[String, Map[String, Array[Long]]]
-        else fileBlooms(gdf.sparkSession, staging,
-          polCols.map(physicalOf), polBits)
+      val pub = publish(gdf, s"batch=$batchId-$attempt", partitionBy,
+        polCols.map(physicalOf), polBits, check = true)
 
-      // 2. move into place under the attempt's own directory
-      val target = dataDir.resolve(dir)
-      Files.createDirectories(target.getParent)
-      Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      touchNow(target)
-
-      // 3. commit; a lost claim normally means a concurrent replay
+      // 2. commit; a lost claim normally means a concurrent replay
       //    already committed this batchId — exactly-once either way.
       //    But verify it: a maintenance OCC commit (or a foreign
       //    stream) racing into version=batchId while this batch staged
       //    would otherwise swallow the batch silently.
       val (schemaJson, widened) = evolvedSchema(gdf)
       if (!claim(batchId, entryJsonS(schemaJson, batchId,
-          dir, partitionBy, snapshot, adds,
-          meta.stats, blooms = blooms, generated = advancedGen,
-          rows = meta.rows,
-          bytes = meta.bytes, widened = widened))) {
+          pub.dir, partitionBy, snapshot, pub.adds,
+          pub.stats, blooms = pub.blooms, generated = advancedGen,
+          rows = pub.rows,
+          bytes = pub.bytes, widened = widened))) {
         require(isOwnStreamBatch(parseCommit(batchId), batchId),
           s"process(batchId=$batchId): lost the version claim to a " +
             "non-streaming or foreign-stream commit — use appendBatch " +
@@ -1459,37 +1446,40 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // RE-VALIDATES when a rival moved it — evolvedSchemaOf alone would
     // silently keep a rival's incompatible type (reEnforceOnRetry doc)
     var validated = latestSchema().map(_.json)
+    // the plain-append claim: blind version re-target (append⇄append
+    // never conflicts). The recorded schema is re-derived AFTER staging
+    // and on every retry: a rival that committed an evolution (widening
+    // / new column) while this writer staged — or between claim
+    // attempts — must not have it reverted by our stale stage-time
+    // schemaString (evolvedSchemaOf doc; staged files are untouched,
+    // reads coerce). A rival landing between this read and the claim
+    // takes our version, the claim fails, and the retry re-reads — so a
+    // SUCCESSFUL claim always recorded fresh metadata. Each
+    // (re)derivation re-validates first: a rival evolution that is
+    // INCOMPATIBLE with the staged frame must abort, not be re-derived
+    // around (reEnforceOnRetry doc).
+    def claimAppend(frame: DataFrame, st: Published): Long = {
+      var v = nextVersion()
+      while (true) {
+        validated = reEnforceOnRetry(frame.schema, mergeSchema, validated,
+          "commitAppend")
+        val (sj, wd) = evolvedSchema(frame)
+        if (claim(v, entryJsonS(sj, v, st.dir, partitionBy,
+            snapshot = false, st.adds, st.stats, blooms = st.blooms,
+            streamTxn = streamTxn, rows = st.rows, bytes = st.bytes,
+            widened = wd, domains = writeDomains(clusterBy, bloomBy, bloomBits))))
+          return v
+        v = math.max(v + 1, nextVersion()) // lost the race — next version
+      }
+      -1L // unreachable
+    }
     val gdf = applyGenerated(conformToTable(df))
     val idr0 = identityRules()
     if (idr0.isEmpty) {
       val st = stageAppend(gdf, partitionBy, clusterBy, clusterFiles,
         bBy, bBits)
       stagedHook()
-      var v = nextVersion()
-      // re-derive the recorded schema AFTER staging and on every retry:
-      // a rival that committed an evolution (widening / new column)
-      // while this writer staged — or between claim attempts — must not
-      // have it reverted by our stale stage-time schemaString
-      // (evolvedSchemaOf doc; staged files are untouched, reads coerce).
-      // A rival landing between this read and the claim takes our
-      // version, the claim fails, and the retry re-reads — so a
-      // SUCCESSFUL claim always recorded fresh metadata. Each
-      // (re)derivation re-validates first: a rival evolution that is
-      // INCOMPATIBLE with the staged frame must abort, not be re-derived
-      // around (reEnforceOnRetry doc).
-      validated = reEnforceOnRetry(gdf.schema, mergeSchema, validated,
-        "commitAppend") // a rival may have landed while this writer staged
-      var (sj, wd) = evolvedSchema(gdf)
-      while (!claim(v, entryJsonS(sj, v, st.dir, partitionBy,
-          snapshot = false, st.adds, st.stats, blooms = st.blooms,
-          streamTxn = streamTxn, rows = st.rows, bytes = st.bytes,
-          widened = wd, domains = writeDomains(clusterBy, bloomBy, bloomBits)))) {
-        v = math.max(v + 1, nextVersion()) // lost the race — next version
-        validated = reEnforceOnRetry(gdf.schema, mergeSchema, validated,
-          "commitAppend")
-        val fresh = evolvedSchema(gdf); sj = fresh._1; wd = fresh._2
-      }
-      v
+      claimAppend(gdf, st)
     } else if (idr0.forall(_._5)) {
       // ALLOW-GAPS identity (the Delta-parity trade, setIdentityColumn
       // allowGaps = true): RESERVE the range in a cheap METADATA
@@ -1554,25 +1544,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           // 2. assign from the reserved base and stage ONCE; the advanced
           //    watermark already rode the reservation commit
           val (adf, _) = assignFromPrep(prep, base)
-          val st = stageAppend(adf, partitionBy, clusterBy, clusterFiles,
-            bBy, bBits)
-          // 3. commit like a plain append — blind version retries, fresh
-          //    re-validation + schema re-derivation per attempt
-          //    (reEnforceOnRetry / evolvedSchemaOf docs)
-          var v = nextVersion()
-          validated = reEnforceOnRetry(adf.schema, mergeSchema, validated,
-            "commitAppend")
-          var (sj, wd) = evolvedSchema(adf)
-          while (!claim(v, entryJsonS(sj, v, st.dir, partitionBy,
-              snapshot = false, st.adds, st.stats, blooms = st.blooms,
-              streamTxn = streamTxn, rows = st.rows, bytes = st.bytes,
-              widened = wd, domains = writeDomains(clusterBy, bloomBy, bloomBits)))) {
-            v = math.max(v + 1, nextVersion())
-            validated = reEnforceOnRetry(adf.schema, mergeSchema,
-              validated, "commitAppend")
-            val fresh = evolvedSchema(adf); sj = fresh._1; wd = fresh._2
-          }
-          v
+          // 3. commit like a plain append
+          claimAppend(adf, stageAppend(adf, partitionBy, clusterBy,
+            clusterFiles, bBy, bBits))
         }
       } finally prep.release()
     } else {
@@ -1624,7 +1598,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       streamTxn: Option[(String, Long)]): Long = {
     var validated = validated0
     var staged: Option[(Seq[(String, Long, Long, Long, Boolean)],
-      Map[String, String], StagedAppend)] = None
+      Map[String, String], Published, String)] = None
     while (true) {
       val (gen, expected) = logTail.generatedState()
       val rules = gen.toSeq.sortBy(_._1).collect {
@@ -1636,11 +1610,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // an abandoned staged dir is an orphan vacuum reclaims
         if (staged.isDefined) ExactlyOnceSink.identityRestages.incrementAndGet()
         val (adf, advanced) = assignFromPrep(prep, rules)
-        staged = Some((rules, gen ++ advanced,
-          stageAppend(adf, partitionBy, clusterBy, clusterFiles,
-            bloomBy, bloomBits)))
+        val st = stageAppend(adf, partitionBy, clusterBy, clusterFiles,
+          bloomBy, bloomBits)
+        staged = Some((rules, gen ++ advanced, st, evolvedSchema(adf)._1))
       }
-      val (_, genOut, st) = staged.get
+      val (_, genOut, st, stagedSchema) = staged.get
       ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
       // same stale-schema hazard as the non-identity retry loop: a
       // rival that does NOT move the watermark (plain append with
@@ -1649,7 +1623,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // not be silently kept) and re-derive the recorded schema from
       // the staged one against the fresh committed table on every
       // attempt (evolvedSchemaOf doc)
-      val fsI = org.apache.spark.sql.types.DataType.fromJson(st.schemaJson)
+      val fsI = org.apache.spark.sql.types.DataType.fromJson(stagedSchema)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       validated = reEnforceOnRetry(fsI, mergeSchema, validated,
         "commitAppend")
@@ -1764,21 +1738,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .filter(c => sch.exists(_.fieldNames.contains(c))), bits)
   }
 
-  private case class StagedAppend(dir: String, adds: Seq[Path],
-      stats: Map[String, Map[String, (String, String)]],
-      blooms: Map[String, Map[String, Array[Long]]],
-      schemaJson: String, rows: Map[String, Long],
-      widened: Boolean = false,
-      bytes: Map[String, Long] = Map.empty)
-
-  /** Stage one optimistic append's data files under a writer-unique dir
-    * and collect its per-file stats/blooms — everything a claim needs,
-    * claiming left to the caller (plain appends blind-retry versions;
-    * identity appends pin the version to their watermark read). */
+  /** Publish one optimistic append's data files under a writer-unique
+    * dir — everything a claim needs, claiming left to the caller (plain
+    * appends blind-retry versions; identity appends pin the version to
+    * their watermark read). */
   private def stageAppend(gdf: DataFrame, partitionBy: Seq[String],
       clusterBy: Seq[String], clusterFiles: Int,
-      bloomBy: Seq[String], bloomBits: Int): StagedAppend = {
-    Files.createDirectories(dataDir)
+      bloomBy: Seq[String], bloomBits: Int): Published = {
     // A clustered append runs TWO actions over the input (the quantile
     // sketch pass inside ZOrder.key, then the staged write): persist the
     // input so an expensive upstream query feeding the append computes
@@ -1789,22 +1755,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .map(graft.operators.ZOrder.cluster(_, clusterBy, clusterFiles))
       .getOrElse(gdf)
     val uuid = java.util.UUID.randomUUID().toString
-    val staging = Paths.get(tableDir, s".staging-$uuid")
-    val adds = stage(clustered, staging, partitionBy)
-    pinned.foreach(_.unpersist(blocking = false))
-    val meta = fileStats(gdf.sparkSession, staging)
-    val stats = meta.stats
-    val rowsM = meta.rows
-    val blooms = fileBlooms(gdf.sparkSession, staging,
-      bloomBy.map(physicalOf), bloomBits)
-    val dir = s"files/$uuid"
-    val target = dataDir.resolve(dir)
-    Files.createDirectories(target.getParent)
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    touchNow(target)
-    val (schemaJson, widened) = evolvedSchema(gdf)
-    StagedAppend(dir, adds, stats, blooms, schemaJson, rowsM, widened,
-      bytes = meta.bytes)
+    try publish(clustered, s"files/$uuid", partitionBy,
+      bloomBy.map(physicalOf), bloomBits, check = true)
+    finally pinned.foreach(_.unpersist(blocking = false))
   }
 
   /** Optimistic read-modify-write transaction (Delta's OCC loop): reads
@@ -1832,15 +1785,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * (compact — a physical rewrite). */
   private def transactSnapshotChanges(spark: SparkSession, op: String,
       maxRetries: Int = 20, streamTxn: Option[(String, Long)] = None)
-      (f: DataFrame => (DataFrame, Option[DataFrame])): Long = {
-    var attempt = 0
-    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    while (true) {
-      var expected = nextVersion()
+      (f: DataFrame => (DataFrame, Option[DataFrame])): Long =
+    occTransact(s"transactSnapshot($op)", maxRetries) { expected =>
       // the version whose state `f` reads: a WriteSerializable re-claim
-      // moves `expected` past rival pure appends while the base — and
-      // the staged output — stay fixed (the appends remain visible,
-      // [[Commit.snapBase]] / visibleCommits)
+      // moves the claimed version past rival pure appends while the base
+      // — and the published output — stay fixed (the appends remain
+      // visible, [[Commit.snapBase]] / visibleCommits)
       val base = expected - 1
       // under row tracking the transform sees the live state with every
       // row's id RESOLVED into the materialization columns: surviving
@@ -1848,44 +1798,22 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // copy-on-write), rows the transform introduces lack them and
       // read back fresh virtual ids — the Delta rewrite rule
       val (out0, changes0) = f(liveDataMat(spark))
-      // the CDC change rows are a LOGICAL feed — the physical
-      // materialization columns never leak into it
-      val changes = changes0.map(dropMat)
       // re-derive generated columns the transform may have dropped (a
       // narrower merge frame) and validate the ones it carried
       val out = applyGenerated(out0)
       val uuid = java.util.UUID.randomUUID().toString
-      val staging = Paths.get(tableDir, s".staging-$uuid")
-      val adds = stage(out, staging, Nil)
-      val meta = fileStats(spark, staging)
-      val stats = meta.stats
-      val rowsM = meta.rows
-      val bytesM = meta.bytes
       // a declared bloom policy survives EVERY copy-on-write rewrite
       // (compact, CoW merge/delete, arbitrary snapshot transforms):
       // recompute blooms for the rewritten files — a maintenance pass
       // must not retire the table's point-probe pruning
-      val (polColsS, polBitsS) = bloomPolicy()
-      val bloomsS = fileBlooms(spark, staging, polColsS, polBitsS)
-      val dir = s"files/$uuid"
-      Files.createDirectories(dataDir.resolve("files"))
-      Files.move(staging, dataDir.resolve(dir), StandardCopyOption.ATOMIC_MOVE)
-      touchNow(dataDir.resolve(dir))
-      val changeStaged = changes.map { ch =>
-        val chStaging = Paths.get(tableDir, s".staging-$uuid-cdc")
-        stage(ch, chStaging, Nil, check = false)
-        // footer-only stats pass over the change files (same machinery
-        // as the adds): the CDC skipping metadata a selective change
-        // consumer prunes files on (readChanges pruneBy)
-        val chStats = fileStats(spark, chStaging).stats
-        val rel = s"changes/$uuid"
-        Files.createDirectories(dataDir.resolve("changes"))
-        Files.move(chStaging, dataDir.resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-        touchNow(dataDir.resolve(rel))
-        (rel, chStats)
-      }
-      val changeDir = changeStaged.map(_._1)
-      val chStatsM = changeStaged.map(_._2).getOrElse(Map.empty)
+      val (polCols, polBits) = bloomPolicy()
+      val pub = publish(out, s"files/$uuid", Nil, polCols, polBits,
+        check = true)
+      // the CDC change rows are a LOGICAL feed — the physical
+      // materialization columns never leak into it; their footer stats
+      // are the CDC skipping metadata readChanges pruneBy prunes on
+      val ch = changes0.map(c => publish(dropMat(c), s"changes/$uuid", Nil,
+        Nil, 0, check = false))
       // record the EVOLVED table schema (latestSchema ∪ output frame),
       // never the frame's alone: when no visible file carries a column
       // (the table emptied, then narrow appends landed), the snapshot's
@@ -1897,49 +1825,65 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // narrow-append × merge product)
       val outSchemaNoMat = org.apache.spark.sql.types.StructType(
         out.schema.fields.filterNot(_.name.startsWith(MatPrefix)))
-      var (sjS, wdS) = evolvedSchemaOf(outSchemaNoMat)
       val matF = out.columns.contains(MatIdCol)
+      Some { (v: Long) =>
+        val (sj, wd) = evolvedSchemaOf(outSchemaNoMat)
+        entryJsonS(sj, v, pub.dir, Nil, snapshot = true,
+          pub.adds, pub.stats, op, ch.map(_.dir), blooms = pub.blooms,
+          streamTxn = streamTxn, rows = pub.rows,
+          bytes = pub.bytes, widened = wd,
+          matFiles = matF,
+          changeStats = ch.map(_.stats).getOrElse(Map.empty),
+          snapshotBase = Some(base))
+      }
+    }
+
+  /** The OCC transaction loop of the snapshot, MOR and OPTIMIZE verbs.
+    * Each attempt reads `expected = nextVersion()` and runs `attempt`,
+    * which computes and publishes the transaction's output from the
+    * state at `expected - 1` and returns its entry renderer (None:
+    * nothing to commit, returns -1). The renderer runs per claim, so the
+    * schema union and row-id watermark are re-rendered against the live
+    * log. Under WriteSerializable, a claim lost only to rival PURE
+    * APPENDS re-claims the next version with the SAME published output
+    * (a rebase); a genuinely conflicting rival — removes/DVs/snapshot/
+    * metadata — invalidated the state the output was computed on, so
+    * the published dirs are abandoned (never visible — vacuum reclaims
+    * them) and the attempt recomputes, at most `maxRetries` times. */
+  private def occTransact(verb: String, maxRetries: Int)(
+      attempt: Long => Option[Long => String]): Long = {
+    var recomputes = 0
+    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    while (true) {
+      var expected = nextVersion()
+      val render = attempt(expected) match {
+        case Some(r) => r
+        case None => return -1L
+      }
       txnStagedHook()
-      // claim loop: under WriteSerializable, losing to rival PURE
-      // APPENDS re-claims the next version with the SAME staged output —
-      // only the entry is re-rendered (fresh schema union, fresh row-id
-      // watermark allocation) and `snapshotBase` keeps the appends
-      // visible. A genuinely conflicting rival falls through to the
-      // full recompute below.
-      var genuineConflict = false
-      while (!genuineConflict) {
-        if (claim(expected, entryJsonS(sjS, expected, dir, Nil,
-            snapshot = true,
-            adds, stats, op, changeDir, blooms = bloomsS,
-            streamTxn = streamTxn, rows = rowsM,
-            bytes = bytesM, widened = wdS,
-            matFiles = matF,
-            changeStats = chStatsM, snapshotBase = Some(base))))
-          return expected
+      var rebase = true
+      while (rebase) {
+        if (claim(expected, render(expected))) return expected
         val next = nextVersion()
         val rivals = rivalCommits(expected, next)
         rivalLog ++= rivals.map(c => c.version -> c.op)
-        if (isolation == ExactlyOnceSink.WriteSerializable &&
-            rivals.nonEmpty && rivals.forall(rebaseable)) {
+        rebase = isolation == ExactlyOnceSink.WriteSerializable &&
+          rivals.nonEmpty && rivals.forall(rebaseable)
+        if (rebase) {
           txnRebases.incrementAndGet()
           expected = next
-          val fresh = evolvedSchemaOf(outSchemaNoMat)
-          sjS = fresh._1; wdS = fresh._2
-        } else genuineConflict = true
+        }
       }
-      // conflict: a non-rebaseable rival committed first → our snapshot
-      // was computed on state it invalidated. Abandon the staged dirs
-      // (never visible — a vacuum job reclaims them) and recompute.
       txnRecomputes.incrementAndGet()
-      attempt += 1
-      if (attempt > maxRetries)
-        sys.error(s"transactSnapshot($op): gave up after $maxRetries " +
-          "recomputes — every claim lost to rival commits " +
-          s"[${rivalSummary(rivalLog.toSeq)}]. Conflicting rivals " +
-          "(snapshot/merge/delete/metadata) force a full recompute per " +
-          "attempt; pure appends rebase without recompute under " +
-          "WriteSerializable — a list of APPENDs here means this sink " +
-          "is running Serializable isolation against a hot ingest table")
+      recomputes += 1
+      if (recomputes > maxRetries)
+        sys.error(s"$verb: gave up after $maxRetries recomputes — every " +
+          s"claim lost to rival commits [${rivalSummary(rivalLog.toSeq)}]. " +
+          "Conflicting rivals (snapshot/merge/delete/metadata) force a " +
+          "full recompute per attempt; pure appends rebase without " +
+          "recompute under WriteSerializable — a list of APPENDs here " +
+          "means this sink is running Serializable isolation against a " +
+          "hot ingest table")
     }
     -1L // unreachable
   }
@@ -2760,15 +2704,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // names, same translation as readSkippingAll; conservative on a
     // missing stat)
     val phys = pruneBy.map { case (c0, lo, hi) => (physicalOf(c0), lo, hi) }
-    def intersects(st: Option[(Option[String], Option[String])],
-        lower: Double, upper: Double): Boolean = st match {
-      case Some((Some(lo), Some(hi))) =>
-        try { !(hi.toDouble < lower || lo.toDouble > upper) }
-        catch { case _: NumberFormatException => true }
-      case _ => true
-    }
     def keep(a: AddFile): Boolean =
-      phys.forall { case (c0, lo, hi) => intersects(a.stats.get(c0), lo, hi) }
+      phys.forall { case (c0, lo, hi) => mayIntersect(a.stats.get(c0), lo, hi) }
     // the pruned read of one change/data dir: explicit surviving files
     // when per-file stats exist and pruning is requested, the whole dir
     // otherwise; None when pruning leaves nothing
@@ -3048,17 +2985,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * the 1-predicate case of this. */
   def readSkippingAll(spark: SparkSession,
       preds: Seq[(String, Double, Double)]): DataFrame = {
-    def intersects(st: Option[(Option[String], Option[String])],
-        lower: Double, upper: Double): Boolean = st match {
-      case Some((Some(lo), Some(hi))) =>
-        try { !(hi.toDouble < lower || lo.toDouble > upper) }
-        catch { case _: NumberFormatException => true }
-      case _ => true
-    }
     val phys = preds.map { case (c, lo, hi) => (physicalOf(c), lo, hi) }
     readAddFiles(spark) { a =>
-      phys.forall { case (col, lo, hi) => intersects(a.stats.get(col), lo, hi) }
+      phys.forall { case (col, lo, hi) => mayIntersect(a.stats.get(col), lo, hi) }
     }
+  }
+
+  /** Can a file whose recorded [min,max] stat is `st` hold a value in
+    * [lower, upper]? A missing or non-numeric stat keeps the file —
+    * pruning stays conservative. */
+  private def mayIntersect(st: Option[(Option[String], Option[String])],
+      lower: Double, upper: Double): Boolean = st match {
+    case Some((Some(lo), Some(hi))) =>
+      try !(hi.toDouble < lower || lo.toDouble > upper)
+      catch { case _: NumberFormatException => true }
+    case _ => true
   }
 
   /** Bloom-pruned point lookup: keep only files whose recorded bloom
@@ -3485,20 +3426,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * properly file-pruned re-scan, and claims the next version with
     * remove/dv/add actions plus the change dir. Conflicts recompute
     * from fresh state, exactly like [[transactSnapshotChanges]]. */
-  /** Does the file's recorded [min,max] possibly intersect every bound?
-    * Missing/non-numeric stats keep the file (pruning stays
-    * conservative) — the same contract as readSkippingAll. */
-  private def statsIntersect(a: AddFile,
-      bounds: Map[String, (Double, Double)]): Boolean =
-    bounds.forall { case (c, (lo, hi)) =>
-      a.stats.get(c) match {
-        case Some((Some(mn), Some(mx))) =>
-          try !(mx.toDouble < lo || mn.toDouble > hi)
-          catch { case _: NumberFormatException => true }
-        case _ => true
-      }
-    }
-
   /** The merge-on-read PROBE scan: live files of the pruned commits,
     * with file/position helper columns. Flat commits (no hive
     * partition subdirs — every commitAppend/morCommit output) scan
@@ -3514,7 +3441,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .withColumn(RidxCol, col("_metadata.row_index"))
     val frames = commits.flatMap { c =>
       val live = c.adds.filter(a =>
-        !ts.removed.contains(addKey(c, a)) && statsIntersect(a, bounds))
+        !ts.removed.contains(addKey(c, a)) && bounds.forall {
+          case (k, (lo, hi)) => mayIntersect(a.stats.get(k), lo, hi) })
       if (live.isEmpty) None
       else if (c.adds.forall(a => !a.path.contains("/")))
         // flat layout: scan only the surviving files of this commit
@@ -3542,10 +3470,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       keyBounds: Map[String, (Double, Double)] = Map.empty)
       (f: DataFrame => (DataFrame, Option[DataFrame], DataFrame)): Long = {
     import org.apache.spark.sql.functions._
-    var attempt = 0
-    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    while (true) {
-      var expected = nextVersion()
+    occTransact(op, maxRetries) { _ =>
       val all = visibleCommits(None)
       val commits = all.filter(_.adds.nonEmpty)
       val ts0 = tombstones(all)
@@ -3631,88 +3556,39 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           case (a, b) => a.orElse(b)
         }
         val uuid = java.util.UUID.randomUUID().toString
-        val dir = s"files/$uuid"
-        var adds: Seq[Path] = Nil
-        var stats: Map[String, Map[String, (String, String)]] = Map.empty
-        var rowsM: Map[String, Long] = Map.empty
-        var bytesM: Map[String, Long] = Map.empty
-        var bloomsM: Map[String, Map[String, Array[Long]]] = Map.empty
-        newRows.foreach { nr =>
-          val staging = Paths.get(tableDir, s".staging-$uuid")
-          adds = stage(nr, staging, Nil)
-          val meta = fileStats(spark, staging)
-          stats = meta.stats
-          rowsM = meta.rows
-          bytesM = meta.bytes
-          // declared bloom policy rides merge-on-read rewrites too:
-          // over-cap rewrites and merge's inserted rows get fresh
-          // blooms so point-probe pruning survives table maintenance
+        // declared bloom policy rides merge-on-read rewrites too:
+        // over-cap rewrites and merge's inserted rows get fresh blooms so
+        // point-probe pruning survives table maintenance
+        val pub = newRows.fold(Unpublished) { nr =>
           val (polCols, polBits) = bloomPolicy()
-          bloomsM = fileBlooms(spark, staging, polCols, polBits)
-          Files.createDirectories(dataDir.resolve("files"))
-          Files.move(staging, dataDir.resolve(dir), StandardCopyOption.ATOMIC_MOVE)
-          touchNow(dataDir.resolve(dir))
+          publish(nr, s"files/$uuid", Nil, polCols, polBits, check = true)
         }
-        val chStaging = Paths.get(tableDir, s".staging-$uuid-cdc")
         // the CDC feed is logical — strip helper/materialization columns
-        stage(dropMat(changes), chStaging, Nil, check = false)
-        val chStatsM = fileStats(spark, chStaging).stats // CDC skipping
-        val changeRel = s"changes/$uuid"
-        Files.createDirectories(dataDir.resolve("changes"))
-        Files.move(chStaging, dataDir.resolve(changeRel),
-          StandardCopyOption.ATOMIC_MOVE)
-        touchNow(dataDir.resolve(changeRel))
+        val ch = publish(dropMat(changes), s"changes/$uuid", Nil, Nil, 0,
+          check = false)
         // evolved union, same monotonicity argument as the snapshot
-        // claim above: the probe state's file-derived schema can lack
-        // columns the TABLE schema has
+        // claim: the probe state's file-derived schema can lack columns
+        // the TABLE schema has
         val morSchemaBase = org.apache.spark.sql.types.StructType(
           statePos.drop(FileCol, RidxCol).schema.fields
             .filterNot(_.name.startsWith(MatPrefix)))
-        var schemaJson = evolvedSchemaOf(morSchemaBase)._1
-        txnStagedHook()
-        // claim loop: a delta-shaped commit (removes + DVs + adds)
-        // keeps rival appends visible by construction — no base field
-        // needed. Under WriteSerializable, losing to rival PURE APPENDS
-        // re-claims the next version with the SAME staged actions
-        // (entry re-rendered for the fresh schema union and row-id
-        // watermark): the rival's files did not exist at this
-        // transaction's read, so they intersect neither its probe scan
-        // nor its removes/DV keys. A rival carrying removes/DVs may
-        // have touched the rows this transaction read — full recompute.
-        var genuineConflict = false
-        while (!genuineConflict) {
-          if (claim(expected, entryJsonS(schemaJson, expected,
-              if (adds.nonEmpty) dir else "", Nil, snapshot = false, adds,
-              stats, op, Some(changeRel), blooms = bloomsM,
-              streamTxn = streamTxn,
-              removes = removeKeys ++ rewriteKeys, dvs = dvNew,
-              rows = rowsM, bytes = bytesM,
-              matFiles = adds.nonEmpty && logTail.rowIdState().isDefined,
-              changeStats = chStatsM)))
-            return expected
-          val next = nextVersion()
-          val rivals = rivalCommits(expected, next)
-          rivalLog ++= rivals.map(c => c.version -> c.op)
-          if (isolation == ExactlyOnceSink.WriteSerializable &&
-              rivals.nonEmpty && rivals.forall(rebaseable)) {
-            txnRebases.incrementAndGet()
-            expected = next
-            schemaJson = evolvedSchemaOf(morSchemaBase)._1
-          } else genuineConflict = true
+        // a delta-shaped commit (removes + DVs + adds) keeps rival
+        // appends visible by construction — no base field needed; a
+        // rebased re-claim is safe because the rival's files did not
+        // exist at this transaction's read, so they intersect neither
+        // its probe scan nor its removes/DV keys
+        Some { (v: Long) =>
+          entryJsonS(evolvedSchemaOf(morSchemaBase)._1, v,
+            if (pub.adds.nonEmpty) pub.dir else "", Nil, snapshot = false,
+            pub.adds, pub.stats, op, Some(ch.dir), blooms = pub.blooms,
+            streamTxn = streamTxn,
+            removes = removeKeys ++ rewriteKeys, dvs = dvNew,
+            rows = pub.rows, bytes = pub.bytes,
+            matFiles = pub.adds.nonEmpty && logTail.rowIdState().isDefined,
+            changeStats = ch.stats)
         }
       } finally doomed.unpersist(blocking = false)
-      txnRecomputes.incrementAndGet()
-      attempt += 1
-      if (attempt > maxRetries)
-        sys.error(s"$op: gave up after $maxRetries recomputes — every " +
-          s"claim lost to rival commits [${rivalSummary(rivalLog.toSeq)}]. " +
-          "Conflicting rivals (snapshot/merge/delete/metadata) force a " +
-          "full recompute per attempt; pure appends rebase without " +
-          "recompute under WriteSerializable — a list of APPENDs here " +
-          "means this sink is running Serializable isolation against a " +
-          "hot ingest table")
     }
-    -1L // unreachable
   }
 
   /** REPLACE WHERE (Delta's predicate/partition overwrite): atomically
@@ -4642,19 +4518,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val changes = tAl.exceptAll(cAl).withColumn("_change_type", lit("insert"))
         .unionByName(
           cAl.exceptAll(tAl).withColumn("_change_type", lit("delete")))
-      val uuid = java.util.UUID.randomUUID().toString
-      val chStaging = Paths.get(tableDir, s".staging-$uuid-cdc")
-      stage(changes, chStaging, Nil, check = false)
-      val chStatsM = fileStats(spark, chStaging).stats // CDC skipping
-      val changeRel = s"changes/$uuid"
-      Files.createDirectories(dataDir.resolve("changes"))
-      Files.move(chStaging, dataDir.resolve(changeRel), StandardCopyOption.ATOMIC_MOVE)
+      val ch = publish(changes, s"changes/${java.util.UUID.randomUUID()}",
+        Nil, Nil, 0, check = false)
       val rowCarry =
         if (logTail.rowIdState().isEmpty) None else Some(carriedIds)
       if (claim(expected, entryJsonS(
           target.schema.json, expected, "", Nil, snapshot = true,
           adds.map(a => Paths.get(a.path)), stats, "RESTORE",
-          Some(changeRel), blooms, restoreDirs = dirs,
+          Some(ch.dir), blooms, restoreDirs = dirs,
           // row counts carry over with the lifted adds (restore cannot
           // change them), keeping the metadata COUNT(*) path alive
           rows = adds.flatMap(a => a.rows.map(a.path -> _)).toMap,
@@ -4668,7 +4539,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           // the lifted files may carry materialized ids from rewrites
           // before the restore point
           matFiles = rowCarry.isDefined,
-          changeStats = chStatsM)))
+          changeStats = ch.stats)))
         return expected
       attempt += 1
       if (attempt > maxRetries)
@@ -4731,10 +4602,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // (explicit clusterBy still fails loudly).
     val clusterCols =
       if (clusterBy.nonEmpty) clusterBy else activeClusterCols()
-    var attempt = 0
-    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    while (true) {
-      var expected = nextVersion()
+    occTransact("compactSmall", maxRetries) { _ =>
       val all = visibleCommits(None)
       val ts = tombstones(all)
       val candAdds = all.filter(_.adds.nonEmpty)
@@ -4744,100 +4612,70 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         .map { case (k, a) => (k, a, Files.size(dataDir.resolve(k))) }
         .filter(_._3 < targetBytes)
       val cands = candAdds.map(t => (t._1, t._3))
-      if (cands.size < minFiles) return -1L
-      val nOut = math.max(1,
-        math.ceil(cands.map(_._2).sum.toDouble / targetBytes).toInt)
-      // one scan over files from DIFFERENT commits: explicit physical
-      // schema — without it parquet would silently adopt one file's
-      // schema and DROP the other commits' evolved columns
-      val scan = flatReader(spark)
-        .parquet(cands.map(c => dataDir.resolve(c._1).toString): _*)
-        .withColumn(FileCol, relKeyCol)
-        .withColumn(RidxCol, col("_metadata.row_index"))
-      val tracked = logTail.rowIdState().isDefined
-      val live1 = applyTombstones(scan, Tombstones(Set.empty, ts.dv))
-      // row tracking: the packed rows change (file, position), so pin
-      // each one's id/commit-version into the materialization columns
-      // before the positions are lost — OPTIMIZE preserves row ids
-      val live0 = (if (tracked)
-          withResolvedMat(live1, all.filter(_.adds.nonEmpty))
-        else live1)
-        .drop(FileCol, RidxCol)
-      // OPTIMIZE ... ZORDER BY, incrementally: z-order just the packed
-      // small files (the scan frame carries PHYSICAL names — translate
-      // the clustering columns). Big files keep their existing layout.
-      val packed =
-        if (clusterCols.isEmpty) live0.coalesce(nOut)
-        else graft.operators.ZOrder.cluster(live0, clusterCols.map(physicalOf),
-          if (clusterFiles > 0) clusterFiles else math.max(nOut, 2))
-      val uuid = java.util.UUID.randomUUID().toString
-      val staging = Paths.get(tableDir, s".staging-$uuid")
-      // check=false: a physical rewrite of already-validated committed
-      // rows (and the frame carries PHYSICAL names — constraint exprs
-      // would not even resolve against them)
-      val adds = stage(packed, staging, Nil, check = false)
-      val meta = fileStats(spark, staging)
-      val stats = meta.stats
-      val rowsM = meta.rows
-      val bytesM = meta.bytes
-      // blooms SURVIVE OPTIMIZE: recompute them for the packed output
-      // over the union of the recorded bloom policy and whatever
-      // columns the retired files carried blooms for (legacy tables
-      // that predate the `graft.bloom` domain) — otherwise an
-      // auto-compacting streaming table silently loses the point-probe
-      // pruning q_sink_bloom_lookup exists to demonstrate
-      val (polCols, polBits) = bloomPolicy()
-      val retiredBlooms = candAdds.map(_._2.bloom)
-      val bloomCols = (polCols ++ retiredBlooms.flatMap(_.keys)).distinct
-      val bloomBits =
-        if (polCols.nonEmpty) polBits
-        else retiredBlooms.flatMap(_.values.map(_.length * 64))
-          .maxOption.getOrElse(4096)
-      val blooms = fileBlooms(spark, staging, bloomCols, bloomBits)
-      val dir = s"files/$uuid"
-      Files.createDirectories(dataDir.resolve("files"))
-      Files.move(staging, dataDir.resolve(dir), StandardCopyOption.ATOMIC_MOVE)
-      touchNow(dataDir.resolve(dir))
-      txnStagedHook()
-      // claim loop: same WriteSerializable narrowing as morCommit — a
-      // rival PURE APPEND cannot touch the packed candidates (its files
-      // did not exist at the read), so the staged bin-pack re-claims
-      // the next version as-is; its new small files are simply the next
-      // OPTIMIZE run's work. A rival with removes/DVs (including a
-      // rival OPTIMIZE) may have retired a candidate — full re-pick.
-      var genuineConflict = false
-      while (!genuineConflict) {
-        if (claim(expected, entryJsonS(
-            latestSchema().map(_.json).getOrElse(packed.schema.json),
-            expected, dir, Nil,
-            snapshot = false, adds, stats, "COMPACT_INC", None,
-            blooms = blooms,
-            removes = cands.map(_._1), rows = rowsM, bytes = bytesM,
+      if (cands.size < minFiles) None
+      else {
+        val nOut = math.max(1,
+          math.ceil(cands.map(_._2).sum.toDouble / targetBytes).toInt)
+        // one scan over files from DIFFERENT commits: explicit physical
+        // schema — without it parquet would silently adopt one file's
+        // schema and DROP the other commits' evolved columns
+        val scan = flatReader(spark)
+          .parquet(cands.map(c => dataDir.resolve(c._1).toString): _*)
+          .withColumn(FileCol, relKeyCol)
+          .withColumn(RidxCol, col("_metadata.row_index"))
+        val tracked = logTail.rowIdState().isDefined
+        val live1 = applyTombstones(scan, Tombstones(Set.empty, ts.dv))
+        // row tracking: the packed rows change (file, position), so pin
+        // each one's id/commit-version into the materialization columns
+        // before the positions are lost — OPTIMIZE preserves row ids
+        val live0 = (if (tracked)
+            withResolvedMat(live1, all.filter(_.adds.nonEmpty))
+          else live1)
+          .drop(FileCol, RidxCol)
+        // OPTIMIZE ... ZORDER BY, incrementally: z-order just the packed
+        // small files (the scan frame carries PHYSICAL names — translate
+        // the clustering columns). Big files keep their existing layout.
+        val packed =
+          if (clusterCols.isEmpty) live0.coalesce(nOut)
+          else graft.operators.ZOrder.cluster(live0, clusterCols.map(physicalOf),
+            if (clusterFiles > 0) clusterFiles else math.max(nOut, 2))
+        // blooms SURVIVE OPTIMIZE: recompute them for the packed output
+        // over the union of the recorded bloom policy and whatever
+        // columns the retired files carried blooms for (legacy tables
+        // that predate the `graft.bloom` domain) — otherwise an
+        // auto-compacting streaming table silently loses the point-probe
+        // pruning q_sink_bloom_lookup exists to demonstrate
+        val (polCols, polBits) = bloomPolicy()
+        val retiredBlooms = candAdds.map(_._2.bloom)
+        val bloomCols = (polCols ++ retiredBlooms.flatMap(_.keys)).distinct
+        val bloomBits =
+          if (polCols.nonEmpty) polBits
+          else retiredBlooms.flatMap(_.values.map(_.length * 64))
+            .maxOption.getOrElse(4096)
+        // check=false: a physical rewrite of already-validated committed
+        // rows (and the frame carries PHYSICAL names — constraint exprs
+        // would not even resolve against them)
+        val pub = publish(packed, s"files/${java.util.UUID.randomUUID()}",
+          Nil, bloomCols, bloomBits, check = false)
+        // a rival PURE APPEND cannot touch the packed candidates (its files
+        // did not exist at the read), so a rebase re-claims the packed
+        // output as-is; its new small files are simply the next OPTIMIZE
+        // run's work. A rival with removes/DVs (including a rival
+        // OPTIMIZE) may have retired a candidate — full re-pick.
+        Some { (v: Long) =>
+          entryJsonS(latestSchema().map(_.json).getOrElse(packed.schema.json),
+            v, pub.dir, Nil,
+            snapshot = false, pub.adds, pub.stats, "COMPACT_INC", None,
+            blooms = pub.blooms,
+            removes = cands.map(_._1), rows = pub.rows, bytes = pub.bytes,
             matFiles = tracked,
             // re-record only an EXPLICIT caller declaration: the
             // discovered set may be narrowed by a concurrent DROP, and
             // re-recording it would make the narrowing permanent
-            domains = clusterDomain(clusterBy))))
-          return expected
-        val next = nextVersion()
-        val rivals = rivalCommits(expected, next)
-        rivalLog ++= rivals.map(c => c.version -> c.op)
-        if (isolation == ExactlyOnceSink.WriteSerializable &&
-            rivals.nonEmpty && rivals.forall(rebaseable)) {
-          txnRebases.incrementAndGet()
-          expected = next
-        } else genuineConflict = true
+            domains = clusterDomain(clusterBy))
+        }
       }
-      txnRecomputes.incrementAndGet()
-      attempt += 1
-      if (attempt > maxRetries)
-        sys.error(s"compactSmall: gave up after $maxRetries recomputes — " +
-          s"every claim lost to rival commits " +
-          s"[${rivalSummary(rivalLog.toSeq)}]. Pure appends rebase " +
-          "without recompute under WriteSerializable; rivals carrying " +
-          "removes/DVs force the full candidate re-pick")
     }
-    -1L // unreachable
   }
 
   /** VACUUM analog: delete data that no committed version references —
@@ -4864,7 +4702,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * OCC retries), not the potentially-long fileStats/fileBlooms phase —
     * a writer must stall >minAgeMs BETWEEN the move and the claim for the
     * race to reopen. */
-  /** Re-stamp a just-moved dir's mtime to now: ATOMIC_MOVE preserves the
+  /** Re-stamp a just-moved dir's mtime to now: the atomic move preserves the
     * staging mtime, which would start vacuum's retention clock at
     * staging-write completion instead of at the move — shrinking the
     * guard window by however long stats/bloom collection took. */

@@ -192,6 +192,13 @@ object KernelProps extends Properties("graft.kernels") {
       val f = winnow(s)
       f == f.distinct.sorted
     }
+
+  property("winnow: arbitrary (malformed UTF-8) bytes never throw") =
+    forAll(Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue))) { bs =>
+      val s = org.apache.spark.unsafe.types.UTF8String.fromBytes(bs.toArray)
+      val f = graft.functions.WinnowKernel.fps(s, 2, 2).toLongArray().toSeq
+      f == f.distinct.sorted
+    }
   // ---- DeflateLen: the compression-ratio kernel ----
 
   private def zlen(s: String): Long =
