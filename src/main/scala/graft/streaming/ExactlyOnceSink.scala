@@ -2254,55 +2254,40 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * next write that carries it; nothing is lost, only not shown while
     * no file holds it.
     *
-    * r19: LIVE reads of flat commits present columns in the RECORDED
-    * schema order (batch last) — the Delta presentation — because the
-    * scan takes the recorded physical schema instead of per-commit
-    * footer inference; time-travel reads keep the legacy
-    * union-accretion order (StreamingSpec pins live ≡ as-of-latest
-    * value-wise). */
+    * LIVE reads of flat commits present columns in the RECORDED schema
+    * order (batch last) — the Delta presentation — because the scan
+    * takes the recorded physical schema instead of per-commit footer
+    * inference; time-travel reads keep the legacy union-accretion order
+    * (StreamingSpec pins live ≡ as-of-latest value-wise).
+    *
+    * The plan does not grow with the table's history: every flat file
+    * of every visible commit is ONE scan ([[scanCommits]]), and `batch`
+    * is looked up per row, so the code Spark generates for a read — and
+    * for every streaming micro-batch plan built on it — is the same
+    * after commit 3 and commit 3000 and hits the codegen cache. */
   def read(spark: SparkSession,
       versionAsOf: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val all = visibleCommits(versionAsOf)
     // metadata-only commits (SET CONSTRAINT) carry no data files
     val commits = all.filter(_.adds.nonEmpty)
     if (commits.isEmpty) return spark.emptyDataFrame
     val ts = tombstones(all)
     // Flat commits read through an EXPLICIT recorded schema — the
-    // log-is-the-schema-authority path readSkipping/readLookup already
-    // take via readAddFiles: no per-call footer-inference job, and the
-    // add-listed exact file paths replace the directory listing (§6).
-    // Live reads take the latest recorded physical schema (flatReader);
-    // time-travel reads take the schema RECORDED AT the last visible
-    // commit (the as-of authority), but only on mapping-free tables —
-    // under column mapping the files carry frozen physical names that
-    // the as-of logical schema cannot address, so those keep the
-    // inference read. Hive-partitioned commits always keep the dir read
-    // (partition columns live in dir names, which an explicit schema
-    // would null out).
+    // log-is-the-schema-authority path: no per-call footer-inference
+    // job, and the add-listed exact file paths replace the directory
+    // listing (§6). Live reads take the latest recorded physical schema
+    // (flatReader); time-travel reads take the schema RECORDED AT the
+    // last visible commit (the as-of authority), but only on
+    // mapping-free tables — under column mapping the files carry frozen
+    // physical names that the as-of logical schema cannot address, so
+    // those keep the per-commit inference read.
     val explicit = explicitReader(spark, versionAsOf, all)
     if (ts.isEmpty)
-      // fast path — a table never touched by merge-on-read keeps its
-      // plain per-dir scans (no metadata columns, no anti-joins)
-      dropMat(toLogical(commits.map { c =>
-        val flat = c.restoreDirs.isEmpty &&
-          c.adds.forall(a => !a.path.contains("/"))
-        val scan = explicit match {
-          case Some(r) if flat =>
-            r.parquet(
-              c.adds.map(a => dataDir.resolve(addKey(c, a)).toString): _*)
-          case _ =>
-            // a RESTORE commit re-points at its source commits' dirs (one
-            // read per source dir keeps hive partition-column discovery
-            // working exactly as it did for the original commit)
-            c.dataDirs.map(d => spark.read
-                .option("mergeSchema", mergeSchema.toString)
-                .parquet(dataDir.resolve(d).toString))
-              .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-        }
-        scan.withColumn("batch", lit(c.version).cast("int"))
-      }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))))
+      // fast path — a table never touched by merge-on-read reads with
+      // no row-position columns and no anti-joins
+      dropMat(toLogical(scanCommits(spark, commits, explicit, batch = true,
+        pos = false, mergeSchema)(_ => true)))
     else {
       val scanned = scanWithPos(spark, commits, ts, mergeSchema,
         explicit = explicit)
@@ -2366,57 +2351,107 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * local deletion vectors and removes subtract source files without
     * the clone ever knowing the source root as table state. */
   private def relKeyCol: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, instr, lit, regexp_replace, when}
+    import org.apache.spark.sql.functions.{col, instr, lit, regexp_replace,
+      replace, url_decode, when}
     // plain substring search (no per-row regex): the absolute data/ path
-    // is rooted, so its first occurrence in the file URI is the prefix
-    val marker = dataDir.toAbsolutePath.toString.replace("\\", "/") + "/"
-    val fp = col("_metadata.file_path")
+    // is rooted, so its first occurrence in the file path is the prefix
+    val marker =
+      dataDir.toAbsolutePath.normalize.toString.replace("\\", "/") + "/"
+    // `_metadata.file_path` is a URI: a space in the table root or a
+    // hive-escaped partition value (`p=a%3Ab` on disk) arrives %-escaped
+    // (`%20`, `p=a%253Ab`); decode it back to the filesystem path the
+    // log keys record ('+' is literal in a URI path, not a space)
+    val fp = url_decode(replace(col("_metadata.file_path"), lit("+"), lit("%2B")))
     val pos = instr(fp, marker)
     when(pos > lit(0), fp.substr(pos + lit(marker.length), lit(1 << 20)))
       .otherwise(regexp_replace(fp, "^[a-z][a-zA-Z0-9+.\\-]*:(//)?", ""))
   }
 
-  /** Per-commit scan like [[read]]'s fast path, plus the file key and
-    * row position of every row (the columns tombstone subtraction
-    * needs). Flat commits (no hive partition subdirs) prune REMOVED
-    * files out of the scan itself — after a merge-on-read remove or an
-    * incremental OPTIMIZE, retired files are not even listed; the
-    * remove anti-join then only covers dir-granular (hive/restore)
-    * commits. Returns an empty frame when every file is retired. */
+  /** Reads that fell back to one footer-inference scan per commit
+    * ([[scanCommits]] without an explicit schema: no recorded schema,
+    * or a time-travel read under column mapping) — observable so the
+    * slow path is visible, never consulted by the protocol. */
+  private[graft] val inferenceReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** ONE parquet scan over `keys` (data/-relative files, or dirs)
+    * through `reader`, plus, on request, the FileCol/RidxCol tombstone
+    * helpers (`pos`) and the writing commit's version as `batch`.
+    * `batch` is looked up per row in the `versions` file → version map,
+    * ONE literal keyed by [[relKeyCol]]: Spark hands a
+    * map literal to generated code as a reference object instead of
+    * inlining it, so the code is the same whatever files or versions
+    * the map holds. `_metadata` only resolves directly on a scan
+    * relation, so the helpers attach here, before any union. */
+  private def scanFiles(reader: org.apache.spark.sql.DataFrameReader,
+      keys: Seq[String], versions: Map[String, Int], batch: Boolean,
+      pos: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    val df = reader.parquet(keys.map(k => dataDir.resolve(k).toString): _*)
+    val withPos = if (!pos) df else df
+      .withColumn(FileCol, relKeyCol)
+      .withColumn(RidxCol, col("_metadata.row_index"))
+    if (!batch) withPos
+    else withPos.withColumn("batch", element_at(typedLit(versions), relKeyCol))
+  }
+
+  /** The scan behind [[read]], [[scanWithPos]] and [[probeScan]]: the
+    * flat add files of ALL `commits` passing `keep` as ONE [[scanFiles]]
+    * scan through the explicit-schema `reader`. The plan is therefore
+    * the same size whatever the table's history; a per-commit union
+    * tagged with a `lit(version)` would add one codegen stage per commit
+    * and shift the `codegenStageId` of every stage after it, so each
+    * micro-batch missed Spark's codegen cache and recompiled identical
+    * code.
+    *
+    * Dir-granular commits — hive-partitioned (partition columns live in
+    * dir names, which an explicit schema would null out) and RESTORE
+    * (its dirs come from different source commits) — keep one inference
+    * read per dir, unioned by name at their commit's position, so the
+    * presented column order is what a per-commit union gave. Without
+    * a `reader`, flat commits fall back to one inference scan per
+    * commit ([[inferenceReads]]): a single mergeSchema scan would refuse
+    * a type widening between commits that unionByName coerces. */
+  private def scanCommits(spark: SparkSession, commits: Seq[Commit],
+      reader: Option[org.apache.spark.sql.DataFrameReader], batch: Boolean,
+      pos: Boolean, mergeSchema: Boolean = false)
+      (keep: String => Boolean): DataFrame = {
+    def flat(c: Commit): Boolean =
+      c.restoreDirs.isEmpty && c.adds.forall(a => !a.path.contains("/"))
+    def kept(cs: Seq[Commit]): Seq[String] =
+      cs.flatMap(c => c.adds.map(a => addKey(c, a))).filter(keep)
+    val versions = commits.flatMap(c =>
+      c.adds.map(a => addKey(c, a) -> c.version.toInt)).toMap
+    val infer = spark.read.option("mergeSchema", mergeSchema.toString)
+    def scan(r: org.apache.spark.sql.DataFrameReader, keys: Seq[String]) =
+      Some(keys).filter(_.nonEmpty).map(scanFiles(r, _, versions, batch, pos))
+    val flats = commits.filter(flat)
+    if (reader.isEmpty && flats.nonEmpty) inferenceReads.incrementAndGet()
+    val frames = commits.flatMap { c =>
+      if (!flat(c))
+        if (kept(Seq(c)).isEmpty) Nil
+        else c.dataDirs.flatMap(d => scan(infer, Seq(d)))
+      else reader match {
+        case Some(r) => if (c eq flats.head) scan(r, kept(flats)) else None
+        case None => scan(infer, kept(Seq(c)))
+      }
+    }
+    if (frames.isEmpty) spark.emptyDataFrame
+    else frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+  }
+
+  /** [[read]]'s scan plus the file key and row position of every row
+    * (the columns tombstone subtraction needs). Flat commits prune
+    * REMOVED files out of the scan itself — after a merge-on-read
+    * remove or an incremental OPTIMIZE, retired files are not even
+    * listed; the remove anti-join then only covers dir-granular
+    * (hive/restore) commits. Returns an empty frame when every file is
+    * retired. */
   private def scanWithPos(spark: SparkSession, commits: Seq[Commit],
       ts: Tombstones, mergeSchema: Boolean = false,
       explicit: Option[org.apache.spark.sql.DataFrameReader] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    def withPos(df: DataFrame): DataFrame = df
-      .withColumn(FileCol, relKeyCol)
-      .withColumn(RidxCol, col("_metadata.row_index"))
-    def rd(paths: Seq[String]): DataFrame = spark.read
-      .option("mergeSchema", mergeSchema.toString).parquet(paths: _*)
-    // flat scans read through the caller's explicit recorded-schema
-    // reader when one is safe (no per-call footer-inference job; see
-    // read()); hive commits keep the inference read
-    def rdFlat(paths: Seq[String]): DataFrame =
-      explicit.fold(rd(paths))(_.parquet(paths: _*))
-    val frames = commits.flatMap { c =>
-      val flat = c.adds.forall(a => !a.path.contains("/"))
-      // _metadata is only resolvable directly on a scan relation, so
-      // the helper columns attach per read, before any union
-      val base =
-        if (flat) {
-          val live = c.adds.map(a => addKey(c, a))
-            .filterNot(ts.removed.contains)
-          if (live.isEmpty) None
-          else Some(withPos(rdFlat(live.map(k => dataDir.resolve(k).toString))))
-        } else Some(c.dataDirs
-          .map(d => withPos(rd(Seq(dataDir.resolve(d).toString))))
-          .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
-      base.map(_.withColumn("batch", lit(c.version).cast("int")))
-    }
-    if (frames.isEmpty) spark.emptyDataFrame
-    else toLogical(
-      frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
-  }
+      : DataFrame =
+    toLogical(scanCommits(spark, commits, explicit, batch = true, pos = true,
+      mergeSchema)(k => !ts.removed.contains(k)))
 
   /** Subtract tombstones from a [[scanWithPos]] frame: one broadcast
     * anti-join on the file key for whole-file removes, one on (file,
@@ -3032,14 +3067,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     readAddFiles(spark)(a => keep(a.stats.get(ph)))
   }
 
-  /** Shared pruned-read core: scan the visible add files passing `keep`
-    * (stat/bloom pruning), minus merge-on-read tombstones — removed
-    * files never make the scan list; files with a deletion vector get
-    * the position-level subtraction. A table never touched by
-    * merge-on-read reads exactly as before (no metadata columns). */
+  /** Shared pruned-read core: the visible add files passing `keep`
+    * (stat/bloom pruning) as ONE [[scanFiles]] scan, leaf files read
+    * directly whatever their commit's layout, minus merge-on-read
+    * tombstones — removed files never make the scan list; files with a
+    * deletion vector get the position-level subtraction. No `batch`
+    * column, and no helper columns unless a kept file has a vector. */
   private def readAddFiles(spark: SparkSession)
       (keep: AddFile => Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val all = visibleCommits(None)
     val ts = tombstones(all)
     val keys = all.flatMap { c =>
@@ -3047,16 +3082,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     }.filterNot(ts.removed)
     if (keys.isEmpty) spark.emptyDataFrame
     else {
-      // one scan over files from different commits: explicit physical
-      // schema so evolution across them cannot silently drop columns
-      val base = flatReader(spark)
-        .parquet(keys.map(k => dataDir.resolve(k).toString): _*)
+      // explicit physical schema so evolution across the commits cannot
+      // silently drop columns
+      val dv = keys.exists(ts.dv.contains)
+      val base = scanFiles(flatReader(spark), keys, Map.empty, batch = false,
+        pos = dv)
       dropMat(toLogical(
-        if (!keys.exists(ts.dv.contains)) base
-        else applyTombstones(
-            base.withColumn(FileCol, relKeyCol)
-              .withColumn(RidxCol, col("_metadata.row_index")),
-            Tombstones(Set.empty, ts.dv))
+        if (!dv) base
+        else applyTombstones(base, Tombstones(Set.empty, ts.dv))
           .drop(FileCol, RidxCol)))
     }
   }
@@ -3427,42 +3460,26 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * remove/dv/add actions plus the change dir. Conflicts recompute
     * from fresh state, exactly like [[transactSnapshotChanges]]. */
   /** The merge-on-read PROBE scan: live files of the pruned commits,
-    * with file/position helper columns. Flat commits (no hive
-    * partition subdirs — every commitAppend/morCommit output) scan
-    * exactly their surviving pruned FILES; hive-partitioned commits
-    * scan dir-granular (reading leaf files directly would drop the
-    * partition columns) and rely on the tombstone anti-join +
-    * row-group stats instead. One union, no per-commit batch column. */
+    * with file/position helper columns and no `batch`. The surviving
+    * stat-pruned FILES of every flat commit (every commitAppend/
+    * morCommit output) are one [[scanCommits]] scan, so the probe plan
+    * — and its generated code — does not change from one merge to the
+    * next. Hive-partitioned and RESTORE commits scan dir-granular, one
+    * read per dir (reading leaf files directly would drop the partition
+    * columns; a restore's dirs come from different source commits, and
+    * unionByName type-coerces across a widening boundary that parquet's
+    * mergeSchema refuses — fuzz seed 12), and rely on the tombstone
+    * anti-join + row-group stats instead. */
   private def probeScan(spark: SparkSession, commits: Seq[Commit],
       ts: Tombstones, bounds: Map[String, (Double, Double)]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    def withPos(df: DataFrame): DataFrame = df
-      .withColumn(FileCol, relKeyCol)
-      .withColumn(RidxCol, col("_metadata.row_index"))
-    val frames = commits.flatMap { c =>
-      val live = c.adds.filter(a =>
-        !ts.removed.contains(addKey(c, a)) && bounds.forall {
-          case (k, (lo, hi)) => mayIntersect(a.stats.get(k), lo, hi) })
-      if (live.isEmpty) None
-      else if (c.adds.forall(a => !a.path.contains("/")))
-        // flat layout: scan only the surviving files of this commit
-        Some(withPos(flatReader(spark).parquet(
-          live.map(a => dataDir.resolve(addKey(c, a)).toString): _*)))
-      else
-        // a RESTORE-shaped commit's dirs come from DIFFERENT source
-        // commits: read ONE DIR PER SCAN and union by name — each dir's
-        // files share a schema (one source commit), and unionByName
-        // both fills evolution-added columns with null AND type-coerces
-        // across a widening boundary (int→long), which parquet's own
-        // mergeSchema refuses to merge (fuzz seed 12: a backfill lift
-        // spanning a widen broke the MOR probe under one merged read)
-        Some(c.dataDirs
-          .map(d => withPos(spark.read.parquet(dataDir.resolve(d).toString)))
-          .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
-    }
-    if (frames.isEmpty) spark.emptyDataFrame
-    else toLogical(
-      frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
+    val stats = commits.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats))
+      .toMap
+    toLogical(scanCommits(spark, commits,
+      physicalReadSchema().map(_ => flatReader(spark)), batch = false,
+      pos = true) { k =>
+      !ts.removed.contains(k) && bounds.forall { case (col, (lo, hi)) =>
+        mayIntersect(stats(k).get(col), lo, hi) }
+    })
   }
 
   private def morCommit(spark: SparkSession, op: String, dvMaxRows: Int,

@@ -554,4 +554,41 @@ class PlanSpec extends SparkSpecBase {
     }
     assert(offenders.isEmpty, s"CartesianProduct in: ${offenders.mkString(", ")}")
   }
+
+  test("a sink read is one scan whose generated code does not change per commit") {
+    // a per-commit scan union adds a codegen stage per commit and shifts
+    // the stage ids after it, so every micro-batch recompiled identical
+    // code; one scan with a map-literal `batch` keeps the plan fixed
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{FileSourceScanExec,
+      WholeStageCodegenExec}
+    import spark.implicits._
+    val sink = new graft.streaming.ExactlyOnceSink(
+      java.nio.file.Files.createTempDirectory("graft-plan-read").toString)
+    def commit(b: Int): Unit = sink.process(
+      (0 until 5).map(i => (s"h$b-$i", b * 5 + i)).toDF("h", "n"), b)
+    def shape(): (Int, Int) = {
+      val p = sink.read(spark).queryExecution.executedPlan
+      (p.collect { case s: FileSourceScanExec => s }.size,
+        p.collect { case w: WholeStageCodegenExec => w }.size)
+    }
+    def compiles(f: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    (0 until 3).foreach(commit)
+    val (scans3, stages3) = shape()
+    (3 until 8).foreach(commit)
+    val (scans8, stages8) = shape()
+    assert(scans3 == 1 && scans8 == 1, s"scans after 3/8 commits: $scans3/$scans8")
+    assert(stages3 == stages8, s"codegen stages after 3/8 commits: $stages3/$stages8")
+    // `h` and `batch` stay in the scan (a bare count() prunes every
+    // column, and with them the per-commit stages)
+    def run(): Long = sink.read(spark).select("h", "batch").distinct().count()
+    compiles(run())
+    commit(8)
+    val again = compiles(assert(run() == 45))
+    assert(again == 0, s"$again classes compiled for a read one commit later")
+  }
 }
