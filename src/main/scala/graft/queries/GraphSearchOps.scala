@@ -240,6 +240,11 @@ object GraphSearchOps {
       // in-JVM A/B: ckpt 1.0-1.26 s steady vs persist 1.2-1.77 s.
       // GRAFT_STAGE_CACHE=off protection unchanged: the similarity join
       // still cannot re-run per round.
+      // Cluster caveat for the three localCheckpoint(true) calls here:
+      // the blocks live only in executor storage, unreplicated, with the
+      // lineage cut — losing an executor fails the query instead of
+      // recomputing the lost blocks — and `eager = true` runs a Spark job
+      // for each of them while the query is BUILT, before any action.
       val edges = pairs.select(explode(array(
           struct(col("d1").as("src"), col("d2").as("dst")),
           struct(col("d2").as("src"), col("d1").as("dst")))).as("e"))

@@ -74,7 +74,7 @@ object TextOps {
     * 50× canary priced that plan quadratic — block sizes grow with
     * the corpus (a bounded source set at 100 TB means corpus-sized
     * blocks), and the measured 80× time at 50× data fits Σ block²
-    * exactly (golden/scaling_r14.json's q_graph_degree isolate).
+    * exactly (a since-retired scaling canary's q_graph_degree isolate).
     * Prefix filtering is LOSSLESS, so every oracle-checked consumer
     * (jaccard_pairs, dup_groups, split_safe, pagerank, triangles,
     * degree) keeps byte-identical results: under a global rarest-first

@@ -195,9 +195,10 @@ final class PosixCommitStore(root0: Path) extends FsObjectStore(root0) {
   * real store, where PUT time is already the claim time — the protocol
   * treats the stamp as an ordering HINT only.
   *
-  * Throughput note (golden/store_r17.json): the lock-serialized
-  * check-then-create makes contended claims ~3× slower than the POSIX
-  * backend's bare link (8.4k vs 27.6k claims/s). That is fine for a
+  * Throughput note (from a since-retired store micro-benchmark): the
+  * lock-serialized check-then-create makes contended claims ~3× slower
+  * than the POSIX backend's bare link (8.4k vs 27.6k claims/s). That
+  * is fine for a
   * COMMIT path — claims are per-version, not per-row, and a version
   * carries a whole micro-batch — so do not benchmark this store as a
   * message queue. */

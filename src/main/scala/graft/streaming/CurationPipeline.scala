@@ -61,8 +61,11 @@ object CurationPipeline {
     * verify exact hashed-shingle Jaccard >= 0.5, drop near-dups
     * (conservative greedy: any doc matching a smaller-id batch doc or
     * ANY committed doc), append the survivors' signatures exactly-once.
-    * The committed corpus stays near-dup-free forever at per-batch cost
-    * O(batch + candidates) — never a corpus rescan. */
+    * The committed corpus stays near-dup-free forever. Cost: the
+    * candidate join reads the WHOLE committed signature table every
+    * batch (a scan of every band row, joined on (band, bkey)), so the
+    * per-batch cost grows with the corpus, not just with the batch and
+    * its candidates. */
   def nearDupBatch(batch: DataFrame, sink: ExactlyOnceSink,
       batchId: Long): Unit = {
     val bs = batch.sparkSession
@@ -103,7 +106,9 @@ object CurationPipeline {
   }
 
   /** One curated micro-batch (stages 1-6 above). `batch` must carry
-    * doc_id + text (extra metadata columns ride along untouched). */
+    * doc_id + text (extra metadata columns ride along untouched). The
+    * exact-dedup anti-join reads the corpus's whole `h` column every
+    * batch, so its cost grows with the corpus. */
   def curateBatch(batch: DataFrame, sink: ExactlyOnceSink,
       batchId: Long): Unit = {
     val s = batch.sparkSession

@@ -153,8 +153,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   // staging + stats
   // ---------------------------------------------------------------------
 
-  /** Write df to a staging dir; return relative parquet paths (sorted).
-    * With `check` (every DATA write path; change-row staging opts out —
+  /** Write df to a staging dir. With `check` (every DATA write path; change-row staging opts out —
     * CDC preimages are historical rows, not new writes), the table's
     * active CHECK constraints are enforced PER ROW inside the write
     * tasks themselves via a short-circuiting filter: `cons OR
@@ -163,7 +162,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * aborts the job before anything commits — the Delta CHECK
     * constraint behavior (write-time, transactional). */
   private def stage(df: DataFrame, staging: Path,
-      partitionBy: Seq[String], check: Boolean = true): Seq[Path] = {
+      partitionBy: Seq[String], check: Boolean = true): Unit = {
     import org.apache.spark.sql.functions._
     val cons = if (check) activeConstraints() else Map.empty[String, String]
     val checked = cons.toSeq.sortBy(_._1).foldLeft(df) { case (d, (n, e)) =>
@@ -181,9 +180,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val writer = physical.write.mode("overwrite")
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(staging.toString)
-    withDirStream(Files.walk(staging))(_
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
-      .map(p => staging.relativize(p)).sortBy(_.toString)
   }
 
   /** Per-file (path, min/max column stats, row count, byte size) read
@@ -194,8 +190,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * Row-group stats merge per file; columns without usable stats are
     * simply absent (skipping stays conservative). Stored as strings;
     * numeric comparison happens at read time (readSkipping). */
-  private def fileStats(spark: SparkSession, staging: Path): Seq[(String,
-      Map[String, (String, String)], Long, Long)] = {
+  private def fileStats(spark: SparkSession, staging: Path): Seq[AddFile] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -229,10 +224,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
             }
           }
         } finally reader.close()
-        (rel, stats.toMap.map { case (c, st) =>
-          c -> (render(st.genericGetMin), render(st.genericGetMax))
-        }, rowCount, Files.size(file))
-      }.toSeq)
+        AddFile(rel, stats.toMap.map { case (c, st) =>
+          c -> (Some(render(st.genericGetMin)), Some(render(st.genericGetMax)))
+        }, rows = Some(rowCount), bytes = Some(Files.size(file)))
+      }.toSeq).sortBy(_.path)
   }
 
   /** Per-file bloom filters for point-lookup file skipping (the Delta
@@ -290,16 +285,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       }.toMap
   }
 
-  /** A write published under `data/<dir>`: its add paths (relative to
-    * `dir`) with the per-file stats, row counts, byte sizes and blooms
-    * its commit entry records. */
-  private case class Published(dir: String, adds: Seq[Path],
-      stats: Map[String, Map[String, (String, String)]],
-      rows: Map[String, Long], bytes: Map[String, Long],
-      blooms: Map[String, Map[String, Array[Long]]])
+  /** A write published under `data/<dir>`: its add actions (paths
+    * relative to `dir`) with the per-file stats, row counts, byte sizes
+    * and blooms its commit entry records. */
+  private case class Published(dir: String, adds: Seq[AddFile])
 
-  private val Unpublished =
-    Published("", Nil, Map.empty, Map.empty, Map.empty, Map.empty)
+  private val Unpublished = Published("", Nil)
 
   /** The write protocol every writer shares: stage `df` ([[stage]];
     * `check` enforces CHECK constraints), read its footer stats, build
@@ -309,229 +300,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def publish(df: DataFrame, dir: String, partitionBy: Seq[String],
       bloomCols: Seq[String], bloomBits: Int, check: Boolean): Published = {
     val staging = Paths.get(tableDir, ".staging-" + dir.replace('/', '-'))
-    val adds = stage(df, staging, partitionBy, check)
+    stage(df, staging, partitionBy, check)
     val perFile = fileStats(df.sparkSession, staging)
     val blooms = fileBlooms(df.sparkSession, staging, bloomCols, bloomBits)
     val target = dataDir.resolve(dir)
     Files.createDirectories(target.getParent)
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
     touchNow(target)
-    Published(dir, adds,
-      perFile.map { case (rel, st, _, _) => rel -> st }.toMap,
-      perFile.map { case (rel, _, n, _) => rel -> n }.toMap,
-      perFile.map { case (rel, _, _, b) => rel -> b }.toMap, blooms)
-  }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Commit-entry JSON: txn cursor + schema metaData + add actions with
-    * per-file stats + the commit's data dir (relative to data/). Snapshot
-    * commits carry the OPERATION that produced them (MERGE / DELETE /
-    * COMPACT / SNAPSHOT) and, for logical-change operations, the dir of
-    * their recorded change rows (the Delta CDF `_change_data` analog). */
-  private def entryJsonS(schemaJson: String, version: Long, dir: String,
-      partitionBy: Seq[String], snapshot: Boolean,
-      adds: Seq[Path],
-      stats: Map[String, Map[String, (String, String)]],
-      op: String = "",
-      changeDir: Option[String] = None,
-      blooms: Map[String, Map[String, Array[Long]]] = Map.empty,
-      constraints: Option[Map[String, String]] = None,
-      streamTxn: Option[(String, Long)] = None,
-      restoreDirs: Seq[String] = Nil,
-      removes: Seq[String] = Nil,
-      dvs: Map[String, Array[Long]] = Map.empty,
-      generated: Option[Map[String, String]] = None,
-      columnMapping: Option[Map[String, String]] = None,
-      droppedCols: Option[Seq[String]] = None,
-      rows: Map[String, Long] = Map.empty,
-      bytes: Map[String, Long] = Map.empty,
-      widened: Boolean = false,
-      rowIdsCarry: Option[Map[String, (Long, Long)]] = None,
-      rowWmForce: Option[Long] = None,
-      matFiles: Boolean = false,
-      domains: Option[Map[String, Option[Map[String, String]]]] = None,
-      changeStats: Map[String, Map[String, (String, String)]] = Map.empty,
-      // snapshot commits: the version whose state this snapshot read
-      // (and replaces up to). Emitted — with the `rebase` reader
-      // feature — only when it differs from the default `version - 1`,
-      // so a non-rebased commit's entry is byte-identical to the
-      // legacy format.
-      snapshotBase: Option[Long] = None)
-      : String = {
-    val parts = partitionBy.map(jstr).mkString(",")
-    val opName =
-      if (op.nonEmpty) op
-      else if (snapshot) "SNAPSHOT" else "STREAMING UPDATE"
-    // ROW TRACKING (the Delta row-tracking feature analog): when the
-    // table has it enabled (a rowIdWatermark exists in the latest-wins
-    // metaData state), every fresh add action is assigned a contiguous
-    // baseRowId block from the watermark (file row counts are already
-    // recorded) plus its default row-commit-version, and the advanced
-    // watermark rides this commit's metaData. Freshness under OCC: this
-    // is (re)built per claim attempt against the live log tail, and
-    // dense claims mean a successful claim saw every prior allocation —
-    // the identity-watermark argument. `rowIdsCarry` overrides
-    // allocation with carried (baseRowId, rcv) pairs (RESTORE lifts the
-    // source adds' ids verbatim); `rowWmForce` force-emits a watermark
-    // on a metadata-only commit (enableRowTracking).
-    val rowWmNow: Option[Long] =
-      rowWmForce.orElse(if (rowIdsCarry.isDefined || adds.nonEmpty ||
-        snapshot) logTail.rowIdState() else None)
-    val (rowIdOf: Map[String, (Long, Long)], rowWmOut: Option[Long]) =
-      (rowWmNow, rowIdsCarry) match {
-        case (None, _) => (Map.empty[String, (Long, Long)], rowWmForce)
-        case (Some(wm), Some(m)) => (m, Some(wm))
-        case (Some(wm), None) =>
-          var w = wm
-          val m = adds.map { p =>
-            val rel = p.toString.replace("\\", "/")
-            val n = rows.getOrElse(rel, sys.error(
-              s"rowTracking: add $rel carries no row count — cannot " +
-                "allocate a baseRowId block"))
-            val b = w; w += n; rel -> (b, version)
-          }.toMap
-          (m, Some(w))
-      }
-    val addJson = adds.map { p =>
-      val rel = p.toString.replace("\\", "/")
-      val st = stats.getOrElse(rel, Map.empty).toSeq.sortBy(_._1).map {
-        case (c, (lo, hi)) =>
-          val loJ = Option(lo).map(jstr).getOrElse("null")
-          val hiJ = Option(hi).map(jstr).getOrElse("null")
-          s"${jstr(c)}:{${jstr("min")}:$loJ,${jstr("max")}:$hiJ}"
-      }.mkString(",")
-      // bloom bitmaps as fixed-width hex words (16 chars per 64-bit word)
-      val bl = blooms.getOrElse(rel, Map.empty).toSeq.sortBy(_._1).map {
-        case (c, ws) =>
-          s"${jstr(c)}:${jstr(ws.map(w => f"$w%016x").mkString)}"
-      }.mkString(",")
-      val blJson = if (bl.isEmpty) "" else s""","bloom":{$bl}"""
-      // per-file row count (the Delta numRecords stat): metadata-only
-      // COUNT(*) and history metrics read it from the log
-      val rw = rows.get(rel).map(n => s""","rows":$n""").getOrElse("")
-      // per-file byte size (the Delta `size` stat): the version
-      // checksum's tableSizeBytes folds these — additive-safe metadata
-      // an old reader ignores
-      val bw = bytes.get(rel).map(n => s""","bytes":$n""").getOrElse("")
-      val rid = rowIdOf.get(rel).map { case (b, cv) =>
-        s""","baseRowId":$b,"rcv":$cv""" }.getOrElse("")
-      s"""{"path":${jstr(rel)},"stats":{$st}$blJson$rw$bw$rid}"""
-    }.mkString(",")
-    val rowWmJson = rowWmOut.map(w => s""","rowIdWatermark":$w""").getOrElse("")
-    val changeJson = changeDir.map(d => s""""changeDir":${jstr(d)},""").getOrElse("")
-    // per-change-file column stats (round 17 — the CDC data-skipping
-    // analog): a selective change-feed consumer (replicate WHERE k=x)
-    // prunes change FILES by [min,max] instead of scanning every change
-    // row in range. Additive-safe: a reader ignoring the field reads
-    // the whole change dir — conservative, never wrong.
-    val changeAddJson =
-      if (changeStats.isEmpty || changeDir.isEmpty) ""
-      else {
-        val items = changeStats.toSeq.sortBy(_._1).map { case (rel, st) =>
-          val stJ = st.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-            val loJ = Option(lo).map(jstr).getOrElse("null")
-            val hiJ = Option(hi).map(jstr).getOrElse("null")
-            s"${jstr(c)}:{${jstr("min")}:$loJ,${jstr("max")}:$hiJ}"
-          }.mkString(",")
-          s"""{"path":${jstr(rel)},"stats":{$stJ}}"""
-        }.mkString(",")
-        s""""changeAdd":[$items],"""
-      }
-    // constraints ride the metaData action (Delta's table-config slot): a
-    // commit carrying the field REPLACES the active set; commits without
-    // it leave the set untouched (latest-wins log replay)
-    val consJson = constraints.map { m =>
-      ",\"constraints\":{" + m.toSeq.sortBy(_._1)
-        .map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }.mkString(",") + "}"
-    }.getOrElse("")
-    // generated columns ride metaData like constraints: a commit carrying
-    // the field REPLACES the active set; absent = untouched
-    val genJson = generated.map { m =>
-      ",\"generated\":{" + m.toSeq.sortBy(_._1)
-        .map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }.mkString(",") + "}"
-    }.getOrElse("")
-    // column mapping (rename/drop without rewrite): logical -> physical
-    // (sparse; only renamed columns), plus physically-dropped names —
-    // same latest-wins metaData replay as constraints/generated
-    val mapJson = columnMapping.map { m =>
-      ",\"columnMapping\":{" + m.toSeq.sortBy(_._1)
-        .map { case (l, ph) => s"${jstr(l)}:${jstr(ph)}" }.mkString(",") + "}"
-    }.getOrElse("")
-    val dropJson = droppedCols.map { s =>
-      ",\"droppedColumns\":[" + s.sorted.map(jstr).mkString(",") + "]"
-    }.getOrElse("")
-    // Reader features (the Delta protocol-versioning analog): list the
-    // capabilities WITHOUT WHICH this entry would be silently MISREAD —
-    // deletion vectors / removes (ignoring them resurrects deleted
-    // rows), column mapping (ignoring it reads dropped bytes), restore
-    // re-pointing. Additive-safe fields (ict, rows, generated — ignored
-    // harmlessly by an old reader) are deliberately NOT listed, exactly
-    // Delta's reader-vs-writer feature split. parseCommitText refuses
-    // entries carrying a feature it does not know.
-    // a rebased snapshot's base is STRICTLY below version - 1: commits
-    // in (base, version) are rebased-past appends that stay visible. An
-    // old reader ignoring the field would apply default-base compaction
-    // and silently DROP those appends' rows — a misread, hence the
-    // reader feature.
-    val rebased = snapshot && snapshotBase.exists(_ < version - 1)
-    val baseJson =
-      if (rebased) s""""snapshotBase":${snapshotBase.get},""" else ""
-    val feats = Seq(
-      if (rebased) Some("rebase") else None,
-      if (removes.nonEmpty || dvs.nonEmpty) Some("dv") else None,
-      if (columnMapping.exists(_.nonEmpty) || droppedCols.exists(_.nonEmpty))
-        Some("columnMapping") else None,
-      if (restoreDirs.nonEmpty) Some("restore") else None,
-      // a type-widening commit leaves files of BOTH widths live: a
-      // reader that cannot coerce them would misread the column
-      if (widened) Some("typeWidening") else None,
-      // a commit adding files that carry MATERIALIZED row-id columns: a
-      // reader unaware of row tracking would surface the reserved
-      // physical columns as user data — a misread, unlike the additive
-      // baseRowId/rcv metadata an old reader ignores harmlessly
-      if (matFiles) Some("rowTracking") else None).flatten
-    val protoJson =
-      if (feats.isEmpty) ""
-      else s""""protocol":{"readerFeatures":[${feats.map(jstr).mkString(",")}]},"""
-    s"""{"txn":{"appId":${jstr(appId)},"version":$version},""" +
-      protoJson +
-      s""""snapshot":$snapshot,""" + baseJson +
-      s""""metaData":{"schemaString":$schemaJson,""" +
-      s""""partitionColumns":[$parts]$consJson$genJson$mapJson$dropJson""" +
-      s"""$rowWmJson},""" +
-      s""""dir":${jstr(dir)},""" +
-      (if (restoreDirs.isEmpty) ""
-       else s""""restoreDirs":[${restoreDirs.map(jstr).mkString(",")}],""") +
-      (if (removes.isEmpty) ""
-       else s""""remove":[${removes.sorted.map(jstr).mkString(",")}],""") +
-      (if (dvs.isEmpty) ""
-       else ("\"dv\":{" + dvs.toSeq.sortBy(_._1).map { case (k, idxs) =>
-         s"${jstr(k)}:${jstr(DeletionVectors.encode(idxs))}"
-       }.mkString(",") + "},")) +
-      changeJson + changeAddJson +
-      // the Delta domainMetadata action: a per-domain metadata DELTA
-      // (null = removal), top-level like Delta's — additive-safe for
-      // old readers, latest-wins per domain in the fold
-      domains.map { m =>
-        "\"domainMetadata\":{" + m.toSeq.sortBy(_._1).map {
-          case (d, Some(cfg)) => s"${jstr(d)}:{" + cfg.toSeq.sortBy(_._1)
-            .map { case (k, x) => s"${jstr(k)}:${jstr(x)}" }
-            .mkString(",") + "}"
-          case (d, None) => s"${jstr(d)}:null"
-        }.mkString(",") + "},"
-      }.getOrElse("") +
-      streamTxn.map { case (a, b) =>
-        s""""streamTxn":{"appId":${jstr(a)},"batchId":$b},"""
-      }.getOrElse("") +
-      s""""add":[$addJson],""" +
-      s""""commitInfo":{"operation":"$opName","version":$version}}"""
+    Published(dir, perFile.map(a => a.copy(bloom = blooms.getOrElse(a.path, Map.empty))))
   }
 
   /** Largest in-commit timestamp this JVM has stamped or observed —
@@ -587,22 +363,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * surviving only in a checkpoint) is directly assertable. */
   private[graft] def nextIctForTest(version: Long): Long = nextIct(version)
 
-  /** THE commit point: conditional creation of the version's log
+  /** THE commit point: conditional creation of `e`'s version's log
     * object ([[CommitStore]].putIfAbsent — POSIX hard-link or emulated
     * object-store conditional PUT, per the configured store). Returns
     * false if the version was already claimed (by a replay or another
-    * writer). Every entry is stamped with an in-commit timestamp at
-    * claim time (spliced as the FIRST field so [[ictOf]] can
-    * head-parse it): time travel and history read the stamp from the
-    * entry itself, so they survive log-file copies and cleanupLog —
-    * the checkpoint carries entries verbatim, stamp included. */
-  private def claim(version: Long, entry: String): Boolean = {
+    * writer). Each attempt runs [[withRowIds]] against the live log and
+    * stamps the entry with this writer's appId and an in-commit
+    * timestamp (rendered as the FIRST field so [[ictOf]] can head-parse
+    * it): time travel and history read the stamp from the entry itself,
+    * so they survive log-file copies and cleanupLog — the checkpoint
+    * carries entries verbatim, stamp included. */
+  private def claim(e: Entry): Boolean = {
     store.ensureRoot()
-    val ict = nextIct(version)
-    val stamped =
-      if (entry.startsWith("{")) s"""{"ict":$ict,""" + entry.substring(1)
-      else entry
-    val won = store.putIfAbsent(logName(version), stamped)
+    val ict = nextIct(e.version)
+    val won = store.putIfAbsent(logName(e.version), Entry.render(
+      withRowIds(e).copy(ict = Some(ict), txnAppId = Some(appId))))
     if (won) {
       lastIct.getAndUpdate(v => math.max(v, ict))
       // re-stamp to COMMIT time (ordering HINT, not correctness): a
@@ -612,13 +387,41 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // stream) and cleanupLog's age guard both want claim order, and
       // claims are sequential by construction. On a real object store
       // PUT time already IS claim time and touch degrades to a no-op.
-      try store.touch(logName(version))
+      try store.touch(logName(e.version))
       catch { case scala.util.control.NonFatal(_) => () }
-      maybeCheckpoint(version)
-      maybeWriteCrc(version)
+      maybeCheckpoint(e.version)
+      maybeWriteCrc(e.version)
     }
     won
   }
+
+  /** ROW TRACKING allocation (the Delta row-tracking feature analog),
+    * run by [[claim]] on every attempt: when the table has tracking on
+    * (a rowIdWatermark exists in the latest-wins metaData state), every
+    * add of `e` without a block gets a contiguous `baseRowId` block from
+    * the watermark (sized by its recorded row count) and `e`'s version
+    * as its default row-commit-version, and the advanced watermark rides
+    * `e`'s metaData. Adds that already carry a block (RESTORE lifts)
+    * keep it, and an entry that records its own watermark (enabling
+    * tracking) is left as is. Freshness under OCC: the watermark is read
+    * per attempt from the live log tail, and dense claims mean a
+    * successful claim saw every prior allocation — the
+    * identity-watermark argument. */
+  private def withRowIds(e: Entry): Entry =
+    if (e.rowIdWatermark.isDefined || (e.adds.isEmpty && !e.snapshot)) e
+    else logTail.rowIdState().fold(e) { wm =>
+      var w = wm
+      val adds = e.adds.map { a =>
+        if (a.baseRowId.isDefined) a
+        else {
+          val n = a.rows.getOrElse(sys.error(s"rowTracking: add ${a.path} " +
+            "carries no row count — cannot allocate a baseRowId block"))
+          w += n
+          a.copy(baseRowId = Some(w - n), rcv = Some(e.version))
+        }
+      }
+      e.copy(adds = adds, rowIdWatermark = Some(w))
+    }
 
   // ---------------------------------------------------------------------
   // version checksums (the Delta .crc / VersionChecksum analog)
@@ -693,11 +496,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def storedChecksum(version: Long): Option[VersionChecksum] =
     try {
       import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val c = JsonMethods.parse(store.read(crcName(version))) \ "crc"
-      def l(k: String): Option[Long] = (c \ k) match {
-        case JInt(n) => Some(n.toLong); case _ => None
-      }
+      val c = jackson.JsonMethods.parse(store.read(crcName(version))) \ "crc"
+      def l(k: String): Option[Long] = Codec.asLong(c \ k)
       for { v <- l("version"); if v == version; nf <- l("numFiles")
             nd <- l("numDeletedRows"); dv <- l("numDvFiles") }
         yield VersionChecksum(v, nf, l("numRows"), nd, dv,
@@ -736,12 +536,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .map(_.stripSuffix(".checkpoint").toLong)
       .sorted
 
-  /** One sidecar part of a multi-part checkpoint: bare file name (the
-    * manifest and the sidecar always live in the same log dir), entry
-    * count, and the last entry's version — the two invariants a reader
-    * checks before trusting the part. */
-  private case class SidecarRef(name: String, entries: Int, lastVersion: Long)
-
   /** Sidecar names carry the checkpoint version, a writer-unique uid
     * (two writers racing the same cadence point can never collide on
     * part names — the loser deletes its own parts), and the part index.
@@ -759,167 +553,36 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         scala.util.Try(n.takeWhile(_ != '.').toLong).toOption.map(_ -> n)
       }
 
-  /** The latest-wins metadata state a checkpoint must carry so that raw
-    * log entries below it can be reclaimed ([[cleanupLog]]): the active
-    * CHECK-constraint set and the per-appId streamTxn high-water marks.
-    * Their carrier commits may predate the last snapshot — the visible
-    * entries alone cannot reproduce them. The Delta analog: checkpoints
-    * persist `txn` and `metaData` actions, not just `add`s. */
-  private case class CkptAux(constraints: Map[String, String],
-      cursors: Map[String, Long],
-      generated: Map[String, String] = Map.empty,
-      columnMapping: Map[String, String] = Map.empty,
-      droppedCols: Seq[String] = Nil,
-      rowIdWatermark: Option[Long] = None,
-      domains: Map[String, Map[String, String]] = Map.empty)
-
-  private def foldAux(seed: CkptAux, entries: Seq[Commit]): CkptAux =
-    entries.sortBy(_.version).foldLeft(seed) { (acc, c) =>
-      CkptAux(
-        c.constraints.getOrElse(acc.constraints),
-        c.streamTxn.fold(acc.cursors) { case (a, b) =>
-          acc.cursors.updated(a, math.max(b, acc.cursors.getOrElse(a, Long.MinValue)))
-        },
-        c.generated.getOrElse(acc.generated),
-        c.columnMapping.getOrElse(acc.columnMapping),
-        c.droppedCols.getOrElse(acc.droppedCols),
-        c.rowIdWatermark.orElse(acc.rowIdWatermark),
-        // domain metadata is a PER-DOMAIN delta, not a whole-set
-        // replacement like constraints: apply upserts and removals
-        c.domains.fold(acc.domains)(_.foldLeft(acc.domains) {
-          case (m, (d, Some(cfg))) => m.updated(d, cfg)
-          case (m, (d, None)) => m - d
-        }))
-    }
-
-  private def auxHeader(version: Long, aux: CkptAux): String = {
-    val cons = aux.constraints.toSeq.sortBy(_._1)
-      .map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }.mkString(",")
-    val cur = aux.cursors.toSeq.sortBy(_._1)
-      .map { case (a, b) => s"${jstr(a)}:$b" }.mkString(",")
-    val gen = aux.generated.toSeq.sortBy(_._1)
-      .map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }.mkString(",")
-    val cmap = aux.columnMapping.toSeq.sortBy(_._1)
-      .map { case (l, ph) => s"${jstr(l)}:${jstr(ph)}" }.mkString(",")
-    val dcols = aux.droppedCols.sorted.map(jstr).mkString(",")
-    val rwm = aux.rowIdWatermark
-      .map(w => s""","rowIdWatermark":$w""").getOrElse("")
-    val doms = aux.domains.toSeq.sortBy(_._1).map { case (d, cfg) =>
-      s"${jstr(d)}:{" + cfg.toSeq.sortBy(_._1)
-        .map { case (k, x) => s"${jstr(k)}:${jstr(x)}" }.mkString(",") + "}"
-    }.mkString(",")
-    s"""{"checkpointAux":{"version":$version,"constraints":{$cons},""" +
-      s""""generated":{$gen},"columnMapping":{$cmap},""" +
-      s""""domains":{$doms},""" +
-      s""""droppedColumns":[$dcols],"streamTxn":{$cur}$rwm}}"""
-  }
-
-  /** The multipart manifest line: the aux header with a `sidecars`
-    * field spliced into the checkpointAux object. Single-file
-    * checkpoints omit the field entirely (backward shape). */
-  private def auxHeaderWithSidecars(version: Long, aux: CkptAux,
-      parts: Seq[SidecarRef]): String = {
-    val base = auxHeader(version, aux)
-    if (parts.isEmpty) base
-    else {
-      val m = parts.map(p => s"""{"name":${jstr(p.name)},""" +
-        s""""entries":${p.entries},"lastVersion":${p.lastVersion}}""")
-        .mkString(",")
-      // splice before the closing "}}" of {"checkpointAux":{...}}
-      base.dropRight(2) + s""","sidecars":[$m]}}"""
-    }
-  }
-
-  /** Sidecar manifest of a checkpoint head line; empty for single-file
-    * checkpoints (and for pre-round-15 heads — backward parse). */
-  private def parseManifest(line: String): Seq[SidecarRef] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    (JsonMethods.parse(line) \ "checkpointAux" \ "sidecars") match {
-      case JArray(items) => items.map { o =>
-        ((o \ "name"), (o \ "entries"), (o \ "lastVersion")) match {
-          case (JString(n), JInt(e), JInt(lv)) =>
-            SidecarRef(n, e.toInt, lv.toLong)
-          case _ => sys.error(s"malformed sidecar manifest entry: $o")
-        }
-      }
-      case _ => Nil
-    }
-  }
-
-  private def parseAuxHeader(line: String): Option[(Long, CkptAux)] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val a = JsonMethods.parse(line) \ "checkpointAux"
-    (a \ "version") match {
-      case JInt(v) =>
-        val cons = (a \ "constraints") match {
-          case JObject(fs) => fs.collect { case (n, JString(e)) => n -> e }.toMap
-          case _ => Map.empty[String, String]
-        }
-        val cur = (a \ "streamTxn") match {
-          case JObject(fs) => fs.collect { case (n, JInt(b)) => n -> b.toLong }.toMap
-          case _ => Map.empty[String, Long]
-        }
-        // absent in pre-round-12 checkpoints -> empty (backward parse)
-        val gen = (a \ "generated") match {
-          case JObject(fs) => fs.collect { case (n, JString(e)) => n -> e }.toMap
-          case _ => Map.empty[String, String]
-        }
-        val cmap = (a \ "columnMapping") match {
-          case JObject(fs) => fs.collect { case (l, JString(ph)) => l -> ph }.toMap
-          case _ => Map.empty[String, String]
-        }
-        val dcols = (a \ "droppedColumns") match {
-          case JArray(items) => items.collect { case JString(s) => s }
-          case _ => Nil
-        }
-        // absent in pre-round-15 checkpoints -> None (backward parse)
-        val rwm = (a \ "rowIdWatermark") match {
-          case JInt(w) => Some(w.toLong)
-          case _ => None
-        }
-        val doms = (a \ "domains") match {
-          case JObject(fs) => fs.collect { case (d, JObject(cfg)) =>
-            d -> cfg.collect { case (k, JString(x)) => k -> x }.toMap
-          }.toMap
-          case _ => Map.empty[String, Map[String, String]]
-        }
-        Some(v.toLong -> CkptAux(cons, cur, gen, cmap, dcols, rwm, doms))
-      case _ => None
-    }
-  }
-
   /** Parse a checkpoint, or None if torn/corrupt/inconsistent — replay
     * then falls back to an older checkpoint or the raw log, so a bad
     * checkpoint can degrade performance but never correctness. Format:
     * line 1 is the aux header, the rest are visible commit entries
     * verbatim. */
-  private def loadCheckpoint(cv: Long): Option[(CkptAux, Seq[Commit])] =
+  private def loadCheckpoint(cv: Long): Option[(CkptAux, Seq[Entry])] =
     loadCheckpointFull(cv).map { case (aux, cs, _) => (aux, cs) }
 
   /** Like [[loadCheckpoint]] but also returns each entry's raw line —
     * the checkpoint writer needs them verbatim for entries whose raw
     * log files were reclaimed by [[cleanupLog]]. */
   private def loadCheckpointFull(cv: Long)
-      : Option[(CkptAux, Seq[Commit], Seq[String])] =
+      : Option[(CkptAux, Seq[Entry], Seq[String])] =
     try {
       val lines = store.readLines(ckptNameOf(cv))
         .filter(_.nonEmpty)
       for {
         head <- lines.headOption
-        (v, aux) <- parseAuxHeader(head)
+        (v, aux, parts) <- CkptAux.parse(head)
         if v == cv
-        body <- checkpointBody(cv, head, lines.tail)
+        body <- checkpointBody(parts, lines.tail)
         // parse IN PARALLEL, order-preserving: a checkpoint body is
         // O(live entries) and entry parses are independent — on a
         // many-core driver this is the snapshot-seed bottleneck once
         // the files are local (reads parallelize via the sidecars; on
         // an object store the reads dominate instead)
         commits = {
-          val out = new Array[Commit](body.size)
+          val out = new Array[Entry](body.size)
           java.util.stream.IntStream.range(0, body.size).parallel()
-            .forEach(i => out(i) = parseCommitText(body(i)))
+            .forEach(i => out(i) = Entry.parse(body(i)))
           out.toSeq
         }
         // invariant of the writer: the triggering commit is the newest
@@ -938,9 +601,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * remove). None if any part is missing, torn (entry count drifted
     * from the manifest), or ends at the wrong version — the caller then
     * falls back to an older checkpoint or the raw log. */
-  private def checkpointBody(cv: Long, head: String,
+  private def checkpointBody(parts: Seq[SidecarRef],
       inlineTail: Seq[String]): Option[Seq[String]] = {
-    val parts = parseManifest(head)
     if (parts.isEmpty) Some(inlineTail)
     else if (inlineTail.nonEmpty) None // manifest AND body: not ours
     else {
@@ -951,7 +613,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
             val p = parts(i)
             val ls = store.readLines(p.name).filter(_.nonEmpty)
             if (ls.size == p.entries && ls.nonEmpty &&
-                parseCommitText(ls.last).version == p.lastVersion)
+                Entry.parse(ls.last).version == p.lastVersion)
               Some(ls)
             else None
           } catch { case scala.util.control.NonFatal(_) => None }
@@ -981,10 +643,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           .collectFirst { case (cv, Some(full)) => cv -> full }
         val (from, seedAux) = prev
           .map { case (cv, (aux, _, _)) => cv -> aux }
-          .getOrElse(-1L -> CkptAux(Map.empty, Map.empty))
-        val auxEntries = committedVersions()
-          .filter(v => v > from && v <= version).map(parseCommit)
-        val aux = foldAux(seedAux, auxEntries)
+          .getOrElse(-1L -> CkptAux())
+        val aux = seedAux.fold(committedVersions()
+          .filter(v => v > from && v <= version).map(parseCommit))
         // entry lines come from the raw log when it still has them, and
         // from the previous checkpoint for entries cleanupLog reclaimed —
         // without the fallback, every checkpoint AFTER a cleanup would
@@ -992,7 +653,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         val seedLines: Map[Long, String] = prev
           .map { case (_, (_, cs, ls)) => cs.map(_.version).zip(ls).toMap }
           .getOrElse(Map.empty)
-        def entryLine(c: Commit): String =
+        def entryLine(c: Entry): String =
           if (store.exists(logName(c.version)))
             store.read(logName(c.version)).trim
           else seedLines(c.version)
@@ -1036,13 +697,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
                 }
               parts.indices.map { i =>
                 SidecarRef(names(i), parts(i).size,
-                  parseCommitText(parts(i).last).version)
+                  Entry.parse(parts(i).last).version)
               }
             }
           val text =
-            if (refs.isEmpty) (auxHeader(version, aux) +: entries)
+            if (refs.isEmpty) (CkptAux.render(version, aux) +: entries)
               .mkString("", "\n", "\n")
-            else auxHeaderWithSidecars(version, aux, refs) + "\n"
+            else CkptAux.render(version, aux, refs) + "\n"
           // conditional PUT, first writer wins the cadence point: the
           // winner's manifest references its OWN uid-named sidecars;
           // a loser's are unreachable — drop them rather than leave
@@ -1157,7 +818,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           if (widens(f.dataType, t))
             None // narrower write: upcast on stage (conformToTable)
           else if (widens(t, f.dataType) && mergeSchema)
-            None // TYPE WIDENING evolution — recorded by evolvedSchema
+            None // TYPE WIDENING evolution — recorded by evolvedSchemaOf
           else if (widens(t, f.dataType))
             Some(s"${f.name}: table ${t.catalogString} vs write " +
               s"${f.dataType.catalogString} — a lossless WIDENING; pass " +
@@ -1187,26 +848,22 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     }
   }
 
-  /** The TABLE schema this write's metaData action must record: the
-    * committed schema plus (post-[[enforceSchema]]) any evolved-in new
-    * columns, in committed-first order. NOT the frame's schema — a
-    * narrower append (columns omitted, null-padded on read) must not
-    * shrink the recorded table schema, exactly as a Delta append leaves
-    * metaData untouched. */
-  private def evolvedSchemaJson(df: DataFrame): String = evolvedSchema(df)._1
-
-  /** (recorded schema json, widenedAnyField): shared fields take the
-    * WIDER of (committed, frame) type — enforceSchema already rejected
-    * any flip that is not a lossless widening under mergeSchema — and
-    * the flag makes the commit declare the `typeWidening` reader
-    * feature (a reader unioning per-commit scans must coerce the mixed
-    * narrow/wide files, or it would misread the column's type). */
-  private def evolvedSchema(df: DataFrame): (String, Boolean) =
-    evolvedSchemaOf(df.schema)
-
-  /** Schema-only form, re-runnable on an OCC retry: a rival commit
-    * between stage and claim may itself have evolved the table
-    * (widened a type, added a column), and re-recording the schema
+  /** The TABLE schema this write's metaData action must record, with
+    * whether it widened a field: the committed schema plus
+    * (post-[[enforceSchema]]) any evolved-in new columns, in
+    * committed-first order. NOT the frame's schema — a narrower append
+    * (columns omitted, null-padded on read) must not shrink the
+    * recorded table schema, exactly as a Delta append leaves metaData
+    * untouched. Shared fields take the WIDER of (committed, frame) type
+    * — enforceSchema already rejected any flip that is not a lossless
+    * widening under mergeSchema — and the flag makes the commit declare
+    * the `typeWidening` reader feature (a reader unioning per-commit
+    * scans must coerce the mixed narrow/wide files, or it would misread
+    * the column's type).
+    *
+    * Re-runnable on an OCC retry: a rival commit between stage and
+    * claim may itself have evolved the table (widened a type, added a
+    * column), and re-recording the schema
     * computed BEFORE the lost race would silently revert the rival's
     * evolution in the new latest metaData. Callers re-invoke this
     * against the fresh committed schema on every claim retry —
@@ -1275,7 +932,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * driving the same table — either way the batch must not be
     * silently swallowed. Pre-txn-era entries carry no appId and pass
     * on the dir shape alone. */
-  private def isOwnStreamBatch(c: Commit, batchId: Long): Boolean =
+  private def isOwnStreamBatch(c: Entry, batchId: Long): Boolean =
     (c.dir == s"batch=$batchId" || c.dir.startsWith(s"batch=$batchId-")) &&
       c.txnAppId.forall(_ == appId)
 
@@ -1356,12 +1013,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       //    But verify it: a maintenance OCC commit (or a foreign
       //    stream) racing into version=batchId while this batch staged
       //    would otherwise swallow the batch silently.
-      val (schemaJson, widened) = evolvedSchema(gdf)
-      if (!claim(batchId, entryJsonS(schemaJson, batchId,
-          pub.dir, partitionBy, snapshot, pub.adds,
-          pub.stats, blooms = pub.blooms, generated = advancedGen,
-          rows = pub.rows,
-          bytes = pub.bytes, widened = widened))) {
+      val (schemaJson, widened) = evolvedSchemaOf(gdf.schema)
+      if (!claim(Entry(batchId, pub.dir, snapshot, pub.adds,
+          schemaStr = Some(schemaJson), partitionColumns = partitionBy,
+          generated = advancedGen, widened = widened))) {
         require(isOwnStreamBatch(parseCommit(batchId), batchId),
           s"process(batchId=$batchId): lost the version claim to a " +
             "non-streaming or foreign-stream commit — use appendBatch " +
@@ -1463,11 +1118,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       while (true) {
         validated = reEnforceOnRetry(frame.schema, mergeSchema, validated,
           "commitAppend")
-        val (sj, wd) = evolvedSchema(frame)
-        if (claim(v, entryJsonS(sj, v, st.dir, partitionBy,
-            snapshot = false, st.adds, st.stats, blooms = st.blooms,
-            streamTxn = streamTxn, rows = st.rows, bytes = st.bytes,
-            widened = wd, domains = writeDomains(clusterBy, bloomBy, bloomBits))))
+        val (sj, wd) = evolvedSchemaOf(frame.schema)
+        if (claim(Entry(v, st.dir, adds = st.adds, schemaStr = Some(sj),
+            partitionColumns = partitionBy, streamTxn = streamTxn, widened = wd,
+            domains = writeDomains(clusterBy, bloomBy, bloomBits))))
           return v
         v = math.max(v + 1, nextVersion()) // lost the race — next version
       }
@@ -1527,11 +1181,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
                 s"${if (g) ",gaps" else ""})")
             }.toMap
             ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
-            val sjR = latestSchema().map(_.json)
-              .getOrElse("""{"type":"struct","fields":[]}""")
-            if (claim(expected, entryJsonS(sjR, expected, "", Nil,
-                snapshot = false, Nil, Map.empty, "RESERVE IDENTITY", None,
-                Map.empty, generated = Some(gen ++ advanced)))) {
+            if (claim(Entry(expected, op = "RESERVE IDENTITY",
+                schemaStr = Some(metaSchemaJson()),
+                generated = Some(gen ++ advanced)))) {
               base = rules; reserved = true
             }
           }
@@ -1558,7 +1210,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // claim fails; on failure re-read, and only re-assign + re-stage
       // when the watermark actually moved (a rival identity append).
       //
-      // Contention economics (measured, golden/occ_r13.json): at W
+      // Contention economics (measured against the allow-gaps mode in
+      // golden/occ_r14.json, which OccStressSpec records): at W
       // concurrent writers every rival data commit moves the watermark,
       // so a commit pays O(W) re-assign+re-stage parquet rewrites —
       // identity values are baked into the staged files, and atomic
@@ -1612,7 +1265,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         val (adf, advanced) = assignFromPrep(prep, rules)
         val st = stageAppend(adf, partitionBy, clusterBy, clusterFiles,
           bloomBy, bloomBits)
-        staged = Some((rules, gen ++ advanced, st, evolvedSchema(adf)._1))
+        staged = Some((rules, gen ++ advanced, st, evolvedSchemaOf(adf.schema)._1))
       }
       val (_, genOut, st, stagedSchema) = staged.get
       ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
@@ -1628,11 +1281,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       validated = reEnforceOnRetry(fsI, mergeSchema, validated,
         "commitAppend")
       val (sjI, wdI) = evolvedSchemaOf(fsI)
-      if (claim(expected, entryJsonS(sjI, expected, st.dir,
-          partitionBy, snapshot = false, st.adds, st.stats,
-          blooms = st.blooms, generated = Some(genOut),
-          streamTxn = streamTxn, rows = st.rows, bytes = st.bytes,
-          widened = wdI, domains = writeDomains(clusterBy, declaredBloomBy, bloomBits))))
+      if (claim(Entry(expected, st.dir, adds = st.adds, schemaStr = Some(sjI),
+          partitionColumns = partitionBy, generated = Some(genOut),
+          streamTxn = streamTxn, widened = wdI,
+          domains = writeDomains(clusterBy, declaredBloomBy, bloomBits))))
         return expected
     }
     -1L // unreachable
@@ -1790,7 +1442,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // the version whose state `f` reads: a WriteSerializable re-claim
       // moves the claimed version past rival pure appends while the base
       // — and the published output — stay fixed (the appends remain
-      // visible, [[Commit.snapBase]] / visibleCommits)
+      // visible, [[Entry.snapBase]] / visibleCommits)
       val base = expected - 1
       // under row tracking the transform sees the live state with every
       // row's id RESOLVED into the materialization columns: surviving
@@ -1828,30 +1480,30 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val matF = out.columns.contains(MatIdCol)
       Some { (v: Long) =>
         val (sj, wd) = evolvedSchemaOf(outSchemaNoMat)
-        entryJsonS(sj, v, pub.dir, Nil, snapshot = true,
-          pub.adds, pub.stats, op, ch.map(_.dir), blooms = pub.blooms,
-          streamTxn = streamTxn, rows = pub.rows,
-          bytes = pub.bytes, widened = wd,
-          matFiles = matF,
-          changeStats = ch.map(_.stats).getOrElse(Map.empty),
-          snapshotBase = Some(base))
+        Entry(v, pub.dir, snapshot = true, pub.adds, op, Some(sj),
+          changeDir = ch.map(_.dir), changeAdds = ch.fold(Seq.empty[AddFile])(_.adds),
+          streamTxn = streamTxn, base = Some(base), widened = wd, matFiles = matF)
       }
     }
 
   /** The OCC transaction loop of the snapshot, MOR and OPTIMIZE verbs.
     * Each attempt reads `expected = nextVersion()` and runs `attempt`,
     * which computes and publishes the transaction's output from the
-    * state at `expected - 1` and returns its entry renderer (None:
-    * nothing to commit, returns -1). The renderer runs per claim, so the
-    * schema union and row-id watermark are re-rendered against the live
-    * log. Under WriteSerializable, a claim lost only to rival PURE
-    * APPENDS re-claims the next version with the SAME published output
-    * (a rebase); a genuinely conflicting rival — removes/DVs/snapshot/
+    * state at `expected - 1` and returns the entry to claim at a given
+    * version (None: nothing to commit, returns -1). It is rebuilt per
+    * claim, so the schema union is re-derived — and [[claim]] re-runs
+    * row-id allocation — against the live log. Under WriteSerializable
+    * and with `rebase` on, a claim lost only to rival PURE APPENDS
+    * re-claims the next version with the SAME published output (a
+    * rebase); a genuinely conflicting rival — removes/DVs/snapshot/
     * metadata — invalidated the state the output was computed on, so
     * the published dirs are abandoned (never visible — vacuum reclaims
-    * them) and the attempt recomputes, at most `maxRetries` times. */
-  private def occTransact(verb: String, maxRetries: Int)(
-      attempt: Long => Option[Long => String]): Long = {
+    * them) and the attempt recomputes, at most `maxRetries` times.
+    * Verbs that re-point the WHOLE live set (RESTORE, the row-tracking
+    * backfill) pass `rebase = false`: re-claiming their entry past a
+    * rival append would silently drop the rival's rows. */
+  private def occTransact(verb: String, maxRetries: Int, rebase: Boolean = true)(
+      attempt: Long => Option[Long => Entry]): Long = {
     var recomputes = 0
     val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
     while (true) {
@@ -1861,15 +1513,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         case None => return -1L
       }
       txnStagedHook()
-      var rebase = true
-      while (rebase) {
-        if (claim(expected, render(expected))) return expected
+      var rebased = true
+      while (rebased) {
+        if (claim(render(expected))) return expected
         val next = nextVersion()
         val rivals = rivalCommits(expected, next)
         rivalLog ++= rivals.map(c => c.version -> c.op)
-        rebase = isolation == ExactlyOnceSink.WriteSerializable &&
+        rebased = rebase && isolation == ExactlyOnceSink.WriteSerializable &&
           rivals.nonEmpty && rivals.forall(rebaseable)
-        if (rebase) {
+        if (rebased) {
           txnRebases.incrementAndGet()
           expected = next
         }
@@ -1879,11 +1531,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       if (recomputes > maxRetries)
         sys.error(s"$verb: gave up after $maxRetries recomputes — every " +
           s"claim lost to rival commits [${rivalSummary(rivalLog.toSeq)}]. " +
-          "Conflicting rivals (snapshot/merge/delete/metadata) force a " +
-          "full recompute per attempt; pure appends rebase without " +
-          "recompute under WriteSerializable — a list of APPENDs here " +
-          "means this sink is running Serializable isolation against a " +
-          "hot ingest table")
+          (if (!rebase) "This verb re-points the whole live set, so every " +
+            "rival forces a recompute; nothing was committed — retry when " +
+            "writer contention subsides"
+          else "Conflicting rivals (snapshot/merge/delete/metadata) force a " +
+            "full recompute per attempt; pure appends rebase without " +
+            "recompute under WriteSerializable — a list of APPENDs here " +
+            "means this sink is running Serializable isolation against a " +
+            "hot ingest table"))
     }
     -1L // unreachable
   }
@@ -1892,57 +1547,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   // read path
   // ---------------------------------------------------------------------
 
-  private case class AddFile(path: String,
-      stats: Map[String, (Option[String], Option[String])],
-      bloom: Map[String, Array[Long]] = Map.empty,
-      rows: Option[Long] = None,
-      baseRowId: Option[Long] = None,
-      rcv: Option[Long] = None,
-      bytes: Option[Long] = None)
-
-  private case class Commit(version: Long, dir: String, snapshot: Boolean,
-      adds: Seq[AddFile],
-      op: String = "", changeDir: Option[String] = None,
-      changeAdds: Seq[AddFile] = Nil,
-      constraints: Option[Map[String, String]] = None,
-      streamTxn: Option[(String, Long)] = None,
-      restoreDirs: Seq[String] = Nil,
-      removes: Seq[String] = Nil,
-      dvs: Map[String, Array[Long]] = Map.empty,
-      generated: Option[Map[String, String]] = None,
-      columnMapping: Option[Map[String, String]] = None,
-      droppedCols: Option[Seq[String]] = None,
-      ict: Option[Long] = None,
-      txnAppId: Option[String] = None,
-      rowIdWatermark: Option[Long] = None,
-      // per-domain DELTA this commit applies: Some(config) upserts the
-      // domain, None removes it (the Delta domainMetadata action shape)
-      domains: Option[Map[String, Option[Map[String, String]]]] = None,
-      // snapshot commits only: the version whose state this snapshot
-      // REPLACES everything at-or-below (the transaction's read
-      // version). None = the legacy/default base `version - 1`
-      // (replaces everything earlier). A base further back means the
-      // transaction REBASED past rival pure appends under
-      // WriteSerializable isolation — those appends stay visible.
-      base: Option[Long] = None,
-      // the table schema RECORDED at this commit (metaData.schemaString,
-      // compact JSON) — the as-of schema authority for time-travel
-      // reads (r19: lets versionAsOf reads skip footer inference on
-      // mapping-free tables)
-      schemaStr: Option[String] = None) {
-    /** Data dirs this commit makes visible: its own for ordinary
-      * commits, the re-pointed source dirs for a RESTORE. */
-    def dataDirs: Seq[String] =
-      if (restoreDirs.nonEmpty) restoreDirs else Seq(dir)
-    /** The snapshot's effective read version (what it replaces up to). */
-    def snapBase: Long = base.getOrElse(version - 1)
-  }
-
   /** A file's identity across the whole table: its data/-relative path.
     * Ordinary commits record add paths relative to their own dir; a
     * RESTORE commit's lifted adds are already dir-qualified. Deletion
     * vectors and remove actions key on this. */
-  private def addKey(c: Commit, a: AddFile): String =
+  private def addKey(c: Entry, a: AddFile): String =
     if (c.restoreDirs.nonEmpty || c.dir.isEmpty) a.path else s"${c.dir}/${a.path}"
 
   /** The merge-on-read tombstone state a commit sequence leaves behind:
@@ -1957,7 +1566,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     def isEmpty: Boolean = removed.isEmpty && dv.isEmpty
   }
 
-  private def tombstones(commits: Seq[Commit]): Tombstones =
+  private def tombstones(commits: Seq[Entry]): Tombstones =
     commits.foldLeft(Tombstones(Set.empty, Map.empty)) { (t, c) =>
       Tombstones(t.removed ++ c.removes, t.dv ++ c.dvs -- c.removes)
     }
@@ -1993,7 +1602,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * domains (graft.clustering / graft.bloom — write-layout metadata
     * that never affects a transaction's read set; stale staged blooms
     * only prune less, never wrong). */
-  private def rebaseable(c: Commit): Boolean =
+  private def rebaseable(c: Entry): Boolean =
     !c.snapshot && c.restoreDirs.isEmpty && c.removes.isEmpty &&
       c.dvs.isEmpty && c.constraints.isEmpty && c.generated.isEmpty &&
       c.columnMapping.isEmpty && c.droppedCols.isEmpty &&
@@ -2002,7 +1611,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   /** The rivals that took versions [from, until) — what a losing claim
     * lost to; parsed for the rebase check and the starvation report. */
-  private def rivalCommits(from: Long, until: Long): Seq[Commit] =
+  private def rivalCommits(from: Long, until: Long): Seq[Entry] =
     committedVersions().filter(v => v >= from && v < until).map(parseCommit)
 
   /** One line of "who beat us" for the gave-up errors, so an operator
@@ -2011,197 +1620,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     rs.takeRight(12).map { case (v, o) =>
       s"v$v:${if (o.nonEmpty) o else "APPEND"}" }.mkString(", ")
 
-  private def parseCommit(v: Long): Commit = {
+  private def parseCommit(v: Long): Entry = {
     logFileParses.incrementAndGet()
-    parseCommitText(store.read(logName(v)), v)
-  }
-
-  /** Reader capabilities this implementation understands; an entry
-    * declaring a feature outside this set fails loudly at parse time
-    * instead of being silently misread — the Delta protocol-versioning
-    * contract. */
-  private val SupportedReaderFeatures =
-    Set("dv", "columnMapping", "restore", "absolutePaths", "typeWidening",
-      "rowTracking", "rebase")
-
-  /** Parse one commit-entry JSON. The version comes from the entry's own
-    * txn action (every entry this sink writes records it); `vHint` — the
-    * log file name — covers only pre-txn-era entries. */
-  private def parseCommitText(text: String, vHint: Long = -1L): Commit = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val j = JsonMethods.parse(text)
-    val v = (j \ "txn" \ "version") match {
-      case JInt(x) => x.toLong
-      case _ => vHint
-    }
-    (j \ "protocol" \ "readerFeatures") match {
-      case JArray(items) =>
-        val unknown = items.collect { case JString(s) => s }
-          .filterNot(SupportedReaderFeatures)
-        require(unknown.isEmpty,
-          s"commit $v requires reader feature(s) ${unknown.mkString(", ")} " +
-            "this reader does not support — refusing to misread the table " +
-            "(upgrade the reader)")
-      case _ => () // pre-protocol entry, or none needed
-    }
-    val dir = (j \ "dir") match {
-      case JString(s) => s
-      case _ => s"batch=$v" // pre-dir log entries
-    }
-    val snap = (j \ "snapshot") match {
-      case JBool(b) => b
-      case _ => false
-    }
-    val op = (j \ "commitInfo" \ "operation") match {
-      case JString(s) => s
-      case _ => ""
-    }
-    val changeDir = (j \ "changeDir") match {
-      case JString(s) => Some(s)
-      case _ => None
-    }
-    val cons = (j \ "metaData" \ "constraints") match {
-      case JObject(fields) =>
-        Some(fields.collect { case (n, JString(e)) => n -> e }.toMap)
-      case _ => None
-    }
-    val gen = (j \ "metaData" \ "generated") match {
-      case JObject(fields) =>
-        Some(fields.collect { case (n, JString(e)) => n -> e }.toMap)
-      case _ => None
-    }
-    val cmap = (j \ "metaData" \ "columnMapping") match {
-      case JObject(fields) =>
-        Some(fields.collect { case (l, JString(ph)) => l -> ph }.toMap)
-      case _ => None
-    }
-    val dcols = (j \ "metaData" \ "droppedColumns") match {
-      case JArray(items) =>
-        Some(items.collect { case JString(s) => s })
-      case _ => None
-    }
-    val adds = (j \ "add") match {
-      case JArray(items) => items.map {
-        case JString(p) => AddFile(p, Map.empty)
-        case o: JObject =>
-          val path = (o \ "path") match { case JString(p) => p; case _ => "" }
-          val stats = (o \ "stats") match {
-            case JObject(fields) => fields.map { case (c, st) =>
-              def s(k: String) = (st \ k) match {
-                case JString(x) => Some(x); case _ => None
-              }
-              c -> (s("min"), s("max"))
-            }.toMap
-            case _ => Map.empty[String, (Option[String], Option[String])]
-          }
-          val bloom = (o \ "bloom") match {
-            case JObject(fields) => fields.collect { case (c, JString(hx)) =>
-              c -> hx.grouped(16)
-                .map(w => java.lang.Long.parseUnsignedLong(w, 16)).toArray
-            }.toMap
-            case _ => Map.empty[String, Array[Long]]
-          }
-          val rows = (o \ "rows") match {
-            case JInt(n) => Some(n.toLong)
-            case _ => None
-          }
-          val base = (o \ "baseRowId") match {
-            case JInt(n) => Some(n.toLong)
-            case _ => None
-          }
-          val rcv = (o \ "rcv") match {
-            case JInt(n) => Some(n.toLong)
-            case _ => None
-          }
-          val fb = (o \ "bytes") match {
-            case JInt(n) => Some(n.toLong)
-            case _ => None
-          }
-          AddFile(path, stats, bloom, rows, base, rcv, bytes = fb)
-        case _ => AddFile("", Map.empty)
-      }
-      case _ => Nil
-    }
-    val stx = ((j \ "streamTxn" \ "appId"), (j \ "streamTxn" \ "batchId")) match {
-      case (JString(a), JInt(b)) => Some(a -> b.toLong)
-      case _ => None
-    }
-    val restoreDirs = (j \ "restoreDirs") match {
-      case JArray(items) => items.collect { case JString(s) => s }
-      case _ => Nil
-    }
-    val removes = (j \ "remove") match {
-      case JArray(items) => items.collect { case JString(s) => s }
-      case _ => Nil
-    }
-    val dvs = (j \ "dv") match {
-      case JObject(fields) => fields.collect {
-        case (k, JString(r)) => k -> DeletionVectors.decode(r)
-      }.toMap
-      case _ => Map.empty[String, Array[Long]]
-    }
-    val ict = (j \ "ict") match {
-      case JInt(t) => Some(t.toLong)
-      case _ => None
-    }
-    val txnApp = (j \ "txn" \ "appId") match {
-      case JString(a) => Some(a)
-      case _ => None
-    }
-    val rowWm = (j \ "metaData" \ "rowIdWatermark") match {
-      case JInt(w) => Some(w.toLong)
-      case _ => None
-    }
-    val schStr = (j \ "metaData" \ "schemaString") match {
-      case o: JObject =>
-        Some(org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(o)))
-      case _ => None
-    }
-    val doms = (j \ "domainMetadata") match {
-      case JObject(fields) => Some(fields.map {
-        case (d, JObject(cfg)) =>
-          d -> Some(cfg.collect { case (k, JString(x)) => k -> x }.toMap)
-        case (d, _) => d -> None // null = removal
-      }.toMap)
-      case _ => None
-    }
-    // per-change-file stats (round 17): path + min/max only — the CDC
-    // pruning metadata. Absent on pre-r17 entries (whole-dir reads).
-    val changeAdds = (j \ "changeAdd") match {
-      case JArray(items) => items.collect { case o: JObject =>
-        val path = (o \ "path") match { case JString(p) => p; case _ => "" }
-        val st = (o \ "stats") match {
-          case JObject(fields) => fields.map { case (c, stj) =>
-            def sv(k: String) = (stj \ k) match {
-              case JString(x) => Some(x); case _ => None
-            }
-            c -> (sv("min"), sv("max"))
-          }.toMap
-          case _ => Map.empty[String, (Option[String], Option[String])]
-        }
-        AddFile(path, st)
-      }
-      case _ => Nil
-    }
-    // snapshot rebase base (round 18): the read version a rebased
-    // snapshot replaces up to. Absent on legacy and non-rebased entries
-    // (default base = version - 1).
-    val snapBase0 = (j \ "snapshotBase") match {
-      case JInt(b) => Some(b.toLong)
-      case _ => None
-    }
-    Commit(v, dir, snap, adds, op, changeDir, changeAdds, cons, stx,
-      restoreDirs,
-      removes, dvs, gen, cmap, dcols, ict, txnApp, rowWm, domains = doms,
-      base = snapBase0, schemaStr = schStr)
+    Entry.parse(store.read(logName(v)), v)
   }
 
   /** Committed commits visible at `versionAsOf`, snapshot-compaction
     * applied (a snapshot REPLACES everything before it — Delta's
     * copy-on-write rewrite narrowed to full-table snapshots). */
-  private def visibleCommits(versionAsOf: Option[Long]): Seq[Commit] = {
+  private def visibleCommits(versionAsOf: Option[Long]): Seq[Entry] = {
     val vs = committedVersions().filter(v => versionAsOf.forall(v <= _))
     // seed from the newest usable checkpoint at or below the target
     // version, then parse only the entries after it; a target below the
@@ -2302,7 +1729,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * schema recorded at the last visible commit for time-travel reads
     * of mapping-free tables, None (→ per-dir inference) otherwise. */
   private def explicitReader(spark: SparkSession, versionAsOf: Option[Long],
-      all: Seq[Commit]): Option[org.apache.spark.sql.DataFrameReader] =
+      all: Seq[Entry]): Option[org.apache.spark.sql.DataFrameReader] =
     if (versionAsOf.isEmpty)
       physicalReadSchema().map(_ => flatReader(spark))
     else {
@@ -2411,13 +1838,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * a `reader`, flat commits fall back to one inference scan per
     * commit ([[inferenceReads]]): a single mergeSchema scan would refuse
     * a type widening between commits that unionByName coerces. */
-  private def scanCommits(spark: SparkSession, commits: Seq[Commit],
+  private def scanCommits(spark: SparkSession, commits: Seq[Entry],
       reader: Option[org.apache.spark.sql.DataFrameReader], batch: Boolean,
       pos: Boolean, mergeSchema: Boolean = false)
       (keep: String => Boolean): DataFrame = {
-    def flat(c: Commit): Boolean =
+    def flat(c: Entry): Boolean =
       c.restoreDirs.isEmpty && c.adds.forall(a => !a.path.contains("/"))
-    def kept(cs: Seq[Commit]): Seq[String] =
+    def kept(cs: Seq[Entry]): Seq[String] =
       cs.flatMap(c => c.adds.map(a => addKey(c, a))).filter(keep)
     val versions = commits.flatMap(c =>
       c.adds.map(a => addKey(c, a) -> c.version.toInt)).toMap
@@ -2446,7 +1873,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * listed; the remove anti-join then only covers dir-granular
     * (hive/restore) commits. Returns an empty frame when every file is
     * retired. */
-  private def scanWithPos(spark: SparkSession, commits: Seq[Commit],
+  private def scanWithPos(spark: SparkSession, commits: Seq[Entry],
       ts: Tombstones, mergeSchema: Boolean = false,
       explicit: Option[org.apache.spark.sql.DataFrameReader] = None)
       : DataFrame =
@@ -2516,76 +1943,58 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * Idempotent: returns -1 if already enabled. */
   def enableRowTracking(spark: SparkSession, backfill: Boolean = false): Long = {
     if (logTail.rowIdState().isDefined) return -1L
-    store.ensureRoot()
-    if (!backfill) {
+    if (backfill) {
+      // re-points the whole live set, so no rebase: a rival append's
+      // file must get a block too, which only a recompute gives it
+      val v = occTransact("enableRowTracking", 20, rebase = false) { _ =>
+        val all = visibleCommits(None)
+        val commits = all.filter(_.adds.nonEmpty)
+        val ts = tombstones(all)
+        // live adds, key-qualified like a RESTORE lift (same files, new
+        // add actions — the log's newest word on each file wins the fold)
+        val lifted = commits.flatMap { c =>
+          c.adds.collect {
+            case a if !ts.removed.contains(addKey(c, a)) =>
+              (c, a.copy(path = addKey(c, a)))
+          }
+        }
+        // a rival enabled tracking mid-race, or nothing to backfill
+        if (logTail.rowIdState().isDefined || lifted.isEmpty) None
+        else {
+          // contiguous id blocks in deterministic key order; physical row
+          // counts from the log (DV'd positions still consume ids —
+          // virtual ids are base + PHYSICAL position)
+          var wm = 0L
+          val blocks = lifted.map(_._2).sortBy(_.path).map { a =>
+            val n = a.rows.getOrElse(fileRowCount(spark, a.path))
+            wm += n
+            a.path -> (wm - n, n)
+          }.toMap
+          val adds = lifted.map { case (c, a) =>
+            val (b, n) = blocks(a.path)
+            a.copy(rows = Some(n), baseRowId = Some(b),
+              rcv = Some(a.rcv.getOrElse(c.version)))
+          }
+          val keys = blocks.keySet
+          metaClaimHook()
+          Some((v: Long) => Entry(v, snapshot = true, adds = adds,
+            op = "ENABLE ROW TRACKING", schemaStr = Some(metaSchemaJson()),
+            rowIdWatermark = Some(wm),
+            restoreDirs = commits.flatMap(_.dataDirs).distinct.filter(_.nonEmpty),
+            removes = ts.removed.toSeq.sorted, dvs = ts.dv.filter(kv => keys(kv._1))))
+        }
+      }
+      if (v >= 0 || logTail.rowIdState().isDefined) return v
+    }
+    metaCommit("ENABLE ROW TRACKING") { v =>
+      // checked per attempt, after the version read: a claim win at `v`
+      // proves no rival data landed since (dense claims)
       require(liveData(spark).isEmpty,
         "enableRowTracking: enable before data lands, or pass " +
           "backfill = true to assign ids to pre-existing files " +
           "(metadata-only, no rewrite)")
-      var v = nextVersion()
-      while ({ metaClaimHook()
-          !claim(v, entryJsonS(metaSchemaJson(), v, "", Nil, snapshot = false,
-            Nil, Map.empty, "ENABLE ROW TRACKING", None, Map.empty,
-            rowWmForce = Some(0L))) }) {
-        v = math.max(v + 1, nextVersion())
-      }
-      return v
+      Entry(v, rowIdWatermark = Some(0L))
     }
-    var attempt = 0
-    while (true) {
-      val expected = nextVersion()
-      if (logTail.rowIdState().isDefined) return -1L // rival enabled mid-race
-      val all = visibleCommits(None)
-      val commits = all.filter(_.adds.nonEmpty)
-      val ts = tombstones(all)
-      // live adds, key-qualified like a RESTORE lift (same files, new
-      // add actions — the log's newest word on each file wins the fold)
-      val lifted = commits.flatMap { c =>
-        c.adds.collect {
-          case a if !ts.removed.contains(addKey(c, a)) =>
-            (c, if (c.restoreDirs.nonEmpty || c.dir.isEmpty) a
-             else a.copy(path = s"${c.dir}/${a.path}"))
-        }
-      }
-      if (lifted.isEmpty) return enableRowTracking(spark) // nothing to backfill
-      // contiguous id blocks in deterministic key order; physical row
-      // counts from the log (DV'd positions still consume ids — virtual
-      // ids are base + PHYSICAL position)
-      var wm = 0L
-      val assigned = lifted.sortBy(_._2.path).map { case (c, a) =>
-        val n = a.rows.getOrElse(fileRowCount(spark, a.path))
-        val entry = (a.path, wm, a.rcv.getOrElse(c.version), n)
-        wm += n
-        entry
-      }
-      val rowCarry = assigned.map { case (k, b, cv, _) => k -> (b, cv) }.toMap
-      val rowsCarry = assigned.map { case (k, _, _, n) => k -> n }.toMap
-      val adds2 = lifted.map(_._2)
-      val liftedKeys = adds2.map(_.path).toSet
-      val dvCarry = ts.dv.filter(kv => liftedKeys.contains(kv._1))
-      val statsCarry = adds2.map(a => a.path ->
-        a.stats.map { case (cn, (lo, hi)) => cn -> (lo.orNull, hi.orNull) }).toMap
-      val bloomsCarry = adds2.filter(_.bloom.nonEmpty)
-        .map(a => a.path -> a.bloom).toMap
-      val bytesCarry = adds2.flatMap(a => a.bytes.map(a.path -> _)).toMap
-      val dirs = commits.flatMap(_.dataDirs).distinct.filter(_.nonEmpty)
-      metaClaimHook()
-      if (claim(expected, entryJsonS(metaSchemaJson(), expected, "", Nil,
-          snapshot = true, adds2.map(a => Paths.get(a.path)), statsCarry,
-          "ENABLE ROW TRACKING", None, bloomsCarry, restoreDirs = dirs,
-          removes = ts.removed.toSeq.sorted, dvs = dvCarry,
-          rows = rowsCarry, bytes = bytesCarry,
-          rowIdsCarry = Some(rowCarry), rowWmForce = Some(wm))))
-        return expected
-      attempt += 1
-      if (attempt > 20)
-        sys.error("enableRowTracking: gave up after 20 claim conflicts; " +
-          "NO partial state was committed (the backfill is a single " +
-          "metadata-only claim — it either lands whole or not at all), " +
-          "so the table is untracked and unchanged; retry when writer " +
-          "contention subsides")
-    }
-    -1L // unreachable
   }
 
   /** The row-id high watermark (next id to allocate), or None while row
@@ -2595,7 +2004,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** (file key, baseRowId, default row-commit-version) for every add of
     * the given commits. Fails loudly on a file that predates row
     * tracking — a silent null id would defeat the stability contract. */
-  private def rowIdMetaOf(commits: Seq[Commit]): Seq[(String, Long, Long)] =
+  private def rowIdMetaOf(commits: Seq[Entry]): Seq[(String, Long, Long)] =
     commits.flatMap { c =>
       c.adds.map { a =>
         val b = a.baseRowId.getOrElse(sys.error(
@@ -2610,7 +2019,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * else the virtual value from the file's add action. `df` must carry
     * the FileCol/RidxCol helpers (kept; only the lookup columns are
     * consumed) and every scanned file must appear in `commits`. */
-  private def withResolvedMat(df: DataFrame, commits: Seq[Commit]): DataFrame = {
+  private def withResolvedMat(df: DataFrame, commits: Seq[Entry]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
     val sp = df.sparkSession
     import sp.implicits._
@@ -2878,7 +2287,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * (claim-time, monotone in version by [[nextIct]]'s clamp) when
     * present; log-file mtime for pre-ICT entries whose raw file
     * survives; None for a pre-ICT commit living only in a checkpoint. */
-  private def commitTime(c: Commit): Option[Long] =
+  private def commitTime(c: Entry): Option[Long] =
     c.ict.orElse(
       if (store.exists(logName(c.version)))
         Some(store.modifiedTime(logName(c.version)))
@@ -3214,57 +2623,29 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * runs against the live log. */
   private object logTail {
     private var seen = Long.MinValue // MinValue = not yet seeded
-    private var constraints = Map.empty[String, String]
-    private var generated = Map.empty[String, String]
-    private var columnMapping = Map.empty[String, String]
-    private var droppedCols = Seq.empty[String]
-    private var rowWm: Option[Long] = None // None = row tracking off
-    private var domains = Map.empty[String, Map[String, String]]
-    private val streamCursor =
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    private var state = CkptAux()
 
-    def refreshed[A](f: => A): A = synchronized {
+    def refreshed[A](f: CkptAux => A): A = synchronized {
       if (seen == Long.MinValue) {
         // seed from the newest checkpoint's aux header: after
         // cleanupLog the carrier entries below it no longer exist, and
         // even before cleanup this makes instance start-up O(interval)
-        checkpointVersions().reverseIterator
+        val seed = checkpointVersions().reverseIterator
           .map(cv => cv -> loadCheckpoint(cv))
           .collectFirst { case (cv, Some((aux, _))) => cv -> aux }
-          .foreach { case (cv, aux) =>
-            constraints = aux.constraints
-            generated = aux.generated
-            columnMapping = aux.columnMapping
-            droppedCols = aux.droppedCols
-            rowWm = aux.rowIdWatermark
-            domains = aux.domains
-            aux.cursors.foreach { case (a, b) => streamCursor.put(a, b) }
-            seen = cv
-          }
-        if (seen == Long.MinValue) seen = -1L
+        seen = seed.fold(-1L)(_._1)
+        state = seed.fold(CkptAux())(_._2)
       }
       committedVersions().filter(_ > seen).foreach { v =>
-        val c = parseCommit(v)
-        c.constraints.foreach(m => constraints = m)
-        c.generated.foreach(m => generated = m)
-        c.columnMapping.foreach(m => columnMapping = m)
-        c.droppedCols.foreach(s => droppedCols = s)
-        c.rowIdWatermark.foreach(w => rowWm = Some(w))
-        c.domains.foreach(_.foreach {
-          case (d, Some(cfg)) => domains = domains.updated(d, cfg)
-          case (d, None) => domains = domains - d
-        })
-        c.streamTxn.foreach { case (a, b) =>
-          streamCursor.merge(a, b, (x, y) => if (x >= y) x else y)
-        }
-        seen = math.max(seen, v)
+        state = state.fold(Seq(parseCommit(v)))
+        seen = v
       }
-      f
+      f(state)
     }
 
-    def activeConstraints(): Map[String, String] = refreshed(constraints)
-    def activeGenerated(): Map[String, String] = refreshed(generated)
-    def activeDomains(): Map[String, Map[String, String]] = refreshed(domains)
+    def activeConstraints(): Map[String, String] = refreshed(_.constraints)
+    def activeGenerated(): Map[String, String] = refreshed(_.generated)
+    def activeDomains(): Map[String, Map[String, String]] = refreshed(_.domains)
     /** The generated map TOGETHER with the next version at the moment
       * of the read — one atomic log view, so an identity writer can
       * claim exactly that version and know no commit it has not seen
@@ -3272,15 +2653,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       * commit after the read occupies the returned version and makes
       * the claim fail). */
     def generatedState(): (Map[String, String], Long) =
-      refreshed((generated, seen + 1))
+      refreshed(st => (st.generated, seen + 1))
     def activeMapping(): (Map[String, String], Set[String]) =
-      refreshed((columnMapping, droppedCols.toSet))
+      refreshed(st => (st.columnMapping, st.droppedCols.toSet))
     /** Row-id high watermark, or None while row tracking is off — a
       * live-log-tail read, so a per-claim-attempt caller always sees
       * every allocation a prior commit made (dense-claim freshness). */
-    def rowIdState(): Option[Long] = refreshed(rowWm)
-    def lastBatch(appId: String): Option[Long] =
-      refreshed(Option(streamCursor.get(appId)).map(_.longValue))
+    def rowIdState(): Option[Long] = refreshed(_.rowIdWatermark)
+    def lastBatch(appId: String): Option[Long] = refreshed(_.cursors.get(appId))
   }
 
   /** Highest micro-batch id a stream writer has committed — replayed
@@ -3470,7 +2850,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * unionByName type-coerces across a widening boundary that parquet's
     * mergeSchema refuses — fuzz seed 12), and rely on the tombstone
     * anti-join + row-group stats instead. */
-  private def probeScan(spark: SparkSession, commits: Seq[Commit],
+  private def probeScan(spark: SparkSession, commits: Seq[Entry],
       ts: Tombstones, bounds: Map[String, (Double, Double)]): DataFrame = {
     val stats = commits.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats))
       .toMap
@@ -3595,14 +2975,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // exist at this transaction's read, so they intersect neither
         // its probe scan nor its removes/DV keys
         Some { (v: Long) =>
-          entryJsonS(evolvedSchemaOf(morSchemaBase)._1, v,
-            if (pub.adds.nonEmpty) pub.dir else "", Nil, snapshot = false,
-            pub.adds, pub.stats, op, Some(ch.dir), blooms = pub.blooms,
-            streamTxn = streamTxn,
+          Entry(v, if (pub.adds.nonEmpty) pub.dir else "", adds = pub.adds,
+            op = op, schemaStr = Some(evolvedSchemaOf(morSchemaBase)._1),
+            changeDir = Some(ch.dir), changeAdds = ch.adds, streamTxn = streamTxn,
             removes = removeKeys ++ rewriteKeys, dvs = dvNew,
-            rows = pub.rows, bytes = pub.bytes,
-            matFiles = pub.adds.nonEmpty && logTail.rowIdState().isDefined,
-            changeStats = ch.stats)
+            matFiles = pub.adds.nonEmpty && logTail.rowIdState().isDefined)
         }
       } finally doomed.unpersist(blocking = false)
     }
@@ -3731,18 +3108,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   private def domainCommit(
-      delta: Map[String, Option[Map[String, String]]]): Long = {
-    store.ensureRoot()
-    var v = nextVersion()
-    // metadata-only entry, same shape as constraintCommit's
-    while ({ metaClaimHook()
-        !claim(v, entryJsonS(metaSchemaJson(), v, "", Nil, snapshot = false,
-          Nil, Map.empty, "SET DOMAIN METADATA", None, Map.empty,
-          domains = Some(delta))) }) {
-      v = math.max(v + 1, nextVersion())
-    }
-    v
-  }
+      delta: Map[String, Option[Map[String, String]]]): Long =
+    metaCommit("SET DOMAIN METADATA")(Entry(_, domains = Some(delta)))
 
   // ---------------------------------------------------------------------
   // generated columns (Delta GENERATED ALWAYS AS analog)
@@ -3932,30 +3299,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * mid-race, re-recording the stale transform would revert the
     * rival's evolution, and silently re-deriving could rename a
     * column the rival just dropped. Abort instead (Delta's
-    * MetadataChangedException posture); the caller re-runs.
-    *
-    * The freshness check runs BEFORE every claim attempt (after the
-    * version read): version claims are dense, so a claim win at `v`
-    * proves no rival committed between the check and the claim —
-    * checking only after a FAILED claim would let a rival landing
-    * between the caller's schema read and our first claim win the
-    * race and have its evolution silently reverted. */
+    * MetadataChangedException posture); the caller re-runs. The check
+    * runs per attempt after the version read ([[metaCommit]]). */
   private def mappingCommit(schemaJson: String, m: Map[String, String],
-      dropped: Seq[String], op: String, derivedFrom: String): Long = {
-    store.ensureRoot()
-    var v = -1L
-    while ({
-        metaClaimHook()
-        v = if (v < 0) nextVersion() else math.max(v + 1, nextVersion())
-        if (latestSchema().map(_.json) != Some(derivedFrom))
-          sys.error(s"$op: a concurrent commit changed the table schema " +
-            "while this metadata commit raced — re-derive and retry " +
-            "(metadata conflict)")
-        !claim(v, entryJsonS(schemaJson, v, "", Nil, snapshot = false,
-          Nil, Map.empty, op, None, Map.empty,
-          columnMapping = Some(m), droppedCols = Some(dropped))) }) ()
-    v
-  }
+      dropped: Seq[String], op: String, derivedFrom: String): Long =
+    metaCommit(op) { v =>
+      if (latestSchema().map(_.json) != Some(derivedFrom))
+        sys.error(s"$op: a concurrent commit changed the table schema " +
+          "while this metadata commit raced — re-derive and retry " +
+          "(metadata conflict)")
+      Entry(v, schemaStr = Some(schemaJson), columnMapping = Some(m),
+        droppedCols = Some(dropped))
+    }
 
   /** Write-side application ([[stage]]-adjacent, but BEFORE schema
     * recording so the commit's metaData sees the computed column):
@@ -4119,49 +3474,45 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       s"IDENTITY($start,$step,${start - step}${if (allowGaps) ",gaps" else ""})"))
   }
 
-  private def generatedCommit(f: Map[String, String] => Map[String, String]): Long = {
-    store.ensureRoot()
-    var v = nextVersion()
-    while ({ metaClaimHook()
-        !claim(v, entryJsonS(metaSchemaJson(), v, "", Nil, snapshot = false,
-          Nil, Map.empty, "SET GENERATED", None, Map.empty,
-          generated = Some(f(activeGenerated())))) }) {
-      v = math.max(v + 1, nextVersion())
-    }
-    v
-  }
+  private def generatedCommit(f: Map[String, String] => Map[String, String]): Long =
+    metaCommit("SET GENERATED")(Entry(_, generated = Some(f(activeGenerated()))))
 
-  /** The CURRENT committed schema for a metadata-only entry —
-    * re-evaluated on EVERY claim attempt (it sits inside the loop
-    * condition): a metadata commit that loses a race to a
-    * schema-evolving rival (widening, added column) and then records
-    * the schema it read at entry would silently REVERT the rival's
-    * evolution in latestSchema — the same stale-schema-on-retry class
-    * the append paths fix via reEnforceOnRetry. */
-  private def metaSchemaJson(): String = latestSchema().map(_.json)
-    .getOrElse("""{"type":"struct","fields":[]}""")
+  /** The CURRENT committed schema for a metadata-only entry. */
+  private def metaSchemaJson(): String =
+    latestSchema().map(_.json).getOrElse(Entry.EmptySchema)
 
   /** Test seam (no-op in production): fires before each metadata-only
     * claim attempt, so a spec can race a schema evolution into the
     * window deterministically. */
   private[graft] var metaClaimHook: () => Unit = () => ()
 
-  private def constraintCommit(f: Map[String, String] => Map[String, String]): Long = {
-    store.ensureRoot()
-    var v = nextVersion()
-    // metadata-only entry: no data dir, no adds; snapshot=false so it
-    // neither hides prior data (visibleCommits) nor trips the CDC
-    // feed's loud-failure path (readChanges: no adds → no rows).
-    // Schema AND payload re-derive per attempt (metaSchemaJson /
-    // activeConstraints both sit inside the loop condition).
-    while ({ metaClaimHook()
-        !claim(v, entryJsonS(metaSchemaJson(), v, "", Nil, snapshot = false,
-          Nil, Map.empty, "SET CONSTRAINT", None, Map.empty,
-          Some(f(activeConstraints())))) }) {
-      v = math.max(v + 1, nextVersion())
-    }
+  /** THE claim loop of every metadata-only commit (constraints,
+    * generated columns, domains, column mapping, the plain row-tracking
+    * enable): per attempt, read the next version, fire [[metaClaimHook]],
+    * build the entry with `entryAt(version)` and claim it as `op`; a lost
+    * claim retries at the next version. The entry has no data dir and
+    * no adds, and `snapshot = false`, so it neither hides prior data
+    * (visibleCommits) nor trips the CDC feed's loud-failure path. It
+    * records the committed schema as of the attempt unless it sets its
+    * own. Schema AND payload are re-derived on every attempt: a commit
+    * that lost a race to a schema-evolving rival and then recorded the
+    * schema it read at entry would silently REVERT the rival's evolution
+    * in latestSchema. A check `entryAt` makes is race-free: version
+    * claims are dense, so winning `v` proves no rival committed between
+    * the check and the claim. */
+  private def metaCommit(op: String)(entryAt: Long => Entry): Long = {
+    var v = -1L
+    while ({
+      v = if (v < 0) nextVersion() else math.max(v + 1, nextVersion())
+      metaClaimHook()
+      val e = entryAt(v)
+      !claim(e.copy(op = op, schemaStr = e.schemaStr.orElse(Some(metaSchemaJson()))))
+    }) ()
     v
   }
+
+  private def constraintCommit(f: Map[String, String] => Map[String, String]): Long =
+    metaCommit("SET CONSTRAINT")(Entry(_, constraints = Some(f(activeConstraints()))))
 
   /** RESTORE TABLE TO VERSION `toVersion` (the Delta RESTORE analog):
     * a METADATA-ONLY snapshot commit that re-points the live file set
@@ -4317,7 +3668,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     checkpointVersions().foreach { cv =>
       val lines = store.readLines(ckptNameOf(cv)).filter(_.nonEmpty)
       if (lines.nonEmpty) {
-        val parts = try parseManifest(lines.head)
+        val parts = try CkptAux.parse(lines.head).fold(Seq.empty[SidecarRef])(_._3)
           catch { case scala.util.control.NonFatal(_) => Nil }
         if (parts.isEmpty) {
           val body = lines.head +: lines.tail.map(rewriteEntry(_))
@@ -4457,26 +3808,25 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def restore(spark: SparkSession, toVersion: Long, maxRetries: Int = 20): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     require(isCommitted(toVersion), s"restore: version $toVersion is not committed")
-    val src = visibleCommits(Some(toVersion)).filter(_.adds.nonEmpty)
+    val visibleAt = visibleCommits(Some(toVersion))
+    val src = visibleAt.filter(_.adds.nonEmpty)
     require(src.nonEmpty, s"restore: no data visible at version $toVersion")
     val dirs = src.flatMap(_.dataDirs).distinct
     // merge-on-read state at the target version: files removed by then
     // are NOT lifted, and surviving deletion vectors ride the restore
     // commit itself — otherwise a restore past a DV delete would
     // resurrect the deleted rows
-    val tsAt = tombstones(visibleCommits(Some(toVersion)))
-    // re-pointed add actions: paths become data/-relative; stats and
-    // blooms carry over verbatim (restore cannot change them); row
-    // tracking ids carry too, the default rcv pinned to the SOURCE
-    // commit (a restore re-points files, it does not rewrite rows)
-    val adds = src.flatMap { c =>
+    val tsAt = tombstones(visibleAt)
+    // re-pointed add actions: paths become data/-relative; stats,
+    // blooms, row counts and sizes carry over verbatim (restore cannot
+    // change them); row tracking ids carry too, the default rcv pinned
+    // to the SOURCE commit (a restore re-points files, it does not
+    // rewrite rows)
+    val lifted = src.flatMap { c =>
       c.adds.collect {
         case a if !tsAt.removed.contains(addKey(c, a)) =>
-          val lifted =
-            if (c.restoreDirs.nonEmpty) a
-            else a.copy(path = s"${c.dir}/${a.path}")
-          if (lifted.baseRowId.isEmpty) lifted
-          else lifted.copy(rcv = lifted.rcv.orElse(Some(c.version)))
+          a.copy(path = addKey(c, a),
+            rcv = a.rcv.orElse(a.baseRowId.map(_ => c.version)))
       }
     }
     // Row-id carry across the enablement boundary: a lifted add that
@@ -4490,20 +3840,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // break Delta avoids by refusing protocol-boundary restores
     // outright (this guard refuses only the underivable subset;
     // fuzz seed 20 found the drift).
+    val tracked = logTail.rowIdState().isDefined
     val knownIds: Map[String, (Long, Long)] =
-      if (logTail.rowIdState().isEmpty) Map.empty
+      if (!tracked) Map.empty
       else allKnownCommits().sortBy(_.version).flatMap { c =>
         c.adds.flatMap(a => a.baseRowId.map(b =>
           addKey(c, a) -> (b, a.rcv.getOrElse(c.version))))
       }.toMap // ascending fold: the newest recording of a key wins
     val carriedIds: Map[String, (Long, Long)] =
-      if (logTail.rowIdState().isEmpty) Map.empty
-      else adds.flatMap { a =>
+      if (!tracked) Map.empty
+      else lifted.flatMap { a =>
         a.baseRowId.map(b => (b, a.rcv.getOrElse(0L)))
           .orElse(knownIds.get(a.path)).map(a.path -> _)
       }.toMap
-    if (logTail.rowIdState().isDefined) {
-      val unassigned = adds.filterNot(a => carriedIds.contains(a.path))
+    if (tracked) {
+      val unassigned = lifted.filterNot(a => carriedIds.contains(a.path))
       if (unassigned.nonEmpty)
         sys.error(s"restore: version $toVersion predates row tracking and " +
           s"${unassigned.size} of its files (e.g. ${unassigned.head.path}) " +
@@ -4511,15 +3862,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           "give their surviving rows fresh ids mid-history. Restore to a " +
           "version at or after enablement instead (row-id stability)")
     }
+    val adds = lifted.map(a => a.copy(baseRowId = carriedIds.get(a.path).map(_._1),
+      rcv = carriedIds.get(a.path).map(_._2)))
     val liftedKeys = adds.map(_.path).toSet
-    val dvCarry = tsAt.dv.filter(kv => liftedKeys.contains(kv._1))
-    val stats = adds.map(a => a.path ->
-      a.stats.map { case (cn, (lo, hi)) => cn -> (lo.orNull, hi.orNull) }).toMap
-    val blooms = adds.filter(_.bloom.nonEmpty).map(a => a.path -> a.bloom).toMap
     val target = read(spark, Some(toVersion)).drop("batch")
-    var attempt = 0
-    while (true) {
-      val expected = nextVersion()
+    // re-points the whole live set, so no rebase: re-claiming past a
+    // rival append would silently drop its rows
+    occTransact("restore", maxRetries, rebase = false) { _ =>
       val current0 = liveData(spark)
       // an everything-deleted live state reads as a schemaless empty
       // frame; diff it as zero rows of the target's shape
@@ -4537,32 +3886,19 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           cAl.exceptAll(tAl).withColumn("_change_type", lit("delete")))
       val ch = publish(changes, s"changes/${java.util.UUID.randomUUID()}",
         Nil, Nil, 0, check = false)
-      val rowCarry =
-        if (logTail.rowIdState().isEmpty) None else Some(carriedIds)
-      if (claim(expected, entryJsonS(
-          target.schema.json, expected, "", Nil, snapshot = true,
-          adds.map(a => Paths.get(a.path)), stats, "RESTORE",
-          Some(ch.dir), blooms, restoreDirs = dirs,
-          // row counts carry over with the lifted adds (restore cannot
-          // change them), keeping the metadata COUNT(*) path alive
-          rows = adds.flatMap(a => a.rows.map(a.path -> _)).toMap,
-          bytes = adds.flatMap(a => a.bytes.map(a.path -> _)).toMap,
-          // removed files are excluded from the lifted adds, but the
-          // re-pointed DIRS still physically contain them — the restore
-          // commit re-states the removes so the dir-granular scan keeps
-          // subtracting them after the snapshot fold restarts
-          removes = tsAt.removed.toSeq.sorted, dvs = dvCarry,
-          rowIdsCarry = rowCarry,
-          // the lifted files may carry materialized ids from rewrites
-          // before the restore point
-          matFiles = rowCarry.isDefined,
-          changeStats = ch.stats)))
-        return expected
-      attempt += 1
-      if (attempt > maxRetries)
-        sys.error(s"restore: gave up after $maxRetries conflicts")
+      Some((v: Long) => Entry(v, snapshot = true, adds = adds, op = "RESTORE",
+        schemaStr = Some(target.schema.json), changeDir = Some(ch.dir),
+        changeAdds = ch.adds, restoreDirs = dirs,
+        // removed files are excluded from the lifted adds, but the
+        // re-pointed DIRS still physically contain them — the restore
+        // commit re-states the removes so the dir-granular scan keeps
+        // subtracting them after the snapshot fold restarts
+        removes = tsAt.removed.toSeq.sorted,
+        dvs = tsAt.dv.filter(kv => liftedKeys(kv._1)),
+        // the lifted files may carry materialized ids from rewrites
+        // before the restore point
+        matFiles = tracked))
     }
-    -1L // unreachable
   }
 
   /** Compact the live state (many small append batches → one snapshot);
@@ -4680,12 +4016,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // run's work. A rival with removes/DVs (including a rival
         // OPTIMIZE) may have retired a candidate — full re-pick.
         Some { (v: Long) =>
-          entryJsonS(latestSchema().map(_.json).getOrElse(packed.schema.json),
-            v, pub.dir, Nil,
-            snapshot = false, pub.adds, pub.stats, "COMPACT_INC", None,
-            blooms = pub.blooms,
-            removes = cands.map(_._1), rows = pub.rows, bytes = pub.bytes,
-            matFiles = tracked,
+          Entry(v, pub.dir, adds = pub.adds, op = "COMPACT_INC",
+            schemaStr = Some(latestSchema().map(_.json).getOrElse(packed.schema.json)),
+            removes = cands.map(_._1), matFiles = tracked,
             // re-record only an EXPLICIT caller declaration: the
             // discovered set may be narrowed by a concurrent DROP, and
             // re-recording it would make the narrowing permanent
@@ -4733,10 +4066,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * entries. Vacuum's referenced-set computation must use THIS, not
     * the raw log alone — after cleanup, checkpoint-served commits still
     * point at live data dirs. */
-  private def allKnownCommits(): Seq[Commit] = {
+  private def allKnownCommits(): Seq[Entry] = {
     val raw = committedVersions().map(parseCommit)
     val rawVs = raw.map(_.version).toSet
-    val seed: Seq[Commit] =
+    val seed: Seq[Entry] =
       if (truncatedBelow() == 0L)
         // never cleaned: the raw log is complete, the newest checkpoint
         // only short-cuts what raw already has
@@ -4824,7 +4157,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val referenced: Set[String] = checkpointVersions().flatMap { cv =>
         try {
           store.readLines(ckptNameOf(cv))
-            .find(_.nonEmpty).toSeq.flatMap(parseManifest(_).map(_.name))
+            .find(_.nonEmpty).toSeq.flatMap(CkptAux.parse(_).toSeq.flatMap(_._3.map(_.name)))
         } catch { case scala.util.control.NonFatal(_) => Nil }
       }.toSet
       sidecarFiles().foreach { case (v, n) =>
@@ -4959,7 +4292,7 @@ object ExactlyOnceSink {
     * per-instance, contention is cross-instance — so the counters are
     * static): total claim attempts and total re-assign+re-stage events.
     * Read by the OCC stress spec to record retry cost under real
-    * contention (golden/occ_r13.json); never consulted by the protocol
+    * contention (golden/occ_r14.json); never consulted by the protocol
     * itself. */
   private[graft] val identityClaimAttempts =
     new java.util.concurrent.atomic.AtomicLong(0L)

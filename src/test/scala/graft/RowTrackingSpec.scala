@@ -334,4 +334,24 @@ class RowTrackingSpec extends SparkSpecBase {
     assert(m.values.map(_._1).toSeq.distinct.size === 12)
     assert(a.rowIdWatermark() === Some(12L))
   }
+
+  test("plain enable racing a concurrent append refuses instead of tracking an id-less file") {
+    // the emptiness check runs on every claim attempt: a rival append
+    // landing between the check and the claim takes the version, and
+    // the retry must see its data and refuse (a tracked table with an
+    // id-less live file fails every id read)
+    val dir = tmp()
+    val a = new ExactlyOnceSink(dir)
+    val b = new ExactlyOnceSink(dir)
+    a.metaClaimHook = () => {
+      a.metaClaimHook = () => ()
+      b.commitAppend(spark.range(0, 4).toDF("id"))
+    }
+    val e = intercept[IllegalArgumentException](a.enableRowTracking(spark))
+    assert(e.getMessage.contains("enable before data lands"),
+      s"expected the enable-before-data refusal, got: ${e.getMessage}")
+    assert(a.rowIdWatermark() === None)
+    assert(new ExactlyOnceSink(dir).rowIdWatermark() === None)
+    assert(a.read(spark).count() === 4L)
+  }
 }
