@@ -105,7 +105,7 @@ private[graft] object Entry {
     "absolutePaths", "typeWidening", "rowTracking", "rebase")
 
   /** The entry's log bytes — a pure function of the fields. The
-    * in-commit timestamp leads (so `ictOf` head-parses it in O(1));
+    * in-commit timestamp leads (readable from the head of the line);
     * optional actions are omitted when empty, so an entry that does not
     * use a feature is byte-identical to one written before it existed. */
   def render(e: Entry): String = {
@@ -231,24 +231,22 @@ private[graft] final case class CkptAux(
     droppedCols: Seq[String] = Nil,
     rowIdWatermark: Option[Long] = None,
     domains: Map[String, Map[String, String]] = Map.empty) {
-  /** Apply `entries`' metadata actions in version order: latest-wins
-    * per slot, max per stream cursor, per-domain upsert/removal. */
-  def fold(entries: Seq[Entry]): CkptAux =
-    entries.sortBy(_.version).foldLeft(this) { (acc, c) =>
-      CkptAux(
-        c.constraints.getOrElse(acc.constraints),
-        c.streamTxn.fold(acc.cursors) { case (a, b) =>
-          acc.cursors.updated(a, math.max(b, acc.cursors.getOrElse(a, Long.MinValue)))
-        },
-        c.generated.getOrElse(acc.generated),
-        c.columnMapping.getOrElse(acc.columnMapping),
-        c.droppedCols.getOrElse(acc.droppedCols),
-        c.rowIdWatermark.orElse(acc.rowIdWatermark),
-        c.domains.fold(acc.domains)(_.foldLeft(acc.domains) {
-          case (m, (d, Some(cfg))) => m.updated(d, cfg)
-          case (m, (d, None)) => m - d
-        }))
-    }
+  /** Apply the next entry's metadata actions: latest-wins per slot, max
+    * per stream cursor, per-domain upsert/removal. */
+  def +(c: Entry): CkptAux =
+    CkptAux(
+      c.constraints.getOrElse(constraints),
+      c.streamTxn.fold(cursors) { case (a, b) =>
+        cursors.updated(a, math.max(b, cursors.getOrElse(a, Long.MinValue)))
+      },
+      c.generated.getOrElse(generated),
+      c.columnMapping.getOrElse(columnMapping),
+      c.droppedCols.getOrElse(droppedCols),
+      c.rowIdWatermark.orElse(rowIdWatermark),
+      c.domains.fold(domains)(_.foldLeft(domains) {
+        case (m, (d, Some(cfg))) => m.updated(d, cfg)
+        case (m, (d, None)) => m - d
+      }))
 }
 
 private[graft] object CkptAux {

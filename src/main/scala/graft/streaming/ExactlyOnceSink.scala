@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Exactly-once, Delta-protocol-style table sink (SURVEY.md §7.3).
   *
@@ -51,8 +52,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     that rival invalidated. [[ExactlyOnceSink.Serializable]] retains
   *     the recompute-on-any-rival posture. The log stays linear and
   *     gap-free: a version file exists only after its data is in place,
-  *     and claims are dense because every writer targets exactly
-  *     `nextVersion()`.
+  *     and claims are dense because every writer targets exactly the
+  *     next version of the log snapshot it read.
   *
   * Every commit entry also records **per-file column stats** (min/max of
   * numeric and string columns — the Delta data-skipping analog):
@@ -141,11 +142,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       f: Iterator[A] => B): B =
     try f(s.iterator().asScala) finally s.close()
 
-  def committedVersions(): Seq[Long] =
-    store.list()
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .sorted
+  def committedVersions(): Seq[Long] = LogListing(store.list()).versions
 
   def isCommitted(version: Long): Boolean = store.exists(logName(version))
 
@@ -161,10 +158,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * rows, so enforcement costs zero extra passes and a violation
     * aborts the job before anything commits — the Delta CHECK
     * constraint behavior (write-time, transactional). */
-  private def stage(df: DataFrame, staging: Path,
+  private def stage(s: Snapshot, df: DataFrame, staging: Path,
       partitionBy: Seq[String], check: Boolean = true): Unit = {
     import org.apache.spark.sql.functions._
-    val cons = if (check) activeConstraints() else Map.empty[String, String]
+    val cons = if (check) s.aux.constraints else Map.empty[String, String]
     val checked = cons.toSeq.sortBy(_._1).foldLeft(df) { case (d, (n, e)) =>
       d.filter(when(expr(e), lit(true)).otherwise(raise_error(concat(
         lit(s"CHECK constraint '$n' ($e) violated by row: "),
@@ -175,8 +172,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // Applied on EVERY staging (change rows included) so stored frames
     // are uniformly physical regardless of the rename era they were
     // written in; already-physical frames translate as a no-op.
-    val physical = toPhysical(checked)
-    val parts = partitionBy.map(physicalOf)
+    val physical = toPhysical(s, checked)
+    val parts = partitionBy.map(s.physicalOf)
     val writer = physical.write.mode("overwrite")
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(staging.toString)
@@ -297,10 +294,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * blooms over the PHYSICAL `bloomCols`, then atomically move the
     * staged dir to `data/<dir>` and re-stamp its mtime ([[touchNow]]) —
     * in place but invisible until a commit entry claims it. */
-  private def publish(df: DataFrame, dir: String, partitionBy: Seq[String],
+  private def publish(s: Snapshot, df: DataFrame, dir: String, partitionBy: Seq[String],
       bloomCols: Seq[String], bloomBits: Int, check: Boolean): Published = {
     val staging = Paths.get(tableDir, ".staging-" + dir.replace('/', '-'))
-    stage(df, staging, partitionBy, check)
+    stage(s, df, staging, partitionBy, check)
     val perFile = fileStats(df.sparkSession, staging)
     val blooms = fileBlooms(df.sparkSession, staging, bloomCols, bloomBits)
     val target = dataDir.resolve(dir)
@@ -314,45 +311,27 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * the same-process leg of the monotonicity clamp in [[nextIct]]. */
   private val lastIct = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Head-parse a committed entry's in-commit timestamp without reading
-    * the whole entry (entries carry per-file stats and can be large;
-    * the stamp is spliced at byte 1 precisely so this stays O(1)).
-    * None for pre-ICT entries or a reclaimed/unreadable file. */
-  private def ictOf(version: Long): Option[Long] =
-    try {
-      val in = store.inputStream(logName(version))
-      try {
-        // readNBytes, not read: a single read() may legally return
-        // short, and a truncated head would silently classify a
-        // stamped entry as pre-ICT (mtime fallback), weakening the
-        // monotonicity clamp for that claim.
-        val buf = in.readNBytes(40)
-        val head = new String(buf, 0, buf.length, "UTF-8")
-        val m = """^\{"ict":(\d+),""".r.findFirstMatchIn(head)
-        m.map(_.group(1).toLong)
-      } finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** The in-commit timestamp for a claim of `version`: wall clock,
     * clamped strictly above the predecessor commit's stamp (claims are
     * sequential by construction — a writer only targets `version` after
     * seeing `version-1` committed — so reading the predecessor's stamp
     * is race-free). Monotone in version order even across processes and
     * clock skew, which is exactly what mtime-based timestamps are not:
-    * the Delta in-commit-timestamp rationale. Falls back to the
-    * predecessor's mtime (pre-ICT entry) or this JVM's high-water mark
-    * (predecessor reclaimed by cleanupLog). */
-  private def nextIct(version: Long): Long = {
+    * the Delta in-commit-timestamp rationale. The stamp comes from the
+    * claim's snapshot, whose newest entry is the predecessor of every
+    * claim at its `next` version (checkpoint-seeded, so it survives
+    * cleanupLog); falls back to the predecessor's mtime (pre-ICT entry)
+    * or this JVM's high-water mark (no predecessor). */
+  private def nextIct(s: Snapshot, version: Long): Long = {
     val prev =
       if (version <= 0) None
-      else ictOf(version - 1).orElse(
-        try Some(store.modifiedTime(logName(version - 1)))
-        catch { case scala.util.control.NonFatal(_) => None })
-        // After cleanupLog the predecessor's entry survives verbatim
-        // (stamp included) only in the checkpoint; a fresh JVM on a
-        // skewed clock must still clamp above it, or timestampAsOf /
-        // history lose their monotone-in-version guarantee.
-        .orElse(allKnownCommits().find(_.version == version - 1)
+      else s.entries.reverseIterator.find(_.version == version - 1).flatMap(_.ict)
+        .orElse(try Some(store.modifiedTime(logName(version - 1)))
+          catch { case scala.util.control.NonFatal(_) => None })
+        // a version-pinned claim off the snapshot's tip: after
+        // cleanupLog the predecessor's entry survives verbatim (stamp
+        // included) only in a checkpoint
+        .orElse(allKnownCommits(s).find(_.version == version - 1)
           .flatMap(c => c.ict.orElse(commitTime(c))))
     val floor = math.max(prev.getOrElse(0L), lastIct.get)
     math.max(System.currentTimeMillis(), floor + 1)
@@ -361,23 +340,27 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** Test hook: exposes [[nextIct]] so the checkpoint-fallback leg of
     * the monotonicity clamp (predecessor raw entry reclaimed, stamp
     * surviving only in a checkpoint) is directly assertable. */
-  private[graft] def nextIctForTest(version: Long): Long = nextIct(version)
+  private[graft] def nextIctForTest(version: Long): Long = nextIct(snapshot(), version)
 
   /** THE commit point: conditional creation of `e`'s version's log
     * object ([[CommitStore]].putIfAbsent — POSIX hard-link or emulated
     * object-store conditional PUT, per the configured store). Returns
     * false if the version was already claimed (by a replay or another
-    * writer). Each attempt runs [[withRowIds]] against the live log and
-    * stamps the entry with this writer's appId and an in-commit
-    * timestamp (rendered as the FIRST field so [[ictOf]] can head-parse
-    * it): time travel and history read the stamp from the entry itself,
-    * so they survive log-file copies and cleanupLog — the checkpoint
-    * carries entries verbatim, stamp included. */
-  private def claim(e: Entry): Boolean = {
+    * writer). `s` is the snapshot the caller built `e` on: each attempt
+    * runs [[withRowIds]] against it and stamps the entry with this
+    * writer's appId and an in-commit timestamp (rendered as the FIRST
+    * field, [[nextIct]]): time travel and history read
+    * the stamp from the entry itself, so they survive log-file copies and
+    * cleanupLog — the checkpoint carries entries verbatim, stamp
+    * included. A won claim at `s.next` proves `s` was the whole log below
+    * it (dense claims), so the new state is `s` plus the entry just
+    * written — no re-read; it becomes the live snapshot, and the
+    * checkpoint and checksum are written from it. */
+  private def claim(s: Snapshot, e: Entry): Boolean = {
     store.ensureRoot()
-    val ict = nextIct(e.version)
-    val won = store.putIfAbsent(logName(e.version), Entry.render(
-      withRowIds(e).copy(ict = Some(ict), txnAppId = Some(appId))))
+    val ict = nextIct(s, e.version)
+    val text = Entry.render(withRowIds(s, e).copy(ict = Some(ict), txnAppId = Some(appId)))
+    val won = store.putIfAbsent(logName(e.version), text)
     if (won) {
       lastIct.getAndUpdate(v => math.max(v, ict))
       // re-stamp to COMMIT time (ordering HINT, not correctness): a
@@ -389,8 +372,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // PUT time already IS claim time and touch degrades to a no-op.
       try store.touch(logName(e.version))
       catch { case scala.util.control.NonFatal(_) => () }
-      maybeCheckpoint(e.version)
-      maybeWriteCrc(e.version)
+      val at =
+        if (e.version == s.next)
+          step(s, Entry.parse(text, e.version), text).copy(listed = s.listed + 1)
+        else asOf(snapshot(), e.version) // a version-pinned claim off the tip
+      liveLock.synchronized { // the live snapshot, unless a newer one is cached
+        if (liveSnap.forall(_.version < at.version)) liveSnap = Some(at)
+      }
+      maybeCheckpoint(at)
+      maybeWriteCrc(at)
     }
     won
   }
@@ -404,12 +394,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * `e`'s metaData. Adds that already carry a block (RESTORE lifts)
     * keep it, and an entry that records its own watermark (enabling
     * tracking) is left as is. Freshness under OCC: the watermark is read
-    * per attempt from the live log tail, and dense claims mean a
+    * per attempt from the attempt's snapshot, and dense claims mean a
     * successful claim saw every prior allocation — the
     * identity-watermark argument. */
-  private def withRowIds(e: Entry): Entry =
+  private def withRowIds(s: Snapshot, e: Entry): Entry =
     if (e.rowIdWatermark.isDefined || (e.adds.isEmpty && !e.snapshot)) e
-    else logTail.rowIdState().fold(e) { wm =>
+    else s.aux.rowIdWatermark.fold(e) { wm =>
       var w = wm
       val adds = e.adds.map { a =>
         if (a.baseRowId.isDefined) a
@@ -435,25 +425,20 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       numRows: Option[Long], numDeletedRows: Long, numDvFiles: Long,
       tableSizeBytes: Option[Long])
 
-  /** Versions with a checksum file, ascending. */
-  private def crcVersions(): Seq[Long] =
-    store.list()
-      .filter(_.endsWith(".crc"))
-      .map(_.stripSuffix(".crc").toLong)
-      .sorted
-
   /** The state summary at `version`, folded from the commit log alone
     * (checkpoint-seeded — O(interval) parses, no data scan). */
-  def computeChecksum(version: Long): VersionChecksum = {
-    val all = visibleCommits(Some(version))
-    val ts = tombstones(all)
-    val live = all.filter(_.adds.nonEmpty)
+  def computeChecksum(version: Long): VersionChecksum =
+    checksumOf(asOf(snapshot(), version)).copy(version = version)
+
+  private def checksumOf(s: Snapshot): VersionChecksum = {
+    val ts = s.ts
+    val live = s.live
       .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
       .filterNot { case (k, _) => ts.removed.contains(k) }
     val dvOf = live.map { case (k, _) =>
       k -> ts.dv.get(k).map(_.length.toLong).getOrElse(0L) }.toMap
     val deleted = dvOf.valuesIterator.sum
-    VersionChecksum(version,
+    VersionChecksum(s.version,
       numFiles = live.size.toLong,
       numRows =
         if (live.forall(_._2.rows.isDefined))
@@ -471,10 +456,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * writer wins — the Delta checksum-file protocol). The content is a
     * pure function of the version-pinned log fold, so racing writers
     * produce identical bytes and ingest never fails over a checksum. */
-  private def maybeWriteCrc(version: Long): Unit =
+  private def maybeWriteCrc(at: Snapshot): Unit =
     try {
-      if (!store.exists(crcName(version))) {
-        val c = computeChecksum(version)
+      if (!store.exists(crcName(at.version))) {
+        val c = checksumOf(at)
         val rows = c.numRows.map(n => s""","numRows":$n""").getOrElse("")
         val sz = c.tableSizeBytes
           .map(n => s""","tableSizeBytes":$n""").getOrElse("")
@@ -483,12 +468,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           s""""numDeletedRows":${c.numDeletedRows},""" +
           s""""numDvFiles":${c.numDvFiles}$sz}}""" + "\n"
         // first writer wins; racers' bytes are identical by construction
-        store.putIfAbsent(crcName(version), text)
+        store.putIfAbsent(crcName(at.version), text)
       }
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
-          s"graft-sink: checksum at version $version failed (non-fatal): $e")
+          s"graft-sink: checksum at version ${at.version} failed (non-fatal): $e")
     }
 
   /** Parse `<v>.crc`; None when absent or unreadable (a torn checksum
@@ -511,11 +496,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * version carrying a checksum); returns the verified summary, or
     * None when no version in retained history has one. */
   def verifyChecksum(version: Option[Long] = None): Option[VersionChecksum] = {
-    val target = version.orElse(crcVersions()
-      .filter(v => truncatedBelow() <= v).lastOption)
+    val live = snapshot()
+    val target = version.orElse(live.listing.crcs
+      .filter(v => live.truncatedBelow <= v).lastOption)
     target.flatMap { v =>
       storedChecksum(v).map { stored =>
-        val fresh = computeChecksum(v)
+        val fresh = checksumOf(asOf(live, v))
         if (stored != fresh)
           sys.error(s"checksum mismatch at version $v: the log diverged " +
             s"from its commit-time state (stored $stored, computed $fresh)")
@@ -525,16 +511,175 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   // ---------------------------------------------------------------------
-  // log checkpoints
+  // the table snapshot and log checkpoints
   // ---------------------------------------------------------------------
 
-  /** Versions with a checkpoint file, ascending (not `.json`-suffixed,
-    * so `committedVersions` never sees them). */
-  private def checkpointVersions(): Seq[Long] =
-    store.list()
-      .filter(_.endsWith(".checkpoint"))
-      .map(_.stripSuffix(".checkpoint").toLong)
-      .sorted
+  /** One LIST of the log prefix, read as committed versions, checkpoint
+    * and checksum versions (ascending), sidecar parts, and whether the
+    * cleanupLog truncation marker exists. */
+  private case class LogListing(names: Seq[String]) {
+    private def versionsOf(suffix: String): Seq[Long] =
+      names.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong).sorted
+    lazy val versions: Seq[Long] = versionsOf(".json")
+    lazy val checkpoints: Seq[Long] = versionsOf(".checkpoint")
+    lazy val crcs: Seq[Long] = versionsOf(".crc")
+    /** Sidecar object names with their version prefix (for
+      * [[cleanupLog]]'s orphan sweep). */
+    def sidecars: Seq[(Long, String)] =
+      names.filter(_.endsWith(".sidecar")).flatMap { n =>
+        scala.util.Try(n.takeWhile(_ != '.').toLong).toOption.map(_ -> n)
+      }
+    def truncated: Boolean = names.contains(TruncMarkerName)
+  }
+
+  /** A recorded `schemaString`, parsed on first use and at most once:
+    * the snapshot copies that share a newest schema share this holder,
+    * so [[schemaParses]] counts one parse per new recorded schema. */
+  private final class RecordedSchema(json: Option[String]) {
+    lazy val get: Option[StructType] = json.map { j =>
+      schemaParses.incrementAndGet()
+      DataType.fromJson(j).asInstanceOf[StructType]
+    }
+  }
+
+  private def recordedOf(visible: Seq[(Entry, String)]): RecordedSchema =
+    new RecordedSchema(visible.reverseIterator.flatMap(_._1.schemaStr).nextOption())
+
+  /** The table state at one log version — the ONE fold of the log that
+    * every verb reads (the Delta Snapshot analog): the visible entries
+    * (snapshot compaction applied) each with its raw log line, their
+    * merge-on-read tombstones, the latest-wins metadata fold over FULL
+    * history ([[CkptAux]]: constraints, generated columns, domains,
+    * column mapping, row-id watermark, stream cursors), the recorded
+    * schema of the newest entry that has one, the cleanupLog truncation
+    * floor, and the LIST it was refreshed from (checkpoint versions
+    * included). A verb takes one snapshot at its start and reads table
+    * state only from it; a claim loop takes one per attempt and claims
+    * `next`, so what it computed on and the version it claims come from
+    * the same view.
+    *
+    * Invariants:
+    *  - The incremental fold equals the full fold. An entry is visible
+    *    iff its version is above the NEWEST snapshot commit's
+    *    `snapBase`; [[step]] folds one entry at a time and drops entries
+    *    at every snapshot commit, which equals compacting once by the
+    *    newest snapshot only if each snapshot's base is at or above the
+    *    version of every snapshot before it. That holds because a
+    *    snapshot commit is never [[rebaseable]]: a transaction rebases
+    *    only past pure appends, so its base can never move below an
+    *    earlier snapshot. [[step]] refuses a log that breaks it instead
+    *    of resurrecting replaced rows.
+    *  - Freshness. Every public call refreshes against the live log
+    *    ([[snapshot]]: one LIST, then only the entries committed since
+    *    the cached version are read), so a rival instance's commit is
+    *    visible on the next call.
+    *  - Thread safety. A snapshot is immutable; the live one is swapped
+    *    under one lock. */
+  private case class Snapshot(version: Long,
+      visible: Vector[(Entry, String)],
+      ts: Tombstones,
+      aux: CkptAux,
+      recorded: RecordedSchema,
+      truncatedBelow: Long,
+      listing: LogListing,
+      // committed versions at or below `version` the log listed when this
+      // was folded: a change means history below the tip moved (a
+      // cleanupLog, or a version-pinned claim filling a hole)
+      listed: Int) {
+    lazy val entries: Vector[Entry] = visible.map(_._1)
+    /** Visible entries carrying data files. */
+    lazy val live: Vector[Entry] = entries.filter(_.adds.nonEmpty)
+    def next: Long = version + 1
+    def schema: Option[StructType] = recorded.get
+    def mapping: Map[String, String] = aux.columnMapping
+    def dropped: Set[String] = aux.droppedCols.toSet
+    /** The on-disk (parquet/stats/bloom) name serving logical column `c`. */
+    def physicalOf(c: String): String = mapping.getOrElse(c, c)
+    def tracked: Boolean = aux.rowIdWatermark.isDefined
+  }
+
+  /** Fold one committed entry onto `s` (see [[Snapshot]]'s invariants). */
+  private def step(s: Snapshot, e: Entry, line: String): Snapshot =
+    if (!e.snapshot)
+      s.copy(version = e.version, visible = s.visible :+ (e -> line),
+        ts = s.ts + e, aux = s.aux + e,
+        recorded = if (e.schemaStr.isDefined) new RecordedSchema(e.schemaStr) else s.recorded)
+    else {
+      s.entries.reverseIterator.find(_.snapshot).foreach { prev =>
+        if (e.snapBase < prev.version)
+          sys.error(s"snapshot commit ${e.version} replaces the state at " +
+            s"${e.snapBase}, below the earlier snapshot commit ${prev.version} " +
+            "— a snapshot never rebases past another; refusing to misread the log")
+      }
+      val kept = s.visible.filter(_._1.version > e.snapBase) :+ (e -> line)
+      s.copy(version = e.version, visible = kept,
+        ts = kept.foldLeft(NoTombstones)(_ + _._1), aux = s.aux + e,
+        recorded = recordedOf(kept))
+    }
+
+  /** `base` with the entries of versions `vs` read and folded on, as of
+    * `listing`. */
+  private def advance(base: Snapshot, vs: Seq[Long], listing: LogListing, tb: Long): Snapshot = {
+    val s = vs.foldLeft(base) { (acc, v) =>
+      val (e, line) = readEntry(v)
+      step(acc, e, line)
+    }
+    s.copy(truncatedBelow = tb, listing = listing,
+      listed = listing.versions.count(_ <= s.version))
+  }
+
+  /** The live snapshot, guarded by `liveLock`; None until first used. */
+  private var liveSnap: Option[Snapshot] = None
+  private val liveLock = new Object
+
+  /** Refresh the live snapshot against the log: ONE LIST, then read and
+    * fold only the entries committed since the cached version. Rebuilt
+    * from the newest usable checkpoint on first use, or when history at
+    * or below the cached version changed. */
+  private def snapshot(): Snapshot = liveLock.synchronized {
+    val listing = LogListing(store.list())
+    val tb = if (listing.truncated) readTruncMarker() else 0L
+    val s = liveSnap match {
+      case Some(c) if listing.versions.count(_ <= c.version) == c.listed =>
+        advance(c, listing.versions.filter(_ > c.version), listing, tb)
+      case _ => build(listing, tb, None)
+    }
+    liveSnap = Some(s)
+    s
+  }
+
+  /** The state at `version`, from the same LIST as `live`: `live` itself
+    * at or past its tip, else seeded from the newest usable checkpoint at
+    * or below `version` (deep time travel below the oldest checkpoint
+    * replays the raw log). */
+  private def asOf(live: Snapshot, version: Long): Snapshot =
+    if (version >= live.version) live
+    else build(live.listing, live.truncatedBelow, Some(version))
+
+  private def build(listing: LogListing, tb: Long, target: Option[Long]): Snapshot = {
+    val seed = listing.checkpoints.filter(cv => target.forall(cv <= _))
+      .reverseIterator.flatMap(loadCheckpoint(_, listing, tb)).nextOption()
+    val base = seed.getOrElse {
+      // after cleanupLog (recorded in the truncation marker — a log
+      // legitimately starting above version 0, e.g. a streaming
+      // writer whose first batchId > 0, is NOT truncation), targets
+      // below the retained window must fail loudly rather than
+      // rebuild a silently partial state
+      if (tb > 0)
+        sys.error(s"versionAsOf=${target.getOrElse("latest")} " +
+          s"predates retained history: log entries below $tb were " +
+          "reclaimed by cleanupLog and no checkpoint at or below the " +
+          "target survives")
+      Snapshot(-1L, Vector.empty, NoTombstones, CkptAux(), new RecordedSchema(None),
+        tb, listing, 0)
+    }
+    advance(base, listing.versions.filter(v => v > base.version && target.forall(v <= _)),
+      listing, tb)
+  }
+
+  private def readTruncMarker(): Long =
+    try store.read(TruncMarkerName).trim.toLong
+    catch { case scala.util.control.NonFatal(_) => 0L }
 
   /** Sidecar names carry the checkpoint version, a writer-unique uid
     * (two writers racing the same cadence point can never collide on
@@ -544,28 +689,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def sidecarName(version: Long, uid: String, i: Int): String =
     f"$version%020d.$uid.$i%04d.sidecar"
 
-  /** All sidecar object names in the log, with their version prefix
-    * (for [[cleanupLog]]'s orphan sweep). */
-  private def sidecarFiles(): Seq[(Long, String)] =
-    store.list()
-      .filter(_.endsWith(".sidecar"))
-      .flatMap { n =>
-        scala.util.Try(n.takeWhile(_ != '.').toLong).toOption.map(_ -> n)
-      }
-
-  /** Parse a checkpoint, or None if torn/corrupt/inconsistent — replay
-    * then falls back to an older checkpoint or the raw log, so a bad
-    * checkpoint can degrade performance but never correctness. Format:
-    * line 1 is the aux header, the rest are visible commit entries
-    * verbatim. */
-  private def loadCheckpoint(cv: Long): Option[(CkptAux, Seq[Entry])] =
-    loadCheckpointFull(cv).map { case (aux, cs, _) => (aux, cs) }
-
-  /** Like [[loadCheckpoint]] but also returns each entry's raw line —
-    * the checkpoint writer needs them verbatim for entries whose raw
-    * log files were reclaimed by [[cleanupLog]]. */
-  private def loadCheckpointFull(cv: Long)
-      : Option[(CkptAux, Seq[Entry], Seq[String])] =
+  /** The ONE checkpoint loader: the snapshot a checkpoint records, or
+    * None if torn/corrupt/inconsistent — replay then falls back to an
+    * older checkpoint or the raw log, so a bad checkpoint can degrade
+    * performance but never correctness. Format: line 1 is the aux
+    * header, the rest are the visible commit entries verbatim, kept as
+    * the snapshot's raw lines (the next checkpoint re-writes them when
+    * cleanupLog has reclaimed their log files). */
+  private def loadCheckpoint(cv: Long, listing: LogListing, tb: Long): Option[Snapshot] =
     try {
       val lines = store.readLines(ckptNameOf(cv))
         .filter(_.nonEmpty)
@@ -583,14 +714,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           val out = new Array[Entry](body.size)
           java.util.stream.IntStream.range(0, body.size).parallel()
             .forEach(i => out(i) = Entry.parse(body(i)))
-          out.toSeq
+          out.toVector
         }
         // invariant of the writer: the triggering commit is the newest
         // visible entry, so a checkpoint not ending at its own version
         // (torn tail line lost, or garbage that happened to parse) is bad
         if commits.nonEmpty && commits.last.version == cv &&
           commits.forall(_.version <= cv)
-      } yield (aux, commits, body)
+      } yield {
+        val visible = commits.zip(body)
+        Snapshot(cv, visible, commits.foldLeft(NoTombstones)(_ + _), aux,
+          recordedOf(visible), tb, listing, 0)
+      }
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The checkpoint's entry lines: the main file's own tail for a
@@ -624,40 +759,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     }
   }
 
-  /** After winning version `v`: if `v` is on the checkpoint cadence,
-    * write the aux header plus the post-compaction visible entries at
-    * `v` (their raw log JSON, one per line) as `v.checkpoint`. The aux
-    * chains from the previous parseable checkpoint — fold(auxAt(cv'),
-    * entries(cv'..v]) — so building it costs O(interval), and equals
-    * the full-history fold by the fold identity. Best-effort by
-    * design — ingest must not fail because a checkpoint could not be
-    * written; first writer wins if two writers race the same cadence
-    * point. */
-  private def maybeCheckpoint(version: Long): Unit =
+  /** After winning `at.version`: if it is on the checkpoint cadence,
+    * write the aux header plus the post-compaction visible entries at it
+    * (their raw log lines, one per line) as `<version>.checkpoint` — all
+    * taken from the snapshot the claim produced, so writing one reads no
+    * log file. Best-effort by design — ingest must not fail because a
+    * checkpoint could not be written; first writer wins if two writers
+    * race the same cadence point. */
+  private def maybeCheckpoint(at: Snapshot): Unit = {
+    val version = at.version
     if (checkpointInterval > 0 && version > 0 &&
         version % checkpointInterval == 0 &&
         !store.exists(ckptNameOf(version)))
       try {
-        val prev = checkpointVersions().filter(_ < version).reverseIterator
-          .map(cv => cv -> loadCheckpointFull(cv))
-          .collectFirst { case (cv, Some(full)) => cv -> full }
-        val (from, seedAux) = prev
-          .map { case (cv, (aux, _, _)) => cv -> aux }
-          .getOrElse(-1L -> CkptAux())
-        val aux = seedAux.fold(committedVersions()
-          .filter(v => v > from && v <= version).map(parseCommit))
-        // entry lines come from the raw log when it still has them, and
-        // from the previous checkpoint for entries cleanupLog reclaimed —
-        // without the fallback, every checkpoint AFTER a cleanup would
-        // fail to write until a snapshot compacted the old entries away
-        val seedLines: Map[Long, String] = prev
-          .map { case (_, (_, cs, ls)) => cs.map(_.version).zip(ls).toMap }
-          .getOrElse(Map.empty)
-        def entryLine(c: Entry): String =
-          if (store.exists(logName(c.version)))
-            store.read(logName(c.version)).trim
-          else seedLines(c.version)
-        val entries = visibleCommits(Some(version)).map(entryLine)
+        val aux = at.aux
+        val entries = at.visible.map(_._2)
         val bodyBytes = entries.iterator
           .map(_.getBytes("UTF-8").length.toLong + 1).sum
         // split into size-bounded sidecars only when the body outgrows
@@ -722,6 +838,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           System.err.println(
             s"graft-sink: checkpoint at version $version failed (non-fatal): $e")
       }
+  }
 
   // ---------------------------------------------------------------------
   // protocol 1: streaming appends (single writer per appId, idempotent)
@@ -735,7 +852,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * fails (no implicit casts: a type flip is a bug, not evolution).
     * Columns the frame OMITS are fine — the read path null-pads them
     * (`unionByName(allowMissingColumns)`), Delta's nullable-missing
-    * rule. Metadata-only (one latest-commit parse, no data touched);
+    * rule. Metadata-only (the snapshot's recorded schema, no data touched);
     * nullability — top-level AND nested (array containsNull, map
     * valueContainsNull, struct field nullable) — is ignored via
     * [[nullNorm]] normalization on both sides: a literal-built
@@ -767,8 +884,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * type widening): the staged files then carry the table's type, so a
     * narrow write after a widening never re-introduces narrow files.
     * Run after [[enforceSchema]] at every data-write entry point. */
-  private def conformToTable(df: DataFrame): DataFrame =
-    latestSchema().filter(_.fields.nonEmpty).map { cur =>
+  private def conformToTable(s: Snapshot, df: DataFrame): DataFrame =
+    s.schema.filter(_.fields.nonEmpty).map { cur =>
       val curT = cur.fields.map(f => f.name -> f.dataType).toMap
       df.schema.fields.foldLeft(df) { (d, f) =>
         curT.get(f.name) match {
@@ -797,10 +914,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     }
   }
 
-  private def enforceSchema(df: DataFrame, mergeSchema: Boolean,
-      verb: String): Unit = enforceSchemaOf(df.schema, mergeSchema, verb)
-
-  private def enforceSchemaOf(fs: org.apache.spark.sql.types.StructType,
+  private def enforceSchema(s: Snapshot, fs: StructType,
       mergeSchema: Boolean, verb: String): Unit = {
     // the row-tracking materialization namespace is writer-internal: a
     // user frame carrying it would collide with (or spoof) pinned ids
@@ -810,7 +924,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         s"row-tracking prefix '$MatPrefix'; choose different names")
     // a metadata-only commit on an EMPTY table records an empty struct —
     // that is "no schema yet", not "every column is new"
-    latestSchema().filter(_.fields.nonEmpty).foreach { cur =>
+    s.schema.filter(_.fields.nonEmpty).foreach { cur =>
       val curT = cur.fields.map(f => f.name -> f.dataType).toMap
       val conflicts = fs.fields.flatMap(f =>
         curT.get(f.name).filter(t => nullNorm(t) != nullNorm(f.dataType))
@@ -838,8 +952,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // column-mapping reservation: a physical name backing a renamed
       // column, or a dropped column's physical name, cannot re-enter as
       // a new logical column — old files' bytes would reappear under it
-      val (m, droppedSet) = colMap()
-      val reserved = m.values.toSet ++ droppedSet
+      val reserved = s.mapping.values.toSet ++ s.dropped
       val clash = extra.filter(reserved)
       if (clash.nonEmpty)
         sys.error(s"$verb: columns ${clash.mkString(", ")} are reserved " +
@@ -867,13 +980,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * computed BEFORE the lost race would silently revert the rival's
     * evolution in the new latest metaData. Callers re-invoke this
     * against the fresh committed schema on every claim retry —
-    * metadata-only (one latest-commit parse), no re-stage: staged
+    * metadata-only (the claim snapshot's schema), no re-stage: staged
     * files may stay narrower than the table type, the read path
     * coerces via unionByName. Idempotent: re-evolving an
     * already-evolved schema against an unchanged table is identity. */
-  private def evolvedSchemaOf(fs: org.apache.spark.sql.types.StructType)
-      : (String, Boolean) =
-    latestSchema().filter(_.fields.nonEmpty) match {
+  private def evolvedSchemaOf(s: Snapshot, fs: StructType): (String, Boolean) =
+    s.schema.filter(_.fields.nonEmpty) match {
       case None => (fs.json, false)
       case Some(cur) =>
         val frameT = fs.fields.map(f => f.name -> f.dataType).toMap
@@ -902,28 +1014,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * staged parquet bytes — silently, no conflict error. Delta surfaces
     * exactly this as MetadataChangedException; aborting here does the
     * same (the staged dir becomes an orphan vacuum reclaims). Cheap when
-    * nothing moved: one latest-commit schema read and a json compare.
+    * nothing moved: a json compare against the snapshot's schema.
     * Returns the fresh json so the next retry compares against it. */
-  private def reEnforceOnRetry(fs: org.apache.spark.sql.types.StructType,
+  private def reEnforceOnRetry(s: Snapshot, fs: StructType,
       mergeSchema: Boolean, validated: Option[String],
       verb: String): Option[String] = {
-    val now = latestSchema().map(_.json)
+    val now = s.schema.map(_.json)
     if (now != validated)
-      enforceSchemaOf(fs, mergeSchema, s"$verb (claim retry: the table " +
+      enforceSchema(s, fs, mergeSchema, s"$verb (claim retry: the table " +
         "schema changed underneath this writer)")
     now
   }
-
-  /** foreachBatch body: write-then-commit, idempotent on batchId.
-    * `partitionBy` columns produce hive-style subdirectories inside the
-    * batch dir (the Delta partitioned-table layout); the commit entry
-    * records them in the `metaData` action alongside the schema.
-    * `mergeSchema` opts this batch into schema evolution
-    * ([[enforceSchema]]). */
-  def process(df: DataFrame, batchId: Long, partitionBy: Seq[String] = Nil,
-      mergeSchema: Boolean = false): Unit =
-    process(df, batchId, partitionBy, snapshot = false,
-      mergeSchema = mergeSchema)
 
   /** Is `c` genuinely OUR stream's commit of `batchId`? Guards both
     * replay paths in [[process]]: the dir shape catches a metadata/OCC
@@ -936,33 +1037,40 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     (c.dir == s"batch=$batchId" || c.dir.startsWith(s"batch=$batchId-")) &&
       c.txnAppId.forall(_ == appId)
 
-  private def process(df: DataFrame, batchId: Long, partitionBy: Seq[String],
-      snapshot: Boolean, mergeSchema: Boolean): Unit = {
-    // Replay detection below is raw-log-file based (isCommitted). If
+  /** foreachBatch body: write-then-commit, idempotent on batchId.
+    * `partitionBy` columns produce hive-style subdirectories inside the
+    * batch dir (the Delta partitioned-table layout); the commit entry
+    * records them in the `metaData` action alongside the schema.
+    * `mergeSchema` opts this batch into schema evolution
+    * ([[enforceSchema]]). */
+  def process(df: DataFrame, batchId: Long, partitionBy: Seq[String] = Nil,
+      mergeSchema: Boolean = false): Unit = {
+    val s = snapshot()
+    // Replay detection below is raw-log-file based (the listing). If
     // cleanupLog already reclaimed this batch's raw entry (it survives
-    // only in a checkpoint), a replayed old batch would see
-    // isCommitted=false, re-stage, and successfully re-claim the version
+    // only in a checkpoint), a replayed old batch would see no raw
+    // entry, re-stage, and successfully re-claim the version
     // (no raw file left to collide with) — writing an orphan duplicate
     // entry below the truncation marker, invisible to readers but
     // muddying the exactly-once accounting. Fail loudly instead, like
     // the occupied-version require.
-    if (batchId < truncatedBelow()) {
+    if (batchId < s.truncatedBelow) {
       // The raw file is gone, but the batch may still be VERIFIABLY
       // committed: a surviving checkpoint carries the entry (txn action
       // included). A lagging/restored streaming checkpoint replaying an
       // already-committed own batch is then a provable exactly-once
       // no-op — only a genuinely unverifiable batch must fail.
-      if (allKnownCommits().find(_.version == batchId)
+      if (allKnownCommits(s).find(_.version == batchId)
           .exists(isOwnStreamBatch(_, batchId))) return
       sys.error(
         s"process(batchId=$batchId): this version is below the log's " +
-          s"truncation marker (${truncatedBelow()}), its raw entry was " +
+          s"truncation marker (${s.truncatedBelow}), its raw entry was " +
           "reclaimed by cleanupLog, and no surviving checkpoint entry " +
           "verifies it as this stream's commit — version-pinned replay " +
           "detection cannot run; drive this table through appendBatch " +
           "(streamTxn-cursored) instead")
     }
-    if (isCommitted(batchId)) {
+    if (s.listing.versions.contains(batchId)) {
       // replay after crash → no-op, but ONLY when the occupying commit
       // really is this stream's batch (tables with a pre-stream log
       // need [[appendBatch]], which cursors on streamTxn instead of
@@ -978,18 +1086,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         "versions, which the version-pinned process() protocol cannot " +
         "tolerate — drive this table through appendBatch (streamTxn-" +
         "cursored) instead")
-    enforceSchema(df, mergeSchema, s"process(batchId=$batchId)")
-    val gdf0 = applyGenerated(conformToTable(df))
+    enforceSchema(s, df.schema, mergeSchema, s"process(batchId=$batchId)")
+    val gdf0 = applyGenerated(s, conformToTable(s, df))
     // identity assignment: the stream is the SINGLE writer, so there is
     // no watermark race — a crash-replay of this batch re-reads the
     // previous batch's committed watermark and the claim's idempotence
     // keeps exactly-once either way
-    val idr = identityRules()
+    val idr = identityRules(s)
     val (gdf, advancedGen, releaseId) =
       if (idr.isEmpty) (gdf0, None, () => ())
       else {
         val (adf, adv, rel) = assignIdentity(gdf0, idr)
-        (adf, Some(logTail.activeGenerated() ++ adv), rel)
+        (adf, Some(s.aux.generated ++ adv), rel)
       }
     try {
       // 1. publish data files (invisible to readers — they go through the
@@ -1004,17 +1112,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       //    micro-batch after the declaration writes bloom-less files and
       //    point-probe pruning quietly decays as the table grows.
       val attempt = java.util.UUID.randomUUID().toString.take(8)
-      val (polCols, polBits) = activeBloomPolicy()
-      val pub = publish(gdf, s"batch=$batchId-$attempt", partitionBy,
-        polCols.map(physicalOf), polBits, check = true)
+      val (polCols, polBits) = activeBloomPolicy(s)
+      val pub = publish(s, gdf, s"batch=$batchId-$attempt", partitionBy,
+        polCols.map(s.physicalOf), polBits, check = true)
 
       // 2. commit; a lost claim normally means a concurrent replay
       //    already committed this batchId — exactly-once either way.
       //    But verify it: a maintenance OCC commit (or a foreign
       //    stream) racing into version=batchId while this batch staged
       //    would otherwise swallow the batch silently.
-      val (schemaJson, widened) = evolvedSchemaOf(gdf.schema)
-      if (!claim(Entry(batchId, pub.dir, snapshot, pub.adds,
+      val (schemaJson, widened) = evolvedSchemaOf(s, gdf.schema)
+      if (!claim(s, Entry(batchId, pub.dir, adds = pub.adds,
           schemaStr = Some(schemaJson), partitionColumns = partitionBy,
           generated = advancedGen, widened = widened))) {
         require(isOwnStreamBatch(parseCommit(batchId), batchId),
@@ -1084,7 +1192,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       bloomBy: Seq[String] = Nil, bloomBits: Int = 4096,
       mergeSchema: Boolean = false,
       streamTxn: Option[(String, Long)] = None): Long = {
-    enforceSchema(df, mergeSchema, "commitAppend")
+    val s0 = snapshot()
+    enforceSchema(s0, df.schema, mergeSchema, "commitAppend")
     // no caller bloom spec → the table's declared policy applies
     // (activeBloomPolicy doc): appendBatch funnels here too, so every
     // OCC/streaming-cursored append keeps the policy on new files.
@@ -1095,12 +1204,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // the narrowing permanent (the same hazard compactSmall avoids by
     // re-recording only explicit declarations).
     val (bBy, bBits) =
-      if (bloomBy.nonEmpty) (bloomBy, bloomBits) else activeBloomPolicy()
+      if (bloomBy.nonEmpty) (bloomBy, bloomBits) else activeBloomPolicy(s0)
     // the table schema enforceSchema just validated against: every claim
-    // (re)derivation below first compares latestSchema() to this and
+    // (re)derivation below first compares its snapshot's schema to this and
     // RE-VALIDATES when a rival moved it — evolvedSchemaOf alone would
     // silently keep a rival's incompatible type (reEnforceOnRetry doc)
-    var validated = latestSchema().map(_.json)
+    var validated = s0.schema.map(_.json)
     // the plain-append claim: blind version re-target (append⇄append
     // never conflicts). The recorded schema is re-derived AFTER staging
     // and on every retry: a rival that committed an evolution (widening
@@ -1112,28 +1221,29 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // SUCCESSFUL claim always recorded fresh metadata. Each
     // (re)derivation re-validates first: a rival evolution that is
     // INCOMPATIBLE with the staged frame must abort, not be re-derived
-    // around (reEnforceOnRetry doc).
-    def claimAppend(frame: DataFrame, st: Published): Long = {
-      var v = nextVersion()
+    // around (reEnforceOnRetry doc). The first attempt claims on `from`,
+    // the snapshot the stage was built on; a lost race refreshes.
+    def claimAppend(frame: DataFrame, st: Published, from: Snapshot): Long = {
+      var s = from
       while (true) {
-        validated = reEnforceOnRetry(frame.schema, mergeSchema, validated,
+        validated = reEnforceOnRetry(s, frame.schema, mergeSchema, validated,
           "commitAppend")
-        val (sj, wd) = evolvedSchemaOf(frame.schema)
-        if (claim(Entry(v, st.dir, adds = st.adds, schemaStr = Some(sj),
+        val (sj, wd) = evolvedSchemaOf(s, frame.schema)
+        if (claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sj),
             partitionColumns = partitionBy, streamTxn = streamTxn, widened = wd,
-            domains = writeDomains(clusterBy, bloomBy, bloomBits))))
-          return v
-        v = math.max(v + 1, nextVersion()) // lost the race — next version
+            domains = writeDomains(s, clusterBy, bloomBy, bloomBits))))
+          return s.next
+        s = snapshot() // lost the race — next version
       }
       -1L // unreachable
     }
-    val gdf = applyGenerated(conformToTable(df))
-    val idr0 = identityRules()
+    val gdf = applyGenerated(s0, conformToTable(s0, df))
+    val idr0 = identityRules(s0)
     if (idr0.isEmpty) {
-      val st = stageAppend(gdf, partitionBy, clusterBy, clusterFiles,
+      val st = stageAppend(s0, gdf, partitionBy, clusterBy, clusterFiles,
         bBy, bBits)
       stagedHook()
-      claimAppend(gdf, st)
+      claimAppend(gdf, st, s0)
     } else if (idr0.forall(_._5)) {
       // ALLOW-GAPS identity (the Delta-parity trade, setIdentityColumn
       // allowGaps = true): RESERVE the range in a cheap METADATA
@@ -1158,11 +1268,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         var contiguousRival = false
         while (!reserved && !contiguousRival) {
           identityReserveHook()
-          val (gen, expected) = logTail.generatedState()
-          val rules = gen.toSeq.sortBy(_._1).collect {
-            case (n, IdentityRule(st0, k, w, g)) =>
-              (n, st0.toLong, k.toLong, w.toLong, g != null)
-          }
+          val s = snapshot()
+          val gen = s.aux.generated
+          val rules = identityRules(s)
           if (rules.exists(!_._5)) {
             // a rival declared a CONTIGUOUS (allowGaps = false) identity
             // rule after our idr0 read — legal while the table is empty.
@@ -1181,8 +1289,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
                 s"${if (g) ",gaps" else ""})")
             }.toMap
             ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
-            if (claim(Entry(expected, op = "RESERVE IDENTITY",
-                schemaStr = Some(metaSchemaJson()),
+            if (claim(s, Entry(s.next, op = "RESERVE IDENTITY",
+                schemaStr = Some(metaSchemaJson(s)),
                 generated = Some(gen ++ advanced)))) {
               base = rules; reserved = true
             }
@@ -1197,8 +1305,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           //    watermark already rode the reservation commit
           val (adf, _) = assignFromPrep(prep, base)
           // 3. commit like a plain append
-          claimAppend(adf, stageAppend(adf, partitionBy, clusterBy,
-            clusterFiles, bBy, bBits))
+          val s = snapshot()
+          claimAppend(adf, stageAppend(s, adf, partitionBy, clusterBy,
+            clusterFiles, bBy, bBits), s)
         }
       } finally prep.release()
     } else {
@@ -1253,19 +1362,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     var staged: Option[(Seq[(String, Long, Long, Long, Boolean)],
       Map[String, String], Published, String)] = None
     while (true) {
-      val (gen, expected) = logTail.generatedState()
-      val rules = gen.toSeq.sortBy(_._1).collect {
-        case (n, IdentityRule(s, k, w, g)) =>
-          (n, s.toLong, k.toLong, w.toLong, g != null)
-      }
+      val s = snapshot()
+      val gen = s.aux.generated
+      val rules = identityRules(s)
       if (!staged.exists(_._1 == rules)) {
         // first attempt, or stale range — (re)assign and (re)stage;
         // an abandoned staged dir is an orphan vacuum reclaims
         if (staged.isDefined) ExactlyOnceSink.identityRestages.incrementAndGet()
         val (adf, advanced) = assignFromPrep(prep, rules)
-        val st = stageAppend(adf, partitionBy, clusterBy, clusterFiles,
+        val st = stageAppend(s, adf, partitionBy, clusterBy, clusterFiles,
           bloomBy, bloomBits)
-        staged = Some((rules, gen ++ advanced, st, evolvedSchemaOf(adf.schema)._1))
+        staged = Some((rules, gen ++ advanced, st, evolvedSchemaOf(s, adf.schema)._1))
       }
       val (_, genOut, st, stagedSchema) = staged.get
       ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
@@ -1276,16 +1383,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // not be silently kept) and re-derive the recorded schema from
       // the staged one against the fresh committed table on every
       // attempt (evolvedSchemaOf doc)
-      val fsI = org.apache.spark.sql.types.DataType.fromJson(stagedSchema)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      validated = reEnforceOnRetry(fsI, mergeSchema, validated,
+      val fsI = DataType.fromJson(stagedSchema).asInstanceOf[StructType]
+      validated = reEnforceOnRetry(s, fsI, mergeSchema, validated,
         "commitAppend")
-      val (sjI, wdI) = evolvedSchemaOf(fsI)
-      if (claim(Entry(expected, st.dir, adds = st.adds, schemaStr = Some(sjI),
+      val (sjI, wdI) = evolvedSchemaOf(s, fsI)
+      if (claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sjI),
           partitionColumns = partitionBy, generated = Some(genOut),
           streamTxn = streamTxn, widened = wdI,
-          domains = writeDomains(clusterBy, declaredBloomBy, bloomBits))))
-        return expected
+          domains = writeDomains(s, clusterBy, declaredBloomBy, bloomBits))))
+        return s.next
     }
     -1L // unreachable
   }
@@ -1325,11 +1431,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * declared layout instead of silently narrowing it. Discovery
     * ([[activeClusterCols]]) translates back to the current logical
     * view and tolerates legacy logical-name records. */
-  private def clusterDomain(clusterBy: Seq[String])
+  private def clusterDomain(s: Snapshot, clusterBy: Seq[String])
       : Option[Map[String, Option[Map[String, String]]]] =
     if (clusterBy.isEmpty) None
     else Some(Map("graft.clustering" ->
-      Some(Map("columns" -> clusterBy.map(physicalOf).mkString(",")))))
+      Some(Map("columns" -> clusterBy.map(s.physicalOf).mkString(",")))))
 
   /** The table's recorded clustering layout as CURRENT LOGICAL column
     * names: reverse-maps each recorded physical name through the active
@@ -1337,14 +1443,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * unchanged), then drops names the live schema no longer carries
     * (DROPped columns — the only case that genuinely narrows the
     * layout; a RENAMEd column resolves to its new logical name). */
-  private def activeClusterCols(): Seq[String] = {
-    val sch = latestSchema()
-    val logicalOf = colMap()._1.map(_.swap)
-    domainMetadata("graft.clustering")
+  private def activeClusterCols(s: Snapshot): Seq[String] =
+    liveLogical(s, s.aux.domains.get("graft.clustering")
       .flatMap(_.get("columns")).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
-      .map(c => logicalOf.getOrElse(c, c))
-      .filter(c => sch.exists(_.fieldNames.contains(c)))
+      .flatMap(_.split(',')).filter(_.nonEmpty))
+
+  /** Recorded (physical, or legacy logical) column names as the live
+    * schema's logical names; names it no longer has fall out. */
+  private def liveLogical(s: Snapshot, recorded: Seq[String]): Seq[String] = {
+    val logicalOf = s.mapping.map(_.swap)
+    recorded.map(c => logicalOf.getOrElse(c, c))
+      .filter(c => s.schema.exists(_.fieldNames.contains(c)))
   }
 
   /** Every domain delta a WRITE records: `graft.clustering` plus
@@ -1354,21 +1463,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * copy-on-write rewrite) can recompute blooms for its packed output
     * instead of silently retiring the table's point-probe pruning along
     * with the original files. */
-  private def writeDomains(clusterBy: Seq[String], bloomBy: Seq[String],
+  private def writeDomains(s: Snapshot, clusterBy: Seq[String], bloomBy: Seq[String],
       bloomBits: Int): Option[Map[String, Option[Map[String, String]]]] = {
     val bl: Map[String, Option[Map[String, String]]] =
       if (bloomBy.isEmpty) Map.empty
       else Map("graft.bloom" -> Some(Map(
-        "columns" -> bloomBy.map(physicalOf).mkString(","),
+        "columns" -> bloomBy.map(s.physicalOf).mkString(","),
         "bits" -> bloomBits.toString)))
-    val m = clusterDomain(clusterBy).getOrElse(Map.empty) ++ bl
+    val m = clusterDomain(s, clusterBy).getOrElse(Map.empty) ++ bl
     if (m.isEmpty) None else Some(m)
   }
 
   /** The table's recorded bloom policy: (physical columns, bitmap
     * bits) from the `graft.bloom` domain, or (Nil, default). */
-  private def bloomPolicy(): (Seq[String], Int) =
-    domainMetadata("graft.bloom") match {
+  private def bloomPolicy(s: Snapshot): (Seq[String], Int) =
+    s.aux.domains.get("graft.bloom") match {
       case Some(cfg) => (
         cfg.get("columns").toSeq.flatMap(_.split(',')).filter(_.nonEmpty),
         cfg.get("bits").map(_.toInt).getOrElse(4096))
@@ -1382,19 +1491,16 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * their own default to this: once a policy is declared, NEW data
     * keeps the table's point-probe pruning instead of silently writing
     * bloom-less files (rewrites — OPTIMIZE/CoW/MOR — already honor it). */
-  private def activeBloomPolicy(): (Seq[String], Int) = {
-    val (phys, bits) = bloomPolicy()
-    val sch = latestSchema()
-    val logicalOf = colMap()._1.map(_.swap)
-    (phys.map(c => logicalOf.getOrElse(c, c))
-      .filter(c => sch.exists(_.fieldNames.contains(c))), bits)
+  private def activeBloomPolicy(s: Snapshot): (Seq[String], Int) = {
+    val (phys, bits) = bloomPolicy(s)
+    (liveLogical(s, phys), bits)
   }
 
   /** Publish one optimistic append's data files under a writer-unique
     * dir — everything a claim needs, claiming left to the caller (plain
     * appends blind-retry versions; identity appends pin the version to
     * their watermark read). */
-  private def stageAppend(gdf: DataFrame, partitionBy: Seq[String],
+  private def stageAppend(s: Snapshot, gdf: DataFrame, partitionBy: Seq[String],
       clusterBy: Seq[String], clusterFiles: Int,
       bloomBy: Seq[String], bloomBits: Int): Published = {
     // A clustered append runs TWO actions over the input (the quantile
@@ -1407,8 +1513,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .map(graft.operators.ZOrder.cluster(_, clusterBy, clusterFiles))
       .getOrElse(gdf)
     val uuid = java.util.UUID.randomUUID().toString
-    try publish(clustered, s"files/$uuid", partitionBy,
-      bloomBy.map(physicalOf), bloomBits, check = true)
+    try publish(s, clustered, s"files/$uuid", partitionBy,
+      bloomBy.map(s.physicalOf), bloomBits, check = true)
     finally pinned.foreach(_.unpersist(blocking = false))
   }
 
@@ -1438,33 +1544,33 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def transactSnapshotChanges(spark: SparkSession, op: String,
       maxRetries: Int = 20, streamTxn: Option[(String, Long)] = None)
       (f: DataFrame => (DataFrame, Option[DataFrame])): Long =
-    occTransact(s"transactSnapshot($op)", maxRetries) { expected =>
+    occTransact(s"transactSnapshot($op)", maxRetries) { s =>
       // the version whose state `f` reads: a WriteSerializable re-claim
       // moves the claimed version past rival pure appends while the base
       // — and the published output — stay fixed (the appends remain
-      // visible, [[Entry.snapBase]] / visibleCommits)
-      val base = expected - 1
+      // visible, [[Entry.snapBase]] / [[Snapshot]])
+      val base = s.version
       // under row tracking the transform sees the live state with every
       // row's id RESOLVED into the materialization columns: surviving
       // rows carry them into the rewritten files (id stability through
       // copy-on-write), rows the transform introduces lack them and
       // read back fresh virtual ids — the Delta rewrite rule
-      val (out0, changes0) = f(liveDataMat(spark))
+      val (out0, changes0) = f(liveDataMat(spark, s))
       // re-derive generated columns the transform may have dropped (a
       // narrower merge frame) and validate the ones it carried
-      val out = applyGenerated(out0)
+      val out = applyGenerated(s, out0)
       val uuid = java.util.UUID.randomUUID().toString
       // a declared bloom policy survives EVERY copy-on-write rewrite
       // (compact, CoW merge/delete, arbitrary snapshot transforms):
       // recompute blooms for the rewritten files — a maintenance pass
       // must not retire the table's point-probe pruning
-      val (polCols, polBits) = bloomPolicy()
-      val pub = publish(out, s"files/$uuid", Nil, polCols, polBits,
+      val (polCols, polBits) = bloomPolicy(s)
+      val pub = publish(s, out, s"files/$uuid", Nil, polCols, polBits,
         check = true)
       // the CDC change rows are a LOGICAL feed — the physical
       // materialization columns never leak into it; their footer stats
       // are the CDC skipping metadata readChanges pruneBy prunes on
-      val ch = changes0.map(c => publish(dropMat(c), s"changes/$uuid", Nil,
+      val ch = changes0.map(c => publish(s, dropMat(c), s"changes/$uuid", Nil,
         Nil, 0, check = false))
       // record the EVOLVED table schema (latestSchema ∪ output frame),
       // never the frame's alone: when no visible file carries a column
@@ -1478,21 +1584,23 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val outSchemaNoMat = org.apache.spark.sql.types.StructType(
         out.schema.fields.filterNot(_.name.startsWith(MatPrefix)))
       val matF = out.columns.contains(MatIdCol)
-      Some { (v: Long) =>
-        val (sj, wd) = evolvedSchemaOf(outSchemaNoMat)
-        Entry(v, pub.dir, snapshot = true, pub.adds, op, Some(sj),
+      Some { (t: Snapshot) =>
+        val (sj, wd) = evolvedSchemaOf(t, outSchemaNoMat)
+        Entry(t.next, pub.dir, snapshot = true, pub.adds, op, Some(sj),
           changeDir = ch.map(_.dir), changeAdds = ch.fold(Seq.empty[AddFile])(_.adds),
           streamTxn = streamTxn, base = Some(base), widened = wd, matFiles = matF)
       }
     }
 
   /** The OCC transaction loop of the snapshot, MOR and OPTIMIZE verbs.
-    * Each attempt reads `expected = nextVersion()` and runs `attempt`,
-    * which computes and publishes the transaction's output from the
-    * state at `expected - 1` and returns the entry to claim at a given
-    * version (None: nothing to commit, returns -1). It is rebuilt per
-    * claim, so the schema union is re-derived — and [[claim]] re-runs
-    * row-id allocation — against the live log. Under WriteSerializable
+    * Each attempt takes one snapshot and runs `attempt` on it, which
+    * computes and publishes the transaction's output from that state and
+    * returns how to render the entry to claim at a given snapshot's
+    * `next` version (None: nothing to commit, returns -1). It is
+    * re-rendered per claim, so the schema union is re-derived — and
+    * [[claim]] re-runs row-id allocation — against the claim's
+    * snapshot; the rivals a lost claim met are the refreshed snapshot's
+    * entries from the lost version on. Under WriteSerializable
     * and with `rebase` on, a claim lost only to rival PURE APPENDS
     * re-claims the next version with the SAME published output (a
     * rebase); a genuinely conflicting rival — removes/DVs/snapshot/
@@ -1503,28 +1611,26 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * backfill) pass `rebase = false`: re-claiming their entry past a
     * rival append would silently drop the rival's rows. */
   private def occTransact(verb: String, maxRetries: Int, rebase: Boolean = true)(
-      attempt: Long => Option[Long => Entry]): Long = {
+      attempt: Snapshot => Option[Snapshot => Entry]): Long = {
     var recomputes = 0
-    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    val rivalLog = scala.collection.mutable.ArrayBuffer.empty[Entry]
     while (true) {
-      var expected = nextVersion()
-      val render = attempt(expected) match {
+      var s = snapshot()
+      val render = attempt(s) match {
         case Some(r) => r
         case None => return -1L
       }
       txnStagedHook()
       var rebased = true
       while (rebased) {
-        if (claim(render(expected))) return expected
-        val next = nextVersion()
-        val rivals = rivalCommits(expected, next)
-        rivalLog ++= rivals.map(c => c.version -> c.op)
+        if (claim(s, render(s))) return s.next
+        val fresh = snapshot()
+        val rivals = fresh.entries.filter(_.version >= s.next)
+        rivalLog ++= rivals
         rebased = rebase && isolation == ExactlyOnceSink.WriteSerializable &&
           rivals.nonEmpty && rivals.forall(rebaseable)
-        if (rebased) {
-          txnRebases.incrementAndGet()
-          expected = next
-        }
+        if (rebased) txnRebases.incrementAndGet()
+        s = fresh
       }
       txnRecomputes.incrementAndGet()
       recomputes += 1
@@ -1560,16 +1666,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * (existing ∪ new), so the fold is latest-wins per file; a remove
     * supersedes the file's DV. Snapshot commits (merge/delete/compact/
     * restore copy-on-write) clear everything earlier via
-    * visibleCommits' compaction, so tombstones never survive a rewrite
+    * the snapshot's compaction, so tombstones never survive a rewrite
     * of the state they applied to. */
   private case class Tombstones(removed: Set[String], dv: Map[String, Array[Long]]) {
     def isEmpty: Boolean = removed.isEmpty && dv.isEmpty
+    /** Fold one more commit's removes and vectors. */
+    def +(c: Entry): Tombstones = Tombstones(removed ++ c.removes, dv ++ c.dvs -- c.removes)
   }
 
-  private def tombstones(commits: Seq[Entry]): Tombstones =
-    commits.foldLeft(Tombstones(Set.empty, Map.empty)) { (t, c) =>
-      Tombstones(t.removed ++ c.removes, t.dv ++ c.dvs -- c.removes)
-    }
+  private val NoTombstones = Tombstones(Set.empty, Map.empty)
 
   /** Per-version log-entry parses since construction — the cost
     * checkpointing bounds; exposed so tests can assert the O(interval)
@@ -1609,59 +1714,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       c.domains.forall(_.forall { case (d, v) =>
         (d == "graft.clustering" || d == "graft.bloom") && v.isDefined })
 
-  /** The rivals that took versions [from, until) — what a losing claim
-    * lost to; parsed for the rebase check and the starvation report. */
-  private def rivalCommits(from: Long, until: Long): Seq[Entry] =
-    committedVersions().filter(v => v >= from && v < until).map(parseCommit)
-
   /** One line of "who beat us" for the gave-up errors, so an operator
-    * can tell a hot table from a bug. */
-  private def rivalSummary(rs: Seq[(Long, String)]): String =
-    rs.takeRight(12).map { case (v, o) =>
-      s"v$v:${if (o.nonEmpty) o else "APPEND"}" }.mkString(", ")
+    * can tell a hot table from a bug: a rival a WriteSerializable
+    * transaction could rebase past reads APPEND, any other its op. */
+  private def rivalSummary(rs: Seq[Entry]): String =
+    rs.takeRight(12).map { c =>
+      s"v${c.version}:${if (rebaseable(c)) "APPEND" else c.op}" }.mkString(", ")
 
-  private def parseCommit(v: Long): Entry = {
+  /** One committed entry and its raw log line, read from its log file. */
+  private def readEntry(v: Long): (Entry, String) = {
     logFileParses.incrementAndGet()
-    Entry.parse(store.read(logName(v)), v)
+    val text = store.read(logName(v))
+    (Entry.parse(text, v), text.trim)
   }
 
-  /** Committed commits visible at `versionAsOf`, snapshot-compaction
-    * applied (a snapshot REPLACES everything before it — Delta's
-    * copy-on-write rewrite narrowed to full-table snapshots). */
-  private def visibleCommits(versionAsOf: Option[Long]): Seq[Entry] = {
-    val vs = committedVersions().filter(v => versionAsOf.forall(v <= _))
-    // seed from the newest usable checkpoint at or below the target
-    // version, then parse only the entries after it; a target below the
-    // oldest checkpoint (deep time travel) replays the raw log — those
-    // entries are never deleted
-    val seed = checkpointVersions()
-      .filter(cv => versionAsOf.forall(cv <= _)).reverseIterator
-      .map(cv => cv -> loadCheckpoint(cv))
-      .collectFirst { case (cv, Some((_, cs))) => cv -> cs }
-    val all = seed match {
-      case Some((cv, cs)) => cs ++ vs.filter(_ > cv).map(parseCommit)
-      case None =>
-        // after cleanupLog (recorded in the truncation marker — a log
-        // legitimately starting above version 0, e.g. a streaming
-        // writer whose first batchId > 0, is NOT truncation), targets
-        // below the retained window must fail loudly rather than
-        // rebuild a silently partial state
-        val tb = truncatedBelow()
-        if (tb > 0)
-          sys.error(s"versionAsOf=${versionAsOf.getOrElse("latest")} " +
-            s"predates retained history: log entries below $tb were " +
-            "reclaimed by cleanupLog and no checkpoint at or below the " +
-            "target survives")
-        vs.map(parseCommit)
-    }
-    // a snapshot replaces everything at or below its BASE (the version
-    // it read — `version - 1` unless it rebased past rival pure appends
-    // under WriteSerializable, in which case the appends in
-    // (base, version) stay visible; they carry no removes/DVs, so the
-    // tombstone fold over the kept window is unaffected)
-    all.filter(_.snapshot).lastOption
-      .map(sc => all.filter(_.version > sc.snapBase)).getOrElse(all)
-  }
+  private def parseCommit(v: Long): Entry = readEntry(v)._1
 
   /** Read the committed table state (only data referenced by the log);
     * `versionAsOf` time-travels to the state after that version
@@ -1695,28 +1762,37 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def read(spark: SparkSession,
       versionAsOf: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
-    val all = visibleCommits(versionAsOf)
+    val live = snapshot()
+    readAt(spark, live, versionAsOf.map(asOf(live, _)), mergeSchema)
+  }
+
+  /** [[read]] of `at` (None: the live state), presented through the
+    * live snapshot's column mapping. */
+  private def readAt(spark: SparkSession, live: Snapshot, at: Option[Snapshot],
+      mergeSchema: Boolean = false): DataFrame = {
+    val s = at.getOrElse(live)
     // metadata-only commits (SET CONSTRAINT) carry no data files
-    val commits = all.filter(_.adds.nonEmpty)
+    val commits = s.live
     if (commits.isEmpty) return spark.emptyDataFrame
-    val ts = tombstones(all)
+    val ts = s.ts
     // Flat commits read through an EXPLICIT recorded schema — the
     // log-is-the-schema-authority path: no per-call footer-inference
     // job, and the add-listed exact file paths replace the directory
     // listing (§6). Live reads take the latest recorded physical schema
     // (flatReader); time-travel reads take the schema RECORDED AT the
-    // last visible commit (the as-of authority), but only on
-    // mapping-free tables — under column mapping the files carry frozen
-    // physical names that the as-of logical schema cannot address, so
-    // those keep the per-commit inference read.
-    val explicit = explicitReader(spark, versionAsOf, all)
+    // newest visible commit that records one (the as-of authority), but
+    // only while no column mapping existed at that version — under
+    // mapping the files carry frozen physical names that the as-of
+    // logical schema cannot address, so those keep the per-commit
+    // inference read.
+    val explicit = explicitReader(spark, live, at)
     if (ts.isEmpty)
       // fast path — a table never touched by merge-on-read reads with
       // no row-position columns and no anti-joins
-      dropMat(toLogical(scanCommits(spark, commits, explicit, batch = true,
+      dropMat(toLogical(live, scanCommits(spark, commits, explicit, batch = true,
         pos = false, mergeSchema)(_ => true)))
     else {
-      val scanned = scanWithPos(spark, commits, ts, mergeSchema,
+      val scanned = scanWithPos(spark, live, commits, ts, mergeSchema,
         explicit = explicit)
       if (scanned.columns.isEmpty) scanned // every file removed
       else dropMat(applyTombstones(scanned, ts).drop(FileCol, RidxCol))
@@ -1726,20 +1802,16 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** The explicit-schema reader for flat committed files of this read,
     * when one is safe (see [[read]]): latest recorded physical schema
     * for live reads (mat columns included — [[flatReader]]), the
-    * schema recorded at the last visible commit for time-travel reads
-    * of mapping-free tables, None (→ per-dir inference) otherwise. */
-  private def explicitReader(spark: SparkSession, versionAsOf: Option[Long],
-      all: Seq[Entry]): Option[org.apache.spark.sql.DataFrameReader] =
-    if (versionAsOf.isEmpty)
-      physicalReadSchema().map(_ => flatReader(spark))
-    else {
-      val (m, dropped) = colMap()
-      if (m.nonEmpty || dropped.nonEmpty) None
-      else all.lastOption.flatMap(_.schemaStr).flatMap { s =>
-        val st = org.apache.spark.sql.types.DataType.fromJson(s)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        if (st.fields.isEmpty) None else Some(spark.read.schema(st))
-      }
+    * schema recorded at the as-of snapshot for time-travel reads of a
+    * version with no column mapping yet, None (→ per-dir inference)
+    * otherwise. */
+  private def explicitReader(spark: SparkSession, live: Snapshot,
+      at: Option[Snapshot]): Option[org.apache.spark.sql.DataFrameReader] =
+    at match {
+      case None => physicalReadSchema(live).map(_ => flatReader(spark, live))
+      case Some(s) =>
+        if (s.mapping.nonEmpty || s.dropped.nonEmpty) None
+        else s.schema.filter(_.fields.nonEmpty).map(spark.read.schema(_))
     }
 
   // ---------------------------------------------------------------------
@@ -1873,11 +1945,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * listed; the remove anti-join then only covers dir-granular
     * (hive/restore) commits. Returns an empty frame when every file is
     * retired. */
-  private def scanWithPos(spark: SparkSession, commits: Seq[Entry],
+  private def scanWithPos(spark: SparkSession, live: Snapshot, commits: Seq[Entry],
       ts: Tombstones, mergeSchema: Boolean = false,
       explicit: Option[org.apache.spark.sql.DataFrameReader] = None)
       : DataFrame =
-    toLogical(scanCommits(spark, commits, explicit, batch = true, pos = true,
+    toLogical(live, scanCommits(spark, commits, explicit, batch = true, pos = true,
       mergeSchema)(k => !ts.removed.contains(k)))
 
   /** Subtract tombstones from a [[scanWithPos]] frame: one broadcast
@@ -1942,14 +2014,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * is physical-only: readChanges treats it like COMPACT.
     * Idempotent: returns -1 if already enabled. */
   def enableRowTracking(spark: SparkSession, backfill: Boolean = false): Long = {
-    if (logTail.rowIdState().isDefined) return -1L
+    if (snapshot().tracked) return -1L
     if (backfill) {
       // re-points the whole live set, so no rebase: a rival append's
       // file must get a block too, which only a recompute gives it
-      val v = occTransact("enableRowTracking", 20, rebase = false) { _ =>
-        val all = visibleCommits(None)
-        val commits = all.filter(_.adds.nonEmpty)
-        val ts = tombstones(all)
+      val v = occTransact("enableRowTracking", 20, rebase = false) { s =>
+        val commits = s.live
+        val ts = s.ts
         // live adds, key-qualified like a RESTORE lift (same files, new
         // add actions — the log's newest word on each file wins the fold)
         val lifted = commits.flatMap { c =>
@@ -1959,7 +2030,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           }
         }
         // a rival enabled tracking mid-race, or nothing to backfill
-        if (logTail.rowIdState().isDefined || lifted.isEmpty) None
+        if (s.tracked || lifted.isEmpty) None
         else {
           // contiguous id blocks in deterministic key order; physical row
           // counts from the log (DV'd positions still consume ids —
@@ -1977,29 +2048,29 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           }
           val keys = blocks.keySet
           metaClaimHook()
-          Some((v: Long) => Entry(v, snapshot = true, adds = adds,
-            op = "ENABLE ROW TRACKING", schemaStr = Some(metaSchemaJson()),
+          Some((t: Snapshot) => Entry(t.next, snapshot = true, adds = adds,
+            op = "ENABLE ROW TRACKING", schemaStr = Some(metaSchemaJson(t)),
             rowIdWatermark = Some(wm),
             restoreDirs = commits.flatMap(_.dataDirs).distinct.filter(_.nonEmpty),
             removes = ts.removed.toSeq.sorted, dvs = ts.dv.filter(kv => keys(kv._1))))
         }
       }
-      if (v >= 0 || logTail.rowIdState().isDefined) return v
+      if (v >= 0 || snapshot().tracked) return v
     }
-    metaCommit("ENABLE ROW TRACKING") { v =>
-      // checked per attempt, after the version read: a claim win at `v`
-      // proves no rival data landed since (dense claims)
-      require(liveData(spark).isEmpty,
+    metaCommit("ENABLE ROW TRACKING") { s =>
+      // checked per attempt on the attempt's snapshot: a claim win at
+      // `s.next` proves no rival data landed since (dense claims)
+      require(liveData(spark, s).isEmpty,
         "enableRowTracking: enable before data lands, or pass " +
           "backfill = true to assign ids to pre-existing files " +
           "(metadata-only, no rewrite)")
-      Entry(v, rowIdWatermark = Some(0L))
+      Entry(s.next, rowIdWatermark = Some(0L))
     }
   }
 
   /** The row-id high watermark (next id to allocate), or None while row
     * tracking is off. */
-  def rowIdWatermark(): Option[Long] = logTail.rowIdState()
+  def rowIdWatermark(): Option[Long] = snapshot().aux.rowIdWatermark
 
   /** (file key, baseRowId, default row-commit-version) for every add of
     * the given commits. Fails loudly on a file that predates row
@@ -2042,9 +2113,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * vectors and removes are subtracted as in [[read]]. */
   def readWithRowIds(spark: SparkSession,
       versionAsOf: Option[Long] = None): DataFrame = {
-    require(logTail.rowIdState().isDefined,
+    val live = snapshot()
+    require(live.tracked,
       "readWithRowIds: row tracking is not enabled on this table")
-    val withIds = scanWithRowMeta(spark, versionAsOf)
+    val withIds = scanWithRowMeta(spark, live, versionAsOf.map(asOf(live, _)))
     if (withIds.columns.isEmpty) return withIds
     import org.apache.spark.sql.functions.col
     withIds
@@ -2059,18 +2131,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * resolver behind [[readWithRowIds]]. `batch` is retained; FileCol/
     * RidxCol helpers are consumed here. Empty-schema frame when no data
     * is visible. */
-  private def scanWithRowMeta(spark: SparkSession,
-      versionAsOf: Option[Long] = None): DataFrame = {
-    val all = visibleCommits(versionAsOf)
-    val commits = all.filter(_.adds.nonEmpty)
+  private def scanWithRowMeta(spark: SparkSession, live: Snapshot,
+      at: Option[Snapshot]): DataFrame = {
+    val s = at.getOrElse(live)
+    val commits = s.live
     if (commits.isEmpty) return spark.emptyDataFrame
-    val ts = tombstones(all)
+    val ts = s.ts
     // mat columns are REQUIRED here, so only the live flatReader (which
     // appends them to the explicit schema) qualifies; as-of stays on
     // the inference read
-    val scanned = scanWithPos(spark, commits, ts,
-      explicit = if (versionAsOf.isEmpty) physicalReadSchema()
-        .map(_ => flatReader(spark)) else None)
+    val scanned = scanWithPos(spark, live, commits, ts,
+      explicit = if (at.isEmpty) physicalReadSchema(live)
+        .map(_ => flatReader(spark, live)) else None)
     if (scanned.columns.isEmpty) return scanned
     withResolvedMat(applyTombstones(scanned, ts), commits)
       .drop(FileCol, RidxCol)
@@ -2080,10 +2152,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * when row tracking is on — what a copy-on-write rewrite must write
     * back so surviving rows keep their ids. Identity to [[liveData]]
     * when tracking is off. */
-  private def liveDataMat(spark: SparkSession): DataFrame =
-    if (logTail.rowIdState().isEmpty) liveData(spark)
+  private def liveDataMat(spark: SparkSession, s: Snapshot): DataFrame =
+    if (!s.tracked) liveData(spark, s)
     else {
-      val df = scanWithRowMeta(spark, None)
+      val df = scanWithRowMeta(spark, s, None)
       if (df.columns.isEmpty) df else df.drop("batch")
     }
 
@@ -2118,11 +2190,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       toVersion: Long = Long.MaxValue,
       pruneBy: Seq[(String, Double, Double)] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.lit
+    val s = snapshot()
     // CDC is a PER-VERSION feed — checkpoints cannot serve it. After
     // cleanupLog, ranges reaching below the oldest surviving entry must
     // fail loudly: silently starting the feed later would hand an
     // incremental consumer a gap it cannot detect.
-    val tb = truncatedBelow()
+    val tb = s.truncatedBelow
     if (tb > 0 && fromVersion < tb - 1)
       sys.error(s"readChanges: fromVersion=$fromVersion predates retained " +
         s"history (entries below $tb were reclaimed by cleanupLog); " +
@@ -2131,7 +2204,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // the range filter runs on the version list and only in-range
     // entries are ever parsed — a tailing consumer's per-batch cost is
     // the batch's own commits, not the table's lifetime.
-    val commits = committedVersions()
+    val commits = s.listing.versions
       .filter(v => v > fromVersion && v <= toVersion).map(parseCommit)
     // physical-only snapshots are CDC-transparent: COMPACT rewrites
     // prior state, a row-tracking BACKFILL re-points the same files
@@ -2147,7 +2220,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // file-level pruning predicate over recorded stats (physical
     // names, same translation as readSkippingAll; conservative on a
     // missing stat)
-    val phys = pruneBy.map { case (c0, lo, hi) => (physicalOf(c0), lo, hi) }
+    val phys = pruneBy.map { case (c0, lo, hi) => (s.physicalOf(c0), lo, hi) }
     def keep(a: AddFile): Boolean =
       phys.forall { case (c0, lo, hi) => mayIntersect(a.stats.get(c0), lo, hi) }
     // the pruned read of one change/data dir: explicit surviving files
@@ -2190,7 +2263,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       }
     }
     if (frames.isEmpty) spark.emptyDataFrame
-    else toLogical(
+    else toLogical(s,
       frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true)))
   }
 
@@ -2303,7 +2376,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * state. */
   def read(spark: SparkSession, timestampAsOf: java.sql.Timestamp): DataFrame = {
     val cut = timestampAsOf.getTime
-    val vs = allKnownCommits()
+    val vs = allKnownCommits(snapshot())
       .filter(c => commitTime(c).exists(_ <= cut)).map(_.version)
     if (vs.isEmpty)
       sys.error(s"timestampAsOf=$timestampAsOf predates the oldest " +
@@ -2323,17 +2396,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * metadata path is the fast one. Model-checked after every verb by
     * the protocol fuzz. */
   def rowCount(spark: SparkSession, versionAsOf: Option[Long] = None): Long = {
-    val all = visibleCommits(versionAsOf)
-    val commits = all.filter(_.adds.nonEmpty)
-    if (commits.isEmpty) return 0L
-    val ts = tombstones(all)
-    val addRows = commits.flatMap(c => c.adds.map(a => addKey(c, a) -> a.rows))
+    val cur = snapshot()
+    val at = versionAsOf.map(asOf(cur, _))
+    val s = at.getOrElse(cur)
+    if (s.live.isEmpty) return 0L
+    val ts = s.ts
+    val addRows = s.live.flatMap(c => c.adds.map(a => addKey(c, a) -> a.rows))
     val live = addRows.filterNot { case (k, _) => ts.removed.contains(k) }
     if (live.forall(_._2.isDefined))
       live.map(_._2.get).sum -
         live.map { case (k, _) => ts.dv.get(k).map(_.length.toLong).getOrElse(0L) }.sum
     else
-      read(spark, versionAsOf).count() // legacy adds without counts
+      readAt(spark, cur, at).count() // legacy adds without counts
   }
 
   /** Metadata-only column MIN/MAX (the companion to [[rowCount]]): the
@@ -2348,10 +2422,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * spot). Model-checked opportunistically by the protocol fuzz. */
   def columnStats(column: String, versionAsOf: Option[Long] = None)
       : Option[(String, String)] = {
-    val all = visibleCommits(versionAsOf)
-    val commits = all.filter(_.adds.nonEmpty)
-    if (commits.isEmpty || !tombstones(all).isEmpty) return None
-    val ph = physicalOf(column)
+    val live = snapshot()
+    val s = versionAsOf.fold(live)(asOf(live, _))
+    val commits = s.live
+    if (commits.isEmpty || !s.ts.isEmpty) return None
+    val ph = live.physicalOf(column)
     val perFile = commits.flatMap(_.adds).map(_.stats.get(ph))
     if (perFile.exists(s => s.isEmpty || s.get._1.isEmpty || s.get._2.isEmpty))
       return None
@@ -2369,7 +2444,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // that do exist the latest type is valid at EVERY version: renames
     // are metadata-only and a same-name type flip always aborts
     // (enforceSchema), so types are immutable over a column's life.
-    val fieldType = latestSchema()
+    val fieldType = live.schema
       .flatMap(_.fields.find(_.name == column).map(_.dataType))
     if (fieldType.isEmpty) return None
     val numeric =
@@ -2392,7 +2467,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * commit surviving solely through a checkpoint. */
   def history(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    allKnownCommits().map { c =>
+    allKnownCommits(snapshot()).map { c =>
       val ts = commitTime(c).map(new java.sql.Timestamp(_))
       // operation metric (Delta's numOutputRows): from the recorded
       // per-add counts; null for pre-rows-era commits
@@ -2429,8 +2504,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * the 1-predicate case of this. */
   def readSkippingAll(spark: SparkSession,
       preds: Seq[(String, Double, Double)]): DataFrame = {
-    val phys = preds.map { case (c, lo, hi) => (physicalOf(c), lo, hi) }
-    readAddFiles(spark) { a =>
+    val s = snapshot()
+    val phys = preds.map { case (c, lo, hi) => (s.physicalOf(c), lo, hi) }
+    readAddFiles(spark, s) { a =>
       phys.forall { case (col, lo, hi) => mayIntersect(a.stats.get(col), lo, hi) }
     }
   }
@@ -2458,8 +2534,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val hashes = spark.range(1).select(
       (0 until 3).map(j => xxhash64(lit(j), lit(value)).as(s"h$j")): _*)
       .head().toSeq.map(_.asInstanceOf[Long])
-    val ph = physicalOf(column)
-    readAddFiles(spark) { a =>
+    val s = snapshot()
+    val ph = s.physicalOf(column)
+    readAddFiles(spark, s) { a =>
       a.bloom.get(ph).forall { words =>
         val bits = words.length * 64L
         hashes.forall { h =>
@@ -2472,8 +2549,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   private def readSkippingWith(spark: SparkSession, column: String)
       (keep: Option[(Option[String], Option[String])] => Boolean): DataFrame = {
-    val ph = physicalOf(column)
-    readAddFiles(spark)(a => keep(a.stats.get(ph)))
+    val s = snapshot()
+    val ph = s.physicalOf(column)
+    readAddFiles(spark, s)(a => keep(a.stats.get(ph)))
   }
 
   /** Shared pruned-read core: the visible add files passing `keep`
@@ -2482,11 +2560,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * tombstones — removed files never make the scan list; files with a
     * deletion vector get the position-level subtraction. No `batch`
     * column, and no helper columns unless a kept file has a vector. */
-  private def readAddFiles(spark: SparkSession)
+  private def readAddFiles(spark: SparkSession, s: Snapshot)
       (keep: AddFile => Boolean): DataFrame = {
-    val all = visibleCommits(None)
-    val ts = tombstones(all)
-    val keys = all.flatMap { c =>
+    val ts = s.ts
+    val keys = s.entries.flatMap { c =>
       c.adds.collect { case a if keep(a) => addKey(c, a) }
     }.filterNot(ts.removed)
     if (keys.isEmpty) spark.emptyDataFrame
@@ -2494,17 +2571,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // explicit physical schema so evolution across the commits cannot
       // silently drop columns
       val dv = keys.exists(ts.dv.contains)
-      val base = scanFiles(flatReader(spark), keys, Map.empty, batch = false,
+      val base = scanFiles(flatReader(spark, s), keys, Map.empty, batch = false,
         pos = dv)
-      dropMat(toLogical(
+      dropMat(toLogical(s,
         if (!dv) base
         else applyTombstones(base, Tombstones(Set.empty, ts.dv))
           .drop(FileCol, RidxCol)))
     }
   }
-
-  private def nextVersion(): Long =
-    committedVersions().lastOption.map(_ + 1).getOrElse(0L)
 
   /** Test hook: the data dirs a committed version references (relative to
     * `data/`) — lets the vacuum race specs assert referenced dirs exist
@@ -2512,9 +2586,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private[graft] def commitDataDirs(v: Long): Seq[String] =
     parseCommit(v).dataDirs
 
-  /** Live state without the `batch` version-cursor column. */
-  private def liveData(spark: SparkSession): DataFrame =
-    read(spark).drop("batch")
+  /** `s`'s state without the `batch` version-cursor column. */
+  private def liveData(spark: SparkSession, s: Snapshot): DataFrame =
+    readAt(spark, s, None).drop("batch")
 
   /** MERGE (upsert): rows of `updates` replace committed rows sharing
     * the same key; non-matching update rows insert. Runs through the
@@ -2556,8 +2630,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       notMatchedBySourceDelete: Option[org.apache.spark.sql.Column] = None,
       streamTxn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    enforceSchema(updates, mergeSchema = false, "merge")
-    val updatesC = conformToTable(updates)
+    val s0 = snapshot()
+    enforceSchema(s0, updates.schema, mergeSchema = false, "merge")
+    val updatesC = conformToTable(s0, updates)
     transactSnapshotChanges(spark, "MERGE", streamTxn = streamTxn) { current =>
       if (current.isEmpty) {
         (updatesC, Some(updatesC.withColumn("_change_type", lit("insert"))))
@@ -2609,65 +2684,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     }
   }
 
-  /** Incremental replay of the log's latest-wins METADATA actions —
-    * `streamTxn` idempotency cursors and CHECK-constraint sets. These
-    * must see FULL history (their carriers may predate the last
-    * snapshot, so checkpoint prefixes can't serve them), but full
-    * replay per lookup made every staged write and every streaming
-    * MERGE batch O(commits) — O(n²) parses over a stream's lifetime.
-    * Instead each lookup tails only the entries committed since the
-    * last lookup and folds them onto the cached state, which is EXACT
-    * (a latest-wins/max fold over a prefix plus a fold of the suffix
-    * equals the full fold): one O(history) seed per instance, O(new
-    * entries) after, no cross-instance staleness — the tail always
-    * runs against the live log. */
-  private object logTail {
-    private var seen = Long.MinValue // MinValue = not yet seeded
-    private var state = CkptAux()
-
-    def refreshed[A](f: CkptAux => A): A = synchronized {
-      if (seen == Long.MinValue) {
-        // seed from the newest checkpoint's aux header: after
-        // cleanupLog the carrier entries below it no longer exist, and
-        // even before cleanup this makes instance start-up O(interval)
-        val seed = checkpointVersions().reverseIterator
-          .map(cv => cv -> loadCheckpoint(cv))
-          .collectFirst { case (cv, Some((aux, _))) => cv -> aux }
-        seen = seed.fold(-1L)(_._1)
-        state = seed.fold(CkptAux())(_._2)
-      }
-      committedVersions().filter(_ > seen).foreach { v =>
-        state = state.fold(Seq(parseCommit(v)))
-        seen = v
-      }
-      f(state)
-    }
-
-    def activeConstraints(): Map[String, String] = refreshed(_.constraints)
-    def activeGenerated(): Map[String, String] = refreshed(_.generated)
-    def activeDomains(): Map[String, Map[String, String]] = refreshed(_.domains)
-    /** The generated map TOGETHER with the next version at the moment
-      * of the read — one atomic log view, so an identity writer can
-      * claim exactly that version and know no commit it has not seen
-      * could have advanced the watermark (claims are dense: any rival
-      * commit after the read occupies the returned version and makes
-      * the claim fail). */
-    def generatedState(): (Map[String, String], Long) =
-      refreshed(st => (st.generated, seen + 1))
-    def activeMapping(): (Map[String, String], Set[String]) =
-      refreshed(st => (st.columnMapping, st.droppedCols.toSet))
-    /** Row-id high watermark, or None while row tracking is off — a
-      * live-log-tail read, so a per-claim-attempt caller always sees
-      * every allocation a prior commit made (dense-claim freshness). */
-    def rowIdState(): Option[Long] = refreshed(_.rowIdWatermark)
-    def lastBatch(appId: String): Option[Long] = refreshed(_.cursors.get(appId))
-  }
-
   /** Highest micro-batch id a stream writer has committed — replayed
     * from the `streamTxn` actions in the log (the Delta `txn`
-    * idempotent-writer cursor; incremental replay via [[logTail]]). */
+    * idempotent-writer cursor; the snapshot's metadata fold). */
   def lastStreamBatch(streamAppId: String): Option[Long] =
-    logTail.lastBatch(streamAppId)
+    snapshot().aux.cursors.get(streamAppId)
 
   /** Idempotent STREAMING MERGE — the foreachBatch CDC-consumer verb
     * ("stream DeltaLake tables from Kafka" proper: upserts, not just
@@ -2726,7 +2747,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def deleteDV(spark: SparkSession, predicate: org.apache.spark.sql.Column,
       dvMaxRows: Int = 100000, maxRetries: Int = 20): Long = {
     import org.apache.spark.sql.functions.lit
-    if (visibleCommits(None).forall(_.adds.isEmpty)) return -1L
+    if (snapshot().live.isEmpty) return -1L
     morCommit(spark, "DELETE_MOR", dvMaxRows, maxRetries, None) { statePos =>
       val doomed = statePos.filter(predicate)
       (doomed, None,
@@ -2749,9 +2770,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       dvMaxRows: Int = 100000, maxRetries: Int = 20,
       streamTxn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    enforceSchema(updates0, mergeSchema = false, "mergeDV")
-    val updates = applyGenerated(conformToTable(updates0))
-    if (visibleCommits(None).forall(_.adds.isEmpty))
+    val s0 = snapshot()
+    enforceSchema(s0, updates0.schema, mergeSchema = false, "mergeDV")
+    val updates = applyGenerated(s0, conformToTable(s0, updates0))
+    if (s0.live.isEmpty)
       return merge(spark, updates, keys, streamTxn)
     // the source's per-key-column bounds prune the probe to files whose
     // stats ranges intersect (one tiny agg job on the micro-batch-sized
@@ -2850,12 +2872,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * unionByName type-coerces across a widening boundary that parquet's
     * mergeSchema refuses — fuzz seed 12), and rely on the tombstone
     * anti-join + row-group stats instead. */
-  private def probeScan(spark: SparkSession, commits: Seq[Entry],
-      ts: Tombstones, bounds: Map[String, (Double, Double)]): DataFrame = {
+  private def probeScan(spark: SparkSession, s: Snapshot,
+      bounds: Map[String, (Double, Double)]): DataFrame = {
+    val (commits, ts) = (s.live, s.ts)
     val stats = commits.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats))
       .toMap
-    toLogical(scanCommits(spark, commits,
-      physicalReadSchema().map(_ => flatReader(spark)), batch = false,
+    toLogical(s, scanCommits(spark, commits,
+      physicalReadSchema(s).map(_ => flatReader(spark, s)), batch = false,
       pos = true) { k =>
       !ts.removed.contains(k) && bounds.forall { case (col, (lo, hi)) =>
         mayIntersect(stats(k).get(col), lo, hi) }
@@ -2867,28 +2890,26 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       keyBounds: Map[String, (Double, Double)] = Map.empty)
       (f: DataFrame => (DataFrame, Option[DataFrame], DataFrame)): Long = {
     import org.apache.spark.sql.functions._
-    occTransact(op, maxRetries) { _ =>
-      val all = visibleCommits(None)
-      val commits = all.filter(_.adds.nonEmpty)
-      val ts0 = tombstones(all)
+    occTransact(op, maxRetries) { s =>
+      val commits = s.live
+      val ts0 = s.ts
       // stat-pruned probe (the Delta MERGE file-skipping argument: a key
       // present in a file is inside that file's [min,max], so files
       // pruned by the source's key bounds can contain NO matched rows —
       // skipping them changes nothing)
-      val probe = probeScan(spark, commits, ts0,
-        keyBounds.map { case (k, v) => physicalOf(k) -> v })
+      val probe = probeScan(spark, s,
+        keyBounds.map { case (k, v) => s.physicalOf(k) -> v })
       val statePos =
         if (probe.columns.isEmpty) {
           // every file pruned: nothing can match, but f still needs a
           // typed empty relation (merge then classifies all updates as
           // inserts)
-          val sch = latestSchema().getOrElse(
-            org.apache.spark.sql.types.StructType(Nil))
+          val sch = s.schema.getOrElse(StructType(Nil))
           val base = spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
             .withColumn(FileCol, lit(""))
             .withColumn(RidxCol, lit(0L))
-          if (logTail.rowIdState().isEmpty) base
+          if (!s.tracked) base
           else base.withColumn(MatIdCol, lit(null).cast("long"))
             .withColumn(MatRcvCol, lit(null).cast("long"))
         } else {
@@ -2896,7 +2917,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           // row tracking: hand f the matched-row scan with ids RESOLVED
           // so an update can carry its target row's id into the new
           // file (mergeDV's preservation join)
-          if (logTail.rowIdState().isEmpty) t
+          if (!s.tracked) t
           else withResolvedMat(t, commits)
         }
       val (doomed0, appended, changes) = f(statePos)
@@ -2934,7 +2955,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // state scan), minus their existing DV rows and this commit's
         // doomed rows
         val kept = if (rewriteKeys.isEmpty) None else Some {
-          val scan = toLogical(flatReader(spark)
+          val scan = toLogical(s, flatReader(spark, s)
             .parquet(rewriteKeys.map(k => dataDir.resolve(k).toString): _*)
             .withColumn(FileCol, relKeyCol)
             .withColumn(RidxCol, col("_metadata.row_index")))
@@ -2944,7 +2965,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
               Seq(FileCol, RidxCol), "left_anti")
           // row tracking: kept rows of a rewritten over-cap file change
           // (file, position) — pin their ids before the drop
-          (if (logTail.rowIdState().isEmpty) live
+          (if (!s.tracked) live
            else withResolvedMat(live, commits))
             .drop(FileCol, RidxCol)
         }
@@ -2957,11 +2978,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // over-cap rewrites and merge's inserted rows get fresh blooms so
         // point-probe pruning survives table maintenance
         val pub = newRows.fold(Unpublished) { nr =>
-          val (polCols, polBits) = bloomPolicy()
-          publish(nr, s"files/$uuid", Nil, polCols, polBits, check = true)
+          val (polCols, polBits) = bloomPolicy(s)
+          publish(s, nr, s"files/$uuid", Nil, polCols, polBits, check = true)
         }
         // the CDC feed is logical — strip helper/materialization columns
-        val ch = publish(dropMat(changes), s"changes/$uuid", Nil, Nil, 0,
+        val ch = publish(s, dropMat(changes), s"changes/$uuid", Nil, Nil, 0,
           check = false)
         // evolved union, same monotonicity argument as the snapshot
         // claim: the probe state's file-derived schema can lack columns
@@ -2974,12 +2995,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // rebased re-claim is safe because the rival's files did not
         // exist at this transaction's read, so they intersect neither
         // its probe scan nor its removes/DV keys
-        Some { (v: Long) =>
-          Entry(v, if (pub.adds.nonEmpty) pub.dir else "", adds = pub.adds,
-            op = op, schemaStr = Some(evolvedSchemaOf(morSchemaBase)._1),
+        Some { (t: Snapshot) =>
+          Entry(t.next, if (pub.adds.nonEmpty) pub.dir else "", adds = pub.adds,
+            op = op, schemaStr = Some(evolvedSchemaOf(t, morSchemaBase)._1),
             changeDir = Some(ch.dir), changeAdds = ch.adds, streamTxn = streamTxn,
             removes = removeKeys ++ rewriteKeys, dvs = dvNew,
-            matFiles = pub.adds.nonEmpty && logTail.rowIdState().isDefined)
+            matFiles = pub.adds.nonEmpty && t.tracked)
         }
       } finally doomed.unpersist(blocking = false)
     }
@@ -2998,8 +3019,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def replaceWhere(spark: SparkSession, predicate: org.apache.spark.sql.Column,
       replacement: DataFrame): Long = {
     import org.apache.spark.sql.functions._
-    enforceSchema(replacement, mergeSchema = false, "replaceWhere")
-    val replacementC = conformToTable(replacement)
+    val s0 = snapshot()
+    enforceSchema(s0, replacement.schema, mergeSchema = false, "replaceWhere")
+    val replacementC = conformToTable(s0, replacement)
     val guarded = replacementC.filter(
       when(predicate, lit(true)).otherwise(raise_error(concat(
         lit("replaceWhere: replacement row outside the predicate: "),
@@ -3027,7 +3049,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * expression. Latest-wins log replay — a commit CARRYING the
     * constraints field replaces the active set; commits without it
     * leave the set untouched. */
-  def activeConstraints(): Map[String, String] = logTail.activeConstraints()
+  def activeConstraints(): Map[String, String] = snapshot().aux.constraints
 
   /** ADD CONSTRAINT: validates EXISTING data first (a constraint the
     * committed table already violates is rejected — Delta's ADD
@@ -3036,7 +3058,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * subsequent write enforces it per row at write time (stage()). */
   def setConstraint(spark: SparkSession, name: String, exprSql: String): Long = {
     import org.apache.spark.sql.functions._
-    val live = liveData(spark)
+    val live = liveData(spark, snapshot())
     if (!live.isEmpty) {
       val bad = live.filter(!expr(exprSql)).count()
       require(bad == 0,
@@ -3057,10 +3079,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** All live metadata domains: name → configuration. Latest-wins PER
     * DOMAIN (a commit carries only the domains it touches — the Delta
     * domainMetadata delta shape, unlike constraints' whole-set
-    * replacement), folded incrementally by [[logTail]] and surviving
-    * cleanupLog through the checkpoint aux header. */
+    * replacement), folded incrementally into the [[Snapshot]] and
+    * surviving cleanupLog through the checkpoint aux header. */
   def activeDomains(): Map[String, Map[String, String]] =
-    logTail.activeDomains()
+    snapshot().aux.domains
 
   /** The configuration of one domain, if set. */
   def domainMetadata(domain: String): Option[Map[String, String]] =
@@ -3101,15 +3123,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def setClusterBy(cols: Seq[String]): Long = {
     require(cols.nonEmpty, "setClusterBy: empty column list — use " +
       "removeDomainMetadata(\"graft.clustering\") to drop the layout")
-    val sch = latestSchema()
-    cols.foreach(c => require(sch.forall(_.fieldNames.contains(c)),
+    val s = snapshot()
+    cols.foreach(c => require(s.schema.forall(_.fieldNames.contains(c)),
       s"setClusterBy: column '$c' is not in the table schema"))
-    domainCommit(clusterDomain(cols).get)
+    domainCommit(clusterDomain(s, cols).get)
   }
 
   private def domainCommit(
       delta: Map[String, Option[Map[String, String]]]): Long =
-    metaCommit("SET DOMAIN METADATA")(Entry(_, domains = Some(delta)))
+    metaCommit("SET DOMAIN METADATA")(s => Entry(s.next, domains = Some(delta)))
 
   // ---------------------------------------------------------------------
   // generated columns (Delta GENERATED ALWAYS AS analog)
@@ -3118,7 +3140,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** The table's active generated columns: name → SQL expression over
     * the other columns. Same latest-wins metaData replay as
     * constraints. */
-  def activeGenerated(): Map[String, String] = logTail.activeGenerated()
+  def activeGenerated(): Map[String, String] = snapshot().aux.generated
 
   /** Declare `name` GENERATED ALWAYS AS (`exprSql`): every subsequent
     * write computes the column when the frame omits it, and VALIDATES
@@ -3134,7 +3156,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def setGeneratedColumn(spark: SparkSession, name: String,
       exprSql: String): Long = {
     import org.apache.spark.sql.functions._
-    val live = liveData(spark)
+    val live = liveData(spark, snapshot())
     if (!live.isEmpty) {
       require(live.columns.contains(name),
         s"setGeneratedColumn '$name': committed rows lack the column; " +
@@ -3154,16 +3176,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   // column mapping (Delta RENAME/DROP COLUMN without rewrite)
   // ---------------------------------------------------------------------
 
-  /** Active mapping: (logical → PHYSICAL name, sparse — only renamed
-    * columns) plus the physically-dropped column names. Physical names
-    * are frozen at first write (Delta freezes a UUID; we freeze the
-    * original name): a rename is a metadata-only commit re-labelling
-    * the logical view, data files are never touched. */
-  private def colMap(): (Map[String, String], Set[String]) =
-    logTail.activeMapping()
-
-  /** The on-disk (parquet/stats/bloom) name serving logical column `c`. */
-  private def physicalOf(c: String): String = colMap()._1.getOrElse(c, c)
+  // Column mapping lives in the snapshot's metadata fold
+  // ([[Snapshot.mapping]]: logical → PHYSICAL name, sparse — only renamed
+  // columns — plus the physically-dropped names). Physical names are
+  // frozen at first write (Delta freezes a UUID; we freeze the original
+  // name): a rename is a metadata-only commit re-labelling the logical
+  // view, data files are never touched.
 
   /** The explicit schema for FLAT physical-file scans: the table's
     * logical schema under physical names. An explicit-schema parquet
@@ -3173,22 +3191,22 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * the scalable path (mergeSchema lists and merges every footer).
     * Only for flat scans: an explicit schema would null out hive
     * partition columns, which live in dir names, not footers. */
-  private def physicalReadSchema(): Option[org.apache.spark.sql.types.StructType] =
-    latestSchema().filter(_.fields.nonEmpty).map(s =>
-      org.apache.spark.sql.types.StructType(
-        s.fields.map(f => f.copy(name = physicalOf(f.name)))))
+  private def physicalReadSchema(s: Snapshot): Option[StructType] =
+    s.schema.filter(_.fields.nonEmpty).map(sch =>
+      StructType(sch.fields.map(f => f.copy(name = s.physicalOf(f.name)))))
 
   /** A parquet reader for flat committed files: explicit physical
     * schema when the table has one, mergeSchema fallback otherwise. */
-  private def flatReader(spark: SparkSession): org.apache.spark.sql.DataFrameReader =
-    physicalReadSchema() match {
+  private def flatReader(spark: SparkSession, snap: Snapshot)
+      : org.apache.spark.sql.DataFrameReader =
+    physicalReadSchema(snap) match {
       case Some(s) =>
         // row tracking: the explicit physical schema must ALSO list the
         // materialization columns or the scan silently reads them as
         // absent — files without them fill null (virtual ids apply),
         // files with them surface the pinned ids
         val s2 =
-          if (logTail.rowIdState().isEmpty) s
+          if (!snap.tracked) s
           else org.apache.spark.sql.types.StructType(s.fields ++ Seq(
             org.apache.spark.sql.types.StructField(MatIdCol,
               org.apache.spark.sql.types.LongType),
@@ -3203,8 +3221,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * logical). One simultaneous select, not a rename fold: under chained
     * renames a physical target can equal ANOTHER column's logical name
     * (a→b after b→c), and sequential renames would collide mid-fold. */
-  private def toPhysical(df: DataFrame): DataFrame = {
-    val m = colMap()._1
+  private def toPhysical(s: Snapshot, df: DataFrame): DataFrame = {
+    val m = s.mapping
     if (m.isEmpty || !df.columns.exists(m.contains)) df
     else {
       import org.apache.spark.sql.functions.col
@@ -3216,8 +3234,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * renames (simultaneous, same collision argument as [[toPhysical]]).
     * Helper columns (batch, file/pos) pass through. No-op (and no cost)
     * while the table has no mapping. */
-  private def toLogical(df: DataFrame): DataFrame = {
-    val (m, dropped) = colMap()
+  private def toLogical(s: Snapshot, df: DataFrame): DataFrame = {
+    val (m, dropped) = (s.mapping, s.dropped)
     if (m.isEmpty && dropped.isEmpty) df
     else {
       import org.apache.spark.sql.functions.col
@@ -3231,8 +3249,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** Guard for rename/drop: refuse while a CHECK constraint or a
     * generated-column expression references the column (Delta blocks
     * the same way — the expr would silently stop resolving). */
-  private def requireUnreferenced(name: String, verb: String): Unit = {
-    val refs = (activeConstraints() ++ activeGenerated()).filter {
+  private def requireUnreferenced(s: Snapshot, name: String, verb: String): Unit = {
+    val refs = (s.aux.constraints ++ s.aux.generated).filter {
       case (n, e) => n == name ||
         ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
           .findFirstIn(e).isDefined
@@ -3250,14 +3268,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * commit shows the old name, after it the new — exactly a metadata
     * transition. */
   def renameColumn(oldName: String, newName: String): Long = {
-    val cur = latestSchema().getOrElse(sys.error(
+    val s = snapshot()
+    val cur = s.schema.getOrElse(sys.error(
       s"renameColumn: no committed schema to rename in"))
     require(cur.fieldNames.contains(oldName),
       s"renameColumn: no column '$oldName' in ${cur.fieldNames.mkString(",")}")
     require(!cur.fieldNames.contains(newName),
       s"renameColumn: '$newName' already exists")
-    requireUnreferenced(oldName, "renameColumn")
-    val (m, dropped) = colMap()
+    requireUnreferenced(s, oldName, "renameColumn")
+    val (m, dropped) = (s.mapping, s.dropped)
     val ph = m.getOrElse(oldName, oldName)
     require(!dropped.contains(ph), s"renameColumn: '$oldName' was dropped")
     // logical and physical namespaces must stay disjoint-or-identical:
@@ -3278,12 +3297,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * (enforced in [[enforceSchema]]: resurrecting it would make old
     * files' bytes reappear under the new column). */
   def dropColumn(name: String): Long = {
-    val cur = latestSchema().getOrElse(sys.error(
+    val s = snapshot()
+    val cur = s.schema.getOrElse(sys.error(
       s"dropColumn: no committed schema to drop from"))
     require(cur.fieldNames.contains(name),
       s"dropColumn: no column '$name' in ${cur.fieldNames.mkString(",")}")
-    requireUnreferenced(name, "dropColumn")
-    val (m, dropped) = colMap()
+    requireUnreferenced(s, name, "dropColumn")
+    val (m, dropped) = (s.mapping, s.dropped)
     val ph = m.getOrElse(name, name)
     val schema = org.apache.spark.sql.types.StructType(
       cur.fields.filterNot(_.name == name))
@@ -3300,15 +3320,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * rival's evolution, and silently re-deriving could rename a
     * column the rival just dropped. Abort instead (Delta's
     * MetadataChangedException posture); the caller re-runs. The check
-    * runs per attempt after the version read ([[metaCommit]]). */
+    * runs per attempt on the attempt's snapshot ([[metaCommit]]). */
   private def mappingCommit(schemaJson: String, m: Map[String, String],
       dropped: Seq[String], op: String, derivedFrom: String): Long =
-    metaCommit(op) { v =>
-      if (latestSchema().map(_.json) != Some(derivedFrom))
+    metaCommit(op) { s =>
+      if (s.schema.map(_.json) != Some(derivedFrom))
         sys.error(s"$op: a concurrent commit changed the table schema " +
           "while this metadata commit raced — re-derive and retry " +
           "(metadata conflict)")
-      Entry(v, schemaStr = Some(schemaJson), columnMapping = Some(m),
+      Entry(s.next, schemaStr = Some(schemaJson), columnMapping = Some(m),
         droppedCols = Some(dropped))
     }
 
@@ -3319,12 +3339,12 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * counts as "not provided" and is computed — that is both Delta's
     * generated-column behavior and what a whole-row upsert needs after
     * its narrower frame was null-padded by the union. */
-  private def applyGenerated(df: DataFrame): DataFrame = {
+  private def applyGenerated(s: Snapshot, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     // identity rules are NOT expressions: assignment happens in the
     // append paths (assignIdentity), and snapshot transforms carry the
     // already-assigned values through untouched
-    val gen = logTail.activeGenerated().filterNot(_._2.startsWith("IDENTITY("))
+    val gen = s.aux.generated.filterNot(_._2.startsWith("IDENTITY("))
     if (gen.isEmpty) df
     else gen.toSeq.sortBy(_._1).foldLeft(df) { case (d, (n, e)) =>
       if (!d.columns.contains(n)) d.withColumn(n, expr(e))
@@ -3351,8 +3371,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   /** Active identity rules as (column, start, step, watermark),
     * name-sorted for deterministic multi-column assignment order. */
-  private def identityRules(): Seq[(String, Long, Long, Long, Boolean)] =
-    logTail.activeGenerated().toSeq.sortBy(_._1).collect {
+  private def identityRules(s: Snapshot): Seq[(String, Long, Long, Long, Boolean)] =
+    s.aux.generated.toSeq.sortBy(_._1).collect {
       case (n, IdentityRule(s, k, w, g)) =>
         (n, s.toLong, k.toLong, w.toLong, g != null)
     }
@@ -3468,18 +3488,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def setIdentityColumn(spark: SparkSession, name: String,
       start: Long = 1L, step: Long = 1L, allowGaps: Boolean = false): Long = {
     require(step != 0, "setIdentityColumn: step must be non-zero")
-    require(liveData(spark).isEmpty,
+    require(liveData(spark, snapshot()).isEmpty,
       s"setIdentityColumn '$name': declare identity columns before data lands")
     generatedCommit(_ + (name ->
       s"IDENTITY($start,$step,${start - step}${if (allowGaps) ",gaps" else ""})"))
   }
 
   private def generatedCommit(f: Map[String, String] => Map[String, String]): Long =
-    metaCommit("SET GENERATED")(Entry(_, generated = Some(f(activeGenerated()))))
+    metaCommit("SET GENERATED")(s => Entry(s.next, generated = Some(f(s.aux.generated))))
 
-  /** The CURRENT committed schema for a metadata-only entry. */
-  private def metaSchemaJson(): String =
-    latestSchema().map(_.json).getOrElse(Entry.EmptySchema)
+  /** `s`'s committed schema for a metadata-only entry. */
+  private def metaSchemaJson(s: Snapshot): String =
+    s.schema.map(_.json).getOrElse(Entry.EmptySchema)
 
   /** Test seam (no-op in production): fires before each metadata-only
     * claim attempt, so a spec can race a schema evolution into the
@@ -3488,31 +3508,31 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   /** THE claim loop of every metadata-only commit (constraints,
     * generated columns, domains, column mapping, the plain row-tracking
-    * enable): per attempt, read the next version, fire [[metaClaimHook]],
-    * build the entry with `entryAt(version)` and claim it as `op`; a lost
-    * claim retries at the next version. The entry has no data dir and
-    * no adds, and `snapshot = false`, so it neither hides prior data
-    * (visibleCommits) nor trips the CDC feed's loud-failure path. It
+    * enable): per attempt, take a snapshot, fire [[metaClaimHook]],
+    * build the entry at its `next` version with `entryAt(snapshot)` and
+    * claim it as `op`; a lost claim retries on a fresh snapshot. The
+    * entry has no data dir and no adds, and `snapshot = false`, so it
+    * neither hides prior data nor trips the CDC feed's loud-failure path. It
     * records the committed schema as of the attempt unless it sets its
     * own. Schema AND payload are re-derived on every attempt: a commit
     * that lost a race to a schema-evolving rival and then recorded the
     * schema it read at entry would silently REVERT the rival's evolution
-    * in latestSchema. A check `entryAt` makes is race-free: version
-    * claims are dense, so winning `v` proves no rival committed between
-    * the check and the claim. */
-  private def metaCommit(op: String)(entryAt: Long => Entry): Long = {
-    var v = -1L
-    while ({
-      v = if (v < 0) nextVersion() else math.max(v + 1, nextVersion())
+    * in latestSchema. A check `entryAt` makes on its snapshot is
+    * race-free: version claims are dense, so winning `next` proves no
+    * rival committed after the snapshot. */
+  private def metaCommit(op: String)(entryAt: Snapshot => Entry): Long = {
+    while (true) {
+      val s = snapshot()
       metaClaimHook()
-      val e = entryAt(v)
-      !claim(e.copy(op = op, schemaStr = e.schemaStr.orElse(Some(metaSchemaJson()))))
-    }) ()
-    v
+      val e = entryAt(s)
+      if (claim(s, e.copy(op = op, schemaStr = e.schemaStr.orElse(Some(metaSchemaJson(s))))))
+        return e.version
+    }
+    -1L // unreachable
   }
 
   private def constraintCommit(f: Map[String, String] => Map[String, String]): Long =
-    metaCommit("SET CONSTRAINT")(Entry(_, constraints = Some(f(activeConstraints()))))
+    metaCommit("SET CONSTRAINT")(s => Entry(s.next, constraints = Some(f(s.aux.constraints))))
 
   /** RESTORE TABLE TO VERSION `toVersion` (the Delta RESTORE analog):
     * a METADATA-ONLY snapshot commit that re-points the live file set
@@ -3566,8 +3586,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val tgt = storeFactory(Paths.get(targetDir, "_graft_log"))
     require(tgt.list().isEmpty,
       s"cloneTo: $targetDir already has a commit log")
-    val vs = committedVersions()
-    require(vs.nonEmpty || checkpointVersions().nonEmpty,
+    val listing = LogListing(store.list())
+    val vs = listing.versions
+    require(vs.nonEmpty || listing.checkpoints.nonEmpty,
       "cloneTo: source table has no commits")
     val srcRoot = dataDir.toAbsolutePath.normalize.toString.replace("\\", "/")
     def abs(rel: String): String =
@@ -3646,7 +3667,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       }.getOrElse(Nil)
       val proto = ("protocol", JObject(List(("readerFeatures",
         JArray((feats0 :+ "absolutePaths").distinct.map(JString(_)))))))
-      // keep "ict" as the FIRST field — ictOf head-parses it in O(1)
+      // keep "ict" as the FIRST field, where Entry.render puts it
       val fields2 = out.filterNot(_._1 == "protocol") match {
         case (h @ ("ict", _)) :: rest => h :: proto :: rest
         case rest => proto :: rest
@@ -3665,7 +3686,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // verbatim (sidecar names, counts and last-versions are unchanged
     // by a 1:1 entry rewrite) and each sidecar's entries are rewritten
     // into a clone-local sidecar of the same name.
-    checkpointVersions().foreach { cv =>
+    listing.checkpoints.foreach { cv =>
       val lines = store.readLines(ckptNameOf(cv)).filter(_.nonEmpty)
       if (lines.nonEmpty) {
         val parts = try CkptAux.parse(lines.head).fold(Seq.empty[SidecarRef])(_._3)
@@ -3695,15 +3716,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         }
       }
     }
-    if (store.exists(TruncMarkerName))
+    if (listing.truncated)
       tgt.put(TruncMarkerName, store.read(TruncMarkerName))
     // version checksums summarize the version-pinned log FOLD (counts,
     // not paths), which the clone's rewritten entries preserve exactly —
     // copy them verbatim so the clone's integrity checks keep working
-    crcVersions().foreach { v =>
+    listing.crcs.foreach { v =>
       tgt.put(crcName(v), store.read(crcName(v)))
     }
-    (vs ++ checkpointVersions()).max
+    (vs ++ listing.checkpoints).max
   }
 
   /** DEEP CLONE (the Delta `CREATE TABLE ... DEEP CLONE` analog, with a
@@ -3748,7 +3769,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     require(emptyOrAbsent(Paths.get(targetDir, "data")),
       s"deepCloneTo: $targetDir already has a data tree — clone into an " +
         "empty target (stale unreferenced files would otherwise survive)")
-    val commits = allKnownCommits()
+    val commits = allKnownCommits(snapshot())
     require(commits.nonEmpty, "deepCloneTo: source table has no commits")
     commits.foreach { c =>
       val refs = c.dataDirs ++ c.changeDir ++ c.removes ++ c.dvs.keys ++
@@ -3807,16 +3828,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   def restore(spark: SparkSession, toVersion: Long, maxRetries: Int = 20): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    require(isCommitted(toVersion), s"restore: version $toVersion is not committed")
-    val visibleAt = visibleCommits(Some(toVersion))
-    val src = visibleAt.filter(_.adds.nonEmpty)
+    val live = snapshot()
+    require(live.listing.versions.contains(toVersion),
+      s"restore: version $toVersion is not committed")
+    val visibleAt = asOf(live, toVersion)
+    val src = visibleAt.live
     require(src.nonEmpty, s"restore: no data visible at version $toVersion")
     val dirs = src.flatMap(_.dataDirs).distinct
     // merge-on-read state at the target version: files removed by then
     // are NOT lifted, and surviving deletion vectors ride the restore
     // commit itself — otherwise a restore past a DV delete would
     // resurrect the deleted rows
-    val tsAt = tombstones(visibleAt)
+    val tsAt = visibleAt.ts
     // re-pointed add actions: paths become data/-relative; stats,
     // blooms, row counts and sizes carry over verbatim (restore cannot
     // change them); row tracking ids carry too, the default rcv pinned
@@ -3840,10 +3863,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // break Delta avoids by refusing protocol-boundary restores
     // outright (this guard refuses only the underivable subset;
     // fuzz seed 20 found the drift).
-    val tracked = logTail.rowIdState().isDefined
+    val tracked = live.tracked
     val knownIds: Map[String, (Long, Long)] =
       if (!tracked) Map.empty
-      else allKnownCommits().sortBy(_.version).flatMap { c =>
+      else allKnownCommits(live).sortBy(_.version).flatMap { c =>
         c.adds.flatMap(a => a.baseRowId.map(b =>
           addKey(c, a) -> (b, a.rcv.getOrElse(c.version))))
       }.toMap // ascending fold: the newest recording of a key wins
@@ -3865,11 +3888,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val adds = lifted.map(a => a.copy(baseRowId = carriedIds.get(a.path).map(_._1),
       rcv = carriedIds.get(a.path).map(_._2)))
     val liftedKeys = adds.map(_.path).toSet
-    val target = read(spark, Some(toVersion)).drop("batch")
+    val target = readAt(spark, live, Some(visibleAt)).drop("batch")
     // re-points the whole live set, so no rebase: re-claiming past a
     // rival append would silently drop its rows
-    occTransact("restore", maxRetries, rebase = false) { _ =>
-      val current0 = liveData(spark)
+    occTransact("restore", maxRetries, rebase = false) { s =>
+      val current0 = liveData(spark, s)
       // an everything-deleted live state reads as a schemaless empty
       // frame; diff it as zero rows of the target's shape
       val current = if (current0.columns.isEmpty) target.limit(0) else current0
@@ -3884,9 +3907,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val changes = tAl.exceptAll(cAl).withColumn("_change_type", lit("insert"))
         .unionByName(
           cAl.exceptAll(tAl).withColumn("_change_type", lit("delete")))
-      val ch = publish(changes, s"changes/${java.util.UUID.randomUUID()}",
+      val ch = publish(s, changes, s"changes/${java.util.UUID.randomUUID()}",
         Nil, Nil, 0, check = false)
-      Some((v: Long) => Entry(v, snapshot = true, adds = adds, op = "RESTORE",
+      Some((t: Snapshot) => Entry(t.next, snapshot = true, adds = adds, op = "RESTORE",
         schemaStr = Some(target.schema.json), changeDir = Some(ch.dir),
         changeAdds = ch.adds, restoreDirs = dirs,
         // removed files are excluded from the lifted adds, but the
@@ -3917,7 +3940,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * recorded layout packs in arrival order, exactly as before. */
   def compact(spark: SparkSession, clusterBy: Seq[String] = Nil,
       clusterFiles: Int = 8): Long = {
-    val cb = if (clusterBy.nonEmpty) clusterBy else activeClusterCols()
+    val cb = if (clusterBy.nonEmpty) clusterBy else activeClusterCols(snapshot())
     transactSnapshotChanges(spark, "COMPACT") { live =>
       (if (cb.isEmpty) live
        else graft.operators.ZOrder.cluster(live, cb, clusterFiles),
@@ -3953,12 +3976,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // back to the logical view, so a RENAME never narrows the layout; a
     // recorded column DROPped since the clustered write is skipped
     // (explicit clusterBy still fails loudly).
-    val clusterCols =
-      if (clusterBy.nonEmpty) clusterBy else activeClusterCols()
-    occTransact("compactSmall", maxRetries) { _ =>
-      val all = visibleCommits(None)
-      val ts = tombstones(all)
-      val candAdds = all.filter(_.adds.nonEmpty)
+    occTransact("compactSmall", maxRetries) { s =>
+      val clusterCols =
+        if (clusterBy.nonEmpty) clusterBy else activeClusterCols(s)
+      val ts = s.ts
+      val candAdds = s.live
         .filter(c => c.adds.forall(a => !a.path.contains("/")))
         .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
         .filterNot { case (k, _) => ts.removed(k) }
@@ -3972,17 +3994,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // one scan over files from DIFFERENT commits: explicit physical
         // schema — without it parquet would silently adopt one file's
         // schema and DROP the other commits' evolved columns
-        val scan = flatReader(spark)
+        val scan = flatReader(spark, s)
           .parquet(cands.map(c => dataDir.resolve(c._1).toString): _*)
           .withColumn(FileCol, relKeyCol)
           .withColumn(RidxCol, col("_metadata.row_index"))
-        val tracked = logTail.rowIdState().isDefined
+        val tracked = s.tracked
         val live1 = applyTombstones(scan, Tombstones(Set.empty, ts.dv))
         // row tracking: the packed rows change (file, position), so pin
         // each one's id/commit-version into the materialization columns
         // before the positions are lost — OPTIMIZE preserves row ids
         val live0 = (if (tracked)
-            withResolvedMat(live1, all.filter(_.adds.nonEmpty))
+            withResolvedMat(live1, s.live)
           else live1)
           .drop(FileCol, RidxCol)
         // OPTIMIZE ... ZORDER BY, incrementally: z-order just the packed
@@ -3990,7 +4012,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // the clustering columns). Big files keep their existing layout.
         val packed =
           if (clusterCols.isEmpty) live0.coalesce(nOut)
-          else graft.operators.ZOrder.cluster(live0, clusterCols.map(physicalOf),
+          else graft.operators.ZOrder.cluster(live0, clusterCols.map(s.physicalOf),
             if (clusterFiles > 0) clusterFiles else math.max(nOut, 2))
         // blooms SURVIVE OPTIMIZE: recompute them for the packed output
         // over the union of the recorded bloom policy and whatever
@@ -3998,7 +4020,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // that predate the `graft.bloom` domain) — otherwise an
         // auto-compacting streaming table silently loses the point-probe
         // pruning q_sink_bloom_lookup exists to demonstrate
-        val (polCols, polBits) = bloomPolicy()
+        val (polCols, polBits) = bloomPolicy(s)
         val retiredBlooms = candAdds.map(_._2.bloom)
         val bloomCols = (polCols ++ retiredBlooms.flatMap(_.keys)).distinct
         val bloomBits =
@@ -4008,21 +4030,21 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // check=false: a physical rewrite of already-validated committed
         // rows (and the frame carries PHYSICAL names — constraint exprs
         // would not even resolve against them)
-        val pub = publish(packed, s"files/${java.util.UUID.randomUUID()}",
+        val pub = publish(s, packed, s"files/${java.util.UUID.randomUUID()}",
           Nil, bloomCols, bloomBits, check = false)
         // a rival PURE APPEND cannot touch the packed candidates (its files
         // did not exist at the read), so a rebase re-claims the packed
         // output as-is; its new small files are simply the next OPTIMIZE
         // run's work. A rival with removes/DVs (including a rival
         // OPTIMIZE) may have retired a candidate — full re-pick.
-        Some { (v: Long) =>
-          Entry(v, pub.dir, adds = pub.adds, op = "COMPACT_INC",
-            schemaStr = Some(latestSchema().map(_.json).getOrElse(packed.schema.json)),
+        Some { (t: Snapshot) =>
+          Entry(t.next, pub.dir, adds = pub.adds, op = "COMPACT_INC",
+            schemaStr = Some(t.schema.map(_.json).getOrElse(packed.schema.json)),
             removes = cands.map(_._1), matFiles = tracked,
             // re-record only an EXPLICIT caller declaration: the
             // discovered set may be narrowed by a concurrent DROP, and
             // re-recording it would make the narrowing permanent
-            domains = clusterDomain(clusterBy))
+            domains = clusterDomain(t, clusterBy))
         }
       }
     }
@@ -4065,18 +4087,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * reclaimed by [[cleanupLog]]) unioned with the surviving raw
     * entries. Vacuum's referenced-set computation must use THIS, not
     * the raw log alone — after cleanup, checkpoint-served commits still
-    * point at live data dirs. */
-  private def allKnownCommits(): Seq[Entry] = {
-    val raw = committedVersions().map(parseCommit)
+    * point at live data dirs. Read from `s`'s LIST. */
+  private def allKnownCommits(s: Snapshot): Seq[Entry] = {
+    val raw = s.listing.versions.map(parseCommit)
     val rawVs = raw.map(_.version).toSet
     val seed: Seq[Entry] =
-      if (truncatedBelow() == 0L)
+      if (s.truncatedBelow == 0L)
         // never cleaned: the raw log is complete, the newest checkpoint
         // only short-cuts what raw already has
-        checkpointVersions().reverseIterator
-          .map(cv => loadCheckpoint(cv))
-          .collectFirst { case Some((_, cs)) => cs }
-          .getOrElse(Nil)
+        s.listing.checkpoints.reverseIterator
+          .flatMap(loadCheckpoint(_, s.listing, 0L))
+          .nextOption().fold(Seq.empty[Entry])(_.entries)
       else {
         // after a cleanup, entries below the truncation anchor survive
         // ONLY in checkpoints — and a snapshot committed between two
@@ -4090,8 +4111,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // checkpoint count is bounded by the cleanup cadence (cleanup
         // deletes checkpoints below its anchor).
         val seen = scala.collection.mutable.Set.empty[Long]
-        checkpointVersions().reverse.iterator.flatMap(cv =>
-          loadCheckpoint(cv).map(_._2).getOrElse(Nil)
+        s.listing.checkpoints.reverse.iterator.flatMap(cv =>
+          loadCheckpoint(cv, s.listing, 0L).fold(Seq.empty[Entry])(_.entries)
             .sortBy(-_.version))
           .filter(c => seen.add(c.version)).toSeq
       }
@@ -4103,7 +4124,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * log-retention analog (`delta.logRetentionDuration`). Afterwards:
     * live reads and time travel at or above that checkpoint are exact
     * (served from it); time travel and CDC below it FAIL LOUDLY
-    * (visibleCommits / readChanges guards) instead of rebuilding
+    * (snapshot / readChanges guards) instead of rebuilding
     * partial state; constraint sets and streamTxn cursors survive in
     * the checkpoint's aux header. The age guard serves the same role
     * as vacuum's: a reader that listed the log keeps a grace window
@@ -4116,34 +4137,31 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * first batchId is nonzero — is not truncation and sets no marker. */
   private val TruncMarkerName = "_graft_log_truncated"
 
-  private[graft] def truncatedBelow(): Long =
-    if (!store.exists(TruncMarkerName)) 0L
-    else try store.read(TruncMarkerName).trim.toLong
-    catch { case scala.util.control.NonFatal(_) => 0L }
+  private[graft] def truncatedBelow(): Long = snapshot().truncatedBelow
 
   def cleanupLog(minAgeMs: Long = 604800000L): Int = {
     val cutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(name: String): Boolean =
       store.modifiedTime(name) <= cutoff
-    val anchor = checkpointVersions()
-      .filter(cv => oldEnough(ckptNameOf(cv)) && loadCheckpoint(cv).isDefined)
+    val listing = LogListing(store.list())
+    val anchor = listing.checkpoints
+      .filter(cv => oldEnough(ckptNameOf(cv)) &&
+        loadCheckpoint(cv, listing, 0L).isDefined)
       .maxOption
     anchor.fold(0) { a =>
-      if (truncatedBelow() < a)
+      if (!listing.truncated || readTruncMarker() < a)
         store.put(TruncMarkerName, a.toString)
       var removed = 0
-      committedVersions().filter(_ < a).foreach { v =>
+      listing.versions.filter(_ < a).foreach { v =>
         if (oldEnough(logName(v))) { store.delete(logName(v)); removed += 1 }
       }
-      checkpointVersions().filter(_ < a).foreach { cv =>
-        if (oldEnough(ckptNameOf(cv))) {
-          store.delete(ckptNameOf(cv)); removed += 1
-        }
-      }
+      val deleted = listing.checkpoints.filter(_ < a)
+        .filter(cv => oldEnough(ckptNameOf(cv)))
+      deleted.foreach { cv => store.delete(ckptNameOf(cv)); removed += 1 }
       // checksums of reclaimed versions: their log fold is no longer
       // servable (reads below the anchor fail loudly), so the stored
       // summary is unverifiable — reclaim it with the entries
-      crcVersions().filter(_ < a).foreach { v =>
+      listing.crcs.filter(_ < a).foreach { v =>
         if (oldEnough(crcName(v))) {
           store.delete(crcName(v)); removed += 1
         }
@@ -4154,13 +4172,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       // manifest claim and crashed before self-cleanup) are reclaimed
       // once old enough. Parts above the anchor stay untouched: a
       // writer may be mid-assembly there.
-      val referenced: Set[String] = checkpointVersions().flatMap { cv =>
+      val referenced: Set[String] = listing.checkpoints.diff(deleted).flatMap { cv =>
         try {
           store.readLines(ckptNameOf(cv))
             .find(_.nonEmpty).toSeq.flatMap(CkptAux.parse(_).toSeq.flatMap(_._3.map(_.name)))
         } catch { case scala.util.control.NonFatal(_) => Nil }
       }.toSet
-      sidecarFiles().foreach { case (v, n) =>
+      listing.sidecars.foreach { case (v, n) =>
         if (v <= a && !referenced.contains(n) && oldEnough(n)) {
           store.delete(n); removed += 1
         }
@@ -4174,7 +4192,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   def vacuum(retainHistory: Boolean = true, minAgeMs: Long = 3600000L): Int = {
-    val commits = allKnownCommits()
+    val s = snapshot()
+    val commits = allKnownCommits(s)
     val visible =
       if (retainHistory) commits
       else commits.filter(_.snapshot).lastOption
@@ -4190,7 +4209,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // re-points at alive — vacuum after restore preserves restored data;
     // data dirs BELOW the anchor stay referenced through the checkpoint
     // (time travel at/above the anchor checkpoint still serves them).
-    val cdcFloor = truncatedBelow()
+    val cdcFloor = s.truncatedBelow
     val referenced: Set[String] =
       visible.flatMap(_.dataDirs).toSet ++
         commits.filter(_.version >= cdcFloor).flatMap(_.changeDir)
@@ -4221,41 +4240,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     removed
   }
 
-  /** Table schema as recorded by the latest commit's metaData action.
-    * Parsed with the same JSON parser as every other entry read — a
-    * substring scan for the next key is spoofable by field METADATA
-    * (which flows into schema.json uncut): a column whose metadata
-    * contains a key named `partitionColumns` would truncate the parse
-    * and brick every subsequent verb.
-    *
-    * Cached per log version: the latest entry can be MBs (a snapshot
-    * listing thousands of adds), this runs on EVERY read via
-    * [[physicalReadSchema]], and a committed entry is immutable — so a
-    * version-keyed memo is always fresh. Only the parse is memoized;
-    * the version listing itself re-runs per call, which is what keeps
-    * a rival writer's evolution visible immediately. */
-  @volatile private var schemaCache:
-    Option[(Long, org.apache.spark.sql.types.StructType)] = None
-  /** Cache-miss parses, observable so the memo claim is testable. */
+  /** Table schema as recorded by the newest commit's metaData action
+    * (the live [[Snapshot]]'s recorded schema). The schema JSON is parsed
+    * once per newly recorded schema, not per call: the latest entry can
+    * be MBs and this runs on every read. */
   private[graft] val schemaParses =
     new java.util.concurrent.atomic.AtomicLong(0L)
-  def latestSchema(): Option[org.apache.spark.sql.types.StructType] = {
-    import org.json4s.jackson.JsonMethods
-    committedVersions().lastOption.map { v =>
-      schemaCache match {
-        case Some((cv, s)) if cv == v => s
-        case _ =>
-          schemaParses.incrementAndGet()
-          val j = JsonMethods.parse(store.read(logName(v)))
-          val s = org.apache.spark.sql.types.DataType.fromJson(
-              JsonMethods.compact(
-                JsonMethods.render(j \ "metaData" \ "schemaString")))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-          schemaCache = Some((v, s))
-          s
-      }
-    }
-  }
+  def latestSchema(): Option[StructType] = snapshot().schema
 }
 
 object ExactlyOnceSink {

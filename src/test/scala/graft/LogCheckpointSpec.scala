@@ -77,10 +77,9 @@ class LogCheckpointSpec extends SparkSpecBase {
     Files.writeString(log.resolve(f"${20L}%020d.checkpoint"), "{torn")
     val r1 = new ExactlyOnceSink(dir)
     assert(ids(r1.read(spark)) === (0L until 23L))
-    // two O(interval) folds on a fresh handle: the visible-entry replay
-    // plus the one-time logTail metadata seed (column mapping/etc.) —
-    // both fall back from the torn 20 to checkpoint 15 (7 entries each)
-    assert(r1.logFileParses.get() <= 18, "should fall back to checkpoint 15")
+    // one O(interval) fold on a fresh handle: its snapshot falls back
+    // from the torn 20 to checkpoint 15 (7 entries)
+    assert(r1.logFileParses.get() <= 9, "should fall back to checkpoint 15")
     // impostor: parseable JSON that is not the visible set at 15 (a copy
     // of version 3's entry) — the last-entry-version invariant rejects it
     Files.writeString(log.resolve(f"${15L}%020d.checkpoint"),

@@ -190,6 +190,20 @@ class OccNarrowSpec extends SparkSpecBase {
     assert(s.read(spark).filter(col("x") === 7).count() === 10)
   }
 
+  test("the gave-up message names rival appends APPEND") {
+    val (dir, s) = seeded("gaveup", isolation = ExactlyOnceSink.Serializable)
+    val rival = new ExactlyOnceSink(dir, appId = "rival")
+    // a rival append on every attempt: Serializable recomputes each time
+    s.txnStagedHook = () => rival.commitAppend(df(100 until 102, 7).coalesce(1))
+    val e =
+      try intercept[RuntimeException] {
+        s.deleteDV(spark, col("id") === 3, maxRetries = 1)
+      } finally s.txnStagedHook = () => ()
+    assert(e.getMessage.contains("gave up after 1 recomputes"), e.getMessage)
+    assert("""v\d+:APPEND""".r.findFirstIn(e.getMessage).isDefined,
+      s"rival appends must read APPEND: ${e.getMessage}")
+  }
+
   test("row-id allocation stays collision-free across a rebase") {
     val (dir, s) = seeded("rowid")
     s.enableRowTracking(spark, backfill = true)
