@@ -62,9 +62,6 @@ object IngestBench {
       val perTrigger = math.max(1, (chunks + batches - 1) / batches)
 
       val sink = new ExactlyOnceSink(tableDir, appId = "graft-ingest-bench")
-      // the identity arm declares the column BEFORE the stream (a
-      // metadata commit at version 0), so the batches go through the
-      // streamTxn-cursored appendBatch — the protocol such tables need
       if (identity) sink.setIdentityColumn(spark, "rid")
       val stream = KafkaEnvelope.decode(
           KafkaEnvelope.readStream(spark, topicDir, perTrigger))
@@ -74,10 +71,7 @@ object IngestBench {
       val qy = stream.writeStream
         .option("checkpointLocation", ckptDir)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          if (identity) { sink.appendBatch(df, id); () }
-          else sink.process(df, id)
-        }
+        .foreachBatch((df: DataFrame, id: Long) => sink.process(df, id))
         .start()
       qy.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9

@@ -352,10 +352,10 @@ object SinkOps {
 
   /** One identity-column committed table per (JVM, sfDir): declare
     * `rid GENERATED ALWAYS AS IDENTITY`, then ingest `events` in 2
-    * streaming micro-batches through the streamTxn-cursored
-    * [[ExactlyOnceSink.appendBatch]] (the metadata commit occupies
-    * version 0, so the version-pinned process() protocol cannot serve
-    * this table — exactly the case appendBatch exists for). The
+    * streaming micro-batches through [[ExactlyOnceSink.appendBatch]]
+    * (the metadata commit takes version 0, so the batches land at
+    * versions 1-2; the streamTxn cursor, not the version, records
+    * which batches are in). The
     * declared query reads the table and pins the assignment's
     * INVARIANTS — count, distinct count, min, max, sum of the assigned
     * ids — which for a contiguous 1..N assignment are all pure

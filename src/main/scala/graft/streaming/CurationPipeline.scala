@@ -26,9 +26,11 @@ import org.apache.spark.sql.functions._
   *      hash-signature table (the near-dup ingest flow in StreamingSpec
   *      does exactly that for MinHash signatures);
   *   5. PII mask — emails then digit runs, applied AFTER hashing;
-  *   6. exactly-once commit — [[ExactlyOnceSink.process]] keyed on the
-  *      stream's batchId: a replayed batch re-curates identical input
-  *      to an identical frame and the claim no-ops.
+  *   6. exactly-once commit — [[ExactlyOnceSink.process]], which records
+  *      the stream's batchId as its cursor in the commit: a replayed
+  *      batch at or below the cursor no-ops, and the batch lands at the
+  *      log's next version, so the sink's `autoCompactEvery` can pack a
+  *      long-running daemon's small files between batches.
   *
   * Throughput is measured by graft.IngestBench's docs arms (plain vs
   * curated — the delta IS the curation cost); CurationPipelineSpec

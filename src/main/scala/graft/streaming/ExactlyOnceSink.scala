@@ -11,49 +11,53 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * essential guarantees are reproduced on public APIs:
   *
   *   table/
-  *     data/batch=<id>/part-*.parquet   (streaming appends, hive layout)
+  *     data/batch=<id>-<attempt>/part-*.parquet (streaming appends)
   *     data/files/<uuid>/part-*.parquet (optimistic commits, unique dirs)
   *     _graft_log/<%020d version>.json  (exclusive creation = the commit)
   *
   * A batch is visible iff its log entry exists. Readers list the log,
   * not the data dir, so staged/unclaimed data is never visible.
   *
-  * Two writer protocols, matching Delta's:
+  * One write protocol, Delta's multi-writer optimistic concurrency
+  * (`commitAppend` / `transactSnapshot`; streaming appends below):
+  * data files land under a writer-unique directory first, then the writer
+  * claims the next log version by CONDITIONAL CREATION of the version
+  * file — [[CommitStore]] `.putIfAbsent`, the one storage primitive
+  * commits require (atomic, all-or-nothing, fails if the version
+  * exists). The store is pluggable (the Delta LogStore analog): POSIX
+  * hard-link claims by default, an emulated object-store conditional
+  * PUT for the 100 TB target where rename/link do not exist — the
+  * protocol itself never renames or links inside the log. Losing a
+  * claim race means another writer committed that version: appends
+  * simply re-claim the next version (append⇄append never conflicts —
+  * the Delta protocol's disjoint-files rule). Snapshot/MOR transactions
+  * (merge/delete/compact) apply CONFLICT NARROWING, the Delta
+  * ConflictChecker analog: under the default
+  * [[ExactlyOnceSink.WriteSerializable]] isolation a rival commit that
+  * is a pure data append — disjoint by construction from the
+  * transaction's read set — costs only a metadata re-claim at the next
+  * version (snapshot commits record their read version as
+  * `snapshotBase`, keeping the appends visible; delta-shaped MOR
+  * commits keep them visible for free), while a genuinely conflicting
+  * rival (removes/DVs/snapshot/metadata) still forces the full
+  * re-read+recompute, because the output depends on state that rival
+  * invalidated. [[ExactlyOnceSink.Serializable]] retains the
+  * recompute-on-any-rival posture. The log stays linear and gap-free:
+  * a version file exists only after its data is in place, and claims
+  * are dense because every writer targets exactly the next version of
+  * the log snapshot it read.
   *
-  *  1. **Streaming appends** (`process`, driven by foreachBatch):
-  *     idempotent on batchId — a replayed micro-batch (crash between
-  *     write and commit, Spark retries from the checkpoint WAL) sees the
-  *     committed version and no-ops. Spark guarantees one streaming
-  *     writer per (appId, table), so version = batchId.
-  *
-  *  2. **Multi-writer optimistic concurrency** (`commitAppend` /
-  *     `transactSnapshot`): data files land under a writer-unique
-  *     directory first, then the writer claims the next log version by
-  *     CONDITIONAL CREATION of the version file — [[CommitStore]]
-  *     `.putIfAbsent`, the one storage primitive commits require
-  *     (atomic, all-or-nothing, fails if the version exists). The
-  *     store is pluggable (the Delta LogStore analog): POSIX hard-link
-  *     claims by default, an emulated object-store conditional PUT for
-  *     the 100 TB target where rename/link do not exist — the protocol
-  *     itself never renames or links inside the log. Losing a claim race
-  *     means another writer committed that version: appends simply
-  *     re-claim the next version (append⇄append never conflicts — the
-  *     Delta protocol's disjoint-files rule). Snapshot/MOR transactions
-  *     (merge/delete/compact) apply CONFLICT NARROWING, the Delta
-  *     ConflictChecker analog: under the default
-  *     [[ExactlyOnceSink.WriteSerializable]] isolation a rival commit
-  *     that is a pure data append — disjoint by construction from the
-  *     transaction's read set — costs only a metadata re-claim at the
-  *     next version (snapshot commits record their read version as
-  *     `snapshotBase`, keeping the appends visible; delta-shaped MOR
-  *     commits keep them visible for free), while a genuinely
-  *     conflicting rival (removes/DVs/snapshot/metadata) still forces
-  *     the full re-read+recompute, because the output depends on state
-  *     that rival invalidated. [[ExactlyOnceSink.Serializable]] retains
-  *     the recompute-on-any-rival posture. The log stays linear and
-  *     gap-free: a version file exists only after its data is in place,
-  *     and claims are dense because every writer targets exactly the
-  *     next version of the log snapshot it read.
+  * **Streaming appends** (`process` / `appendBatch`, driven by
+  * foreachBatch) are such appends that also record the stream's cursor
+  * `streamTxn{appId, batchId}` in the same commit — the Delta `txn`
+  * idempotent-writer rule. A replayed micro-batch (crash between write
+  * and commit, Spark retries from the checkpoint WAL) finds its batchId
+  * at or below the cursor and no-ops; the check runs in every claim
+  * attempt, so of two concurrent replays (a zombie driver and its
+  * replacement) exactly one commits. A batch's version is the log's
+  * next one, never its batchId: maintenance and metadata commits may
+  * land between batches, and each appId streaming into a table keeps
+  * its own cursor.
   *
   * Every commit entry also records **per-file column stats** (min/max of
   * numeric and string columns — the Delta data-skipping analog):
@@ -328,11 +332,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       else s.entries.reverseIterator.find(_.version == version - 1).flatMap(_.ict)
         .orElse(try Some(store.modifiedTime(logName(version - 1)))
           catch { case scala.util.control.NonFatal(_) => None })
-        // a version-pinned claim off the snapshot's tip: after
-        // cleanupLog the predecessor's entry survives verbatim (stamp
-        // included) only in a checkpoint
-        .orElse(allKnownCommits(s).find(_.version == version - 1)
-          .flatMap(c => c.ict.orElse(commitTime(c))))
     val floor = math.max(prev.getOrElse(0L), lastIct.get)
     math.max(System.currentTimeMillis(), floor + 1)
   }
@@ -342,48 +341,59 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * surviving only in a checkpoint) is directly assertable. */
   private[graft] def nextIctForTest(version: Long): Long = nextIct(snapshot(), version)
 
-  /** THE commit point: conditional creation of `e`'s version's log
-    * object ([[CommitStore]].putIfAbsent — POSIX hard-link or emulated
-    * object-store conditional PUT, per the configured store). Returns
-    * false if the version was already claimed (by a replay or another
-    * writer). `s` is the snapshot the caller built `e` on: each attempt
+  /** THE commit point: conditional creation of the log object of `s`'s
+    * `next` version ([[CommitStore]].putIfAbsent — POSIX hard-link or
+    * emulated object-store conditional PUT, per the configured store).
+    * The version always comes from `s`, never from `e`, so no writer can
+    * pin one. `s` is the snapshot the caller built `e` on: each attempt
     * runs [[withRowIds]] against it and stamps the entry with this
     * writer's appId and an in-commit timestamp (rendered as the FIRST
-    * field, [[nextIct]]): time travel and history read
-    * the stamp from the entry itself, so they survive log-file copies and
-    * cleanupLog — the checkpoint carries entries verbatim, stamp
-    * included. A won claim at `s.next` proves `s` was the whole log below
-    * it (dense claims), so the new state is `s` plus the entry just
-    * written — no re-read; it becomes the live snapshot, and the
-    * checkpoint and checksum are written from it. */
-  private def claim(s: Snapshot, e: Entry): Boolean = {
-    store.ensureRoot()
-    val ict = nextIct(s, e.version)
-    val text = Entry.render(withRowIds(s, e).copy(ict = Some(ict), txnAppId = Some(appId)))
-    val won = store.putIfAbsent(logName(e.version), text)
-    if (won) {
-      lastIct.getAndUpdate(v => math.max(v, ict))
-      // re-stamp to COMMIT time (ordering HINT, not correctness): a
-      // POSIX hard-link inherits the staged temp's write mtime, which
-      // for a writer that lost earlier claim races predates rivals'
-      // entries — mtime-ordered log consumers ([[tailChanges]]'s file
-      // stream) and cleanupLog's age guard both want claim order, and
-      // claims are sequential by construction. On a real object store
-      // PUT time already IS claim time and touch degrades to a no-op.
-      try store.touch(logName(e.version))
-      catch { case scala.util.control.NonFatal(_) => () }
-      val at =
-        if (e.version == s.next)
-          step(s, Entry.parse(text, e.version), text).copy(listed = s.listed + 1)
-        else asOf(snapshot(), e.version) // a version-pinned claim off the tip
-      liveLock.synchronized { // the live snapshot, unless a newer one is cached
-        if (liveSnap.forall(_.version < at.version)) liveSnap = Some(at)
+    * field, [[nextIct]]): time travel and history read the stamp from
+    * the entry itself, so they survive log-file copies and cleanupLog —
+    * the checkpoint carries entries verbatim, stamp included.
+    *
+    * Returns the committed version, -1 when `e` is a stream batch `s`
+    * already records at or below its stream's cursor ([[replayed]]: a
+    * zombie or restarted driver's replay — nothing is written, and the
+    * caller's published dir is an orphan vacuum reclaims), or None when
+    * a rival claimed the version first (retry on a fresh snapshot). A
+    * won claim proves `s` was the whole log below it (dense claims), so
+    * the new state is `s` plus the entry just written — no re-read; it
+    * becomes the live snapshot, and the checkpoint and checksum are
+    * written from it. */
+  private def claim(s: Snapshot, e0: Entry): Option[Long] =
+    if (replayed(s, e0.streamTxn)) Some(-1L)
+    else {
+      store.ensureRoot()
+      val e = withRowIds(s, e0.copy(version = s.next))
+      val ict = nextIct(s, e.version)
+      val text = Entry.render(e.copy(ict = Some(ict), txnAppId = Some(appId)))
+      if (!store.putIfAbsent(logName(e.version), text)) None
+      else {
+        lastIct.getAndUpdate(v => math.max(v, ict))
+        // re-stamp to COMMIT time (ordering HINT, not correctness): a
+        // POSIX hard-link inherits the staged temp's write mtime, which
+        // for a writer that lost earlier claim races predates rivals'
+        // entries — mtime-ordered log consumers ([[tailChanges]]'s file
+        // stream) and cleanupLog's age guard both want claim order, and
+        // claims are sequential by construction. On a real object store
+        // PUT time already IS claim time and touch degrades to a no-op.
+        try store.touch(logName(e.version))
+        catch { case scala.util.control.NonFatal(_) => () }
+        val at = step(s, Entry.parse(text, e.version), text).copy(listed = s.listed + 1)
+        liveLock.synchronized { // the live snapshot, unless a newer one is cached
+          if (liveSnap.forall(_.version < at.version)) liveSnap = Some(at)
+        }
+        maybeCheckpoint(at)
+        maybeWriteCrc(at)
+        Some(e.version)
       }
-      maybeCheckpoint(at)
-      maybeWriteCrc(at)
     }
-    won
-  }
+
+  /** Is `txn` a stream batch `s` already records — at or below that
+    * stream's cursor? */
+  private def replayed(s: Snapshot, txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (id, b) => s.aux.cursors.get(id).exists(_ >= b) }
 
   /** ROW TRACKING allocation (the Delta row-tracking feature analog),
     * run by [[claim]] on every attempt: when the table has tracking on
@@ -584,7 +594,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       listing: LogListing,
       // committed versions at or below `version` the log listed when this
       // was folded: a change means history below the tip moved (a
-      // cleanupLog, or a version-pinned claim filling a hole)
+      // cleanupLog)
       listed: Int) {
     lazy val entries: Vector[Entry] = visible.map(_._1)
     /** Visible entries carrying data files. */
@@ -660,9 +670,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val seed = listing.checkpoints.filter(cv => target.forall(cv <= _))
       .reverseIterator.flatMap(loadCheckpoint(_, listing, tb)).nextOption()
     val base = seed.getOrElse {
-      // after cleanupLog (recorded in the truncation marker — a log
-      // legitimately starting above version 0, e.g. a streaming
-      // writer whose first batchId > 0, is NOT truncation), targets
+      // after cleanupLog (recorded in the truncation marker), targets
       // below the retained window must fail loudly rather than
       // rebuild a silently partial state
       if (tb > 0)
@@ -841,7 +849,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   // ---------------------------------------------------------------------
-  // protocol 1: streaming appends (single writer per appId, idempotent)
+  // write-time schema enforcement
   // ---------------------------------------------------------------------
 
   /** Delta-style write-time schema enforcement: an append whose frame
@@ -1026,122 +1034,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     now
   }
 
-  /** Is `c` genuinely OUR stream's commit of `batchId`? Guards both
-    * replay paths in [[process]]: the dir shape catches a metadata/OCC
-    * commit squatting on the version (version = batchId is this
-    * protocol's invariant), the appId catches a DIFFERENT stream
-    * driving the same table — either way the batch must not be
-    * silently swallowed. Pre-txn-era entries carry no appId and pass
-    * on the dir shape alone. */
-  private def isOwnStreamBatch(c: Entry, batchId: Long): Boolean =
-    (c.dir == s"batch=$batchId" || c.dir.startsWith(s"batch=$batchId-")) &&
-      c.txnAppId.forall(_ == appId)
-
-  /** foreachBatch body: write-then-commit, idempotent on batchId.
-    * `partitionBy` columns produce hive-style subdirectories inside the
-    * batch dir (the Delta partitioned-table layout); the commit entry
-    * records them in the `metaData` action alongside the schema.
-    * `mergeSchema` opts this batch into schema evolution
-    * ([[enforceSchema]]). */
-  def process(df: DataFrame, batchId: Long, partitionBy: Seq[String] = Nil,
-      mergeSchema: Boolean = false): Unit = {
-    val s = snapshot()
-    // Replay detection below is raw-log-file based (the listing). If
-    // cleanupLog already reclaimed this batch's raw entry (it survives
-    // only in a checkpoint), a replayed old batch would see no raw
-    // entry, re-stage, and successfully re-claim the version
-    // (no raw file left to collide with) — writing an orphan duplicate
-    // entry below the truncation marker, invisible to readers but
-    // muddying the exactly-once accounting. Fail loudly instead, like
-    // the occupied-version require.
-    if (batchId < s.truncatedBelow) {
-      // The raw file is gone, but the batch may still be VERIFIABLY
-      // committed: a surviving checkpoint carries the entry (txn action
-      // included). A lagging/restored streaming checkpoint replaying an
-      // already-committed own batch is then a provable exactly-once
-      // no-op — only a genuinely unverifiable batch must fail.
-      if (allKnownCommits(s).find(_.version == batchId)
-          .exists(isOwnStreamBatch(_, batchId))) return
-      sys.error(
-        s"process(batchId=$batchId): this version is below the log's " +
-          s"truncation marker (${s.truncatedBelow}), its raw entry was " +
-          "reclaimed by cleanupLog, and no surviving checkpoint entry " +
-          "verifies it as this stream's commit — version-pinned replay " +
-          "detection cannot run; drive this table through appendBatch " +
-          "(streamTxn-cursored) instead")
-    }
-    if (s.listing.versions.contains(batchId)) {
-      // replay after crash → no-op, but ONLY when the occupying commit
-      // really is this stream's batch (tables with a pre-stream log
-      // need [[appendBatch]], which cursors on streamTxn instead of
-      // version numbers)
-      require(isOwnStreamBatch(parseCommit(batchId), batchId),
-        s"process(batchId=$batchId): version $batchId is occupied by a " +
-          "non-streaming or foreign-stream commit; use appendBatch " +
-          "(streamTxn-cursored) instead")
-      return
-    }
-    require(autoCompactEvery <= 0,
-      "auto-compaction interleaves maintenance commits between batch " +
-        "versions, which the version-pinned process() protocol cannot " +
-        "tolerate — drive this table through appendBatch (streamTxn-" +
-        "cursored) instead")
-    enforceSchema(s, df.schema, mergeSchema, s"process(batchId=$batchId)")
-    val gdf0 = applyGenerated(s, conformToTable(s, df))
-    // identity assignment: the stream is the SINGLE writer, so there is
-    // no watermark race — a crash-replay of this batch re-reads the
-    // previous batch's committed watermark and the claim's idempotence
-    // keeps exactly-once either way
-    val idr = identityRules(s)
-    val (gdf, advancedGen, releaseId) =
-      if (idr.isEmpty) (gdf0, None, () => ())
-      else {
-        val (adf, adv, rel) = assignIdentity(gdf0, idr)
-        (adf, Some(s.aux.generated ++ adv), rel)
-      }
-    try {
-      // 1. publish data files (invisible to readers — they go through the
-      //    log). Staging AND the final dir are ATTEMPT-UNIQUE: two
-      //    concurrent replays of one batchId (zombie driver + its
-      //    replacement) each write their own dir, the claim picks the
-      //    winner, and the loser's dir is an unreferenced orphan vacuum
-      //    reclaims — a shared `batch=<id>` target would let the loser's
-      //    leftover-cleanup delete the WINNER'S committed files.
-      //    The declared bloom policy (graft.bloom) rides streaming
-      //    batches too — the PRIMARY ingest path; without it, every
-      //    micro-batch after the declaration writes bloom-less files and
-      //    point-probe pruning quietly decays as the table grows.
-      val attempt = java.util.UUID.randomUUID().toString.take(8)
-      val (polCols, polBits) = activeBloomPolicy(s)
-      val pub = publish(s, gdf, s"batch=$batchId-$attempt", partitionBy,
-        polCols.map(s.physicalOf), polBits, check = true)
-
-      // 2. commit; a lost claim normally means a concurrent replay
-      //    already committed this batchId — exactly-once either way.
-      //    But verify it: a maintenance OCC commit (or a foreign
-      //    stream) racing into version=batchId while this batch staged
-      //    would otherwise swallow the batch silently.
-      val (schemaJson, widened) = evolvedSchemaOf(s, gdf.schema)
-      if (!claim(s, Entry(batchId, pub.dir, adds = pub.adds,
-          schemaStr = Some(schemaJson), partitionColumns = partitionBy,
-          generated = advancedGen, widened = widened))) {
-        require(isOwnStreamBatch(parseCommit(batchId), batchId),
-          s"process(batchId=$batchId): lost the version claim to a " +
-            "non-streaming or foreign-stream commit — use appendBatch " +
-            "(streamTxn-cursored) instead")
-      }
-    } finally releaseId()
-  }
-
   /** AUTO-COMPACTION (the Delta auto-compact analog): a streaming
     * daemon accretes one small-file commit per micro-batch forever;
-    * with `autoCompactEvery = N`, every Nth successful [[appendBatch]]
-    * commit synchronously runs the incremental OPTIMIZE
-    * ([[compactSmall]]) so the live file count stays bounded by the
-    * write rate, not the stream's age. appendBatch-only: the packing
-    * commit claims its own version, which the version-pinned
-    * [[process]] protocol cannot tolerate (process refuses the knob
-    * loudly). Post-commit and best-effort — the batch's exactly-once
+    * with `autoCompactEvery = N`, every Nth committed streaming batch
+    * ([[appendBatch]], which [[process]] delegates to) synchronously
+    * runs the incremental OPTIMIZE ([[compactSmall]]) so the live file
+    * count stays bounded by the write rate, not the stream's age. The
+    * packing commit claims the log's next version like any other
+    * commit. Post-commit and best-effort — the batch's exactly-once
     * commit has already happened, so a failed/raced compaction costs
     * nothing but deferred packing. Cost model unchanged from
     * compactSmall: O(small files), retired files pruned from the live
@@ -1154,8 +1054,23 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       catch { case scala.util.control.NonFatal(_) => () }
 
   // ---------------------------------------------------------------------
-  // protocol 2: multi-writer optimistic concurrency
+  // the write protocol: optimistic appends (streaming ones included)
+  // and transactions
   // ---------------------------------------------------------------------
+
+  /** Test seams (no-ops in production): `stagedHook` fires after every
+    * append staging write (plain or identity), `identityReserveHook` at
+    * the top of every allow-gaps reservation attempt — each lets a spec
+    * land a RIVAL commit at exactly the racy instant (rival schema
+    * evolution, rival contiguous-rule declaration, a concurrent replay)
+    * that a thread race would only hit probabilistically. */
+  private[graft] var stagedHook: () => Unit = () => ()
+  private[graft] var identityReserveHook: () => Unit = () => ()
+  /** Fires in the snapshot/MOR/compactSmall transaction loops after
+    * staging completes and before the first claim attempt — the window
+    * where a rival landing forces the conflict path (rebase or
+    * recompute). Deterministic conflict-narrowing tests live on it. */
+  private[graft] var txnStagedHook: () => Unit = () => ()
 
   /** Optimistically-committed append: safe under concurrent writers.
     * Data is staged once under a writer-unique dir; the claim loop only
@@ -1172,27 +1087,20 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * EQUALITY probes that range stats cannot serve.
     *
     * `mergeSchema` opts this append into schema evolution
-    * ([[enforceSchema]] — new columns rejected by default). */
-  /** Test seams (no-ops in production): `stagedHook` fires after the
-    * plain-append staging write, `identityReserveHook` at the top of
-    * every allow-gaps reservation attempt — each lets a spec land a
-    * RIVAL commit at exactly the racy instant (rival schema evolution,
-    * rival contiguous-rule declaration) that a thread race would only
-    * hit probabilistically. */
-  private[graft] var stagedHook: () => Unit = () => ()
-  private[graft] var identityReserveHook: () => Unit = () => ()
-  /** Fires in the snapshot/MOR/compactSmall transaction loops after
-    * staging completes and before the first claim attempt — the window
-    * where a rival landing forces the conflict path (rebase or
-    * recompute). Deterministic conflict-narrowing tests live on it. */
-  private[graft] var txnStagedHook: () => Unit = () => ()
-
+    * ([[enforceSchema]] — new columns rejected by default).
+    *
+    * `streamTxn` = (appId, batchId) makes it a streaming batch
+    * ([[appendBatch]]): the cursor rides the commit, the data lands under
+    * `data/batch=<batchId>-<attempt>`, and a batch at or below the
+    * stream's cursor — at entry or at any claim attempt — commits
+    * nothing and returns -1. */
   def commitAppend(df: DataFrame, partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil, clusterFiles: Int = 8,
       bloomBy: Seq[String] = Nil, bloomBits: Int = 4096,
       mergeSchema: Boolean = false,
       streamTxn: Option[(String, Long)] = None): Long = {
     val s0 = snapshot()
+    if (replayed(s0, streamTxn)) return -1L
     enforceSchema(s0, df.schema, mergeSchema, "commitAppend")
     // no caller bloom spec → the table's declared policy applies
     // (activeBloomPolicy doc): appendBatch funnels here too, so every
@@ -1229,10 +1137,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         validated = reEnforceOnRetry(s, frame.schema, mergeSchema, validated,
           "commitAppend")
         val (sj, wd) = evolvedSchemaOf(s, frame.schema)
-        if (claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sj),
+        val won = claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sj),
             partitionColumns = partitionBy, streamTxn = streamTxn, widened = wd,
-            domains = writeDomains(s, clusterBy, bloomBy, bloomBits))))
-          return s.next
+            domains = writeDomains(s, clusterBy, bloomBy, bloomBits)))
+        if (won.isDefined) return won.get
         s = snapshot() // lost the race — next version
       }
       -1L // unreachable
@@ -1241,8 +1149,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val idr0 = identityRules(s0)
     if (idr0.isEmpty) {
       val st = stageAppend(s0, gdf, partitionBy, clusterBy, clusterFiles,
-        bBy, bBits)
-      stagedHook()
+        bBy, bBits, streamTxn)
       claimAppend(gdf, st, s0)
     } else if (idr0.forall(_._5)) {
       // ALLOW-GAPS identity (the Delta-parity trade, setIdentityColumn
@@ -1291,7 +1198,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
             ExactlyOnceSink.identityClaimAttempts.incrementAndGet()
             if (claim(s, Entry(s.next, op = "RESERVE IDENTITY",
                 schemaStr = Some(metaSchemaJson(s)),
-                generated = Some(gen ++ advanced)))) {
+                generated = Some(gen ++ advanced))).isDefined) {
               base = rules; reserved = true
             }
           }
@@ -1307,7 +1214,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           // 3. commit like a plain append
           val s = snapshot()
           claimAppend(adf, stageAppend(s, adf, partitionBy, clusterBy,
-            clusterFiles, bBy, bBits), s)
+            clusterFiles, bBy, bBits, streamTxn), s)
         }
       } finally prep.release()
     } else {
@@ -1371,7 +1278,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         if (staged.isDefined) ExactlyOnceSink.identityRestages.incrementAndGet()
         val (adf, advanced) = assignFromPrep(prep, rules)
         val st = stageAppend(s, adf, partitionBy, clusterBy, clusterFiles,
-          bloomBy, bloomBits)
+          bloomBy, bloomBits, streamTxn)
         staged = Some((rules, gen ++ advanced, st, evolvedSchemaOf(s, adf.schema)._1))
       }
       val (_, genOut, st, stagedSchema) = staged.get
@@ -1387,38 +1294,46 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       validated = reEnforceOnRetry(s, fsI, mergeSchema, validated,
         "commitAppend")
       val (sjI, wdI) = evolvedSchemaOf(s, fsI)
-      if (claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sjI),
+      val won = claim(s, Entry(s.next, st.dir, adds = st.adds, schemaStr = Some(sjI),
           partitionColumns = partitionBy, generated = Some(genOut),
           streamTxn = streamTxn, widened = wdI,
-          domains = writeDomains(s, clusterBy, declaredBloomBy, bloomBits))))
-        return s.next
+          domains = writeDomains(s, clusterBy, declaredBloomBy, bloomBits)))
+      if (won.isDefined) return won.get
     }
     -1L // unreachable
   }
 
   /** Streaming APPEND cursored on the (appId, batchId) txn action — the
-    * Delta idempotent-writer pattern, and the streaming entry point for
-    * tables whose log did not start with the stream (metadata commits,
-    * OCC writers, identity declarations shift version numbers away from
-    * batchIds, which the [[process]] protocol cannot tolerate). A
-    * replayed micro-batch sees its batchId at or below the committed
-    * cursor and no-ops; otherwise the batch commits through the full
-    * [[commitAppend]] OCC path — identity assignment included — with
-    * the cursor riding the same commit atomically. One streaming writer
-    * per `streamAppId` (Spark's guarantee); concurrent OCC writers on
-    * other appIds are safe. Returns the committed version, or -1 for a
-    * replay no-op. */
+    * Delta idempotent-writer pattern. A replayed micro-batch whose
+    * batchId is at or below the stream's committed cursor no-ops;
+    * otherwise the batch commits through the full [[commitAppend]] OCC
+    * path — identity assignment included — with the cursor riding the
+    * same commit atomically, at the log's next version. The cursor is
+    * re-checked in every claim attempt ([[claim]]), so of two concurrent
+    * replays of one batchId exactly one commits. Each `streamAppId`
+    * keeps its own cursor, so several streams and OCC writers can share
+    * a table. Data lands under `data/batch=<batchId>-<attempt>`.
+    * Returns the committed version, or -1 for a replay no-op. */
   def appendBatch(df: DataFrame, batchId: Long,
       streamAppId: String = appId, partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil, clusterFiles: Int = 8,
       bloomBy: Seq[String] = Nil, bloomBits: Int = 4096,
       mergeSchema: Boolean = false): Long = {
-    if (lastStreamBatch(streamAppId).exists(_ >= batchId)) return -1L
     val v = commitAppend(df, partitionBy, clusterBy, clusterFiles, bloomBy,
       bloomBits, mergeSchema = mergeSchema,
       streamTxn = Some(streamAppId -> batchId))
-    maybeAutoCompact(df.sparkSession)
+    if (v >= 0) maybeAutoCompact(df.sparkSession)
     v
+  }
+
+  /** foreachBatch body: [[appendBatch]] on this sink's appId.
+    * `partitionBy` columns produce hive-style subdirectories inside the
+    * batch dir (the Delta partitioned-table layout); `mergeSchema` opts
+    * this batch into schema evolution ([[enforceSchema]]). */
+  def process(df: DataFrame, batchId: Long, partitionBy: Seq[String] = Nil,
+      mergeSchema: Boolean = false): Unit = {
+    appendBatch(df, batchId, partitionBy = partitionBy, mergeSchema = mergeSchema)
+    ()
   }
 
   /** The domain-metadata delta a clustered write records — the Delta
@@ -1497,12 +1412,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   /** Publish one optimistic append's data files under a writer-unique
-    * dir — everything a claim needs, claiming left to the caller (plain
-    * appends blind-retry versions; identity appends pin the version to
-    * their watermark read). */
+    * dir — `batch=<batchId>-<attempt>` for a streaming batch, else
+    * `files/<uuid>` — everything a claim needs, claiming left to the
+    * caller (plain appends blind-retry versions; identity appends claim
+    * only on the snapshot their watermark came from). */
   private def stageAppend(s: Snapshot, gdf: DataFrame, partitionBy: Seq[String],
       clusterBy: Seq[String], clusterFiles: Int,
-      bloomBy: Seq[String], bloomBits: Int): Published = {
+      bloomBy: Seq[String], bloomBits: Int,
+      streamTxn: Option[(String, Long)]): Published = {
     // A clustered append runs TWO actions over the input (the quantile
     // sketch pass inside ZOrder.key, then the staged write): persist the
     // input so an expensive upstream query feeding the append computes
@@ -1513,9 +1430,14 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       .map(graft.operators.ZOrder.cluster(_, clusterBy, clusterFiles))
       .getOrElse(gdf)
     val uuid = java.util.UUID.randomUUID().toString
-    try publish(s, clustered, s"files/$uuid", partitionBy,
-      bloomBy.map(s.physicalOf), bloomBits, check = true)
-    finally pinned.foreach(_.unpersist(blocking = false))
+    val dir = streamTxn.fold(s"files/$uuid") { case (_, b) =>
+      s"batch=$b-${uuid.take(8)}" }
+    val pub =
+      try publish(s, clustered, dir, partitionBy,
+        bloomBy.map(s.physicalOf), bloomBits, check = true)
+      finally pinned.foreach(_.unpersist(blocking = false))
+    stagedHook()
+    pub
   }
 
   /** Optimistic read-modify-write transaction (Delta's OCC loop): reads
@@ -1596,7 +1518,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * Each attempt takes one snapshot and runs `attempt` on it, which
     * computes and publishes the transaction's output from that state and
     * returns how to render the entry to claim at a given snapshot's
-    * `next` version (None: nothing to commit, returns -1). It is
+    * `next` version (None: nothing to commit, returns -1; so does a
+    * claim that finds the entry's stream batch committed). It is
     * re-rendered per claim, so the schema union is re-derived — and
     * [[claim]] re-runs row-id allocation — against the claim's
     * snapshot; the rivals a lost claim met are the refreshed snapshot's
@@ -1623,7 +1546,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       txnStagedHook()
       var rebased = true
       while (rebased) {
-        if (claim(s, render(s))) return s.next
+        val won = claim(s, render(s))
+        if (won.isDefined) return won.get
         val fresh = snapshot()
         val rivals = fresh.entries.filter(_.version >= s.next)
         rivalLog ++= rivals
@@ -2708,6 +2632,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       if (mor) mergeDV(spark, updates, keys,
         streamTxn = Some(streamAppId -> batchId))
       else merge(spark, updates, keys, Some(streamAppId -> batchId)))
+      .filter(_ >= 0) // -1: a concurrent replay committed the batch first
 
   /** DELETE rows matching the predicate; snapshot-commit the remainder.
     * The deleted rows are recorded as the commit's change set.
@@ -3342,7 +3267,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def applyGenerated(s: Snapshot, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     // identity rules are NOT expressions: assignment happens in the
-    // append paths (assignIdentity), and snapshot transforms carry the
+    // append paths (assignFromPrep), and snapshot transforms carry the
     // already-assigned values through untouched
     val gen = s.aux.generated.filterNot(_._2.startsWith("IDENTITY("))
     if (gen.isEmpty) df
@@ -3377,30 +3302,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         (n, s.toLong, k.toLong, w.toLong, g != null)
     }
 
-  /** Assign contiguous identity values to every row of `df` from each
-    * rule's watermark. Two passes over a persisted frame: (1) count
-    * rows per partition, (2) value = watermark + step × (rows in
-    * earlier partitions + row index within this partition), with the
-    * within-partition index recovered from the low 33 bits of
-    * `monotonically_increasing_id` (its documented layout) and the
-    * per-partition base offsets broadcast-joined in — no global sort,
-    * no driver round-trip of data, contiguous ids (Delta guarantees
-    * only uniqueness/monotonicity; contiguity keeps the watermark
-    * growth bounded by row count). Both passes read the PERSISTED
-    * blocks, so they see one partitioning; the standard
-    * monotonically_increasing_id caveat applies — a nondeterministic
-    * upstream whose evicted blocks recompute differently between the
-    * passes should be checkpointed by the caller first. Returns the
-    * assigned frame, the advanced rules for the commit's metaData,
-    * and a release handle for the persist pin. */
-  private def assignIdentity(df: DataFrame,
-      rules: Seq[(String, Long, Long, Long, Boolean)])
-      : (DataFrame, Map[String, String], () => Unit) = {
-    val prep = prepareIdentity(df, rules.map(_._1))
-    val (assigned, advanced) = assignFromPrep(prep, rules)
-    (assigned, advanced, () => prep.release())
-  }
-
   /** The watermark-INDEPENDENT half of identity assignment: pin the
     * frame and measure per-partition counts once. Under OCC contention a
     * rival commit moving the watermark invalidates the assigned VALUES,
@@ -3428,6 +3329,20 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     IdentityPrep(pinned, offRows.toSeq, total)
   }
 
+  /** Assign contiguous identity values to every row of the prepared
+    * frame from each rule's watermark: value = watermark + step × (rows
+    * in earlier partitions + row index within this partition), with the
+    * within-partition index recovered from the low 33 bits of
+    * `monotonically_increasing_id` (its documented layout) and the
+    * per-partition base offsets broadcast-joined in — no global sort,
+    * no driver round-trip of data, contiguous ids (Delta guarantees
+    * only uniqueness/monotonicity; contiguity keeps the watermark
+    * growth bounded by row count). It reads the PERSISTED blocks the
+    * count pass measured, so both see one partitioning; the standard
+    * monotonically_increasing_id caveat applies — a nondeterministic
+    * upstream whose evicted blocks recompute differently should be
+    * checkpointed by the caller first. Returns the assigned frame and
+    * the advanced rules for the commit's metaData. */
   private[graft] def assignFromPrep(prep: IdentityPrep,
       rules: Seq[(String, Long, Long, Long, Boolean)])
       : (DataFrame, Map[String, String]) = {
@@ -3525,8 +3440,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val s = snapshot()
       metaClaimHook()
       val e = entryAt(s)
-      if (claim(s, e.copy(op = op, schemaStr = e.schemaStr.orElse(Some(metaSchemaJson(s))))))
-        return e.version
+      val won =
+        claim(s, e.copy(op = op, schemaStr = e.schemaStr.orElse(Some(metaSchemaJson(s)))))
+      if (won.isDefined) return won.get
     }
     -1L // unreachable
   }
@@ -4132,9 +4048,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** Where history was truncated: versions BELOW this may be missing
     * from the raw log (0 = never cleaned). Written before deletion so a
     * crash mid-cleanup can only over-report truncation (reads below the
-    * marker error), never under-report it (silently partial state). A
-    * log that merely STARTS above version 0 — a streaming writer whose
-    * first batchId is nonzero — is not truncation and sets no marker. */
+    * marker error), never under-report it (silently partial state).
+    * Claims are dense, so every log starts at version 0 and only
+    * cleanupLog removes its low versions. */
   private val TruncMarkerName = "_graft_log_truncated"
 
   private[graft] def truncatedBelow(): Long = snapshot().truncatedBelow

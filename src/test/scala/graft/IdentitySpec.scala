@@ -210,45 +210,56 @@ class IdentitySpec extends SparkSpecBase {
       .appendBatch(spark.range(0, 10).toDF("x"), batchId = 1L) == -1L)
   }
 
-  test("process() fails loudly when another STREAM's commit occupies its batch version") {
+  test("process(): a second stream's batch 0 commits beside the first stream's, each replay once") {
     val dir = tmp()
     val s1 = new ExactlyOnceSink(dir, appId = "stream-1")
     s1.process(spark.range(0, 10).toDF("x"), batchId = 0L)
-    // same-stream replay: no-op, data intact
+    // same-stream replay from a fresh handle: no-op, data intact
     new ExactlyOnceSink(dir, appId = "stream-1")
       .process(spark.range(0, 10).toDF("x"), batchId = 0L)
-    assert(new ExactlyOnceSink(dir).read(spark).count() == 10)
-    // a DIFFERENT stream misconfigured onto the same table must not have
-    // its batch silently swallowed as "already committed"
+    // a DIFFERENT stream keeps its own cursor: its batch 0 is new
     val s2 = new ExactlyOnceSink(dir, appId = "stream-2")
-    val e = intercept[IllegalArgumentException] {
-      s2.process(spark.range(100, 105).toDF("x"), batchId = 0L)
-    }
-    assert(e.getMessage.contains("foreign-stream"))
+    s2.process(spark.range(100, 105).toDF("x"), batchId = 0L)
+    s2.process(spark.range(100, 105).toDF("x"), batchId = 0L)
+    val r = new ExactlyOnceSink(dir)
+    assert(r.committedVersions() == Seq(0L, 1L))
+    assert(r.read(spark).select("x").as[Long].collect().sorted.toSeq ==
+      (0L until 10L) ++ (100L until 105L))
+    assert(r.lastStreamBatch("stream-1") == Some(0L))
+    assert(r.lastStreamBatch("stream-2") == Some(0L))
   }
 
-  test("process() fails loudly when its batch version is occupied by a non-stream commit") {
+  test("process(): compaction and metadata commits between batches, then a replay commits exactly once") {
     val dir = tmp()
     val sink = new ExactlyOnceSink(dir)
-    sink.setIdentityColumn(spark, "rid") // occupies version 0
-    val e = intercept[IllegalArgumentException] {
-      sink.process(spark.range(0, 10).toDF("x"), batchId = 0L)
+    sink.setIdentityColumn(spark, "rid") // version 0: metadata
+    sink.process(spark.range(0, 10).toDF("x").coalesce(1), batchId = 0L)
+    sink.process(spark.range(10, 20).toDF("x").coalesce(1), batchId = 1L)
+    // maintenance and a metadata commit take the versions batch 2 and 3
+    // would have had under version = batchId
+    assert(sink.compactSmall(spark) > 0)
+    sink.setDomainMetadata("app.note", Map("k" -> "v"))
+    sink.process(spark.range(20, 30).toDF("x").coalesce(1), batchId = 2L)
+    val versions = sink.committedVersions()
+    assert(versions == (0L to 5L))
+    // replays of every batch, from this handle and a fresh one
+    (0 until 3).foreach { b =>
+      sink.process(spark.range(b * 10L, b * 10L + 10).toDF("x"), batchId = b)
+      new ExactlyOnceSink(dir)
+        .process(spark.range(b * 10L, b * 10L + 10).toDF("x"), batchId = b)
     }
-    assert(e.getMessage.contains("appendBatch"))
+    assert(sink.committedVersions() == versions)
+    assert(sink.read(spark).select("x").as[Long].collect().sorted.toSeq ==
+      (0L until 30L))
+    assert(idVals(sink) == (1L to 30L).toSeq)
   }
 
   test("auto-compaction bounds the streaming file count; state and CDC intact") {
     import org.apache.spark.sql.functions.lit
     val dir = tmp()
     val sink = new ExactlyOnceSink(dir, autoCompactEvery = 4)
-    // the version-pinned process() protocol refuses the knob loudly —
-    // packing commits would squat on batch version slots
-    val e = intercept[IllegalArgumentException] {
-      sink.process(spark.range(0, 1).toDF("x"), batchId = 0L)
-    }
-    assert(e.getMessage.contains("appendBatch"))
     (0 until 12).foreach { i =>
-      sink.appendBatch(
+      sink.process(
         spark.range(i * 10L, i * 10L + 10).toDF("x").coalesce(1), batchId = i)
     }
     val d = sink.read(spark)
@@ -403,5 +414,57 @@ class IdentitySpec extends SparkSpecBase {
       "source sequence was disturbed by the clone's append")
     assert(idVals(clone) == (1L to 15L).toSeq,
       "clone state leaked from the source's later append")
+  }
+
+  test("a stream starting at batch 7 on an empty table commits version 0: the log stays gap-free") {
+    val sink = new ExactlyOnceSink(tmp())
+    sink.process(spark.range(0, 5).toDF("x"), 7L)
+    assert(sink.committedVersions() == Seq(0L))
+    assert(sink.lastStreamBatch("graft-sink") == Some(7L))
+  }
+
+  /** Two instances with one appId race a replay of batch 3: A stages,
+    * and while it does, B (the replacement driver) commits batch 3. A's
+    * claim must then find its batch under the cursor and commit
+    * nothing. `run(sink, batch)` drives one instance; returns the
+    * table's reader. */
+  private def zombieReplay(setup: ExactlyOnceSink => Unit)(
+      run: (ExactlyOnceSink, org.apache.spark.sql.DataFrame) => Unit): ExactlyOnceSink = {
+    val dir = tmp()
+    setup(new ExactlyOnceSink(dir, appId = "s"))
+    val before = new ExactlyOnceSink(dir).committedVersions()
+    val a = new ExactlyOnceSink(dir, appId = "s")
+    val b = new ExactlyOnceSink(dir, appId = "s")
+    def batch = spark.range(0, 10).toDF("x")
+    a.stagedHook = () => {
+      a.stagedHook = () => () // fire once
+      run(b, batch)
+    }
+    run(a, batch)
+    val r = new ExactlyOnceSink(dir)
+    assert(r.committedVersions() == before :+ before.size.toLong,
+      s"batch 3 did not commit exactly once: ${r.committedVersions()}")
+    assert(r.read(spark).select("x").as[Long].collect().sorted.toSeq == (0L until 10L))
+    assert(r.lastStreamBatch("s") == Some(3L))
+    r
+  }
+
+  test("concurrent replays of one batch commit once: appendBatch") {
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    zombieReplay(_ => ())((s, df) => got += s.appendBatch(df, 3L))
+    // B returns first (inside A's staging), then A
+    assert(got.toSeq == Seq(0L, -1L))
+  }
+
+  test("concurrent replays of one batch commit once: process") {
+    zombieReplay(_ => ())((s, df) => s.process(df, 3L))
+  }
+
+  test("concurrent replays of one batch commit once: contiguous identity") {
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val r = zombieReplay(_.setIdentityColumn(spark, "rid"))((s, df) =>
+      got += s.appendBatch(df, 3L))
+    assert(got.toSeq == Seq(1L, -1L))
+    assert(idVals(r) == (1L to 10L).toSeq)
   }
 }

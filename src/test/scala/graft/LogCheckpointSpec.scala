@@ -334,32 +334,23 @@ class LogCheckpointSpec extends SparkSpecBase {
         "timestampAsOf/history monotonicity would break on a skewed host")
   }
 
-  test("process() below the truncation marker: checkpoint-verified own batch no-ops, unverifiable refuses") {
+  test("process() replay of a batch reclaimed by cleanupLog no-ops from a fresh handle; table unchanged") {
     val dir = tmp()
     val sink = new ExactlyOnceSink(dir, checkpointInterval = 5)
-    // version 0: a NON-stream commit — the occupant kind the guard must
-    // keep refusing even when it survives in the checkpoint
-    sink.commitAppend(Seq((100L, "occ")).toDF("id", "x"))
+    sink.commitAppend(Seq((100L, "occ")).toDF("id", "x")) // v0: not a stream batch
     (1 until 10).foreach(i =>
       sink.process(Seq((i.toLong, s"r$i")).toDF("id", "x"), i.toLong))
     sink.cleanupLog(minAgeMs = 0) // anchor = ckpt 5; raw 0..4 reclaimed
-    // replay of a batch whose raw entry still exists: silent no-op
-    sink.process(Seq((7L, "dup")).toDF("id", "x"), 7L)
-    // replay of a RECLAIMED batch that IS verifiably this stream's
-    // commit (its entry, txn included, survives in checkpoint 5): a
-    // provable exactly-once no-op — a lagging/restored streaming
-    // checkpoint must not abort the query here
-    sink.process(Seq((2L, "dup")).toDF("id", "x"), 2L)
-    // ... from a FRESH handle too (same appId = same stream identity)
-    new ExactlyOnceSink(dir, checkpointInterval = 5)
-      .process(Seq((3L, "dup")).toDF("id", "x"), 3L)
-    // version 0 is below the marker but NOT a stream batch: re-staging
-    // it would write an orphan duplicate — must keep failing loudly
-    val e = intercept[RuntimeException] {
-      sink.process(Seq((0L, "dup")).toDF("id", "x"), 0L)
-    }
-    assert(e.getMessage.contains("truncation marker"))
+    assert(sink.truncatedBelow() == 5L)
+    val versions = sink.committedVersions()
+    // replays of reclaimed batches (their entries survive only in
+    // checkpoint 5) and of one whose raw entry still exists, each from a
+    // FRESH handle: the stream cursor, not the raw log, says they are in
+    Seq(2L, 3L, 7L).foreach(b =>
+      new ExactlyOnceSink(dir, checkpointInterval = 5)
+        .process(Seq((b, "dup")).toDF("id", "x"), b))
     val reader = new ExactlyOnceSink(dir)
+    assert(reader.committedVersions() === versions)
     assert(ids(reader.read(spark)) === ((1L until 10L) :+ 100L),
       "no replay may have changed table state")
   }
