@@ -154,7 +154,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   // staging + stats
   // ---------------------------------------------------------------------
 
-  /** Write df to a staging dir. With `check` (every DATA write path; change-row staging opts out —
+  /** Write df to a staging dir and return the (physical) schema it
+    * wrote. With `check` (every DATA write path; change-row staging opts out —
     * CDC preimages are historical rows, not new writes), the table's
     * active CHECK constraints are enforced PER ROW inside the write
     * tasks themselves via a short-circuiting filter: `cons OR
@@ -163,7 +164,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * aborts the job before anything commits — the Delta CHECK
     * constraint behavior (write-time, transactional). */
   private def stage(s: Snapshot, df: DataFrame, staging: Path,
-      partitionBy: Seq[String], check: Boolean = true): Unit = {
+      partitionBy: Seq[String], check: Boolean = true): StructType = {
     import org.apache.spark.sql.functions._
     val cons = if (check) s.aux.constraints else Map.empty[String, String]
     val checked = cons.toSeq.sortBy(_._1).foldLeft(df) { case (d, (n, e)) =>
@@ -181,6 +182,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val writer = physical.write.mode("overwrite")
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(staging.toString)
+    physical.schema
   }
 
   /** Per-file (path, min/max column stats, row count, byte size) read
@@ -237,53 +239,50 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * (ingest order rarely clusters ids), but a ~1 KB bloom in the commit
     * log prunes every file that definitely lacks the value.
     *
-    * One Spark pass over the staged files, grouped by `_metadata
-    * .file_path`: k=3 probes of xxhash64(seed, value-as-string) set bits
-    * in a `bits`-wide bitmap held as 64-bit words, OR-merged per file by
-    * `bit_or` aggregates — all public, codegen'd functions. `bits` is a
-    * writer knob; a real deployment sizes it from expected distinct
-    * count and target FPP exactly as Delta's index does.
+    * Each row explodes the k=3 probe positions of every bloom column,
+    * `(column index, p = pmod(xxhash64(j, value-as-string), bits))` — a
+    * null value hashes as the seed `j` alone — and one aggregate grouped
+    * by `(_metadata.file_path, column, p / 64)` ORs `1L << (p % 64)` into
+    * each touched word; the driver lays each file's words out as an
+    * `Array[Long](bits / 64)`, words no probe touched left 0. The staged
+    * dir is read with the schema the write used (`schema`), so no
+    * inference job runs. `bits` is a writer knob; a real deployment
+    * sizes it from expected distinct count and target FPP exactly as
+    * Delta's index does.
     *
-    * Cost model: this is one EXTRA full read of the staged output, paid
-    * by every bloom-striped write AND by every rewrite that honors the
-    * recorded policy (OPTIMIZE, CoW snapshot, MOR new files) —
-    * O(rewritten bytes), unavoidable on public APIs because the parquet
-    * writer exposes no per-task accumulator hook to fold the bitmap
-    * during the write itself. The policy's price is therefore ~2×
-    * read-amplification on rewrites of bloom-striped tables; size
-    * `bits` and the policy's column set accordingly. */
-  private def fileBlooms(spark: SparkSession, staging: Path,
+    * Cost model: the plan has 3 probe expressions per bloom column
+    * whatever `bits` is, so planning and codegen stay small; the price
+    * is one EXTRA full read of the staged output, paid by every
+    * bloom-striped write AND by every rewrite that honors the recorded
+    * policy (OPTIMIZE, CoW snapshot, MOR new files) — O(rewritten
+    * bytes), unavoidable on public APIs because the parquet writer
+    * exposes no per-task accumulator hook to fold the bitmap during the
+    * write itself. */
+  private def fileBlooms(spark: SparkSession, staging: Path, schema: StructType,
       cols0: Seq[String], bits: Int): Map[String, Map[String, Array[Long]]] = {
-    if (cols0.isEmpty) return Map.empty
-    import org.apache.spark.sql.functions._
-    val words = bits / 64
-    val df = spark.read.parquet(staging.toString)
     // columns absent from the staged frame (e.g. DROPped since the
     // policy was recorded) simply get no bloom — readers keep a
     // bloom-less file conservatively, same contract as stats
-    val cols = cols0.filter(df.columns.contains)
+    val cols = cols0.filter(schema.fieldNames.contains)
     if (cols.isEmpty) return Map.empty
-    val aggs = for { c <- cols; w <- 0 until words } yield {
-      val contrib = (0 until 3).map { j =>
-        val p = pmod(xxhash64(lit(j), col(c).cast("string")), lit(bits))
-        when((p / 64).cast("int") === w,
-          call_function("shiftleft", lit(1L), (p % 64).cast("int")))
-          .otherwise(0L)
-      }.reduce(_.bitwiseOR(_))
-      bit_or(contrib).as(s"${c}__$w")
-    }
+    require(bits >= 64 && bits % 64 == 0,
+      s"bloom bits must be a positive multiple of 64, got $bits")
+    import org.apache.spark.sql.functions._
+    val probes = for { (c, ci) <- cols.zipWithIndex; j <- 0 until 3 } yield
+      struct(lit(ci).as("c"),
+        pmod(xxhash64(lit(j), col(c).cast("string")), lit(bits)).as("p"))
+    val p = col("h.p")
     val base = java.nio.file.Paths.get(staging.toUri).toString
-    df.groupBy(col("_metadata.file_path").as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { row =>
-        val uri = java.net.URI.create(row.getString(0))
-        val abs = java.nio.file.Paths.get(uri.getPath).toString
-        val rel = abs.stripPrefix(base).stripPrefix("/").replace("\\", "/")
-        rel -> cols.zipWithIndex.map { case (c, ci) =>
-          c -> (0 until words)
-            .map(w => row.getLong(1 + ci * words + w)).toArray
-        }.toMap
-      }.toMap
+    spark.read.schema(schema).parquet(staging.toString)
+      .select(col("_metadata.file_path").as("f"), explode(array(probes: _*)).as("h"))
+      .groupBy(col("f"), col("h.c"), (p / 64).cast("int"))
+      .agg(bit_or(call_function("shiftleft", lit(1L), (p % 64).cast("int"))))
+      .collect().groupBy(_.getString(0)).map { case (f, rows) =>
+        val words = cols.map(_ => new Array[Long](bits / 64))
+        rows.foreach(r => words(r.getInt(1))(r.getInt(2)) = r.getLong(3))
+        val abs = java.nio.file.Paths.get(java.net.URI.create(f).getPath).toString
+        abs.stripPrefix(base).stripPrefix("/").replace("\\", "/") -> cols.zip(words).toMap
+      }
   }
 
   /** A write published under `data/<dir>`: its add actions (paths
@@ -301,9 +300,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def publish(s: Snapshot, df: DataFrame, dir: String, partitionBy: Seq[String],
       bloomCols: Seq[String], bloomBits: Int, check: Boolean): Published = {
     val staging = Paths.get(tableDir, ".staging-" + dir.replace('/', '-'))
-    stage(s, df, staging, partitionBy, check)
+    val schema = stage(s, df, staging, partitionBy, check)
     val perFile = fileStats(df.sparkSession, staging)
-    val blooms = fileBlooms(df.sparkSession, staging, bloomCols, bloomBits)
+    val blooms = fileBlooms(df.sparkSession, staging, schema, bloomCols, bloomBits)
     val target = dataDir.resolve(dir)
     Files.createDirectories(target.getParent)
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
@@ -1270,6 +1269,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       Map[String, String], Published, String)] = None
     while (true) {
       val s = snapshot()
+      // a concurrent replay of this stream batch won: no-op before any
+      // re-assign and re-stage
+      if (replayed(s, streamTxn)) return -1L
       val gen = s.aux.generated
       val rules = identityRules(s)
       if (!staged.exists(_._1 == rules)) {
@@ -2448,16 +2450,16 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   /** Bloom-pruned point lookup: keep only files whose recorded bloom
     * filter might contain `value` on `column` (plus files with no bloom —
-    * skipping stays conservative). The k probe positions recompute the
-    * writer's hash via one trivial 1-row Spark job, guaranteeing the
-    * exact same xxhash64 both sides. A definite miss (any probed bit
-    * clear) excludes the file — the pruning a high-cardinality equality
-    * probe needs when per-file [min,max] ranges all overlap. */
+    * skipping stays conservative). The k probe positions evaluate the
+    * writer's own Catalyst expression, `xxhash64(j, value)`, on the
+    * driver — the exact same hash both sides, and no Spark job. A
+    * definite miss (any probed bit clear) excludes the file — the
+    * pruning a high-cardinality equality probe needs when per-file
+    * [min,max] ranges all overlap. */
   def readLookup(spark: SparkSession, column: String, value: String): DataFrame = {
-    import org.apache.spark.sql.functions.{lit, xxhash64}
-    val hashes = spark.range(1).select(
-      (0 until 3).map(j => xxhash64(lit(j), lit(value)).as(s"h$j")): _*)
-      .head().toSeq.map(_.asInstanceOf[Long])
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val hashes = (0 until 3).map(j =>
+      new XxHash64(Seq(Literal(j), Literal(value))).eval().asInstanceOf[Long])
     val s = snapshot()
     val ph = s.physicalOf(column)
     readAddFiles(spark, s) { a =>
@@ -3900,7 +3902,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         .filter(c => c.adds.forall(a => !a.path.contains("/")))
         .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
         .filterNot { case (k, _) => ts.removed(k) }
-        .map { case (k, a) => (k, a, Files.size(dataDir.resolve(k))) }
+        // legacy adds record no size: stat those files only
+        .map { case (k, a) => (k, a, a.bytes.getOrElse(Files.size(dataDir.resolve(k)))) }
         .filter(_._3 < targetBytes)
       val cands = candAdds.map(t => (t._1, t._3))
       if (cands.size < minFiles) None

@@ -462,9 +462,12 @@ class IdentitySpec extends SparkSpecBase {
 
   test("concurrent replays of one batch commit once: contiguous identity") {
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val restages0 = ExactlyOnceSink.identityRestages.get()
     val r = zombieReplay(_.setIdentityColumn(spark, "rid"))((s, df) =>
       got += s.appendBatch(df, 3L))
     assert(got.toSeq == Seq(1L, -1L))
     assert(idVals(r) == (1L to 10L).toSeq)
+    // the losing replay no-ops on the cursor, never re-stages the batch
+    assert(ExactlyOnceSink.identityRestages.get() == restages0)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.streaming.ExactlyOnceSink
+import graft.streaming.{Entry, ExactlyOnceSink}
 
 /** compactSmall — incremental OPTIMIZE (bin-pack small files via
   * remove actions, no table rewrite): state preservation, live-file
@@ -85,6 +85,33 @@ class IncrementalOptimizeSpec extends SparkSpecBase {
     val v = sink.compactSmall(spark, targetBytes = 4096)
     assert(v >= 0)
     assert(big.subsetOf(liveFiles(sink)), "big files must not be rewritten")
+    assert(ids(sink.read(spark)).size === 5002)
+  }
+
+  test("candidates are picked by recorded size; a legacy add without one is statted") {
+    val (writer, dir) = newSink("bytes")
+    writer.commitAppend(spark.range(0, 5000).select(col("id"),
+      lit("p").as("x")).coalesce(1))
+    writer.commitAppend(Seq((9000L, "q")).toDF("id", "x").coalesce(1))
+    writer.commitAppend(Seq((9001L, "r")).toDF("id", "x").coalesce(1))
+    val log = Paths.get(dir, "_graft_log")
+    def entry(v: Long) = Entry.parse(Files.readString(log.resolve(f"$v%020d.json")))
+    val sizes = (0L to 2L).flatMap { v =>
+      val e = entry(v)
+      e.adds.map(a => s"${e.dir}/${a.path}" -> Files.size(Paths.get(dir, "data", e.dir, a.path)))
+    }
+    // every add records its on-disk size
+    assert((0L to 2L).flatMap(entry(_).adds.map(_.bytes)) == sizes.map(t => Some(t._2)))
+    val small = sizes.collect { case (k, b) if b < 4096 => k }.toSet
+    assert(small.size == 2 && sizes.size == 3)
+    // the big file's add becomes a legacy one that records no size
+    val e0 = log.resolve(f"${0L}%020d.json")
+    Files.writeString(e0, Files.readString(e0).replaceAll(",\"bytes\":\\d+", ""))
+    assert(entry(0).adds.map(_.bytes) == Seq(None))
+    val sink = new ExactlyOnceSink(dir)
+    val v = sink.compactSmall(spark, targetBytes = 4096)
+    assert(v >= 0)
+    assert(entry(v).removes.toSet == small, "OPTIMIZE picked other candidates")
     assert(ids(sink.read(spark)).size === 5002)
   }
 
