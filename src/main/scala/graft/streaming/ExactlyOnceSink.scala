@@ -1466,9 +1466,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * version committed. `None` changes mean "no logical change"
     * (compact — a physical rewrite). */
   private def transactSnapshotChanges(spark: SparkSession, op: String,
-      maxRetries: Int = 20, streamTxn: Option[(String, Long)] = None)
+      maxRetries: Int = 20, streamTxn: Option[(String, Long)] = None,
+      first: Option[Snapshot] = None)
       (f: DataFrame => (DataFrame, Option[DataFrame])): Long =
-    occTransact(s"transactSnapshot($op)", maxRetries) { s =>
+    occTransact(s"transactSnapshot($op)", maxRetries, first = first) { s =>
       // the version whose state `f` reads: a WriteSerializable re-claim
       // moves the claimed version past rival pure appends while the base
       // — and the published output — stay fixed (the appends remain
@@ -1534,13 +1535,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * them) and the attempt recomputes, at most `maxRetries` times.
     * Verbs that re-point the WHOLE live set (RESTORE, the row-tracking
     * backfill) pass `rebase = false`: re-claiming their entry past a
-    * rival append would silently drop the rival's rows. */
-  private def occTransact(verb: String, maxRetries: Int, rebase: Boolean = true)(
+    * rival append would silently drop the rival's rows. A verb that took
+    * its snapshot just before passes it as `first`, and the first attempt
+    * runs on it instead of listing the log again. */
+  private def occTransact(verb: String, maxRetries: Int, rebase: Boolean = true,
+      first: Option[Snapshot] = None)(
       attempt: Snapshot => Option[Snapshot => Entry]): Long = {
     var recomputes = 0
     val rivalLog = scala.collection.mutable.ArrayBuffer.empty[Entry]
+    var pending = first
     while (true) {
-      var s = snapshot()
+      var s = pending.getOrElse(snapshot())
+      pending = None
       val render = attempt(s) match {
         case Some(r) => r
         case None => return -1L
@@ -1718,10 +1724,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       dropMat(toLogical(live, scanCommits(spark, commits, explicit, batch = true,
         pos = false, mergeSchema)(_ => true)))
     else {
-      val scanned = scanWithPos(spark, live, commits, ts, mergeSchema,
+      val scanned = scanWithPos(spark, live, commits, ts, mergeSchema = mergeSchema,
         explicit = explicit)
       if (scanned.columns.isEmpty) scanned // every file removed
-      else dropMat(applyTombstones(scanned, ts).drop(FileCol, RidxCol))
+      else dropMat(scanned.drop(FileCol, RidxCol))
     }
   }
 
@@ -1840,8 +1846,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       reader: Option[org.apache.spark.sql.DataFrameReader], batch: Boolean,
       pos: Boolean, mergeSchema: Boolean = false)
       (keep: String => Boolean): DataFrame = {
-    def flat(c: Entry): Boolean =
-      c.restoreDirs.isEmpty && c.adds.forall(a => !a.path.contains("/"))
     def kept(cs: Seq[Entry]): Seq[String] =
       cs.flatMap(c => c.adds.map(a => addKey(c, a))).filter(keep)
     val versions = commits.flatMap(c =>
@@ -1864,19 +1868,31 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     else frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
   }
 
-  /** [[read]]'s scan plus the file key and row position of every row
-    * (the columns tombstone subtraction needs). Flat commits prune
-    * REMOVED files out of the scan itself — after a merge-on-read
-    * remove or an incremental OPTIMIZE, retired files are not even
-    * listed; the remove anti-join then only covers dir-granular
-    * (hive/restore) commits. Returns an empty frame when every file is
-    * retired. */
+  /** A commit whose add files are read one by one: not a RESTORE, and
+    * no add under a (hive partition) subdirectory. The others are read
+    * dir by dir. */
+  private def flat(c: Entry): Boolean =
+    c.restoreDirs.isEmpty && c.adds.forall(a => !a.path.contains("/"))
+
+  /** The files of `commits` passing `keep`, with the file key and row
+    * position of every row and the tombstones `ts` subtracted — the
+    * scan behind [[read]], [[scanWithRowMeta]] and [[probeScan]]. Flat
+    * commits drop REMOVED files from the scan list itself (after a
+    * merge-on-read remove or an incremental OPTIMIZE, retired files are
+    * not even listed), so the remove anti-join only carries the removes
+    * a dir-granular (hive/restore) read can still see; a table of flat
+    * commits pays no remove join at all. Returns an empty frame when
+    * every file is retired or pruned. */
   private def scanWithPos(spark: SparkSession, live: Snapshot, commits: Seq[Entry],
-      ts: Tombstones, mergeSchema: Boolean = false,
-      explicit: Option[org.apache.spark.sql.DataFrameReader] = None)
-      : DataFrame =
-    toLogical(live, scanCommits(spark, commits, explicit, batch = true, pos = true,
-      mergeSchema)(k => !ts.removed.contains(k)))
+      ts: Tombstones, batch: Boolean = true, mergeSchema: Boolean = false,
+      explicit: Option[org.apache.spark.sql.DataFrameReader] = None,
+      keep: String => Boolean = _ => true): DataFrame = {
+    val scanned = toLogical(live, scanCommits(spark, commits, explicit, batch,
+      pos = true, mergeSchema)(k => !ts.removed.contains(k) && keep(k)))
+    if (scanned.columns.isEmpty) scanned
+    else applyTombstones(scanned, ts.copy(removed = ts.removed --
+      commits.filter(flat).flatMap(c => c.adds.map(addKey(c, _)))))
+  }
 
   /** Subtract tombstones from a [[scanWithPos]] frame: one broadcast
     * anti-join on the file key for whole-file removes, one on (file,
@@ -2070,8 +2086,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       explicit = if (at.isEmpty) physicalReadSchema(live)
         .map(_ => flatReader(spark, live)) else None)
     if (scanned.columns.isEmpty) return scanned
-    withResolvedMat(applyTombstones(scanned, ts), commits)
-      .drop(FileCol, RidxCol)
+    withResolvedMat(scanned, commits).drop(FileCol, RidxCol)
   }
 
   /** [[liveData]] with row ids materialized into the reserved columns
@@ -2557,9 +2572,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       streamTxn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val s0 = snapshot()
+    if (replayed(s0, streamTxn)) return -1L
     enforceSchema(s0, updates.schema, mergeSchema = false, "merge")
     val updatesC = conformToTable(s0, updates)
-    transactSnapshotChanges(spark, "MERGE", streamTxn = streamTxn) { current =>
+    transactSnapshotChanges(spark, "MERGE", streamTxn = streamTxn, first = Some(s0)) { current =>
       if (current.isEmpty) {
         (updatesC, Some(updatesC.withColumn("_change_type", lit("insert"))))
       } else {
@@ -2628,13 +2644,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * version, or None for a skipped replay. */
   def mergeBatch(spark: SparkSession, updates: DataFrame, keys: Seq[String],
       batchId: Long, streamAppId: String = appId,
-      mor: Boolean = false): Option[Long] =
-    if (lastStreamBatch(streamAppId).exists(_ >= batchId)) None
-    else Some(
-      if (mor) mergeDV(spark, updates, keys,
-        streamTxn = Some(streamAppId -> batchId))
-      else merge(spark, updates, keys, Some(streamAppId -> batchId)))
-      .filter(_ >= 0) // -1: a concurrent replay committed the batch first
+      mor: Boolean = false): Option[Long] = {
+    val txn = Some(streamAppId -> batchId)
+    // -1: the batch is at or below the stream's cursor, on the merge's
+    // own snapshot or at its claim (a concurrent replay committed first)
+    Some(if (mor) mergeDV(spark, updates, keys, streamTxn = txn)
+      else merge(spark, updates, keys, txn)).filter(_ >= 0)
+  }
 
   /** DELETE rows matching the predicate; snapshot-commit the remainder.
     * The deleted rows are recorded as the commit's change set.
@@ -2674,8 +2690,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def deleteDV(spark: SparkSession, predicate: org.apache.spark.sql.Column,
       dvMaxRows: Int = 100000, maxRetries: Int = 20): Long = {
     import org.apache.spark.sql.functions.lit
-    if (snapshot().live.isEmpty) return -1L
-    morCommit(spark, "DELETE_MOR", dvMaxRows, maxRetries, None) { statePos =>
+    val s0 = snapshot()
+    if (s0.live.isEmpty) return -1L
+    morCommit(spark, "DELETE_MOR", dvMaxRows, maxRetries, None, first = Some(s0)) { statePos =>
       val doomed = statePos.filter(predicate)
       (doomed, None,
         doomed.drop(FileCol, RidxCol).withColumn("_change_type", lit("delete")))
@@ -2688,63 +2705,57 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * as new files — one commit, cost O(matched files + |updates|)
     * instead of [[merge]]'s O(table) rewrite. This is the verb a
     * STREAMING upsert pipeline must use at scale: each micro-batch
-    * touches only the files containing its keys. `updates` is
-    * broadcast for the match probe, so it should be micro-batch-sized
-    * (the streaming case by construction). CDC change rows (insert /
-    * update_preimage / update_postimage) are recorded exactly as
-    * [[merge]] records them. */
+    * touches only the files containing its keys. The keys of `updates`
+    * are collected to the driver for the match probe, so it should be
+    * micro-batch-sized (the streaming case by construction). CDC change
+    * rows (insert / update_preimage / update_postimage) are recorded
+    * exactly as [[merge]] records them. Returns the committed version,
+    * or -1 when `streamTxn`'s batch is already at or below its stream's
+    * cursor. */
   def mergeDV(spark: SparkSession, updates0: DataFrame, keys: Seq[String],
       dvMaxRows: Int = 100000, maxRetries: Int = 20,
       streamTxn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, lit, min, when}
     val s0 = snapshot()
+    if (replayed(s0, streamTxn)) return -1L
     enforceSchema(s0, updates0.schema, mergeSchema = false, "mergeDV")
     val updates = applyGenerated(s0, conformToTable(s0, updates0))
     if (s0.live.isEmpty)
       return merge(spark, updates, keys, streamTxn)
-    // the source's per-key-column bounds prune the probe to files whose
-    // stats ranges intersect (one tiny agg job on the micro-batch-sized
-    // source; non-numeric keys contribute no bound — conservative)
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-    val aggs = keys.flatMap(k => Seq(
-      fmin(col(k)).cast("double").as(s"__lo_$k"),
-      fmax(col(k)).cast("double").as(s"__hi_$k")))
-    val bRow = updates.agg(aggs.head, aggs.tail: _*).head()
-    val bounds = keys.zipWithIndex.flatMap { case (k, i) =>
-      if (bRow.isNullAt(2 * i) || bRow.isNullAt(2 * i + 1)) None
-      else Some(k -> (bRow.getDouble(2 * i), bRow.getDouble(2 * i + 1)))
+    // the update keys, collected once and deduped on the driver: they
+    // build the probe's semi-join relation and its pruning bounds. Only
+    // numeric key columns (their values are Numbers) bound the probe — a
+    // string's stats are lexicographic, so "2" lies outside a file's
+    // ["10", "3"] as a number
+    val keyDf = updates.select(keys.map(col): _*)
+    val keyRows = keyDf.collect().distinct.toSeq
+    val bounds = keyDf.columns.indices.flatMap { i =>
+      val ds = keyRows.map(_.get(i)).collect { case n: Number => n.doubleValue }
+      Option.when(ds.nonEmpty)(keyDf.columns(i) -> (ds.min, ds.max))
     }.toMap
-    morCommit(spark, "MERGE_MOR", dvMaxRows, maxRetries, streamTxn,
-        keyBounds = bounds) { statePos =>
-      val keyRel = updates.select(keys.map(col): _*).distinct()
+    val keyRel = spark.createDataFrame(keyRows.asJava, keyDf.schema)
+    morCommit(spark, "MERGE_MOR", dvMaxRows, maxRetries, streamTxn, bounds,
+        Some(s0)) { statePos =>
       val doomed = statePos.join(broadcast(keyRel), keys, "left_semi")
-      // matched keys ARE doomed's keys (cached by morCommit), so the
-      // insert/postimage split broadcasts them instead of re-scanning
-      // the table's key column
-      val doomedKeys = doomed.select(keys.map(col): _*).distinct()
-      val inserted = updates.join(broadcast(doomedKeys), keys, "left_anti")
-        .withColumn("_change_type", lit("insert"))
-      val pre = doomed.drop(FileCol, RidxCol)
-        .withColumn("_change_type", lit("update_preimage"))
-      val post = updates.join(broadcast(doomedKeys), keys, "left_semi")
-        .withColumn("_change_type", lit("update_postimage"))
-      // row tracking: an UPDATED row KEEPS its id — attach the matched
-      // target row's resolved id to the update row (min() pins a
-      // deterministic survivor when several target rows share a key,
-      // which this merge collapses to one update row anyway). Its
-      // commit version is deliberately NOT carried: the new file's
-      // default — this commit — is the row's new rcv, Delta's rule.
-      // Inserted rows take null and read back fresh virtual ids.
-      val appendRows =
-        if (!statePos.columns.contains(MatIdCol)) updates
-        else updates.join(
-          broadcast(doomed.groupBy(keys.map(col): _*)
-            .agg(org.apache.spark.sql.functions.min(col(MatIdCol))
-              .as(MatIdCol))),
-          keys, "left")
-      (doomed, Some(appendRows),
-        inserted.unionByName(pre, allowMissingColumns = true)
-          .unionByName(post, allowMissingColumns = true))
+      // one left join of the updates to the matched keys tags every
+      // update row insert or update_postimage. Row tracking: an UPDATED
+      // row KEEPS its id — the join also attaches the matched target
+      // row's resolved id (min() pins a deterministic survivor when
+      // several target rows share a key, which this merge collapses to
+      // one update row anyway). Its commit version is deliberately NOT
+      // carried: the new file's default — this commit — is the row's new
+      // rcv, Delta's rule. Inserted rows take null and read back fresh
+      // virtual ids.
+      val tracked = statePos.columns.contains(MatIdCol)
+      val matched = doomed.groupBy(keys.map(col): _*).agg(lit(true).as("__matched"),
+        (if (tracked) Seq(min(col(MatIdCol)).as(MatIdCol)) else Nil): _*)
+      val joined = updates.join(broadcast(matched), keys, "left")
+      val changes = joined.withColumn("_change_type",
+          when(col("__matched"), lit("update_postimage")).otherwise(lit("insert")))
+        .select((updates.columns :+ "_change_type").map(col).toIndexedSeq: _*)
+        .unionByName(doomed.drop(FileCol, RidxCol)
+          .withColumn("_change_type", lit("update_preimage")), allowMissingColumns = true)
+      (doomed, Some(if (tracked) joined.drop("__matched") else updates), changes)
     }
   }
 
@@ -2771,6 +2782,26 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     finally r.close()
   }
 
+  /** The merge-on-read PROBE scan: live files of the pruned commits,
+    * with file/position helper columns, tombstones subtracted and no
+    * `batch` ([[scanWithPos]]). The surviving stat-pruned FILES of every
+    * flat commit (every commitAppend/morCommit output) are one
+    * [[scanCommits]] scan, so the probe plan — and its generated code —
+    * does not change from one merge to the next. Hive-partitioned and
+    * RESTORE commits scan dir-granular, one read per dir (reading leaf
+    * files directly would drop the partition columns; a restore's dirs
+    * come from different source commits, and unionByName type-coerces
+    * across a widening boundary that parquet's mergeSchema refuses —
+    * fuzz seed 12), and rely on the tombstone anti-join + row-group
+    * stats instead. */
+  private def probeScan(spark: SparkSession, s: Snapshot,
+      bounds: Map[String, (Double, Double)]): DataFrame = {
+    val stats = s.live.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats)).toMap
+    scanWithPos(spark, s, s.live, s.ts, batch = false,
+      explicit = physicalReadSchema(s).map(_ => flatReader(spark, s)), keep = k =>
+        bounds.forall { case (col, (lo, hi)) => mayIntersect(stats(k).get(col), lo, hi) })
+  }
+
   /** The merge-on-read OCC transaction core. `f` maps the live state
     * (WITH file/position helper columns) to:
     *
@@ -2781,43 +2812,26 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     *    updates), or None;
     *  - `changes`: the logical CDC change rows to record.
     *
-    * The writer persists only `doomed` (matched rows — small by
-    * assumption; the table itself is never cached), classifies each
-    * matched file via footer row counts, collects row positions ONLY
-    * for vector-tier files, rewrites kept rows of over-cap files with a
-    * properly file-pruned re-scan, and claims the next version with
-    * remove/dv/add actions plus the change dir. Conflicts recompute
+    * The state is the [[probeScan]], pruned by `keyBounds` (physical
+    * key column → numeric [lo, hi] of the keys the caller matches). The
+    * writer persists only `doomed` (matched rows — small by assumption;
+    * the table itself is never cached) and classifies every matched
+    * file in ONE aggregate grouped by file: its doomed-row count, and
+    * its positions only where that count is at most `dvMaxRows` (a
+    * larger count can only remove or rewrite the file). The file's
+    * recorded row count and existing vector pick the action
+    * ([[DeletionVectors.classify]]). Kept rows of over-cap files are
+    * rewritten from a re-scan of just those files; the claim carries
+    * remove/dv/add actions plus the change dir. `first` is the caller's
+    * snapshot, which the first attempt runs on. Conflicts recompute
     * from fresh state, exactly like [[transactSnapshotChanges]]. */
-  /** The merge-on-read PROBE scan: live files of the pruned commits,
-    * with file/position helper columns and no `batch`. The surviving
-    * stat-pruned FILES of every flat commit (every commitAppend/
-    * morCommit output) are one [[scanCommits]] scan, so the probe plan
-    * — and its generated code — does not change from one merge to the
-    * next. Hive-partitioned and RESTORE commits scan dir-granular, one
-    * read per dir (reading leaf files directly would drop the partition
-    * columns; a restore's dirs come from different source commits, and
-    * unionByName type-coerces across a widening boundary that parquet's
-    * mergeSchema refuses — fuzz seed 12), and rely on the tombstone
-    * anti-join + row-group stats instead. */
-  private def probeScan(spark: SparkSession, s: Snapshot,
-      bounds: Map[String, (Double, Double)]): DataFrame = {
-    val (commits, ts) = (s.live, s.ts)
-    val stats = commits.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats))
-      .toMap
-    toLogical(s, scanCommits(spark, commits,
-      physicalReadSchema(s).map(_ => flatReader(spark, s)), batch = false,
-      pos = true) { k =>
-      !ts.removed.contains(k) && bounds.forall { case (col, (lo, hi)) =>
-        mayIntersect(stats(k).get(col), lo, hi) }
-    })
-  }
-
   private def morCommit(spark: SparkSession, op: String, dvMaxRows: Int,
       maxRetries: Int, streamTxn: Option[(String, Long)],
-      keyBounds: Map[String, (Double, Double)] = Map.empty)
+      keyBounds: Map[String, (Double, Double)] = Map.empty,
+      first: Option[Snapshot] = None)
       (f: DataFrame => (DataFrame, Option[DataFrame], DataFrame)): Long = {
-    import org.apache.spark.sql.functions._
-    occTransact(op, maxRetries) { s =>
+    import org.apache.spark.sql.functions.{col, collect_list, count, lit, when}
+    occTransact(op, maxRetries, first = first) { s =>
       val commits = s.live
       val ts0 = s.ts
       // stat-pruned probe (the Delta MERGE file-skipping argument: a key
@@ -2839,44 +2853,36 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           if (!s.tracked) base
           else base.withColumn(MatIdCol, lit(null).cast("long"))
             .withColumn(MatRcvCol, lit(null).cast("long"))
-        } else {
-          val t = applyTombstones(probe, ts0)
-          // row tracking: hand f the matched-row scan with ids RESOLVED
-          // so an update can carry its target row's id into the new
-          // file (mergeDV's preservation join)
-          if (!s.tracked) t
-          else withResolvedMat(t, commits)
         }
+        // row tracking: hand f the matched-row scan with ids RESOLVED so
+        // an update can carry its target row's id into the new file
+        // (mergeDV's preservation join)
+        else if (!s.tracked) probe
+        else withResolvedMat(probe, commits)
       val (doomed0, appended, changes) = f(statePos)
       val doomed = doomed0.persist()
       try {
-        val counts = doomed.groupBy(col(FileCol)).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val perFile = doomed.groupBy(col(FileCol))
+          .agg(count(lit(1)).as("n"), collect_list(col(RidxCol)).as("idx"))
+          .select(col(FileCol), col("n"), when(col("n") <= dvMaxRows, col("idx")))
+          .collect().map(r => r.getString(0) -> (r.getLong(1), Option(r.getSeq[Long](2))))
         // physical row counts from the add actions already in hand —
         // footer I/O only for legacy adds that never recorded `rows`
         val rowsByKey: Map[String, Long] = commits.flatMap(c =>
           c.adds.flatMap(a => a.rows.map(addKey(c, a) -> _))).toMap
-        val actions = counts.map { case (k, n) =>
+        val actions = perFile.map { case (k, (n, _)) =>
           k -> DeletionVectors.classify(n,
             ts0.dv.get(k).map(_.length.toLong).getOrElse(0L),
             rowsByKey.getOrElse(k, fileRowCount(spark, k)), dvMaxRows)
-        }
-        val removeKeys = actions.collect {
-          case (k, DeletionVectors.Remove) => k }.toSeq.sorted
-        val dvKeys = actions.collect {
-          case (k, DeletionVectors.Vector) => k }.toSeq.sorted
-        val rewriteKeys = actions.collect {
-          case (k, DeletionVectors.Rewrite) => k }.toSeq.sorted
-        val dvNew: Map[String, Array[Long]] =
-          if (dvKeys.isEmpty) Map.empty
-          else doomed.filter(col(FileCol).isin(dvKeys: _*))
-            .groupBy(col(FileCol)).agg(collect_list(col(RidxCol)).as("idxs"))
-            .collect().map { r =>
-              val k = r.getString(0)
-              k -> DeletionVectors.union(
-                ts0.dv.getOrElse(k, Array.empty[Long]),
-                r.getSeq[Long](1).toArray)
-            }.toMap
+        }.toMap
+        def keysOf(a: DeletionVectors.FileAction) =
+          actions.collect { case (k, `a`) => k }.toSeq.sorted
+        val (removeKeys, rewriteKeys) = (keysOf(DeletionVectors.Remove),
+          keysOf(DeletionVectors.Rewrite))
+        val dvNew = perFile.collect {
+          case (k, (_, Some(idx))) if actions(k) == DeletionVectors.Vector =>
+            k -> DeletionVectors.union(ts0.dv.getOrElse(k, Array.empty[Long]), idx.toArray)
+        }.toMap
         // over-cap files: rewrite kept rows from a re-scan of JUST those
         // files (file-pruned at the source, unlike filtering the full
         // state scan), minus their existing DV rows and this commit's
@@ -3884,7 +3890,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def compactSmall(spark: SparkSession, targetBytes: Long = 128L << 20,
       minFiles: Int = 2, maxRetries: Int = 20,
       clusterBy: Seq[String] = Nil, clusterFiles: Int = 0): Long = {
-    import org.apache.spark.sql.functions.col
     // OPTIMIZE discovers the table's layout from the log when the caller
     // passes none: clustered writes record their PHYSICAL columns in the
     // `graft.clustering` domain, so an auto-compact (streaming-ingest
@@ -3898,8 +3903,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       val clusterCols =
         if (clusterBy.nonEmpty) clusterBy else activeClusterCols(s)
       val ts = s.ts
-      val candAdds = s.live
-        .filter(c => c.adds.forall(a => !a.path.contains("/")))
+      val candAdds = s.live.filter(flat)
         .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
         .filterNot { case (k, _) => ts.removed(k) }
         // legacy adds record no size: stat those files only
@@ -3910,15 +3914,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       else {
         val nOut = math.max(1,
           math.ceil(cands.map(_._2).sum.toDouble / targetBytes).toInt)
+        // only the candidates' vectors: no anti-join (and no position
+        // columns on an untracked table) when none carries one
+        val candKeys = cands.map(_._1).toSet
+        val dvs = ts.dv.filter(kv => candKeys(kv._1))
+        val tracked = s.tracked
         // one scan over files from DIFFERENT commits: explicit physical
         // schema — without it parquet would silently adopt one file's
         // schema and DROP the other commits' evolved columns
-        val scan = flatReader(spark, s)
-          .parquet(cands.map(c => dataDir.resolve(c._1).toString): _*)
-          .withColumn(FileCol, relKeyCol)
-          .withColumn(RidxCol, col("_metadata.row_index"))
-        val tracked = s.tracked
-        val live1 = applyTombstones(scan, Tombstones(Set.empty, ts.dv))
+        val scan = scanFiles(flatReader(spark, s), cands.map(_._1), Map.empty,
+          batch = false, pos = tracked || dvs.nonEmpty)
+        val live1 = applyTombstones(scan, Tombstones(Set.empty, dvs))
         // row tracking: the packed rows change (file, position), so pin
         // each one's id/commit-version into the materialization columns
         // before the positions are lost — OPTIMIZE preserves row ids

@@ -250,4 +250,15 @@ class DeletionVectorSpec extends SparkSpecBase {
       "classify opened parquet footers for row counts the log already records")
     assert(sink.read(spark).count() === 99)
   }
+
+  test("mergeDV finds a numeric-looking string key outside its file's numeric range") {
+    // the file's string stats are lexicographic ("10" to "3"), so "2" is
+    // inside them as a string but outside [10, 3] as a number: a bound
+    // taken from a string key would prune the file and leave both rows
+    val (sink, _) = newSink("string-key")
+    sink.commitAppend(Seq(("10", 1), ("2", 2), ("3", 3)).toDF("k", "v").coalesce(1))
+    sink.mergeDV(spark, Seq(("2", 20)).toDF("k", "v"), Seq("k"))
+    val live = sink.read(spark).select("k", "v").as[(String, Int)].collect().sorted
+    assert(live.toSeq === Seq(("10", 1), ("2", 20), ("3", 3)))
+  }
 }

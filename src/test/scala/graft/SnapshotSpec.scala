@@ -136,4 +136,25 @@ class SnapshotSpec extends SparkSpecBase {
     assert(tail === ((1L, 5L)),
       "a second instance tails exactly the five new entries with one LIST")
   }
+
+  test("a warm mergeBatch(mor = true) makes one LIST and no log reads") {
+    val dir = tmp("merge-calls")
+    var store: CountingStore = null
+    val w = new ExactlyOnceSink(dir, storeFactory = p => {
+      store = new CountingStore(CommitStore.Posix(p)); store })
+    w.commitAppend(Seq.tabulate(20)(i => (i.toLong, s"x$i")).toDF("id", "x"))
+    def merge(b: Long): Option[Long] = w.mergeBatch(spark,
+      Seq((b, s"m$b"), (100L + b, "new")).toDF("id", "x"), Seq("id"), b, mor = true)
+    def calls(f: => Unit): (Long, Long) = {
+      val (l, r) = (store.lists.get, store.reads.get)
+      f
+      (store.lists.get - l, store.reads.get - r)
+    }
+    merge(1)
+    assert(calls(assert(merge(2).isDefined)) === ((1L, 0L)),
+      "a warm MOR merge re-listed or re-read the log")
+    // a replay is answered from the same one snapshot
+    assert(calls(assert(merge(2).isEmpty)) === ((1L, 0L)))
+    assert(w.read(spark).count() === 22)
+  }
 }
