@@ -440,12 +440,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     checksumOf(asOf(snapshot(), version)).copy(version = version)
 
   private def checksumOf(s: Snapshot): VersionChecksum = {
-    val ts = s.ts
-    val live = s.live
-      .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
-      .filterNot { case (k, _) => ts.removed.contains(k) }
-    val dvOf = live.map { case (k, _) =>
-      k -> ts.dv.get(k).map(_.length.toLong).getOrElse(0L) }.toMap
+    val live = liveFiles(s).map { case (c, a) => addKey(c, a) -> a }
+    val dvOf = live.map { case (k, _) => k -> s.ts.dv.get(k).fold(0L)(_.length.toLong) }.toMap
     val deleted = dvOf.valuesIterator.sum
     VersionChecksum(s.version,
       numFiles = live.size.toLong,
@@ -1469,7 +1465,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       maxRetries: Int = 20, streamTxn: Option[(String, Long)] = None,
       first: Option[Snapshot] = None)
       (f: DataFrame => (DataFrame, Option[DataFrame])): Long =
-    occTransact(s"transactSnapshot($op)", maxRetries, first = first) { s =>
+    occTransact(s"transactSnapshot($op)", maxRetries, first = first, streamTxn = streamTxn) { s =>
       // the version whose state `f` reads: a WriteSerializable re-claim
       // moves the claimed version past rival pure appends while the base
       // — and the published output — stay fixed (the appends remain
@@ -1537,9 +1533,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * backfill) pass `rebase = false`: re-claiming their entry past a
     * rival append would silently drop the rival's rows. A verb that took
     * its snapshot just before passes it as `first`, and the first attempt
-    * runs on it instead of listing the log again. */
+    * runs on it instead of listing the log again. An attempt whose
+    * snapshot already records `streamTxn`'s batch (a concurrent replay
+    * won the claim) computes nothing and returns -1. */
   private def occTransact(verb: String, maxRetries: Int, rebase: Boolean = true,
-      first: Option[Snapshot] = None)(
+      first: Option[Snapshot] = None, streamTxn: Option[(String, Long)] = None)(
       attempt: Snapshot => Option[Snapshot => Entry]): Long = {
     var recomputes = 0
     val rivalLog = scala.collection.mutable.ArrayBuffer.empty[Entry]
@@ -1547,6 +1545,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     while (true) {
       var s = pending.getOrElse(snapshot())
       pending = None
+      if (replayed(s, streamTxn)) return -1L
       val render = attempt(s) match {
         case Some(r) => r
         case None => return -1L
@@ -1680,17 +1679,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * next write that carries it; nothing is lost, only not shown while
     * no file holds it.
     *
-    * LIVE reads of flat commits present columns in the RECORDED schema
-    * order (batch last) — the Delta presentation — because the scan
-    * takes the recorded physical schema instead of per-commit footer
-    * inference; time-travel reads keep the legacy union-accretion order
-    * (StreamingSpec pins live ≡ as-of-latest value-wise).
+    * LIVE reads present columns in the RECORDED schema order, hive
+    * partition columns after the others and `batch` last — the Delta
+    * presentation — because the scan takes the recorded physical schema
+    * instead of per-commit footer inference (StreamingSpec pins live ≡
+    * as-of-latest value-wise).
     *
-    * The plan does not grow with the table's history: every flat file
-    * of every visible commit is ONE scan ([[scanCommits]]), and `batch`
-    * is looked up per row, so the code Spark generates for a read — and
-    * for every streaming micro-batch plan built on it — is the same
-    * after commit 3 and commit 3000 and hits the codegen cache. */
+    * The plan does not grow with the table's history: every live file of
+    * a flat-only or hive-only table is ONE scan ([[scanFiles]]) over an
+    * index built from the log, and `batch` is looked up per row, so the
+    * code Spark generates for a read — and for every streaming
+    * micro-batch plan built on it — is the same after commit 3 and
+    * commit 3000 and hits the codegen cache. */
   def read(spark: SparkSession,
       versionAsOf: Option[Long] = None,
       mergeSchema: Boolean = false): DataFrame = {
@@ -1699,52 +1699,24 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   /** [[read]] of `at` (None: the live state), presented through the
-    * live snapshot's column mapping. */
+    * live snapshot's column mapping. Live reads take the latest recorded
+    * physical schema ([[readSchema]]); time-travel reads take the schema
+    * RECORDED AT the as-of version (the as-of authority), but only while
+    * no column mapping existed at that version — under mapping the files
+    * carry frozen physical names that the as-of logical schema cannot
+    * address, so those fall back to per-commit inference. */
   private def readAt(spark: SparkSession, live: Snapshot, at: Option[Snapshot],
       mergeSchema: Boolean = false): DataFrame = {
     val s = at.getOrElse(live)
-    // metadata-only commits (SET CONSTRAINT) carry no data files
-    val commits = s.live
-    if (commits.isEmpty) return spark.emptyDataFrame
-    val ts = s.ts
-    // Flat commits read through an EXPLICIT recorded schema — the
-    // log-is-the-schema-authority path: no per-call footer-inference
-    // job, and the add-listed exact file paths replace the directory
-    // listing (§6). Live reads take the latest recorded physical schema
-    // (flatReader); time-travel reads take the schema RECORDED AT the
-    // newest visible commit that records one (the as-of authority), but
-    // only while no column mapping existed at that version — under
-    // mapping the files carry frozen physical names that the as-of
-    // logical schema cannot address, so those keep the per-commit
-    // inference read.
-    val explicit = explicitReader(spark, live, at)
-    if (ts.isEmpty)
-      // fast path — a table never touched by merge-on-read reads with
-      // no row-position columns and no anti-joins
-      dropMat(toLogical(live, scanCommits(spark, commits, explicit, batch = true,
-        pos = false, mergeSchema)(_ => true)))
-    else {
-      val scanned = scanWithPos(spark, live, commits, ts, mergeSchema = mergeSchema,
-        explicit = explicit)
-      if (scanned.columns.isEmpty) scanned // every file removed
-      else dropMat(scanned.drop(FileCol, RidxCol))
+    val schema = at match {
+      case None => readSchema(live)
+      case Some(a) =>
+        if (a.mapping.nonEmpty || a.dropped.nonEmpty) None
+        else a.schema.filter(_.fields.nonEmpty)
     }
+    dropMat(toLogical(live, scanFiles(spark, s, liveFiles(s), schema, batch = true,
+      pos = false, s.ts.dv, mergeSchema)))
   }
-
-  /** The explicit-schema reader for flat committed files of this read,
-    * when one is safe (see [[read]]): latest recorded physical schema
-    * for live reads (mat columns included — [[flatReader]]), the
-    * schema recorded at the as-of snapshot for time-travel reads of a
-    * version with no column mapping yet, None (→ per-dir inference)
-    * otherwise. */
-  private def explicitReader(spark: SparkSession, live: Snapshot,
-      at: Option[Snapshot]): Option[org.apache.spark.sql.DataFrameReader] =
-    at match {
-      case None => physicalReadSchema(live).map(_ => flatReader(spark, live))
-      case Some(s) =>
-        if (s.mapping.nonEmpty || s.dropped.nonEmpty) None
-        else s.schema.filter(_.fields.nonEmpty).map(spark.read.schema(_))
-    }
 
   // ---------------------------------------------------------------------
   // merge-on-read (deletion vectors)
@@ -1799,133 +1771,107 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   }
 
   /** Reads that fell back to one footer-inference scan per commit
-    * ([[scanCommits]] without an explicit schema: no recorded schema,
-    * or a time-travel read under column mapping) — observable so the
-    * slow path is visible, never consulted by the protocol. */
+    * ([[scanFiles]] without a schema: no recorded schema, or a
+    * time-travel read under column mapping) — observable so the slow
+    * path is visible, never consulted by the protocol. */
   private[graft] val inferenceReads = new java.util.concurrent.atomic.AtomicLong
 
-  /** ONE parquet scan over `keys` (data/-relative files, or dirs)
-    * through `reader`, plus, on request, the FileCol/RidxCol tombstone
-    * helpers (`pos`) and the writing commit's version as `batch`.
-    * `batch` is looked up per row in the `versions` file → version map,
-    * ONE literal keyed by [[relKeyCol]]: Spark hands a
-    * map literal to generated code as a reference object instead of
-    * inlining it, so the code is the same whatever files or versions
-    * the map holds. `_metadata` only resolves directly on a scan
-    * relation, so the helpers attach here, before any union. */
-  private def scanFiles(reader: org.apache.spark.sql.DataFrameReader,
-      keys: Seq[String], versions: Map[String, Int], batch: Boolean,
-      pos: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, typedLit}
-    val df = reader.parquet(keys.map(k => dataDir.resolve(k).toString): _*)
-    val withPos = if (!pos) df else df
-      .withColumn(FileCol, relKeyCol)
-      .withColumn(RidxCol, col("_metadata.row_index"))
-    if (!batch) withPos
-    else withPos.withColumn("batch", element_at(typedLit(versions), relKeyCol))
+  /** `s`'s live data files passing `keep`: every add of a visible
+    * commit that no later remove retired. */
+  private def liveFiles(s: Snapshot, keep: AddFile => Boolean = _ => true): Seq[(Entry, AddFile)] = {
+    val removed = s.ts.removed
+    s.live.flatMap(c => c.adds.collect { case a if keep(a) && !removed(addKey(c, a)) => c -> a })
   }
 
-  /** The scan behind [[read]], [[scanWithPos]] and [[probeScan]]: the
-    * flat add files of ALL `commits` passing `keep` as ONE [[scanFiles]]
-    * scan through the explicit-schema `reader`. The plan is therefore
-    * the same size whatever the table's history; a per-commit union
-    * tagged with a `lit(version)` would add one codegen stage per commit
-    * and shift the `codegenStageId` of every stage after it, so each
-    * micro-batch missed Spark's codegen cache and recompiled identical
-    * code.
+  /** The scan's view of one add: its absolute path, its real length (the
+    * recorded `bytes`; a legacy add is statted), and the dir segments
+    * below its source dir — the commit's `dir`, or for a lifted
+    * (RESTORE/backfill) add the `restoreDirs` entry it sits under — which
+    * hold its hive partition values; a streaming `batch=<id>-<uuid>` dir
+    * is never one of them. */
+  private def indexFile(c: Entry, a: AddFile): LogFileIndex.File = {
+    val rel =
+      if (c.restoreDirs.isEmpty) a.path
+      else c.restoreDirs.filter(d => a.path.startsWith(d + "/")).maxByOption(_.length)
+        .fold(a.path)(d => a.path.drop(d.length + 1))
+    val path = dataDir.toAbsolutePath.normalize.resolve(addKey(c, a))
+    LogFileIndex.File(path, a.bytes.getOrElse(Files.size(path)),
+      rel.take(math.max(rel.lastIndexOf('/'), 0)))
+  }
+
+  /** THE data-file scan behind every sink read, probe and rewrite: the
+    * `files` of `s` as [[LogFileIndex]] relations (one per set of hive
+    * partition columns, unioned by name), so a flat-only or hive-only
+    * table is ONE scan whatever its history and nothing is listed. A
+    * per-commit union tagged with a `lit(version)` would add one codegen
+    * stage per commit and shift the `codegenStageId` of every stage after
+    * it, so each micro-batch would miss Spark's codegen cache.
     *
-    * Dir-granular commits — hive-partitioned (partition columns live in
-    * dir names, which an explicit schema would null out) and RESTORE
-    * (its dirs come from different source commits) — keep one inference
-    * read per dir, unioned by name at their commit's position, so the
-    * presented column order is what a per-commit union gave. Without
-    * a `reader`, flat commits fall back to one inference scan per
-    * commit ([[inferenceReads]]): a single mergeSchema scan would refuse
-    * a type widening between commits that unionByName coerces. */
-  private def scanCommits(spark: SparkSession, commits: Seq[Entry],
-      reader: Option[org.apache.spark.sql.DataFrameReader], batch: Boolean,
-      pos: Boolean, mergeSchema: Boolean = false)
-      (keep: String => Boolean): DataFrame = {
-    def kept(cs: Seq[Entry]): Seq[String] =
-      cs.flatMap(c => c.adds.map(a => addKey(c, a))).filter(keep)
-    val versions = commits.flatMap(c =>
-      c.adds.map(a => addKey(c, a) -> c.version.toInt)).toMap
-    val infer = spark.read.option("mergeSchema", mergeSchema.toString)
-    def scan(r: org.apache.spark.sql.DataFrameReader, keys: Seq[String]) =
-      Some(keys).filter(_.nonEmpty).map(scanFiles(r, _, versions, batch, pos))
-    val flats = commits.filter(flat)
-    if (reader.isEmpty && flats.nonEmpty) inferenceReads.incrementAndGet()
-    val frames = commits.flatMap { c =>
-      if (!flat(c))
-        if (kept(Seq(c)).isEmpty) Nil
-        else c.dataDirs.flatMap(d => scan(infer, Seq(d)))
-      else reader match {
-        case Some(r) => if (c eq flats.head) scan(r, kept(flats)) else None
-        case None => scan(infer, kept(Seq(c)))
+    * `schema` is the physical read schema; it also types the partition
+    * values. Without one, each commit's schema is inferred from its
+    * footers ([[inferenceReads]]): a single mergeSchema scan would refuse
+    * a type widening between commits that unionByName coerces.
+    *
+    * On request the FileCol/RidxCol helpers ride along (`pos`), and the
+    * writing commit's version as `batch`, looked up per row in ONE
+    * file → version map literal keyed by [[relKeyCol]]: Spark hands a map
+    * literal to generated code as a reference object instead of inlining
+    * it. `_metadata` only resolves directly on a scan relation, so the
+    * helpers attach before the union. The deletion vectors `dvs` are
+    * subtracted by (file, row position). */
+  private def scanFiles(spark: SparkSession, s: Snapshot, files: Seq[(Entry, AddFile)],
+      schema: Option[StructType], batch: Boolean, pos: Boolean,
+      dvs: Map[String, Array[Long]] = Map.empty, mergeSchema: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    if (files.isEmpty) return spark.emptyDataFrame
+    val root = new org.apache.hadoop.fs.Path(dataDir.toAbsolutePath.normalize.toUri)
+    val types = schema.orElse(readSchema(s)).getOrElse(StructType(Nil))
+    val groups = schema match {
+      case Some(sch) => Seq(sch -> files.map { case (c, a) => indexFile(c, a) })
+      case None =>
+        inferenceReads.incrementAndGet()
+        files.groupBy(_._1.version).toSeq.sortBy(_._1).map { case (_, cfs) =>
+          val fs = cfs.map { case (c, a) => indexFile(c, a) }
+          LogFileIndex.infer(spark, fs, mergeSchema) -> fs
+        }
+    }
+    val helpers = pos || dvs.nonEmpty
+    lazy val versions = files.map { case (c, a) => addKey(c, a) -> c.version.toInt }.toMap
+    val frames = groups.flatMap { case (sch, fs) => LogFileIndex.scan(spark, root, sch, types, fs) }
+      .map { df =>
+        val withPos = if (!helpers) df else df
+          .withColumn(FileCol, relKeyCol)
+          .withColumn(RidxCol, col("_metadata.row_index"))
+        if (!batch) withPos
+        else withPos.withColumn("batch", element_at(typedLit(versions), relKeyCol))
       }
-    }
-    if (frames.isEmpty) spark.emptyDataFrame
-    else frames.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    val out = subtractDVs(frames.reduce(_.unionByName(_, allowMissingColumns = true)), dvs)
+    if (pos || !helpers) out else out.drop(FileCol, RidxCol)
   }
 
-  /** A commit whose add files are read one by one: not a RESTORE, and
-    * no add under a (hive partition) subdirectory. The others are read
-    * dir by dir. */
-  private def flat(c: Entry): Boolean =
-    c.restoreDirs.isEmpty && c.adds.forall(a => !a.path.contains("/"))
-
-  /** The files of `commits` passing `keep`, with the file key and row
-    * position of every row and the tombstones `ts` subtracted — the
-    * scan behind [[read]], [[scanWithRowMeta]] and [[probeScan]]. Flat
-    * commits drop REMOVED files from the scan list itself (after a
-    * merge-on-read remove or an incremental OPTIMIZE, retired files are
-    * not even listed), so the remove anti-join only carries the removes
-    * a dir-granular (hive/restore) read can still see; a table of flat
-    * commits pays no remove join at all. Returns an empty frame when
-    * every file is retired or pruned. */
-  private def scanWithPos(spark: SparkSession, live: Snapshot, commits: Seq[Entry],
-      ts: Tombstones, batch: Boolean = true, mergeSchema: Boolean = false,
-      explicit: Option[org.apache.spark.sql.DataFrameReader] = None,
-      keep: String => Boolean = _ => true): DataFrame = {
-    val scanned = toLogical(live, scanCommits(spark, commits, explicit, batch,
-      pos = true, mergeSchema)(k => !ts.removed.contains(k) && keep(k)))
-    if (scanned.columns.isEmpty) scanned
-    else applyTombstones(scanned, ts.copy(removed = ts.removed --
-      commits.filter(flat).flatMap(c => c.adds.map(addKey(c, _)))))
-  }
-
-  /** Subtract tombstones from a [[scanWithPos]] frame: one broadcast
-    * anti-join on the file key for whole-file removes, one on (file,
-    * row position) for deletion vectors. Both sides are driver-held
-    * metadata (bounded by the DV size cap until a snapshot re-bases),
-    * so the joins broadcast and the scan itself stays pruned/columnar. */
-  private def applyTombstones(df: DataFrame, ts: Tombstones): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val sp = df.sparkSession
-    import sp.implicits._
-    var out = df
-    if (ts.removed.nonEmpty) {
-      val rem = ts.removed.toSeq.sorted.toDF("__rm_file")
-      out = out.join(broadcast(rem),
-        out(FileCol) === rem("__rm_file"), "left_anti")
-    }
-    if (ts.dv.nonEmpty) {
-      import org.apache.spark.sql.functions.{col, explode, sequence}
+  /** Subtract deletion vectors from a scan carrying the FileCol/RidxCol
+    * helpers: one broadcast anti-join on (file, row position). The
+    * vectors are driver-held metadata (bounded by the DV size cap until a
+    * snapshot re-bases), so the join broadcasts and the scan itself stays
+    * pruned/columnar. */
+  private def subtractDVs(df: DataFrame, dvs: Map[String, Array[Long]]): DataFrame =
+    if (dvs.isEmpty) df
+    else {
+      import org.apache.spark.sql.functions.{broadcast, col, explode, sequence}
+      val sp = df.sparkSession
+      import sp.implicits._
       // the driver ships consecutive-run RANGES (bounded by the vectors'
       // run structure, not their row count); executors expand them to
       // (file, position) pairs for the equality anti-join
-      val runs = ts.dv.toSeq.sortBy(_._1).flatMap { case (f, idxs) =>
+      val runs = dvs.toSeq.sortBy(_._1).flatMap { case (f, idxs) =>
         DeletionVectors.ranges(idxs).map { case (lo, hi) => (f, lo, hi) }
       }
       val dv = runs.toDF("__dv_file", "__dv_lo", "__dv_hi")
         .select(col("__dv_file"),
           explode(sequence(col("__dv_lo"), col("__dv_hi"))).as("__dv_ridx"))
-      out = out.join(broadcast(dv),
-        out(FileCol) === dv("__dv_file") && out(RidxCol) === dv("__dv_ridx"),
-        "left_anti")
+      df.join(broadcast(dv),
+        df(FileCol) === dv("__dv_file") && df(RidxCol) === dv("__dv_ridx"), "left_anti")
     }
-    out
-  }
 
   // ---------------------------------------------------------------------
   // row tracking (the Delta row-tracking / stable-row-id analog)
@@ -1965,12 +1911,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         val ts = s.ts
         // live adds, key-qualified like a RESTORE lift (same files, new
         // add actions — the log's newest word on each file wins the fold)
-        val lifted = commits.flatMap { c =>
-          c.adds.collect {
-            case a if !ts.removed.contains(addKey(c, a)) =>
-              (c, a.copy(path = addKey(c, a)))
-          }
-        }
+        val lifted = liveFiles(s).map { case (c, a) => (c, a.copy(path = addKey(c, a))) }
         // a rival enabled tracking mid-race, or nothing to backfill
         if (s.tracked || lifted.isEmpty) None
         else {
@@ -2076,17 +2017,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def scanWithRowMeta(spark: SparkSession, live: Snapshot,
       at: Option[Snapshot]): DataFrame = {
     val s = at.getOrElse(live)
-    val commits = s.live
-    if (commits.isEmpty) return spark.emptyDataFrame
-    val ts = s.ts
-    // mat columns are REQUIRED here, so only the live flatReader (which
-    // appends them to the explicit schema) qualifies; as-of stays on
-    // the inference read
-    val scanned = scanWithPos(spark, live, commits, ts,
-      explicit = if (at.isEmpty) physicalReadSchema(live)
-        .map(_ => flatReader(spark, live)) else None)
+    // mat columns are REQUIRED here, so only the live readSchema (which
+    // appends them to the recorded one) qualifies; as-of stays on the
+    // inference read
+    val scanned = toLogical(live, scanFiles(spark, s, liveFiles(s),
+      if (at.isEmpty) readSchema(live) else None, batch = true, pos = true, s.ts.dv))
     if (scanned.columns.isEmpty) return scanned
-    withResolvedMat(scanned, commits).drop(FileCol, RidxCol)
+    withResolvedMat(scanned, s.live).drop(FileCol, RidxCol)
   }
 
   /** [[liveData]] with row ids materialized into the reserved columns
@@ -2329,7 +2266,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * table's live row count computed ENTIRELY from the commit log —
     * Σ live adds' recorded per-file row counts minus live deletion-
     * vector cardinalities, with whole-file removes simply dropping
-    * their add from the live set. No file is opened, no scan planned;
+    * their add from the live set (the version checksum's `numRows`,
+    * [[checksumOf]]). No file is opened, no scan planned;
     * at 100 TB this is the difference between answering a count in
     * milliseconds from the driver and scheduling a full-table job.
     * Falls back to `read().count()` when any live add predates row-
@@ -2339,16 +2277,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   def rowCount(spark: SparkSession, versionAsOf: Option[Long] = None): Long = {
     val cur = snapshot()
     val at = versionAsOf.map(asOf(cur, _))
-    val s = at.getOrElse(cur)
-    if (s.live.isEmpty) return 0L
-    val ts = s.ts
-    val addRows = s.live.flatMap(c => c.adds.map(a => addKey(c, a) -> a.rows))
-    val live = addRows.filterNot { case (k, _) => ts.removed.contains(k) }
-    if (live.forall(_._2.isDefined))
-      live.map(_._2.get).sum -
-        live.map { case (k, _) => ts.dv.get(k).map(_.length.toLong).getOrElse(0L) }.sum
-    else
-      readAt(spark, cur, at).count() // legacy adds without counts
+    checksumOf(at.getOrElse(cur)).numRows
+      .getOrElse(readAt(spark, cur, at).count()) // legacy adds without counts
   }
 
   /** Metadata-only column MIN/MAX (the companion to [[rowCount]]): the
@@ -2447,7 +2377,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       preds: Seq[(String, Double, Double)]): DataFrame = {
     val s = snapshot()
     val phys = preds.map { case (c, lo, hi) => (s.physicalOf(c), lo, hi) }
-    readAddFiles(spark, s) { a =>
+    readPruned(spark, s) { a =>
       phys.forall { case (col, lo, hi) => mayIntersect(a.stats.get(col), lo, hi) }
     }
   }
@@ -2477,7 +2407,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       new XxHash64(Seq(Literal(j), Literal(value))).eval().asInstanceOf[Long])
     val s = snapshot()
     val ph = s.physicalOf(column)
-    readAddFiles(spark, s) { a =>
+    readPruned(spark, s) { a =>
       a.bloom.get(ph).forall { words =>
         val bits = words.length * 64L
         hashes.forall { h =>
@@ -2492,33 +2422,18 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       (keep: Option[(Option[String], Option[String])] => Boolean): DataFrame = {
     val s = snapshot()
     val ph = s.physicalOf(column)
-    readAddFiles(spark, s)(a => keep(a.stats.get(ph)))
+    readPruned(spark, s)(a => keep(a.stats.get(ph)))
   }
 
-  /** Shared pruned-read core: the visible add files passing `keep`
-    * (stat/bloom pruning) as ONE [[scanFiles]] scan, leaf files read
-    * directly whatever their commit's layout, minus merge-on-read
-    * tombstones — removed files never make the scan list; files with a
-    * deletion vector get the position-level subtraction. No `batch`
-    * column, and no helper columns unless a kept file has a vector. */
-  private def readAddFiles(spark: SparkSession, s: Snapshot)
+  /** Shared pruned-read core: the live files passing `keep` (stat/bloom
+    * pruning) as ONE [[scanFiles]] scan, minus the deletion vectors of
+    * the kept files. No `batch` column. */
+  private def readPruned(spark: SparkSession, s: Snapshot)
       (keep: AddFile => Boolean): DataFrame = {
-    val ts = s.ts
-    val keys = s.entries.flatMap { c =>
-      c.adds.collect { case a if keep(a) => addKey(c, a) }
-    }.filterNot(ts.removed)
-    if (keys.isEmpty) spark.emptyDataFrame
-    else {
-      // explicit physical schema so evolution across the commits cannot
-      // silently drop columns
-      val dv = keys.exists(ts.dv.contains)
-      val base = scanFiles(flatReader(spark, s), keys, Map.empty, batch = false,
-        pos = dv)
-      dropMat(toLogical(s,
-        if (!dv) base
-        else applyTombstones(base, Tombstones(Set.empty, ts.dv))
-          .drop(FileCol, RidxCol)))
-    }
+    val files = liveFiles(s, keep)
+    val keys = files.map { case (c, a) => addKey(c, a) }.toSet
+    dropMat(toLogical(s, scanFiles(spark, s, files, readSchema(s), batch = false,
+      pos = false, s.ts.dv.filter(kv => keys(kv._1)))))
   }
 
   /** Test hook: the data dirs a committed version references (relative to
@@ -2782,25 +2697,17 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     finally r.close()
   }
 
-  /** The merge-on-read PROBE scan: live files of the pruned commits,
-    * with file/position helper columns, tombstones subtracted and no
-    * `batch` ([[scanWithPos]]). The surviving stat-pruned FILES of every
-    * flat commit (every commitAppend/morCommit output) are one
-    * [[scanCommits]] scan, so the probe plan — and its generated code —
-    * does not change from one merge to the next. Hive-partitioned and
-    * RESTORE commits scan dir-granular, one read per dir (reading leaf
-    * files directly would drop the partition columns; a restore's dirs
-    * come from different source commits, and unionByName type-coerces
-    * across a widening boundary that parquet's mergeSchema refuses —
-    * fuzz seed 12), and rely on the tombstone anti-join + row-group
-    * stats instead. */
+  /** The merge-on-read PROBE scan: the live files `bounds` cannot prune
+    * (physical key column → numeric [lo, hi]), with file/position helper
+    * columns, deletion vectors subtracted and no `batch` — ONE
+    * [[scanFiles]] scan, so the probe plan, and its generated code, does
+    * not change from one merge to the next. */
   private def probeScan(spark: SparkSession, s: Snapshot,
-      bounds: Map[String, (Double, Double)]): DataFrame = {
-    val stats = s.live.flatMap(c => c.adds.map(a => addKey(c, a) -> a.stats)).toMap
-    scanWithPos(spark, s, s.live, s.ts, batch = false,
-      explicit = physicalReadSchema(s).map(_ => flatReader(spark, s)), keep = k =>
-        bounds.forall { case (col, (lo, hi)) => mayIntersect(stats(k).get(col), lo, hi) })
-  }
+      bounds: Map[String, (Double, Double)]): DataFrame =
+    toLogical(s, scanFiles(spark, s,
+      liveFiles(s, a => bounds.forall { case (col, (lo, hi)) =>
+        mayIntersect(a.stats.get(col), lo, hi) }),
+      readSchema(s), batch = false, pos = true, s.ts.dv))
 
   /** The merge-on-read OCC transaction core. `f` maps the live state
     * (WITH file/position helper columns) to:
@@ -2831,7 +2738,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       first: Option[Snapshot] = None)
       (f: DataFrame => (DataFrame, Option[DataFrame], DataFrame)): Long = {
     import org.apache.spark.sql.functions.{col, collect_list, count, lit, when}
-    occTransact(op, maxRetries, first = first) { s =>
+    occTransact(op, maxRetries, first = first, streamTxn = streamTxn) { s =>
       val commits = s.live
       val ts0 = s.ts
       // stat-pruned probe (the Delta MERGE file-skipping argument: a key
@@ -2888,12 +2795,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // state scan), minus their existing DV rows and this commit's
         // doomed rows
         val kept = if (rewriteKeys.isEmpty) None else Some {
-          val scan = toLogical(s, flatReader(spark, s)
-            .parquet(rewriteKeys.map(k => dataDir.resolve(k).toString): _*)
-            .withColumn(FileCol, relKeyCol)
-            .withColumn(RidxCol, col("_metadata.row_index")))
-          val live = applyTombstones(scan, Tombstones(Set.empty,
-              ts0.dv.filter(kv => rewriteKeys.contains(kv._1))))
+          val rw = rewriteKeys.toSet
+          val live = toLogical(s, scanFiles(spark, s,
+              liveFiles(s).filter { case (c, a) => rw(addKey(c, a)) }, readSchema(s),
+              batch = false, pos = true, ts0.dv.filter(kv => rw(kv._1))))
             .join(doomed.select(col(FileCol), col(RidxCol)),
               Seq(FileCol, RidxCol), "left_anti")
           // row tracking: kept rows of a rewritten over-cap file change
@@ -3116,37 +3021,23 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   // name): a rename is a metadata-only commit re-labelling the logical
   // view, data files are never touched.
 
-  /** The explicit schema for FLAT physical-file scans: the table's
-    * logical schema under physical names. An explicit-schema parquet
-    * read null-pads columns a pre-evolution file lacks and ignores a
-    * dropped column's bytes — exactly the evolution + mapping read
-    * semantics — with NO footer-merge schema inference pass, which is
-    * the scalable path (mergeSchema lists and merges every footer).
-    * Only for flat scans: an explicit schema would null out hive
-    * partition columns, which live in dir names, not footers. */
-  private def physicalReadSchema(s: Snapshot): Option[StructType] =
-    s.schema.filter(_.fields.nonEmpty).map(sch =>
-      StructType(sch.fields.map(f => f.copy(name = s.physicalOf(f.name)))))
-
-  /** A parquet reader for flat committed files: explicit physical
-    * schema when the table has one, mergeSchema fallback otherwise. */
-  private def flatReader(spark: SparkSession, snap: Snapshot)
-      : org.apache.spark.sql.DataFrameReader =
-    physicalReadSchema(snap) match {
-      case Some(s) =>
-        // row tracking: the explicit physical schema must ALSO list the
-        // materialization columns or the scan silently reads them as
-        // absent — files without them fill null (virtual ids apply),
-        // files with them surface the pinned ids
-        val s2 =
-          if (!snap.tracked) s
-          else org.apache.spark.sql.types.StructType(s.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(MatIdCol,
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField(MatRcvCol,
-              org.apache.spark.sql.types.LongType)))
-        spark.read.schema(s2)
-      case None => spark.read.option("mergeSchema", "true")
+  /** The explicit schema every data-file scan of `s` reads with: the
+    * table's logical schema under physical names. An explicit-schema
+    * parquet read null-pads columns a pre-evolution file lacks and
+    * ignores a dropped column's bytes — exactly the evolution + mapping
+    * read semantics — with NO footer-merge schema inference pass, which
+    * is the scalable path (mergeSchema lists and merges every footer).
+    * Hive partition columns come from the index, typed by this schema.
+    * Under row tracking it also lists the materialization columns, or
+    * the scan would read them as absent: files without them fill null
+    * (virtual ids apply), files with them surface the pinned ids. None
+    * without a recorded schema. */
+  private def readSchema(s: Snapshot): Option[StructType] =
+    s.schema.filter(_.fields.nonEmpty).map { sch =>
+      val phys = sch.fields.map(f => f.copy(name = s.physicalOf(f.name)))
+      val mat = if (!s.tracked) Nil else Seq(MatIdCol, MatRcvCol).map(c =>
+        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.LongType))
+      StructType(phys ++ mat)
     }
 
   /** Rename a LOGICAL frame to its physical on-disk names (last step
@@ -3769,12 +3660,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // change them); row tracking ids carry too, the default rcv pinned
     // to the SOURCE commit (a restore re-points files, it does not
     // rewrite rows)
-    val lifted = src.flatMap { c =>
-      c.adds.collect {
-        case a if !tsAt.removed.contains(addKey(c, a)) =>
-          a.copy(path = addKey(c, a),
-            rcv = a.rcv.orElse(a.baseRowId.map(_ => c.version)))
-      }
+    val lifted = liveFiles(visibleAt).map { case (c, a) =>
+      a.copy(path = addKey(c, a), rcv = a.rcv.orElse(a.baseRowId.map(_ => c.version)))
     }
     // Row-id carry across the enablement boundary: a lifted add that
     // PREDATES row tracking (restore target before a backfill enable)
@@ -3836,10 +3723,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       Some((t: Snapshot) => Entry(t.next, snapshot = true, adds = adds, op = "RESTORE",
         schemaStr = Some(target.schema.json), changeDir = Some(ch.dir),
         changeAdds = ch.adds, restoreDirs = dirs,
-        // removed files are excluded from the lifted adds, but the
-        // re-pointed DIRS still physically contain them — the restore
-        // commit re-states the removes so the dir-granular scan keeps
-        // subtracting them after the snapshot fold restarts
+        // removed files are excluded from the lifted adds, and reads
+        // take their files from the adds alone; the removes are still
+        // re-stated for a reader that scans the re-pointed DIRS whole
+        // (they hold the retired files), and keep the entry's bytes
         removes = tsAt.removed.toSeq.sorted,
         dvs = tsAt.dv.filter(kv => liftedKeys(kv._1)),
         // the lifted files may carry materialized ids from rewrites
@@ -3882,10 +3769,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * streaming ingest creates, where O(small files) work per OPTIMIZE
     * run is the point. Physical-only like compact: contributes nothing
     * to the CDC feed; time travel before the commit still sees the
-    * original files. Hive-partitioned commits are skipped (reading
-    * their leaf files directly would drop partition columns); the OCC
-    * claim loop re-picks candidates on conflict, so a concurrent DV
-    * delete can never be lost. Returns the committed version, or -1
+    * original files. Candidates are picked by file, so files a RESTORE
+    * or a row-tracking backfill re-pointed pack too; a file under a hive
+    * `k=v` dir is skipped (flat output would lose its partition
+    * pruning). The OCC claim loop re-picks candidates on conflict, so a
+    * concurrent DV delete can never be lost. Returns the committed version, or -1
     * when fewer than `minFiles` candidates exist. */
   def compactSmall(spark: SparkSession, targetBytes: Long = 128L << 20,
       minFiles: Int = 2, maxRetries: Int = 20,
@@ -3902,29 +3790,24 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     occTransact("compactSmall", maxRetries) { s =>
       val clusterCols =
         if (clusterBy.nonEmpty) clusterBy else activeClusterCols(s)
-      val ts = s.ts
-      val candAdds = s.live.filter(flat)
-        .flatMap(c => c.adds.map(a => addKey(c, a) -> a))
-        .filterNot { case (k, _) => ts.removed(k) }
-        // legacy adds record no size: stat those files only
-        .map { case (k, a) => (k, a, a.bytes.getOrElse(Files.size(dataDir.resolve(k)))) }
-        .filter(_._3 < targetBytes)
-      val cands = candAdds.map(t => (t._1, t._3))
+      // every live file is a candidate but a hive-partitioned one: packed
+      // into flat output it would lose its partition pruning. Its size is
+      // the add's recorded `bytes` (indexFile stats a legacy add)
+      val cands = liveFiles(s).map { case (c, a) => (c, a, indexFile(c, a)) }
+        .filter { case (_, _, f) =>
+          LogFileIndex.partitionValues(f).isEmpty && f.length < targetBytes }
+      val candKeys = cands.map { case (c, a, _) => addKey(c, a) }
       if (cands.size < minFiles) None
       else {
         val nOut = math.max(1,
-          math.ceil(cands.map(_._2).sum.toDouble / targetBytes).toInt)
+          math.ceil(cands.map(_._3.length).sum.toDouble / targetBytes).toInt)
         // only the candidates' vectors: no anti-join (and no position
         // columns on an untracked table) when none carries one
-        val candKeys = cands.map(_._1).toSet
-        val dvs = ts.dv.filter(kv => candKeys(kv._1))
+        val keySet = candKeys.toSet
+        val dvs = s.ts.dv.filter(kv => keySet(kv._1))
         val tracked = s.tracked
-        // one scan over files from DIFFERENT commits: explicit physical
-        // schema — without it parquet would silently adopt one file's
-        // schema and DROP the other commits' evolved columns
-        val scan = scanFiles(flatReader(spark, s), cands.map(_._1), Map.empty,
-          batch = false, pos = tracked || dvs.nonEmpty)
-        val live1 = applyTombstones(scan, Tombstones(Set.empty, dvs))
+        val live1 = scanFiles(spark, s, cands.map(t => t._1 -> t._2), readSchema(s),
+          batch = false, pos = tracked || dvs.nonEmpty, dvs)
         // row tracking: the packed rows change (file, position), so pin
         // each one's id/commit-version into the materialization columns
         // before the positions are lost — OPTIMIZE preserves row ids
@@ -3946,7 +3829,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         // auto-compacting streaming table silently loses the point-probe
         // pruning q_sink_bloom_lookup exists to demonstrate
         val (polCols, polBits) = bloomPolicy(s)
-        val retiredBlooms = candAdds.map(_._2.bloom)
+        val retiredBlooms = cands.map(_._2.bloom)
         val bloomCols = (polCols ++ retiredBlooms.flatMap(_.keys)).distinct
         val bloomBits =
           if (polCols.nonEmpty) polBits
@@ -3965,7 +3848,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         Some { (t: Snapshot) =>
           Entry(t.next, pub.dir, adds = pub.adds, op = "COMPACT_INC",
             schemaStr = Some(t.schema.map(_.json).getOrElse(packed.schema.json)),
-            removes = cands.map(_._1), matFiles = tracked,
+            removes = candKeys, matFiles = tracked,
             // re-record only an EXPLICIT caller declaration: the
             // discovered set may be narrowed by a concurrent DROP, and
             // re-recording it would make the narrowing permanent

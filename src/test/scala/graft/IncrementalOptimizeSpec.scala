@@ -115,6 +115,23 @@ class IncrementalOptimizeSpec extends SparkSpecBase {
     assert(ids(sink.read(spark)).size === 5002)
   }
 
+  test("files a row-tracking backfill re-pointed are packed; row ids survive") {
+    val (sink, _) = newSink("backfill")
+    (0 until 4).foreach { k =>
+      sink.commitAppend(Seq.tabulate(5)(i => (k * 10L + i, s"v$k")).toDF("id", "x").coalesce(1))
+    }
+    sink.enableRowTracking(spark, backfill = true)
+    def rowIds(): Seq[(Long, Long, Long)] = sink.readWithRowIds(spark)
+      .select("id", "_row_id", "_row_commit_version").as[(Long, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    val before = rowIds()
+    val files = liveFiles(sink).size
+    assert(files === 4)
+    assert(sink.compactSmall(spark) >= 0, "the backfilled small files were not candidates")
+    assert(liveFiles(sink).size < files)
+    assert(rowIds() === before)
+  }
+
   test("compactSmall(clusterBy) z-orders the packed output; skipping prunes") {
     val (sink, _) = newSink("zpack")
     val rnd = new scala.util.Random(5)

@@ -204,6 +204,25 @@ class OccNarrowSpec extends SparkSpecBase {
       s"rival appends must read APPEND: ${e.getMessage}")
   }
 
+  test("a CoW streaming merge that loses its claim to a replay of its batch recomputes nothing") {
+    val (dir, s) = seeded("replay")
+    // the same appId: a zombie driver and its replacement
+    val twin = new ExactlyOnceSink(dir)
+    val upd = df(0 until 5, 1)
+    var fired = 0
+    s.txnStagedHook = () => {
+      fired += 1
+      if (fired == 1) assert(twin.mergeBatch(spark, upd, Seq("id"), 3).isDefined)
+    }
+    val got = try s.mergeBatch(spark, upd, Seq("id"), 3)
+      finally s.txnStagedHook = () => ()
+    assert(got.isEmpty, s"the losing replay committed version $got")
+    assert(fired === 1, "the losing replay recomputed and re-staged the merge")
+    assert(s.lastStreamBatch("graft-sink") === Some(3L))
+    assert(s.read(spark).filter(col("x") === 1).count() === 5)
+    assert(s.read(spark).count() === 20)
+  }
+
   test("row-id allocation stays collision-free across a rebase") {
     val (dir, s) = seeded("rowid")
     s.enableRowTracking(spark, backfill = true)

@@ -555,28 +555,32 @@ class PlanSpec extends SparkSpecBase {
     assert(offenders.isEmpty, s"CartesianProduct in: ${offenders.mkString(", ")}")
   }
 
+  private def scans(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, WholeStageCodegenExec}
+    val p = df.queryExecution.executedPlan
+    (p.collect { case s: FileSourceScanExec => s }.size,
+      p.collect { case w: WholeStageCodegenExec => w }.size)
+  }
+
+  private def compiles(f: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  private def tmpSink(tag: String) = new graft.streaming.ExactlyOnceSink(
+    java.nio.file.Files.createTempDirectory(tag).toString)
+
   test("a sink read is one scan whose generated code does not change per commit") {
     // a per-commit scan union adds a codegen stage per commit and shifts
     // the stage ids after it, so every micro-batch recompiled identical
     // code; one scan with a map-literal `batch` keeps the plan fixed
-    import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.sql.execution.{FileSourceScanExec,
-      WholeStageCodegenExec}
     import spark.implicits._
-    val sink = new graft.streaming.ExactlyOnceSink(
-      java.nio.file.Files.createTempDirectory("graft-plan-read").toString)
+    val sink = tmpSink("graft-plan-read")
     def commit(b: Int): Unit = sink.process(
       (0 until 5).map(i => (s"h$b-$i", b * 5 + i)).toDF("h", "n"), b)
-    def shape(): (Int, Int) = {
-      val p = sink.read(spark).queryExecution.executedPlan
-      (p.collect { case s: FileSourceScanExec => s }.size,
-        p.collect { case w: WholeStageCodegenExec => w }.size)
-    }
-    def compiles(f: => Unit): Long = {
-      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      f
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-    }
+    def shape(): (Int, Int) = scans(sink.read(spark))
     (0 until 3).foreach(commit)
     val (scans3, stages3) = shape()
     (3 until 8).foreach(commit)
@@ -590,5 +594,91 @@ class PlanSpec extends SparkSpecBase {
     commit(8)
     val again = compiles(assert(run() == 45))
     assert(again == 0, s"$again classes compiled for a read one commit later")
+  }
+
+  test("a hive-partitioned or restored sink read is one scan whose generated code does not change per commit") {
+    import spark.implicits._
+    def frame(b: Int) = (0 until 6).map(i => (s"h$b-$i", b * 6 + i, s"p${i % 3}"))
+      .toDF("h", "n", "p")
+    val hive = tmpSink("graft-plan-hive")
+    val restored = tmpSink("graft-plan-restore")
+    (0 until 3).foreach(b => hive.process(frame(b), b, partitionBy = Seq("p")))
+    (0 until 3).foreach(b => restored.process(frame(b), b))
+    restored.restore(spark, 1)
+    var next = 3
+    def commitBoth(): Unit = {
+      hive.process(frame(next), next, partitionBy = Seq("p"))
+      restored.commitAppend(frame(next))
+      next += 1
+    }
+    for ((name, sink) <- Seq("hive" -> hive, "restored" -> restored)) {
+      val (scansA, stagesA) = scans(sink.read(spark))
+      commitBoth(); commitBoth()
+      val (scansB, stagesB) = scans(sink.read(spark))
+      assert(scansA == 1 && scansB == 1, s"$name scans two commits apart: $scansA/$scansB")
+      assert(stagesA == stagesB, s"$name codegen stages two commits apart: $stagesA/$stagesB")
+      def run(): Long = sink.read(spark).select("h", "p", "batch").distinct().count()
+      compiles(run())
+      commitBoth()
+      val n = run()
+      commitBoth()
+      val again = compiles(assert(run() == n + 6))
+      assert(again == 0, s"$again classes compiled for a $name read one commit later")
+    }
+  }
+
+  test("a partition predicate on a hive-partitioned sink read is a partition filter") {
+    // q_sink_gen_read's bucket pruning: the predicate must reach the
+    // log-backed index as a PartitionFilters entry, not a data filter
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val sink = tmpSink("graft-plan-hive-filter")
+    sink.commitAppend((0 until 12).map(i => (i.toLong, i % 3)).toDF("id", "p"),
+      partitionBy = Seq("p"))
+    val r = sink.read(spark).filter(col("p") === 1)
+    val p = r.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(p.matches("(?s).*PartitionFilters: \\[[^\\]]*\\bp#[^\\]]*\\].*"),
+      "p predicate not applied as a partition filter:\n" + p.take(3000))
+    assert(r.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 4L, 7L, 10L))
+  }
+
+  test("a sink read past 32 files runs no Spark job before its action") {
+    // Spark lists an explicit path list of more than 32 files
+    // (parallelPartitionDiscovery.threshold) with one task per file; the
+    // log already lists them, so planning a read must start no job
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val sink = tmpSink("graft-plan-nolist")
+    (0 until 40).foreach(b => sink.commitAppend(Seq((b.toLong, s"v$b")).toDF("id", "v")
+      .coalesce(1)))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("sink-read", "read planning")
+      val df = sink.read(spark)
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job the read started has been seen too
+      sc.setJobGroup("sink-read-marker", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("sink-read-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("sink-read-marker"), "marker job never observed")
+      assert(!groups.contains("sink-read"),
+        s"read launched Spark jobs before its action: $groups")
+      assert(df.inputFiles.length == 40)
+      assert(df.count() == 40)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -3,13 +3,14 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.streaming.{CurationPipeline, ExactlyOnceSink}
 
-/** The sink's read scan: every flat file of every visible commit in one
-  * scan, `batch` looked up per row from the file it came from. These
-  * pin the per-row `batch` against the version that wrote each row
-  * across every commit shape a read unions, and the counter that makes
+/** The sink's read scan: every live file of every visible commit in one
+  * log-backed scan, `batch` looked up per row from the file it came
+  * from. These pin the per-row `batch` against the version that wrote
+  * each row across every commit shape a read unions, the hive partition
+  * values every read kind takes from the log, and the counter that makes
   * the per-commit inference fallback visible. */
 class SinkReadSpec extends SparkSpecBase {
   import spark.implicits._
@@ -68,6 +69,47 @@ class SinkReadSpec extends SparkSpecBase {
     assert(batches(live) == Map(0L -> 0, 1L -> 0, 3L -> 1, 4L -> 1))
     assert(live.select("id", "p").collect().map(r => r.getLong(0) -> r.getString(1))
       .toMap == Map(0L -> odd, 1L -> "plain", 3L -> "q", 4L -> odd))
+  }
+
+  private def byId(df: DataFrame): Map[Long, String] =
+    df.select("id", "p").as[(Long, String)].collect().toMap
+
+  test("stat- and bloom-pruned reads of a hive-partitioned table keep the partition column") {
+    val sink = new ExactlyOnceSink(tmp("graft-hive-pruned"))
+    val want = Map(0L -> "a", 1L -> "b", 2L -> "a", 3L -> "c")
+    sink.commitAppend(want.toSeq.toDF("id", "p"), partitionBy = Seq("p"),
+      bloomBy = Seq("id"))
+    assert(byId(sink.readSkipping(spark, "id", 0, 10)) == want)
+    val hit = byId(sink.readLookup(spark, "id", "1"))
+    assert(hit.get(1L).contains("b") && hit.forall { case (k, v) => want(k) == v }, hit)
+  }
+
+  test("an over-cap deletion-vector rewrite keeps the hive partition column of the kept rows") {
+    val sink = new ExactlyOnceSink(tmp("graft-hive-rewrite"))
+    val rows0 = (0 until 10).map(i => i.toLong -> s"p${i % 2}")
+    sink.commitAppend(rows0.toDF("id", "p").coalesce(1), partitionBy = Seq("p"))
+    // dvMaxRows = 0: the matched file is rewritten from its kept rows
+    sink.deleteDV(spark, col("id") === 4L, dvMaxRows = 0)
+    val model = rows0.filterNot(_._1 == 4L).toMap
+    assert(byId(sink.read(spark)) == model)
+    assert(sink.read(spark).count() == model.size)
+  }
+
+  test("numeric-looking string partition values read back as the recorded string type") {
+    val sink = new ExactlyOnceSink(tmp("graft-hive-strings"))
+    val want = Map(0L -> "0", 1L -> "1", 2L -> "2")
+    sink.commitAppend(want.toSeq.toDF("id", "p"), partitionBy = Seq("p"))
+    val live = sink.read(spark)
+    assert(live.schema("p").dataType == StringType)
+    assert(byId(live) == want)
+  }
+
+  test("a hive-partitioned and a flat commit of the same string column read together") {
+    val sink = new ExactlyOnceSink(tmp("graft-hive-mixed"))
+    sink.commitAppend(Seq((0L, "0"), (1L, "1"), (2L, "2")).toDF("id", "p"),
+      partitionBy = Seq("p"))
+    sink.commitAppend(Seq((3L, "x")).toDF("id", "p"))
+    assert(byId(sink.read(spark)) == Map(0L -> "0", 1L -> "1", 2L -> "2", 3L -> "x"))
   }
 
   test("per-commit inference fallback: never on a curated ingest, counted on a column-mapped as-of read") {
