@@ -6,8 +6,11 @@ package graft.streaming
   *
   * A deletion vector marks individual rows of a committed parquet file
   * as deleted WITHOUT rewriting the file: the commit entry records the
-  * file's deleted row positions, and readers subtract them by position
-  * (`_metadata.row_index`). At 100 TB this is the difference between a
+  * file's deleted row positions, and readers filter them out by position
+  * (`_metadata.row_index`) — Delta's row-index filter: each scanned
+  * file's sorted vector ships in the scan's broadcast file lookup, and a
+  * row survives unless a binary search finds its index there. At 100 TB
+  * this is the difference between a
   * DELETE/MERGE that touches only the files containing matched rows and
   * one that rewrites the whole table (the sink's copy-on-write
   * `delete`/`merge`, which stay available for full-rewrite semantics).
@@ -23,10 +26,9 @@ package graft.streaming
   */
 object DeletionVectors {
 
-  /** SORTED DISTINCT row indices as inclusive consecutive runs —
-    * the compact form both the codec and the read-side anti-join
-    * build on (the driver ships runs; executors expand them). */
-  def ranges(sorted: Array[Long]): Seq[(Long, Long)] = {
+  /** SORTED DISTINCT row indices as inclusive consecutive runs — the
+    * compact form the codec writes. */
+  private def ranges(sorted: Array[Long]): Seq[(Long, Long)] = {
     if (sorted.isEmpty) return Nil
     val out = Seq.newBuilder[(Long, Long)]
     var start = sorted(0)

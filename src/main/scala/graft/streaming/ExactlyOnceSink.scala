@@ -1,8 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Exactly-once, Delta-protocol-style table sink (SURVEY.md §7.3).
@@ -1687,7 +1691,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     *
     * The plan does not grow with the table's history: every live file of
     * a flat-only or hive-only table is ONE scan ([[scanFiles]]) over an
-    * index built from the log, and `batch` is looked up per row, so the
+    * index built from the log, and `batch` and the deletion vectors are
+    * looked up per row in a broadcast variable, so the
     * code Spark generates for a read — and for every streaming
     * micro-batch plan built on it — is the same after commit 3 and
     * commit 3000 and hits the codegen cache. */
@@ -1715,7 +1720,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
         else a.schema.filter(_.fields.nonEmpty)
     }
     dropMat(toLogical(live, scanFiles(spark, s, liveFiles(s), schema, batch = true,
-      pos = false, s.ts.dv, mergeSchema)))
+      pos = false, mergeSchema = mergeSchema)))
   }
 
   // ---------------------------------------------------------------------
@@ -1740,34 +1745,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   private def dropMat(df: DataFrame): DataFrame = {
     val mat = df.columns.filter(_.startsWith(MatPrefix))
     if (mat.isEmpty) df else df.drop(mat.toIndexedSeq: _*)
-  }
-
-  /** The scan-side file identity matching [[addKey]]: `_metadata
-    * .file_path` with everything through the table's `data/` root
-    * stripped — computed in the scan so tombstones can be subtracted by
-    * (file, row position) without reconstructing absolute URIs.
-    *
-    * FOREIGN files (a shallow clone's references into its source's data
-    * root, recorded as absolute paths — the Delta absolute-`add`-path
-    * rule) are keyed by their absolute filesystem path instead: the
-    * URI scheme is stripped and the rest IS the log's key, so clone-
-    * local deletion vectors and removes subtract source files without
-    * the clone ever knowing the source root as table state. */
-  private def relKeyCol: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, instr, lit, regexp_replace,
-      replace, url_decode, when}
-    // plain substring search (no per-row regex): the absolute data/ path
-    // is rooted, so its first occurrence in the file path is the prefix
-    val marker =
-      dataDir.toAbsolutePath.normalize.toString.replace("\\", "/") + "/"
-    // `_metadata.file_path` is a URI: a space in the table root or a
-    // hive-escaped partition value (`p=a%3Ab` on disk) arrives %-escaped
-    // (`%20`, `p=a%253Ab`); decode it back to the filesystem path the
-    // log keys record ('+' is literal in a URI path, not a space)
-    val fp = url_decode(replace(col("_metadata.file_path"), lit("+"), lit("%2B")))
-    val pos = instr(fp, marker)
-    when(pos > lit(0), fp.substr(pos + lit(marker.length), lit(1 << 20)))
-      .otherwise(regexp_replace(fp, "^[a-z][a-zA-Z0-9+.\\-]*:(//)?", ""))
   }
 
   /** Reads that fell back to one footer-inference scan per commit
@@ -1812,66 +1789,70 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * footers ([[inferenceReads]]): a single mergeSchema scan would refuse
     * a type widening between commits that unionByName coerces.
     *
-    * On request the FileCol/RidxCol helpers ride along (`pos`), and the
-    * writing commit's version as `batch`, looked up per row in ONE
-    * file → version map literal keyed by [[relKeyCol]]: Spark hands a map
-    * literal to generated code as a reference object instead of inlining
-    * it. `_metadata` only resolves directly on a scan relation, so the
-    * helpers attach before the union. The deletion vectors `dvs` are
-    * subtracted by (file, row position). */
+    * What the scan needs per file rides in ONE broadcast variable, a
+    * [[ExactlyOnceSink.FileMeta]] per file keyed by its
+    * `_metadata.file_path`, read by row functions; it grows with the
+    * files scanned but never enters the plan, so the generated code is the
+    * same after commit 3 and commit 3000. From it come: the deletion
+    * vectors of `s`, applied as a row-index filter on each file (a binary
+    * search in the file's sorted vector, Delta's reader rule); on request
+    * the FileCol/RidxCol helpers (`pos`), the writing commit's version as
+    * `batch`, and each row's resolved row id and commit version in the
+    * materialization columns (`rowIds`: the pinned value where a rewrite
+    * materialized one, else the file's baseRowId + the row's position and
+    * its default version; every scanned file must carry a baseRowId).
+    * `_metadata` only resolves directly on a scan relation, so all of it
+    * attaches before the union. `own` receives the broadcast variable, for
+    * a caller that destroys it once its jobs have run; a read's variable
+    * goes with the DataFrame it returns. */
   private def scanFiles(spark: SparkSession, s: Snapshot, files: Seq[(Entry, AddFile)],
-      schema: Option[StructType], batch: Boolean, pos: Boolean,
-      dvs: Map[String, Array[Long]] = Map.empty, mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+      schema: Option[StructType], batch: Boolean, pos: Boolean, rowIds: Boolean = false,
+      mergeSchema: Boolean = false, own: Broadcast[_] => Unit = _ => ()): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import ExactlyOnceSink.{FileMeta, defaultRcv, fileBatch, fileKey, liveRow, virtualRowId}
     if (files.isEmpty) return spark.emptyDataFrame
     val root = new org.apache.hadoop.fs.Path(dataDir.toAbsolutePath.normalize.toUri)
     val types = schema.orElse(readSchema(s)).getOrElse(StructType(Nil))
+    val indexed = files.map { case (c, a) => (c, a, indexFile(c, a)) }
     val groups = schema match {
-      case Some(sch) => Seq(sch -> files.map { case (c, a) => indexFile(c, a) })
+      case Some(sch) => Seq(sch -> indexed.map(_._3))
       case None =>
         inferenceReads.incrementAndGet()
-        files.groupBy(_._1.version).toSeq.sortBy(_._1).map { case (_, cfs) =>
-          val fs = cfs.map { case (c, a) => indexFile(c, a) }
+        indexed.groupBy(_._1.version).toSeq.sortBy(_._1).map { case (_, cfs) =>
+          val fs = cfs.map(_._3)
           LogFileIndex.infer(spark, fs, mergeSchema) -> fs
         }
     }
-    val helpers = pos || dvs.nonEmpty
-    lazy val versions = files.map { case (c, a) => addKey(c, a) -> c.version.toInt }.toMap
+    val meta = indexed.map { case (c, a, f) =>
+      val key = addKey(c, a)
+      val base = if (!rowIds) 0L else a.baseRowId.getOrElse(sys.error(
+        s"row tracking: file $key predates enablement (no baseRowId " +
+          "recorded) — enable row tracking before data lands"))
+      LogFileIndex.filePath(f) -> FileMeta(key, c.version.toInt, base,
+        a.rcv.getOrElse(c.version), s.ts.dv.get(key).orNull)
+    }.toMap
+    val dv = meta.valuesIterator.exists(_.dv != null)
+    lazy val lookup = {
+      val b = spark.sparkContext.broadcast(meta)
+      own(b)
+      b
+    }
     val frames = groups.flatMap { case (sch, fs) => LogFileIndex.scan(spark, root, sch, types, fs) }
       .map { df =>
-        val withPos = if (!helpers) df else df
-          .withColumn(FileCol, relKeyCol)
-          .withColumn(RidxCol, col("_metadata.row_index"))
-        if (!batch) withPos
-        else withPos.withColumn("batch", element_at(typedLit(versions), relKeyCol))
+        val (path, ridx) = (col("_metadata.file_path"), col("_metadata.row_index"))
+        def matOr(c: String) =
+          if (df.columns.contains(c)) col(c) else lit(null).cast("long")
+        val live = if (!dv) df else df.filter(liveRow(lookup)(path, ridx))
+        val helped = if (!pos) live
+          else live.withColumn(FileCol, fileKey(lookup)(path)).withColumn(RidxCol, ridx)
+        val tagged = if (!batch) helped else helped.withColumn("batch", fileBatch(lookup)(path))
+        if (!rowIds) tagged
+        else tagged
+          .withColumn(MatIdCol, coalesce(matOr(MatIdCol), virtualRowId(lookup)(path, ridx)))
+          .withColumn(MatRcvCol, coalesce(matOr(MatRcvCol), defaultRcv(lookup)(path)))
       }
-    val out = subtractDVs(frames.reduce(_.unionByName(_, allowMissingColumns = true)), dvs)
-    if (pos || !helpers) out else out.drop(FileCol, RidxCol)
+    frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
-
-  /** Subtract deletion vectors from a scan carrying the FileCol/RidxCol
-    * helpers: one broadcast anti-join on (file, row position). The
-    * vectors are driver-held metadata (bounded by the DV size cap until a
-    * snapshot re-bases), so the join broadcasts and the scan itself stays
-    * pruned/columnar. */
-  private def subtractDVs(df: DataFrame, dvs: Map[String, Array[Long]]): DataFrame =
-    if (dvs.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.{broadcast, col, explode, sequence}
-      val sp = df.sparkSession
-      import sp.implicits._
-      // the driver ships consecutive-run RANGES (bounded by the vectors'
-      // run structure, not their row count); executors expand them to
-      // (file, position) pairs for the equality anti-join
-      val runs = dvs.toSeq.sortBy(_._1).flatMap { case (f, idxs) =>
-        DeletionVectors.ranges(idxs).map { case (lo, hi) => (f, lo, hi) }
-      }
-      val dv = runs.toDF("__dv_file", "__dv_lo", "__dv_hi")
-        .select(col("__dv_file"),
-          explode(sequence(col("__dv_lo"), col("__dv_hi"))).as("__dv_ridx"))
-      df.join(broadcast(dv),
-        df(FileCol) === dv("__dv_file") && df(RidxCol) === dv("__dv_ridx"), "left_anti")
-    }
 
   // ---------------------------------------------------------------------
   // row tracking (the Delta row-tracking / stable-row-id analog)
@@ -1955,38 +1936,6 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * tracking is off. */
   def rowIdWatermark(): Option[Long] = snapshot().aux.rowIdWatermark
 
-  /** (file key, baseRowId, default row-commit-version) for every add of
-    * the given commits. Fails loudly on a file that predates row
-    * tracking — a silent null id would defeat the stability contract. */
-  private def rowIdMetaOf(commits: Seq[Entry]): Seq[(String, Long, Long)] =
-    commits.flatMap { c =>
-      c.adds.map { a =>
-        val b = a.baseRowId.getOrElse(sys.error(
-          s"row tracking: file ${addKey(c, a)} predates enablement (no " +
-            "baseRowId recorded) — enable row tracking before data lands"))
-        (addKey(c, a), b, a.rcv.getOrElse(c.version))
-      }
-    }
-
-  /** Resolve every row's id/commit-version into the materialization
-    * columns: the pinned value where a prior rewrite materialized one,
-    * else the virtual value from the file's add action. `df` must carry
-    * the FileCol/RidxCol helpers (kept; only the lookup columns are
-    * consumed) and every scanned file must appear in `commits`. */
-  private def withResolvedMat(df: DataFrame, commits: Seq[Entry]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    val sp = df.sparkSession
-    import sp.implicits._
-    val meta = rowIdMetaOf(commits).toDF(FileCol, "__rt_base", "__rt_rcv")
-    def matOr(c: String) =
-      if (df.columns.contains(c)) col(c) else lit(null).cast("long")
-    df.join(broadcast(meta), Seq(FileCol))
-      .withColumn(MatIdCol, coalesce(matOr(MatIdCol),
-        col("__rt_base") + col(RidxCol)))
-      .withColumn(MatRcvCol, coalesce(matOr(MatRcvCol), col("__rt_rcv")))
-      .drop("__rt_base", "__rt_rcv")
-  }
-
   /** Read the table WITH row-tracking columns: `_row_id` (stable unique
     * row id) and `_row_commit_version` (the commit that last wrote the
     * row's content). Resolution per row: the MATERIALIZED value where a
@@ -2011,19 +1960,16 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
   /** The live (or as-of) state with FULLY-RESOLVED row ids sitting in
     * the materialization columns — the input every id-preserving
     * rewrite starts from ([[transactSnapshotChanges]]), and the
-    * resolver behind [[readWithRowIds]]. `batch` is retained; FileCol/
-    * RidxCol helpers are consumed here. Empty-schema frame when no data
-    * is visible. */
+    * resolver behind [[readWithRowIds]]. `batch` is retained. Empty-
+    * schema frame when no data is visible. */
   private def scanWithRowMeta(spark: SparkSession, live: Snapshot,
       at: Option[Snapshot]): DataFrame = {
     val s = at.getOrElse(live)
     // mat columns are REQUIRED here, so only the live readSchema (which
     // appends them to the recorded one) qualifies; as-of stays on the
     // inference read
-    val scanned = toLogical(live, scanFiles(spark, s, liveFiles(s),
-      if (at.isEmpty) readSchema(live) else None, batch = true, pos = true, s.ts.dv))
-    if (scanned.columns.isEmpty) return scanned
-    withResolvedMat(scanned, s.live).drop(FileCol, RidxCol)
+    toLogical(live, scanFiles(spark, s, liveFiles(s),
+      if (at.isEmpty) readSchema(live) else None, batch = true, pos = false, rowIds = true))
   }
 
   /** [[liveData]] with row ids materialized into the reserved columns
@@ -2429,12 +2375,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * pruning) as ONE [[scanFiles]] scan, minus the deletion vectors of
     * the kept files. No `batch` column. */
   private def readPruned(spark: SparkSession, s: Snapshot)
-      (keep: AddFile => Boolean): DataFrame = {
-    val files = liveFiles(s, keep)
-    val keys = files.map { case (c, a) => addKey(c, a) }.toSet
-    dropMat(toLogical(s, scanFiles(spark, s, files, readSchema(s), batch = false,
-      pos = false, s.ts.dv.filter(kv => keys(kv._1)))))
-  }
+      (keep: AddFile => Boolean): DataFrame =
+    dropMat(toLogical(s, scanFiles(spark, s, liveFiles(s, keep), readSchema(s),
+      batch = false, pos = false)))
 
   /** Test hook: the data dirs a committed version references (relative to
     * `data/`) — lets the vacuum race specs assert referenced dirs exist
@@ -2589,12 +2532,15 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * ([[DeletionVectors.classify]]): fully-matched files are dropped
     * from the live set (`remove` action), files whose total deleted-row
     * vector stays under `dvMaxRows` get a deletion vector (`dv` action
-    * — readers subtract the positions by `_metadata.row_index`), and
+    * — readers filter the positions out by `_metadata.row_index`), and
     * files over the cap are rewritten file-locally (kept rows re-staged,
     * original removed) so vectors stay small enough to broadcast.
     * Unmatched files are NEVER touched — at 100 TB a selective DELETE
     * costs O(matched files), while the copy-on-write [[delete]] costs
-    * O(table).
+    * O(table). The matched set is unbounded, so the driver receives
+    * only a count per matched file and the positions of the files within
+    * the cap ([[morCommit]]); the CDC `delete` rows are written from the
+    * probe plan, never collected.
     *
     * Runs through the OCC claim loop like every snapshot transaction;
     * records matched rows as its CDC `delete` change set; time travel
@@ -2607,10 +2553,10 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     import org.apache.spark.sql.functions.lit
     val s0 = snapshot()
     if (s0.live.isEmpty) return -1L
-    morCommit(spark, "DELETE_MOR", dvMaxRows, maxRetries, None, first = Some(s0)) { statePos =>
-      val doomed = statePos.filter(predicate)
-      (doomed, None,
-        doomed.drop(FileCol, RidxCol).withColumn("_change_type", lit("delete")))
+    morCommit(spark, "DELETE_MOR", dvMaxRows, maxRetries, None, Map.empty, s0,
+        ArrayBuffer.empty)(predicate, collect = false) { (state, _) =>
+      (None, state.filter(predicate).drop(FileCol, RidxCol)
+        .withColumn("_change_type", lit("delete")))
     }
   }
 
@@ -2621,56 +2567,66 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * instead of [[merge]]'s O(table) rewrite. This is the verb a
     * STREAMING upsert pipeline must use at scale: each micro-batch
     * touches only the files containing its keys. The keys of `updates`
-    * are collected to the driver for the match probe, so it should be
-    * micro-batch-sized (the streaming case by construction). CDC change
-    * rows (insert / update_preimage / update_postimage) are recorded
-    * exactly as [[merge]] records them. Returns the committed version,
-    * or -1 when `streamTxn`'s batch is already at or below its stream's
-    * cursor. */
+    * are collected to the driver, so it should be micro-batch-sized (the
+    * streaming case by construction): they reach the probe as a
+    * broadcast key set, and bound it by file stats. The probe job
+    * returns the matched target rows themselves (few: at most the
+    * target rows sharing an update key), and the driver derives from
+    * them everything the commit needs — the per-file classify, which
+    * update rows matched and, under row tracking, the id each updated
+    * row keeps. CDC change rows (insert / update_preimage /
+    * update_postimage) are recorded exactly as [[merge]] records them.
+    * Returns the committed version, or -1 when `streamTxn`'s batch is
+    * already at or below its stream's cursor. */
   def mergeDV(spark: SparkSession, updates0: DataFrame, keys: Seq[String],
       dvMaxRows: Int = 100000, maxRetries: Int = 20,
       streamTxn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, min, when}
+    import org.apache.spark.sql.functions.{col, lit, struct, when}
+    import ExactlyOnceSink.{keyLookup, keyOf}
     val s0 = snapshot()
     if (replayed(s0, streamTxn)) return -1L
     enforceSchema(s0, updates0.schema, mergeSchema = false, "mergeDV")
     val updates = applyGenerated(s0, conformToTable(s0, updates0))
     if (s0.live.isEmpty)
       return merge(spark, updates, keys, streamTxn)
-    // the update keys, collected once and deduped on the driver: they
-    // build the probe's semi-join relation and its pruning bounds. Only
-    // numeric key columns (their values are Numbers) bound the probe — a
-    // string's stats are lexicographic, so "2" lies outside a file's
-    // ["10", "3"] as a number
+    // the update keys, collected once: the probe's key set and its
+    // pruning bounds. Only numeric key columns (their values are Numbers)
+    // bound the probe — a string's stats are lexicographic, so "2" lies
+    // outside a file's ["10", "3"] as a number
     val keyDf = updates.select(keys.map(col): _*)
-    val keyRows = keyDf.collect().distinct.toSeq
+    val keyRows = keyDf.collect().toSeq
     val bounds = keyDf.columns.indices.flatMap { i =>
       val ds = keyRows.map(_.get(i)).collect { case n: Number => n.doubleValue }
       Option.when(ds.nonEmpty)(keyDf.columns(i) -> (ds.min, ds.max))
     }.toMap
-    val keyRel = spark.createDataFrame(keyRows.asJava, keyDf.schema)
-    morCommit(spark, "MERGE_MOR", dvMaxRows, maxRetries, streamTxn, bounds,
-        Some(s0)) { statePos =>
-      val doomed = statePos.join(broadcast(keyRel), keys, "left_semi")
-      // one left join of the updates to the matched keys tags every
-      // update row insert or update_postimage. Row tracking: an UPDATED
-      // row KEEPS its id — the join also attaches the matched target
-      // row's resolved id (min() pins a deterministic survivor when
-      // several target rows share a key, which this merge collapses to
-      // one update row anyway). Its commit version is deliberately NOT
-      // carried: the new file's default — this commit — is the row's new
-      // rcv, Delta's rule. Inserted rows take null and read back fresh
-      // virtual ids.
-      val tracked = statePos.columns.contains(MatIdCol)
-      val matched = doomed.groupBy(keys.map(col): _*).agg(lit(true).as("__matched"),
-        (if (tracked) Seq(min(col(MatIdCol)).as(MatIdCol)) else Nil): _*)
-      val joined = updates.join(broadcast(matched), keys, "left")
-      val changes = joined.withColumn("_change_type",
-          when(col("__matched"), lit("update_postimage")).otherwise(lit("insert")))
-        .select((updates.columns :+ "_change_type").map(col).toIndexedSeq: _*)
-        .unionByName(doomed.drop(FileCol, RidxCol)
-          .withColumn("_change_type", lit("update_preimage")), allowMissingColumns = true)
-      (doomed, Some(if (tracked) joined.drop("__matched") else updates), changes)
+    val key = struct(keys.map(col): _*)
+    val sc = spark.sparkContext
+    val probeKeys = sc.broadcast(keyRows.map(keyOf).filter(_ != null).map(_ -> 0L).toMap)
+    val made = ArrayBuffer[Broadcast[_]](probeKeys)
+    morCommit(spark, "MERGE_MOR", dvMaxRows, maxRetries, streamTxn, bounds, s0, made)(
+        keyLookup(probeKeys)(key).isNotNull, collect = true) { (state, matched) =>
+      // each update row is tagged insert or update_postimage by whether
+      // its key matched. Row tracking: an UPDATED row KEEPS its id — the
+      // smallest resolved id among the matched rows sharing its key (this
+      // merge collapses them to one update row anyway). Its commit version
+      // is deliberately NOT carried: the new file's default — this commit
+      // — is the row's new rcv, Delta's rule. Inserted rows take null and
+      // read back fresh virtual ids.
+      val tracked = state.columns.contains(MatIdCol)
+      val ki = keys.map(state.schema.fieldIndex)
+      val mi = if (tracked) state.schema.fieldIndex(MatIdCol) else -1
+      val hit = sc.broadcast(matched.groupMapReduce(r => keyOf(Row.fromSeq(ki.map(r.get))))(
+        r => if (tracked) r.getLong(mi) else 0L)(math.min))
+      made += hit
+      // the preimages are the matched rows, written as one file (a local
+      // relation would otherwise split them over up to one task per row)
+      val changes = updates.withColumn("_change_type",
+          when(keyLookup(hit)(key).isNotNull, lit("update_postimage")).otherwise(lit("insert")))
+        .unionByName(spark.createDataFrame(matched.asJava, state.schema).coalesce(1)
+          .drop(FileCol, RidxCol).withColumn("_change_type", lit("update_preimage")),
+          allowMissingColumns = true)
+      (Some(if (tracked) updates.withColumn(MatIdCol, keyLookup(hit)(key)) else updates),
+        changes)
     }
   }
 
@@ -2699,149 +2655,152 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
 
   /** The merge-on-read PROBE scan: the live files `bounds` cannot prune
     * (physical key column → numeric [lo, hi]), with file/position helper
-    * columns, deletion vectors subtracted and no `batch` — ONE
-    * [[scanFiles]] scan, so the probe plan, and its generated code, does
-    * not change from one merge to the next. */
+    * columns, resolved row ids on a tracked table, deletion vectors
+    * filtered out and no `batch` — ONE [[scanFiles]] scan, so the probe
+    * plan, and its generated code, does not change from one merge to the
+    * next. */
   private def probeScan(spark: SparkSession, s: Snapshot,
-      bounds: Map[String, (Double, Double)]): DataFrame =
+      bounds: Map[String, (Double, Double)], own: Broadcast[_] => Unit): DataFrame =
     toLogical(s, scanFiles(spark, s,
       liveFiles(s, a => bounds.forall { case (col, (lo, hi)) =>
         mayIntersect(a.stats.get(col), lo, hi) }),
-      readSchema(s), batch = false, pos = true, s.ts.dv))
+      readSchema(s), batch = false, pos = true, rowIds = s.tracked, own = own))
 
-  /** The merge-on-read OCC transaction core. `f` maps the live state
-    * (WITH file/position helper columns) to:
+  /** The merge-on-read OCC transaction core of [[deleteDV]] and
+    * [[mergeDV]]. Each attempt reads the [[probeScan]], pruned by
+    * `keyBounds` (physical key column → numeric [lo, hi] of the keys the
+    * caller matches), and finds the rows this commit deletes — those
+    * where `doomed` holds — in ONE probe job:
     *
-    *  - `doomed`: the live rows this commit deletes (subset of the
-    *    input, helper columns intact — positions drive the per-file
-    *    classify);
-    *  - `appended`: new rows to add in the same commit (merge's
-    *    updates), or None;
-    *  - `changes`: the logical CDC change rows to record.
+    *  - with `collect` (mergeDV, whose matches are bounded by its update
+    *    keys) the job returns the matched rows themselves;
+    *  - without it (deleteDV, whose matches are unbounded) one aggregate
+    *    grouped by file returns each file's matched-row count and, only
+    *    where that count is at most `dvMaxRows`, its positions (a larger
+    *    count can only remove or rewrite the file).
     *
-    * The state is the [[probeScan]], pruned by `keyBounds` (physical
-    * key column → numeric [lo, hi] of the keys the caller matches). The
-    * writer persists only `doomed` (matched rows — small by assumption;
-    * the table itself is never cached) and classifies every matched
-    * file in ONE aggregate grouped by file: its doomed-row count, and
-    * its positions only where that count is at most `dvMaxRows` (a
-    * larger count can only remove or rewrite the file). The file's
-    * recorded row count and existing vector pick the action
-    * ([[DeletionVectors.classify]]). Kept rows of over-cap files are
-    * rewritten from a re-scan of just those files; the claim carries
-    * remove/dv/add actions plus the change dir. `first` is the caller's
-    * snapshot, which the first attempt runs on. Conflicts recompute
-    * from fresh state, exactly like [[transactSnapshotChanges]]. */
+    * Everything after that job is decided on the driver. Each matched
+    * file's count, with its recorded row count and existing vector, picks
+    * its action ([[DeletionVectors.classify]]). `f` maps the probe state
+    * (WITH file/position helper columns) and the matched rows (empty
+    * without `collect`) to the rows to add in the same commit (merge's
+    * updates), or None, and the CDC change rows to record. Nothing is
+    * persisted: kept rows of over-cap files are rewritten from a re-scan
+    * of just those files where `doomed` does not hold, and the change
+    * rows are written from their own plan. The claim carries remove/dv/add
+    * actions plus the change dir. `made` holds the caller's broadcast
+    * variables; the scans add theirs, and all are destroyed once the
+    * claim is decided. `first` is the caller's snapshot, which the first
+    * attempt runs on. Conflicts recompute from fresh state, exactly like
+    * [[transactSnapshotChanges]]. */
   private def morCommit(spark: SparkSession, op: String, dvMaxRows: Int,
       maxRetries: Int, streamTxn: Option[(String, Long)],
-      keyBounds: Map[String, (Double, Double)] = Map.empty,
-      first: Option[Snapshot] = None)
-      (f: DataFrame => (DataFrame, Option[DataFrame], DataFrame)): Long = {
-    import org.apache.spark.sql.functions.{col, collect_list, count, lit, when}
-    occTransact(op, maxRetries, first = first, streamTxn = streamTxn) { s =>
-      val commits = s.live
+      keyBounds: Map[String, (Double, Double)], first: Snapshot,
+      made: ArrayBuffer[Broadcast[_]])(doomed: Column, collect: Boolean)
+      (f: (DataFrame, Seq[Row]) => (Option[DataFrame], DataFrame)): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, collect_list, count, lit, not, when}
+    try occTransact(op, maxRetries, first = Some(first), streamTxn = streamTxn) { s =>
       val ts0 = s.ts
       // stat-pruned probe (the Delta MERGE file-skipping argument: a key
       // present in a file is inside that file's [min,max], so files
       // pruned by the source's key bounds can contain NO matched rows —
       // skipping them changes nothing)
       val probe = probeScan(spark, s,
-        keyBounds.map { case (k, v) => s.physicalOf(k) -> v })
-      val statePos =
-        if (probe.columns.isEmpty) {
+        keyBounds.map { case (k, v) => s.physicalOf(k) -> v }, made += _)
+      val state =
+        if (probe.columns.nonEmpty) probe
+        else {
           // every file pruned: nothing can match, but f still needs a
           // typed empty relation (merge then classifies all updates as
           // inserts)
-          val sch = s.schema.getOrElse(StructType(Nil))
           val base = spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch)
+              spark.sparkContext.emptyRDD[Row], s.schema.getOrElse(StructType(Nil)))
             .withColumn(FileCol, lit(""))
             .withColumn(RidxCol, lit(0L))
           if (!s.tracked) base
           else base.withColumn(MatIdCol, lit(null).cast("long"))
             .withColumn(MatRcvCol, lit(null).cast("long"))
         }
-        // row tracking: hand f the matched-row scan with ids RESOLVED so
-        // an update can carry its target row's id into the new file
-        // (mergeDV's preservation join)
-        else if (!s.tracked) probe
-        else withResolvedMat(probe, commits)
-      val (doomed0, appended, changes) = f(statePos)
-      val doomed = doomed0.persist()
-      try {
-        val perFile = doomed.groupBy(col(FileCol))
-          .agg(count(lit(1)).as("n"), collect_list(col(RidxCol)).as("idx"))
-          .select(col(FileCol), col("n"), when(col("n") <= dvMaxRows, col("idx")))
-          .collect().map(r => r.getString(0) -> (r.getLong(1), Option(r.getSeq[Long](2))))
-        // physical row counts from the add actions already in hand —
-        // footer I/O only for legacy adds that never recorded `rows`
-        val rowsByKey: Map[String, Long] = commits.flatMap(c =>
-          c.adds.flatMap(a => a.rows.map(addKey(c, a) -> _))).toMap
-        val actions = perFile.map { case (k, (n, _)) =>
-          k -> DeletionVectors.classify(n,
-            ts0.dv.get(k).map(_.length.toLong).getOrElse(0L),
-            rowsByKey.getOrElse(k, fileRowCount(spark, k)), dvMaxRows)
-        }.toMap
-        def keysOf(a: DeletionVectors.FileAction) =
-          actions.collect { case (k, `a`) => k }.toSeq.sorted
-        val (removeKeys, rewriteKeys) = (keysOf(DeletionVectors.Remove),
-          keysOf(DeletionVectors.Rewrite))
-        val dvNew = perFile.collect {
-          case (k, (_, Some(idx))) if actions(k) == DeletionVectors.Vector =>
-            k -> DeletionVectors.union(ts0.dv.getOrElse(k, Array.empty[Long]), idx.toArray)
-        }.toMap
-        // over-cap files: rewrite kept rows from a re-scan of JUST those
-        // files (file-pruned at the source, unlike filtering the full
-        // state scan), minus their existing DV rows and this commit's
-        // doomed rows
-        val kept = if (rewriteKeys.isEmpty) None else Some {
-          val rw = rewriteKeys.toSet
-          val live = toLogical(s, scanFiles(spark, s,
-              liveFiles(s).filter { case (c, a) => rw(addKey(c, a)) }, readSchema(s),
-              batch = false, pos = true, ts0.dv.filter(kv => rw(kv._1))))
-            .join(doomed.select(col(FileCol), col(RidxCol)),
-              Seq(FileCol, RidxCol), "left_anti")
-          // row tracking: kept rows of a rewritten over-cap file change
-          // (file, position) — pin their ids before the drop
-          (if (!s.tracked) live
-           else withResolvedMat(live, commits))
-            .drop(FileCol, RidxCol)
-        }
-        val newRows = (kept, appended) match {
-          case (Some(a), Some(b)) => Some(a.unionByName(b, allowMissingColumns = true))
-          case (a, b) => a.orElse(b)
-        }
-        val uuid = java.util.UUID.randomUUID().toString
-        // declared bloom policy rides merge-on-read rewrites too:
-        // over-cap rewrites and merge's inserted rows get fresh blooms so
-        // point-probe pruning survives table maintenance
-        val pub = newRows.fold(Unpublished) { nr =>
-          val (polCols, polBits) = bloomPolicy(s)
-          publish(s, nr, s"files/$uuid", Nil, polCols, polBits, check = true)
-        }
-        // the CDC feed is logical — strip helper/materialization columns
-        val ch = publish(s, dropMat(changes), s"changes/$uuid", Nil, Nil, 0,
-          check = false)
-        // evolved union, same monotonicity argument as the snapshot
-        // claim: the probe state's file-derived schema can lack columns
-        // the TABLE schema has
-        val morSchemaBase = org.apache.spark.sql.types.StructType(
-          statePos.drop(FileCol, RidxCol).schema.fields
-            .filterNot(_.name.startsWith(MatPrefix)))
-        // a delta-shaped commit (removes + DVs + adds) keeps rival
-        // appends visible by construction — no base field needed; a
-        // rebased re-claim is safe because the rival's files did not
-        // exist at this transaction's read, so they intersect neither
-        // its probe scan nor its removes/DV keys
-        Some { (t: Snapshot) =>
-          Entry(t.next, if (pub.adds.nonEmpty) pub.dir else "", adds = pub.adds,
-            op = op, schemaStr = Some(evolvedSchemaOf(t, morSchemaBase)._1),
-            changeDir = Some(ch.dir), changeAdds = ch.adds, streamTxn = streamTxn,
-            removes = removeKeys ++ rewriteKeys, dvs = dvNew,
-            matFiles = pub.adds.nonEmpty && t.tracked)
-        }
-      } finally doomed.unpersist(blocking = false)
-    }
+      // the probe job: per matched file its key, matched-row count and,
+      // within the cap, positions; and the matched rows when `collect`
+      val (perFile, matched) =
+        if (probe.columns.isEmpty) (Seq.empty[(String, Long, Option[Seq[Long]])], Seq.empty[Row])
+        else if (collect) {
+          val rows = probe.filter(doomed).collect().toSeq
+          val (fi, ri) = (probe.schema.fieldIndex(FileCol), probe.schema.fieldIndex(RidxCol))
+          (rows.groupBy(_.getString(fi)).toSeq.map { case (k, rs) =>
+            (k, rs.size.toLong, Option.when(rs.size <= dvMaxRows)(rs.map(_.getLong(ri))))
+          }, rows)
+        } else
+          (probe.filter(doomed).groupBy(col(FileCol))
+            .agg(count(lit(1)).as("n"), collect_list(col(RidxCol)).as("idx"))
+            .select(col(FileCol), col("n"), when(col("n") <= dvMaxRows, col("idx")))
+            .collect().toSeq
+            .map(r => (r.getString(0), r.getLong(1), Option(r.getSeq[Long](2)))), Nil)
+      val (appended, changes) = f(state, matched)
+      // physical row counts from the add actions already in hand —
+      // footer I/O only for legacy adds that never recorded `rows`
+      val rowsByKey: Map[String, Long] = s.live.flatMap(c =>
+        c.adds.flatMap(a => a.rows.map(addKey(c, a) -> _))).toMap
+      val actions = perFile.map { case (k, n, _) =>
+        k -> DeletionVectors.classify(n,
+          ts0.dv.get(k).map(_.length.toLong).getOrElse(0L),
+          rowsByKey.getOrElse(k, fileRowCount(spark, k)), dvMaxRows)
+      }.toMap
+      def keysOf(a: DeletionVectors.FileAction) =
+        actions.collect { case (k, `a`) => k }.toSeq.sorted
+      val (removeKeys, rewriteKeys) = (keysOf(DeletionVectors.Remove),
+        keysOf(DeletionVectors.Rewrite))
+      val dvNew = perFile.collect {
+        case (k, _, Some(idx)) if actions(k) == DeletionVectors.Vector =>
+          k -> DeletionVectors.union(ts0.dv.getOrElse(k, Array.empty[Long]), idx.toArray)
+      }.toMap
+      // over-cap files: rewrite kept rows from a re-scan of JUST those
+      // files (file-pruned at the source, unlike filtering the full state
+      // scan), minus their existing DV rows and this commit's doomed rows.
+      // Row tracking: kept rows change (file, position), so the scan pins
+      // their resolved ids before the write
+      val kept = if (rewriteKeys.isEmpty) None else Some {
+        val rw = rewriteKeys.toSet
+        toLogical(s, scanFiles(spark, s,
+            liveFiles(s).filter { case (c, a) => rw(addKey(c, a)) }, readSchema(s),
+            batch = false, pos = false, rowIds = s.tracked, own = made += _))
+          .filter(not(coalesce(doomed, lit(false))))
+      }
+      val newRows = (kept, appended) match {
+        case (Some(a), Some(b)) => Some(a.unionByName(b, allowMissingColumns = true))
+        case (a, b) => a.orElse(b)
+      }
+      val uuid = java.util.UUID.randomUUID().toString
+      // declared bloom policy rides merge-on-read rewrites too:
+      // over-cap rewrites and merge's inserted rows get fresh blooms so
+      // point-probe pruning survives table maintenance
+      val pub = newRows.fold(Unpublished) { nr =>
+        val (polCols, polBits) = bloomPolicy(s)
+        publish(s, nr, s"files/$uuid", Nil, polCols, polBits, check = true)
+      }
+      // the CDC feed is logical — strip helper/materialization columns
+      val ch = publish(s, dropMat(changes), s"changes/$uuid", Nil, Nil, 0,
+        check = false)
+      // evolved union, same monotonicity argument as the snapshot
+      // claim: the probe state's file-derived schema can lack columns
+      // the TABLE schema has
+      val morSchemaBase = org.apache.spark.sql.types.StructType(
+        state.drop(FileCol, RidxCol).schema.fields
+          .filterNot(_.name.startsWith(MatPrefix)))
+      // a delta-shaped commit (removes + DVs + adds) keeps rival
+      // appends visible by construction — no base field needed; a
+      // rebased re-claim is safe because the rival's files did not
+      // exist at this transaction's read, so they intersect neither
+      // its probe scan nor its removes/DV keys
+      Some { (t: Snapshot) =>
+        Entry(t.next, if (pub.adds.nonEmpty) pub.dir else "", adds = pub.adds,
+          op = op, schemaStr = Some(evolvedSchemaOf(t, morSchemaBase)._1),
+          changeDir = Some(ch.dir), changeAdds = ch.adds, streamTxn = streamTxn,
+          removes = removeKeys ++ rewriteKeys, dvs = dvNew,
+          matFiles = pub.adds.nonEmpty && t.tracked)
+      }
+    } finally made.foreach(_.destroy())
   }
 
   /** REPLACE WHERE (Delta's predicate/partition overwrite): atomically
@@ -3375,7 +3334,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * Relative paths always resolve under a table's own `data/`;
     * absolute paths pass through (`Path.resolve` semantics), so every
     * read verb — scans, skipping, bloom lookup, CDC, merge-on-read
-    * subtraction ([[relKeyCol]]'s absolute branch) — works unchanged.
+    * subtraction (a scan's file lookup maps each path to its log key,
+    * absolute or not) — works unchanged.
     *
     * Writes after the clone diverge: new commits (append / merge /
     * deleteDV / OPTIMIZE) land in the CLONE's data root and log, never
@@ -3394,7 +3354,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * clone's latest version. Chained clones work: already-absolute
     * paths are preserved verbatim. Absolute-path detection assumes
     * POSIX roots (leading "/"): Windows drive-letter paths would need a
-    * scheme-aware form of both abs() and relKeyCol's foreign branch. */
+    * scheme-aware form of abs(). */
   def cloneTo(targetDir: String): Long = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
@@ -3787,7 +3747,8 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     // back to the logical view, so a RENAME never narrows the layout; a
     // recorded column DROPped since the clustered write is skipped
     // (explicit clusterBy still fails loudly).
-    occTransact("compactSmall", maxRetries) { s =>
+    val made = ArrayBuffer.empty[Broadcast[_]]
+    try occTransact("compactSmall", maxRetries) { s =>
       val clusterCols =
         if (clusterBy.nonEmpty) clusterBy else activeClusterCols(s)
       // every live file is a candidate but a hive-partitioned one: packed
@@ -3801,20 +3762,13 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       else {
         val nOut = math.max(1,
           math.ceil(cands.map(_._3.length).sum.toDouble / targetBytes).toInt)
-        // only the candidates' vectors: no anti-join (and no position
-        // columns on an untracked table) when none carries one
-        val keySet = candKeys.toSet
-        val dvs = s.ts.dv.filter(kv => keySet(kv._1))
+        // row tracking: the packed rows change (file, position), so the
+        // scan pins each one's id/commit-version into the materialization
+        // columns before the positions are lost — OPTIMIZE preserves row
+        // ids. The candidates' vectors are filtered out by the scan
         val tracked = s.tracked
-        val live1 = scanFiles(spark, s, cands.map(t => t._1 -> t._2), readSchema(s),
-          batch = false, pos = tracked || dvs.nonEmpty, dvs)
-        // row tracking: the packed rows change (file, position), so pin
-        // each one's id/commit-version into the materialization columns
-        // before the positions are lost — OPTIMIZE preserves row ids
-        val live0 = (if (tracked)
-            withResolvedMat(live1, s.live)
-          else live1)
-          .drop(FileCol, RidxCol)
+        val live0 = scanFiles(spark, s, cands.map(t => t._1 -> t._2), readSchema(s),
+          batch = false, pos = false, rowIds = tracked, own = made += _)
         // OPTIMIZE ... ZORDER BY, incrementally: z-order just the packed
         // small files (the scan frame carries PHYSICAL names — translate
         // the clustering columns). Big files keep their existing layout.
@@ -3855,7 +3809,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
             domains = clusterDomain(t, clusterBy))
         }
       }
-    }
+    } finally made.foreach(_.destroy())
   }
 
   /** VACUUM analog: delete data that no committed version references —
@@ -4097,4 +4051,75 @@ object ExactlyOnceSink {
     new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val identityRestages =
     new java.util.concurrent.atomic.AtomicLong(0L)
+
+  // Driver-held sets reach executors as broadcast variables read by the
+  // row functions below. A local relation joined into the plan would cost
+  // a Spark job per call to broadcast; a variable costs none, and its
+  // function is a reference object in generated code, so the plan's code
+  // is the same whatever the set holds. The functions live here, not in
+  // the sink, so their closures capture only the variable.
+
+  /** What a scan knows about one file it reads, looked up by the file's
+    * `_metadata.file_path`: its log key (the sink's `addKey`), the
+    * version of the commit that added it (`batch`), its row-tracking base
+    * id and default row-commit version (0 when the scan resolves no row
+    * ids), and its deletion vector, sorted (null without one). */
+  private[streaming] final case class FileMeta(key: String, version: Int, baseRowId: Long,
+      rcv: Long, dv: Array[Long])
+
+  private[streaming] type FileLookup = Broadcast[Map[String, FileMeta]]
+
+  private[streaming] def fileKey(m: FileLookup): UserDefinedFunction =
+    udf((p: String) => m.value(p).key)
+
+  /** Null for a path outside the lookup, as a map literal's `element_at`
+    * gives. */
+  private[streaming] def fileBatch(m: FileLookup): UserDefinedFunction =
+    udf((p: String) => m.value.get(p).map(_.version))
+
+  /** Whether row `i` of the file survives its deletion vector: Delta's
+    * row-index filter, a binary search in the file's sorted vector. */
+  private[streaming] def liveRow(m: FileLookup): UserDefinedFunction =
+    udf { (p: String, i: Long) =>
+      val dv = m.value(p).dv
+      dv == null || java.util.Arrays.binarySearch(dv, i) < 0
+    }
+
+  private[streaming] def virtualRowId(m: FileLookup): UserDefinedFunction =
+    udf((p: String, i: Long) => m.value(p).baseRowId + i)
+
+  private[streaming] def defaultRcv(m: FileLookup): UserDefinedFunction =
+    udf((p: String) => m.value(p).rcv)
+
+  /** A merge key (a row of the key columns) as a hash-set member that
+    * matches as Spark's equi-join matches: null when a component is null
+    * (a null key matches nothing), integral values as Long and floating
+    * ones as Double (a widened column compares with its narrow files),
+    * `-0.0` as `0.0` and NaN equal to NaN (Spark's join-key
+    * normalization), decimals by value and binary by content. */
+  private[streaming] def keyOf(r: Row): java.util.List[AnyRef] = {
+    val k = new java.util.ArrayList[AnyRef](r.length)
+    var i = 0
+    while (i < r.length) {
+      k.add(r.get(i) match {
+        case null => return null
+        case n @ (_: Byte | _: Short | _: Int | _: Long) =>
+          java.lang.Long.valueOf(n.asInstanceOf[Number].longValue)
+        case n @ (_: Float | _: Double) =>
+          val d = n.asInstanceOf[Number].doubleValue
+          java.lang.Double.valueOf(if (d == 0.0d) 0.0d else d)
+        case d: java.math.BigDecimal => d.stripTrailingZeros
+        case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+        case v => v.asInstanceOf[AnyRef]
+      })
+      i += 1
+    }
+    k
+  }
+
+  /** The value `m` holds for a row's merge key, given as a struct of the
+    * key columns; null when the key is absent or has a null component. */
+  private[streaming] def keyLookup(m: Broadcast[Map[java.util.List[AnyRef], Long]])
+      : UserDefinedFunction =
+    udf((r: Row) => Option(keyOf(r)).flatMap(m.value.get))
 }

@@ -56,8 +56,13 @@ private[streaming] object LogFileIndex {
       }
     }
 
+  /** `f` as Hadoop sees it, under its qualified `file:/abs/path` name:
+    * the form a scan reports in `_metadata.file_path`, URI-encoded
+    * ([[filePath]]). */
   def status(f: File): FileStatus =
-    new FileStatus(f.length, false, 1, 32L << 20, 0L, new HPath(f.path.toUri))
+    new FileStatus(f.length, false, 1, 32L << 20, 0L, new HPath("file", null, f.path.toString))
+
+  def filePath(f: File): String = status(f).getPath.toUri.toString
 
   /** `files` read with the physical data `schema`, as one parquet
     * relation per set of partition columns, in order of first appearance.

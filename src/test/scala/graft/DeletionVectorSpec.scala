@@ -261,4 +261,66 @@ class DeletionVectorSpec extends SparkSpecBase {
     val live = sink.read(spark).select("k", "v").as[(String, Int)].collect().sorted
     assert(live.toSeq === Seq(("10", 1), ("2", 20), ("3", 3)))
   }
+
+  test("a MOR merge whose key matches only a deleted row records insert, no duplicate") {
+    val (sink, _) = newSink("dv-key")
+    sink.commitAppend(Seq.tabulate(10)(i => (i.toLong, s"v$i")).toDF("id", "x").coalesce(1))
+    sink.deleteDV(spark, col("id") === 3L)
+    val v = sink.mergeDV(spark, Seq((3L, "back")).toDF("id", "x"), Seq("id"))
+    val live = sink.read(spark).select("id", "x").as[(Long, String)].collect()
+    assert(live.count(_._1 == 3L) === 1 && live.length === 10)
+    assert(live.toMap.apply(3L) === "back")
+    val ch = sink.readChanges(spark, v - 1, v).select("id", "x", "_change_type")
+      .as[(Long, String, String)].collect()
+    assert(ch.toSeq === Seq((3L, "back", "insert")))
+    // the deleted row is not re-deleted: no file gets a new vector or a remove
+    val h = sink.history(spark).filter(col("version") === v)
+      .select("num_removed_files", "num_deletion_vectors").as[(Long, Long)].collect()
+    assert(h.toSeq === Seq((0L, 0L)))
+  }
+
+  test("a null update key matches no live null-key row") {
+    // an equi-join never matches null = null: the null-key update inserts
+    val (sink, _) = newSink("null-key")
+    sink.commitAppend(Seq((Some(1L), "a"), (None, "n")).toDF("id", "x"))
+    val v = sink.mergeDV(spark, Seq((Option.empty[Long], "n2"), (Some(1L), "a2"))
+      .toDF("id", "x"), Seq("id"))
+    val live = sink.read(spark).select("id", "x").as[(Option[Long], String)].collect()
+    assert(live.sortBy(_._2).toSeq === Seq((Some(1L), "a2"), (None, "n"), (None, "n2")))
+    val ch = sink.readChanges(spark, v - 1, v).select("id", "x", "_change_type")
+      .as[(Option[Long], String, String)].collect().sortBy(_._2)
+    assert(ch.toSeq === Seq((Some(1L), "a", "update_preimage"),
+      (Some(1L), "a2", "update_postimage"), (None, "n2", "insert")))
+  }
+
+  test("a two-column-key MOR merge records the same CDC rows as a copy-on-write merge") {
+    def run(mor: Boolean): (Seq[(Long, String, Int, String)], Seq[(Long, String, Int)]) = {
+      val (sink, _) = newSink(s"two-key-$mor")
+      sink.commitAppend(Seq((1L, "a", 1), (1L, "b", 2), (2L, "a", 3), (2L, "b", 4))
+        .toDF("k1", "k2", "v"))
+      // (1, b) matches both columns; (2, c) and (3, a) match one or none
+      val up = Seq((1L, "b", 20), (2L, "c", 30), (3L, "a", 40)).toDF("k1", "k2", "v")
+      val v = if (mor) sink.mergeDV(spark, up, Seq("k1", "k2"))
+        else sink.merge(spark, up, Seq("k1", "k2"))
+      (sink.readChanges(spark, v - 1, v).select("k1", "k2", "v", "_change_type")
+        .as[(Long, String, Int, String)].collect().sorted.toSeq,
+        sink.read(spark).select("k1", "k2", "v").as[(Long, String, Int)].collect().sorted.toSeq)
+    }
+    val (mor, cow) = (run(mor = true), run(mor = false))
+    assert(mor === cow)
+    assert(mor._1.map(_._4).sorted === Seq("insert", "insert", "update_postimage",
+      "update_preimage"))
+  }
+
+  test("no RDD stays persisted after mergeDV or deleteDV") {
+    val (sink, _) = newSink("persist")
+    sink.commitAppend(spark.range(0, 200).select(col("id"), (col("id") * 2).as("v"))
+      .coalesce(2))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    sink.mergeDV(spark, Seq((5L, 0L), (500L, 1L)).toDF("id", "v"), Seq("id"))
+    sink.deleteDV(spark, col("id") < 20L)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted after the merge and delete: $left")
+    assert(sink.read(spark).count() === 181)
+  }
 }
