@@ -7,9 +7,10 @@ package graft.streaming
   * A deletion vector marks individual rows of a committed parquet file
   * as deleted WITHOUT rewriting the file: the commit entry records the
   * file's deleted row positions, and readers filter them out by position
-  * (`_metadata.row_index`) — Delta's row-index filter: each scanned
-  * file's sorted vector ships in the scan's broadcast file lookup, and a
-  * row survives unless a binary search finds its index there. At 100 TB
+  * (`_metadata.row_index`) — Delta's row-index filter: the scanned
+  * files' sorted vectors ship in one broadcast variable keyed by
+  * `_metadata.file_path`, and a row survives unless a binary search finds
+  * its index in its file's vector. At 100 TB
   * this is the difference between a
   * DELETE/MERGE that touches only the files containing matched rows and
   * one that rewrites the whole table (the sink's copy-on-write

@@ -1691,8 +1691,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     *
     * The plan does not grow with the table's history: every live file of
     * a flat-only or hive-only table is ONE scan ([[scanFiles]]) over an
-    * index built from the log, and `batch` and the deletion vectors are
-    * looked up per row in a broadcast variable, so the
+    * index built from the log; `batch` is a per-file `_metadata` constant
+    * of that index and the deletion vectors are looked up per row in a
+    * broadcast variable, so the
     * code Spark generates for a read — and for every streaming
     * micro-batch plan built on it — is the same after commit 3 and
     * commit 3000 and hits the codegen cache. */
@@ -1771,9 +1772,11 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       if (c.restoreDirs.isEmpty) a.path
       else c.restoreDirs.filter(d => a.path.startsWith(d + "/")).maxByOption(_.length)
         .fold(a.path)(d => a.path.drop(d.length + 1))
-    val path = dataDir.toAbsolutePath.normalize.resolve(addKey(c, a))
+    val key = addKey(c, a)
+    val path = dataDir.toAbsolutePath.normalize.resolve(key)
     LogFileIndex.File(path, a.bytes.getOrElse(Files.size(path)),
-      rel.take(math.max(rel.lastIndexOf('/'), 0)))
+      rel.take(math.max(rel.lastIndexOf('/'), 0)),
+      LogFileIndex.Consts(key, c.version.toInt, a.baseRowId, a.rcv.getOrElse(c.version)))
   }
 
   /** THE data-file scan behind every sink read, probe and rewrite: the
@@ -1789,18 +1792,19 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * footers ([[inferenceReads]]): a single mergeSchema scan would refuse
     * a type widening between commits that unionByName coerces.
     *
-    * What the scan needs per file rides in ONE broadcast variable, a
-    * [[ExactlyOnceSink.FileMeta]] per file keyed by its
-    * `_metadata.file_path`, read by row functions; it grows with the
-    * files scanned but never enters the plan, so the generated code is the
-    * same after commit 3 and commit 3000. From it come: the deletion
-    * vectors of `s`, applied as a row-index filter on each file (a binary
-    * search in the file's sorted vector, Delta's reader rule); on request
-    * the FileCol/RidxCol helpers (`pos`), the writing commit's version as
+    * What the scan needs per file never enters the plan, so the
+    * generated code is the same after commit 3 and commit 3000. The log's
+    * per-file facts are `_metadata` constants of the file's listing entry
+    * ([[LogFileIndex.Consts]]); from them come, on request, the
+    * FileCol/RidxCol helpers (`pos`), the writing commit's version as
     * `batch`, and each row's resolved row id and commit version in the
     * materialization columns (`rowIds`: the pinned value where a rewrite
     * materialized one, else the file's baseRowId + the row's position and
-    * its default version; every scanned file must carry a baseRowId).
+    * its default version; every scanned file must carry a baseRowId). The
+    * deletion vectors of `s` on the scanned files ride in one broadcast
+    * variable keyed by `_metadata.file_path` and are applied as a
+    * row-index filter (a binary search in the file's sorted vector,
+    * Delta's reader rule); a scan of files without vectors makes none.
     * `_metadata` only resolves directly on a scan relation, so all of it
     * attaches before the union. `own` receives the broadcast variable, for
     * a caller that destroys it once its jobs have run; a read's variable
@@ -1809,47 +1813,45 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       schema: Option[StructType], batch: Boolean, pos: Boolean, rowIds: Boolean = false,
       mergeSchema: Boolean = false, own: Broadcast[_] => Unit = _ => ()): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    import ExactlyOnceSink.{FileMeta, defaultRcv, fileBatch, fileKey, liveRow, virtualRowId}
+    import ExactlyOnceSink.liveRow
     if (files.isEmpty) return spark.emptyDataFrame
     val root = new org.apache.hadoop.fs.Path(dataDir.toAbsolutePath.normalize.toUri)
     val types = schema.orElse(readSchema(s)).getOrElse(StructType(Nil))
-    val indexed = files.map { case (c, a) => (c, a, indexFile(c, a)) }
+    val indexed = files.map { case (c, a) =>
+      if (rowIds && a.baseRowId.isEmpty) sys.error(s"row tracking: file ${addKey(c, a)} " +
+        "predates enablement (no baseRowId recorded) — enable row tracking before data lands")
+      (c, indexFile(c, a))
+    }
     val groups = schema match {
-      case Some(sch) => Seq(sch -> indexed.map(_._3))
+      case Some(sch) => Seq(sch -> indexed.map(_._2))
       case None =>
         inferenceReads.incrementAndGet()
         indexed.groupBy(_._1.version).toSeq.sortBy(_._1).map { case (_, cfs) =>
-          val fs = cfs.map(_._3)
+          val fs = cfs.map(_._2)
           LogFileIndex.infer(spark, fs, mergeSchema) -> fs
         }
     }
-    val meta = indexed.map { case (c, a, f) =>
-      val key = addKey(c, a)
-      val base = if (!rowIds) 0L else a.baseRowId.getOrElse(sys.error(
-        s"row tracking: file $key predates enablement (no baseRowId " +
-          "recorded) — enable row tracking before data lands"))
-      LogFileIndex.filePath(f) -> FileMeta(key, c.version.toInt, base,
-        a.rcv.getOrElse(c.version), s.ts.dv.get(key).orNull)
-    }.toMap
-    val dv = meta.valuesIterator.exists(_.dv != null)
-    lazy val lookup = {
-      val b = spark.sparkContext.broadcast(meta)
+    val dvs = indexed.flatMap { case (_, f) =>
+      s.ts.dv.get(f.consts.key).map(LogFileIndex.filePath(f) -> _) }.toMap
+    val lookup = Option.when(dvs.nonEmpty) {
+      val b = spark.sparkContext.broadcast(dvs)
       own(b)
       b
     }
     val frames = groups.flatMap { case (sch, fs) => LogFileIndex.scan(spark, root, sch, types, fs) }
       .map { df =>
-        val (path, ridx) = (col("_metadata.file_path"), col("_metadata.row_index"))
+        def meta(field: String) = col(s"_metadata.$field")
         def matOr(c: String) =
           if (df.columns.contains(c)) col(c) else lit(null).cast("long")
-        val live = if (!dv) df else df.filter(liveRow(lookup)(path, ridx))
+        val ridx = meta("row_index")
+        val live = lookup.fold(df)(b => df.filter(liveRow(b)(meta("file_path"), ridx)))
         val helped = if (!pos) live
-          else live.withColumn(FileCol, fileKey(lookup)(path)).withColumn(RidxCol, ridx)
-        val tagged = if (!batch) helped else helped.withColumn("batch", fileBatch(lookup)(path))
+          else live.withColumn(FileCol, meta("log_key")).withColumn(RidxCol, ridx)
+        val tagged = if (!batch) helped else helped.withColumn("batch", meta("log_version"))
         if (!rowIds) tagged
         else tagged
-          .withColumn(MatIdCol, coalesce(matOr(MatIdCol), virtualRowId(lookup)(path, ridx)))
-          .withColumn(MatRcvCol, coalesce(matOr(MatRcvCol), defaultRcv(lookup)(path)))
+          .withColumn(MatIdCol, coalesce(matOr(MatIdCol), meta("base_row_id") + ridx))
+          .withColumn(MatRcvCol, coalesce(matOr(MatRcvCol), meta("default_row_commit_version")))
       }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -2540,7 +2542,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * O(table). The matched set is unbounded, so the driver receives
     * only a count per matched file and the positions of the files within
     * the cap ([[morCommit]]); the CDC `delete` rows are written from the
-    * probe plan, never collected.
+    * probe plan, never collected. Nothing is persisted between those
+    * scans (nor the over-cap rewrite's), so each evaluates `predicate`
+    * again: it must be deterministic.
     *
     * Runs through the OCC claim loop like every snapshot transaction;
     * records matched rows as its CDC `delete` change set; time travel
@@ -2570,18 +2574,22 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * are collected to the driver, so it should be micro-batch-sized (the
     * streaming case by construction): they reach the probe as a
     * broadcast key set, and bound it by file stats. The probe job
-    * returns the matched target rows themselves (few: at most the
-    * target rows sharing an update key), and the driver derives from
-    * them everything the commit needs — the per-file classify, which
-    * update rows matched and, under row tracking, the id each updated
-    * row keeps. CDC change rows (insert / update_preimage /
+    * returns the matched target rows themselves (the target rows sharing
+    * an update key: one per key on a key-unique table) when there are at
+    * most `dvMaxRows` of them, and the driver derives from them
+    * everything the commit needs — the per-file classify, which update
+    * rows matched and, under row tracking, the id each updated row keeps.
+    * Past that (a target key shared by many rows) the driver holds none
+    * of them: the classify takes [[deleteDV]]'s per-file aggregate, one
+    * more aggregate gives the matched keys, and the preimages are written
+    * from the probe plan. CDC change rows (insert / update_preimage /
     * update_postimage) are recorded exactly as [[merge]] records them.
     * Returns the committed version, or -1 when `streamTxn`'s batch is
     * already at or below its stream's cursor. */
   def mergeDV(spark: SparkSession, updates0: DataFrame, keys: Seq[String],
       dvMaxRows: Int = 100000, maxRetries: Int = 20,
       streamTxn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{col, lit, struct, when}
+    import org.apache.spark.sql.functions.{col, lit, min, struct, when}
     import ExactlyOnceSink.{keyLookup, keyOf}
     val s0 = snapshot()
     if (replayed(s0, streamTxn)) return -1L
@@ -2603,28 +2611,40 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     val sc = spark.sparkContext
     val probeKeys = sc.broadcast(keyRows.map(keyOf).filter(_ != null).map(_ -> 0L).toMap)
     val made = ArrayBuffer[Broadcast[_]](probeKeys)
+    val doomed = keyLookup(probeKeys)(key).isNotNull
     morCommit(spark, "MERGE_MOR", dvMaxRows, maxRetries, streamTxn, bounds, s0, made)(
-        keyLookup(probeKeys)(key).isNotNull, collect = true) { (state, matched) =>
+        doomed, collect = true) { (state, matched) =>
       // each update row is tagged insert or update_postimage by whether
       // its key matched. Row tracking: an UPDATED row KEEPS its id — the
       // smallest resolved id among the matched rows sharing its key (this
       // merge collapses them to one update row anyway). Its commit version
       // is deliberately NOT carried: the new file's default — this commit
       // — is the row's new rcv, Delta's rule. Inserted rows take null and
-      // read back fresh virtual ids.
+      // read back fresh virtual ids. Past dvMaxRows matched rows (a target
+      // key shared by many rows) nothing was collected: the matched keys
+      // come from one aggregate, at most one row per update key
       val tracked = state.columns.contains(MatIdCol)
-      val ki = keys.map(state.schema.fieldIndex)
-      val mi = if (tracked) state.schema.fieldIndex(MatIdCol) else -1
-      val hit = sc.broadcast(matched.groupMapReduce(r => keyOf(Row.fromSeq(ki.map(r.get))))(
-        r => if (tracked) r.getLong(mi) else 0L)(math.min))
+      val hits = matched match {
+        case Some(rows) =>
+          val ki = keys.map(state.schema.fieldIndex)
+          val mi = if (tracked) state.schema.fieldIndex(MatIdCol) else -1
+          rows.map(r => keyOf(Row.fromSeq(ki.map(r.get))) -> (if (tracked) r.getLong(mi) else 0L))
+        case None =>
+          state.filter(doomed).groupBy(keys.map(col): _*)
+            .agg(min(if (tracked) col(MatIdCol) else lit(0L))).collect().toSeq
+            .map(r => keyOf(Row.fromSeq(keys.indices.map(r.get))) -> r.getLong(keys.size))
+      }
+      val hit = sc.broadcast(hits.groupMapReduce(_._1)(_._2)(math.min))
       made += hit
-      // the preimages are the matched rows, written as one file (a local
-      // relation would otherwise split them over up to one task per row)
+      // the preimages are the matched rows: collected, they are written
+      // as one file (a local relation would otherwise split them over up
+      // to one task per row)
+      val preimages = matched.fold(state.filter(doomed))(rs =>
+        spark.createDataFrame(rs.asJava, state.schema).coalesce(1))
       val changes = updates.withColumn("_change_type",
           when(keyLookup(hit)(key).isNotNull, lit("update_postimage")).otherwise(lit("insert")))
-        .unionByName(spark.createDataFrame(matched.asJava, state.schema).coalesce(1)
-          .drop(FileCol, RidxCol).withColumn("_change_type", lit("update_preimage")),
-          allowMissingColumns = true)
+        .unionByName(preimages.drop(FileCol, RidxCol)
+          .withColumn("_change_type", lit("update_preimage")), allowMissingColumns = true)
       (Some(if (tracked) updates.withColumn(MatIdCol, keyLookup(hit)(key)) else updates),
         changes)
     }
@@ -2673,17 +2693,20 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * where `doomed` holds — in ONE probe job:
     *
     *  - with `collect` (mergeDV, whose matches are bounded by its update
-    *    keys) the job returns the matched rows themselves;
-    *  - without it (deleteDV, whose matches are unbounded) one aggregate
-    *    grouped by file returns each file's matched-row count and, only
-    *    where that count is at most `dvMaxRows`, its positions (a larger
-    *    count can only remove or rewrite the file).
+    *    keys on a key-unique table) the job returns the matched rows
+    *    themselves if there are at most `dvMaxRows` of them
+    *    ([[ExactlyOnceSink.collectAtMost]]: no task sends more);
+    *  - without it (deleteDV, whose matches are unbounded), or past that
+    *    many, one aggregate grouped by file returns each file's
+    *    matched-row count and, only where that count is at most
+    *    `dvMaxRows`, its positions (a larger count can only remove or
+    *    rewrite the file).
     *
     * Everything after that job is decided on the driver. Each matched
     * file's count, with its recorded row count and existing vector, picks
     * its action ([[DeletionVectors.classify]]). `f` maps the probe state
-    * (WITH file/position helper columns) and the matched rows (empty
-    * without `collect`) to the rows to add in the same commit (merge's
+    * (WITH file/position helper columns) and the matched rows (None when
+    * not collected) to the rows to add in the same commit (merge's
     * updates), or None, and the CDC change rows to record. Nothing is
     * persisted: kept rows of over-cap files are rewritten from a re-scan
     * of just those files where `doomed` does not hold, and the change
@@ -2697,7 +2720,7 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
       maxRetries: Int, streamTxn: Option[(String, Long)],
       keyBounds: Map[String, (Double, Double)], first: Snapshot,
       made: ArrayBuffer[Broadcast[_]])(doomed: Column, collect: Boolean)
-      (f: (DataFrame, Seq[Row]) => (Option[DataFrame], DataFrame)): Long = {
+      (f: (DataFrame, Option[Seq[Row]]) => (Option[DataFrame], DataFrame)): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, collect_list, count, lit, not, when}
     try occTransact(op, maxRetries, first = Some(first), streamTxn = streamTxn) { s =>
       val ts0 = s.ts
@@ -2721,22 +2744,27 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
           else base.withColumn(MatIdCol, lit(null).cast("long"))
             .withColumn(MatRcvCol, lit(null).cast("long"))
         }
-      // the probe job: per matched file its key, matched-row count and,
-      // within the cap, positions; and the matched rows when `collect`
-      val (perFile, matched) =
-        if (probe.columns.isEmpty) (Seq.empty[(String, Long, Option[Seq[Long]])], Seq.empty[Row])
-        else if (collect) {
-          val rows = probe.filter(doomed).collect().toSeq
-          val (fi, ri) = (probe.schema.fieldIndex(FileCol), probe.schema.fieldIndex(RidxCol))
-          (rows.groupBy(_.getString(fi)).toSeq.map { case (k, rs) =>
+      // the probe job: the matched rows themselves when `collect` and
+      // there are at most dvMaxRows of them; else (or past that) one
+      // aggregate per matched file: its matched-row count and, within the
+      // cap, its positions
+      val matched =
+        if (probe.columns.isEmpty) Some(Nil)
+        else if (collect) ExactlyOnceSink.collectAtMost(probe.filter(doomed), dvMaxRows)
+        else None
+      val perFile = matched match {
+        case Some(rows) =>
+          val (fi, ri) = (state.schema.fieldIndex(FileCol), state.schema.fieldIndex(RidxCol))
+          rows.groupBy(_.getString(fi)).toSeq.map { case (k, rs) =>
             (k, rs.size.toLong, Option.when(rs.size <= dvMaxRows)(rs.map(_.getLong(ri))))
-          }, rows)
-        } else
-          (probe.filter(doomed).groupBy(col(FileCol))
+          }
+        case None =>
+          probe.filter(doomed).groupBy(col(FileCol))
             .agg(count(lit(1)).as("n"), collect_list(col(RidxCol)).as("idx"))
             .select(col(FileCol), col("n"), when(col("n") <= dvMaxRows, col("idx")))
             .collect().toSeq
-            .map(r => (r.getString(0), r.getLong(1), Option(r.getSeq[Long](2)))), Nil)
+            .map(r => (r.getString(0), r.getLong(1), Option(r.getSeq[Long](2))))
+      }
       val (appended, changes) = f(state, matched)
       // physical row counts from the add actions already in hand —
       // footer I/O only for legacy adds that never recorded `rows`
@@ -3334,8 +3362,9 @@ class ExactlyOnceSink(tableDir: String, appId: String = "graft-sink",
     * Relative paths always resolve under a table's own `data/`;
     * absolute paths pass through (`Path.resolve` semantics), so every
     * read verb — scans, skipping, bloom lookup, CDC, merge-on-read
-    * subtraction (a scan's file lookup maps each path to its log key,
-    * absolute or not) — works unchanged.
+    * subtraction (a scan's vectors are keyed by each file's scanned path,
+    * and its log key rides the file listing, absolute or not) — works
+    * unchanged.
     *
     * Writes after the clone diverge: new commits (append / merge /
     * deleteDV / OPTIMIZE) land in the CLONE's data root and log, never
@@ -4059,37 +4088,33 @@ object ExactlyOnceSink {
   // is the same whatever the set holds. The functions live here, not in
   // the sink, so their closures capture only the variable.
 
-  /** What a scan knows about one file it reads, looked up by the file's
-    * `_metadata.file_path`: its log key (the sink's `addKey`), the
-    * version of the commit that added it (`batch`), its row-tracking base
-    * id and default row-commit version (0 when the scan resolves no row
-    * ids), and its deletion vector, sorted (null without one). */
-  private[streaming] final case class FileMeta(key: String, version: Int, baseRowId: Long,
-      rcv: Long, dv: Array[Long])
-
-  private[streaming] type FileLookup = Broadcast[Map[String, FileMeta]]
-
-  private[streaming] def fileKey(m: FileLookup): UserDefinedFunction =
-    udf((p: String) => m.value(p).key)
-
-  /** Null for a path outside the lookup, as a map literal's `element_at`
-    * gives. */
-  private[streaming] def fileBatch(m: FileLookup): UserDefinedFunction =
-    udf((p: String) => m.value.get(p).map(_.version))
-
-  /** Whether row `i` of the file survives its deletion vector: Delta's
-    * row-index filter, a binary search in the file's sorted vector. */
-  private[streaming] def liveRow(m: FileLookup): UserDefinedFunction =
+  /** Whether row `i` of the file at path `p` survives its deletion
+    * vector (`m` holds the sorted vectors by `_metadata.file_path`):
+    * Delta's row-index filter, a binary search in the file's vector. */
+  private[streaming] def liveRow(m: Broadcast[Map[String, Array[Long]]]): UserDefinedFunction =
     udf { (p: String, i: Long) =>
-      val dv = m.value(p).dv
+      val dv = m.value.getOrElse(p, null)
       dv == null || java.util.Arrays.binarySearch(dv, i) < 0
     }
 
-  private[streaming] def virtualRowId(m: FileLookup): UserDefinedFunction =
-    udf((p: String, i: Long) => m.value(p).baseRowId + i)
-
-  private[streaming] def defaultRcv(m: FileLookup): UserDefinedFunction =
-    udf((p: String) => m.value(p).rcv)
+  /** The rows of `df` if it has at most `n`, else None, in ONE job: each
+    * task sends at most `n + 1` rows and stops reading there, and the
+    * driver keeps none once their total passes `n`. */
+  private[graft] def collectAtMost(df: DataFrame, n: Int): Option[Seq[Row]] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    val rdd = df.queryExecution.toRdd
+    val parts = new Array[Seq[Row]](rdd.getNumPartitions)
+    var kept = 0L
+    df.sparkSession.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => it.take(n + 1).map(_.copy()).toArray,
+      (i: Int, part: Array[InternalRow]) =>
+        if (kept <= n) {
+          kept += part.length
+          parts(i) = if (kept > n) Nil else part.toSeq.map(r => toRow(r).asInstanceOf[Row])
+        })
+    Option.when(kept <= n)(parts.toSeq.flatten)
+  }
 
   /** A merge key (a row of the key columns) as a hash-set member that
     * matches as Spark's equi-join matches: null when a component is null

@@ -5,20 +5,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference,
-  Cast, Expression, Literal, Predicate}
+  Cast, Expression, FileSourceConstantMetadataStructField, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType,
+  StringType, StructField, StructType}
 
 /** The files a commit log keeps live, as Spark's `FileIndex` (the Delta
   * `TahoeFileIndex` analog): the log is the file list, so a scan never
   * lists or stats a directory. One partition directory per file, in the
   * order given, with the file's hive partition values; `listFiles`
   * evaluates partition filters against them, so a predicate on a
-  * partition column prunes files before the scan opens them. */
+  * partition column prunes files before the scan opens them. Each file's
+  * listing entry also carries what the log knows about it
+  * ([[LogFileIndex.Consts]]), which a scan reads as `_metadata` fields. */
 private[streaming] final case class LogFileIndex(root: HPath, partitionSchema: StructType,
     parts: Seq[PartitionDirectory]) extends FileIndex {
   def rootPaths: Seq[HPath] = Seq(root)
@@ -38,11 +40,43 @@ private[streaming] final case class LogFileIndex(root: HPath, partitionSchema: S
   def sizeInBytes: Long = parts.flatMap(_.files).map(_.getLen).sum
 }
 
+/** Parquet whose `_metadata` struct also holds the per-file constants
+  * of [[LogFileIndex.Consts]]. Spark fills them from each file's listing
+  * entry, as it fills `file_path`, so they never enter the plan: the code
+  * generated for a scan is the same whatever the files hold (Delta
+  * surfaces its row-tracking base id and default commit version the same
+  * way). */
+private[streaming] final class LogFileFormat extends ParquetFileFormat {
+  override def metadataSchemaFields: Seq[StructField] =
+    super.metadataSchemaFields ++ LogFileIndex.Consts.fields
+}
+
 private[streaming] object LogFileIndex {
   /** One data file to scan: its absolute path, real byte length (the
-    * parquet reader finds the footer from it) and the dir segments below
-    * its source dir, which hold its hive `k=v` partition values. */
-  final case class File(path: java.nio.file.Path, length: Long, partDirs: String)
+    * parquet reader finds the footer from it), the dir segments below its
+    * source dir, which hold its hive `k=v` partition values, and its
+    * `_metadata` constants. */
+  final case class File(path: java.nio.file.Path, length: Long, partDirs: String,
+      consts: Consts)
+
+  /** What the log knows about a file, read by a scan as
+    * `_metadata.<field>`: its log key (`log_key`), the version of the
+    * commit that added it (`log_version`), and its row-tracking base id
+    * (`base_row_id`, null without one) and default row-commit version
+    * (`default_row_commit_version`). */
+  final case class Consts(key: String, version: Int, baseRowId: Option[Long], rcv: Long) {
+    def values: Map[String, Any] = Map("log_key" -> key, "log_version" -> version,
+      "base_row_id" -> baseRowId.map(Long.box).orNull, "default_row_commit_version" -> rcv)
+  }
+
+  object Consts {
+    val fields: Seq[StructField] = Seq(
+      FileSourceConstantMetadataStructField("log_key", StringType, nullable = false),
+      FileSourceConstantMetadataStructField("log_version", IntegerType, nullable = false),
+      FileSourceConstantMetadataStructField("base_row_id", LongType, nullable = true),
+      FileSourceConstantMetadataStructField("default_row_commit_version", LongType,
+        nullable = false))
+  }
 
   /** Hive partition values of `f` (column → value; the default-partition
     * marker reads null), unescaped with Spark's hive rules. */
@@ -78,12 +112,12 @@ private[streaming] object LogFileIndex {
       val parts = parsed.filter(_._2.map(_._1) == cols).map { case (f, vs) =>
         PartitionDirectory(InternalRow.fromSeq(vs.zip(partSchema).map { case ((_, v), t) =>
           if (v == null) null else Cast(Literal(v), t.dataType, tz).eval() }),
-          Seq(FileStatusWithMetadata(status(f))))
+          Seq(FileStatusWithMetadata(status(f), f.consts.values)))
       }
       spark.baseRelationToDataFrame(HadoopFsRelation(
         LogFileIndex(root, partSchema, parts), partSchema,
         nullable(StructType(schema.filterNot(f => cols.contains(f.name)))), None,
-        new ParquetFileFormat, Map.empty)(spark))
+        new LogFileFormat, Map.empty)(spark))
     }
   }
 

@@ -323,4 +323,32 @@ class DeletionVectorSpec extends SparkSpecBase {
     assert(left.isEmpty, s"persisted after the merge and delete: $left")
     assert(sink.read(spark).count() === 181)
   }
+
+  test("a MOR merge whose key matches more than dvMaxRows rows matches a copy-on-write merge") {
+    // 12 target rows share key 7, over the merge's 5-row cap: the probe
+    // collects none of them and the merge takes the per-file aggregate
+    def run(mor: Boolean): (Seq[(Long, Int, String)], Seq[(Long, Int)], Seq[Long]) = {
+      val (sink, _) = newSink(s"dup-key-$mor")
+      sink.enableRowTracking(spark)
+      sink.commitAppend((Seq.fill(12)(7L) ++ (0L until 6L)).zipWithIndex
+        .toDF("id", "v").coalesce(1))
+      sink.commitAppend(Seq((7L, 100), (8L, 101)).toDF("id", "v"))
+      val ids = sink.readWithRowIds(spark).filter(col("id") === 7L)
+        .select("_row_id").as[Long].collect()
+      val up = Seq((7L, -1), (9L, -2)).toDF("id", "v")
+      val v = if (mor) sink.mergeDV(spark, up, Seq("id"), dvMaxRows = 5)
+        else sink.merge(spark, up, Seq("id"))
+      val kept = sink.readWithRowIds(spark).filter(col("id") === 7L)
+        .select("_row_id").as[Long].collect()
+      assert(kept.length === 1 && ids.contains(kept.head))
+      (sink.readChanges(spark, v - 1, v).select("id", "v", "_change_type")
+        .as[(Long, Int, String)].collect().sorted.toSeq,
+        sink.read(spark).select("id", "v").as[(Long, Int)].collect().sorted.toSeq,
+        kept.toSeq)
+    }
+    val (mor, cow) = (run(mor = true), run(mor = false))
+    assert(mor._1 === cow._1 && mor._2 === cow._2)
+    assert(mor._1.count(_._3 == "update_preimage") === 13)
+    assert(mor._2.map(_._1) === (0L to 9L).filter(_ != 6L))
+  }
 }

@@ -123,4 +123,30 @@ class MergeJobsSpec extends SparkSpecBase {
       .forall { case (k, v) => live(k) === v })
     assert(live.size === 8000 + 5 - 1 + 3)
   }
+
+  test("a read creates a broadcast variable only for a table with deletion vectors") {
+    // a plain read's per-file facts ride the file listing (`_metadata`
+    // constants); only the vectors need a variable. Reading creates no
+    // other broadcast (no job runs), so consecutive ids count them
+    def made(f: => Unit): Long = {
+      val sc = spark.sparkContext
+      val b0 = sc.broadcast(0)
+      f
+      val b1 = sc.broadcast(0)
+      try b1.id - b0.id - 1 finally { b0.destroy(); b1.destroy() }
+    }
+    val sink = new ExactlyOnceSink(Files.createTempDirectory("graft-read-vars").toString)
+    (0 until 3).foreach(f => sink.commitAppend(rows(f * 100L, (f + 1) * 100L).coalesce(1)))
+    assert(made(sink.read(spark).select("batch", "key")) === 0)
+    sink.deleteDV(spark, col("key") === 150L)
+    assert(made(sink.read(spark)) === 1)
+    assert(sink.read(spark).count() === 299)
+  }
+
+  test("collectAtMost returns at most n rows, in partition order") {
+    val df = spark.range(0, 10, 1, 4).toDF("id")
+    assert(ExactlyOnceSink.collectAtMost(df, 9) === None)
+    assert(ExactlyOnceSink.collectAtMost(df, 10).map(_.map(_.getLong(0))) === Some(0L until 10L))
+    assert(ExactlyOnceSink.collectAtMost(df.filter(col("id") > 100), 0) === Some(Nil))
+  }
 }
